@@ -35,5 +35,8 @@ java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
   graft.Main --list
 java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
   graft.Main --data-dir "$DATA" --out "$OUT" --jobs webcompat-kb,llm-prep
-echo "smoke OK — outputs:"
 find "$OUT" -name "_SUCCESS" | sort
+# webcompat-kb writes 1 table and llm-prep 7, the latter concurrently
+n="$(find "$OUT" -name "_SUCCESS" | wc -l)"
+[ "$n" -eq 8 ] || { echo "smoke FAILED — expected 8 output tables, found $n" >&2; exit 1; }
+echo "smoke OK — 8 output tables"

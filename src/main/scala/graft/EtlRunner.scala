@@ -22,7 +22,20 @@ object EtlRunner {
       writeTargets: Option[Set[String]],
       body: JobContext => Unit)
 
-  final case class RunReport(succeeded: Seq[String], failed: Map[String, String])
+  /** `errors`: each failed job's exception, as its body threw it. */
+  final case class RunReport(succeeded: Seq[String], errors: Map[String, Throwable]) {
+    /** Each failed job's error message (the exception itself when it has none). */
+    def failed: Map[String, String] =
+      errors.map { case (j, e) => j -> Option(e.getMessage).getOrElse(e.toString) }
+  }
+
+  /** Exception class and message, followed by the root cause's when the
+    * exception has one. */
+  def describe(e: Throwable): String = {
+    val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+    val head = s"${e.getClass.getName}: ${e.getMessage}"
+    if (root eq e) head else s"$head (root cause ${root.getClass.getName}: ${root.getMessage})"
+  }
 
   /** Run the selected jobs (all registered when `names` empty) in
     * registration order, collecting failures. */
@@ -39,11 +52,10 @@ object EtlRunner {
       val ctx = JobContext(spark,
         WriteGuard(write, job.writeTargets, log),
         StagingMapper(staging))
-      job.name -> (try { job.body(ctx); None }
-      catch { case e: Exception => Some(Option(e.getMessage).getOrElse(e.toString)) })
+      job.name -> (try { job.body(ctx); None } catch { case e: Exception => Some(e) })
     }
     RunReport(
       results.collect { case (n, None) => n },
-      results.collect { case (n, Some(err)) => n -> err }.toMap)
+      results.collect { case (n, Some(e)) => n -> e }.toMap)
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.EtlRunner.{JobContext, JobSpec}
 import graft.catalog.SchemaId
 
@@ -25,9 +29,14 @@ import graft.catalog.SchemaId
   * in --data-dir, written through [[graft.catalog.WriteGuard]] (so
   * --no-write dry-runs with the would-be effects logged, and each
   * job's write-targets whitelist is enforced — the reference's
-  * `write=False` / `write_targets` contract). Exit code 1 when any
-  * job fails, with per-job errors on stderr — the report shape the
-  * reference's runner prints.
+  * `write=False` / `write_targets` contract). Packs run one after
+  * another in registration order. Inside a pack, the output tables are
+  * built and written concurrently (see [[pack]]): each query reads
+  * only warehouse tables, never a sibling's output, so one table's
+  * driver-side planning, scheduling and commit time overlaps another
+  * table's tasks. Exit code 1 when any job fails, with each failed
+  * job's exception class and root cause on stderr — the report shape
+  * the reference's runner prints.
   *
   * Scale note: the session is obtained via getOrCreate() so
   * spark-submit's cluster conf (master, executors, shuffle partitions)
@@ -52,16 +61,46 @@ object Main {
   )
 
   def registry(dataDir: String, outDir: String): Seq[JobSpec] =
-    jobPacks.map { case (job, qs) =>
-      JobSpec(job, Some(qs.toSet), (ctx: JobContext) => {
-        qs.foreach { q =>
-          val df = SparkEntry.queries(q)(ctx.spark, dataDir)
-          val target = ctx.staging.mapId(SchemaId("graft", job.replace('-', '_'), q))
-          ctx.guard.writeTable(df, target, s"$outDir/${target.sparkName}",
-            SaveMode.Overwrite)
-        }
+    jobPacks.map { case (job, qs) => pack(job, qs, dataDir, outDir) }
+
+  /** One job pack. Each query's build and guarded write run as one task
+    * on a fixed pool of min(#queries, defaultParallelism) threads that
+    * lives only for this run of the pack, so the pool grows with the
+    * cluster's cores. A failing query does not stop its siblings: the
+    * pack waits for all of them, then fails with the first failure in
+    * registration order. */
+  private[graft] def pack(job: String, qs: Seq[String], dataDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries): JobSpec =
+    JobSpec(job, Some(qs.toSet), (ctx: JobContext) =>
+      runAll(s"graft-pack-$job", ctx.spark.sparkContext.defaultParallelism, qs.map { q => () =>
+        val df = queries(q)(ctx.spark, dataDir)
+        val target = ctx.staging.mapId(SchemaId("graft", job.replace('-', '_'), q))
+        ctx.guard.writeTable(df, target, s"$outDir/${target.sparkName}", SaveMode.Overwrite)
+        ()
+      }))
+
+  /** Runs `tasks` on a fixed pool of min(#tasks, `parallelism`) threads
+    * named `<name>-<i>` and waits for every task. The pool is shut down
+    * and its threads have exited when this returns, so no pool outlives
+    * its pack to hold the container's JVM open. Then the first failure
+    * in task order is rethrown as the task threw it, not wrapped in the
+    * pool's `ExecutionException`. */
+  private[graft] def runAll(name: String, parallelism: Int, tasks: Seq[() => Unit]): Unit = {
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(math.max(1, math.min(tasks.size, parallelism)),
+      (r: Runnable) => {
+        val t = new Thread(r, s"$name-${threads.size}")
+        threads.add(t)
+        t
       })
+    val outcomes =
+      try tasks.map(task => pool.submit((() => task()): Callable[Unit])).map(f => Try(f.get()))
+      finally { pool.shutdown(); threads.forEach(_.join()) }
+    outcomes.collectFirst { case Failure(e) => e }.foreach {
+      case e: ExecutionException if e.getCause != null => throw e.getCause
+      case e => throw e
     }
+  }
 
   def main(args: Array[String]): Unit = {
     var dataDir = ""
@@ -108,7 +147,8 @@ object Main {
     val report = EtlRunner.run(spark, registry(dataDir, outDir), jobs,
       write = write, staging = staging, log = m => System.err.println(s"[graft] $m"))
     report.succeeded.foreach(j => System.err.println(s"[graft] OK   $j"))
-    report.failed.foreach { case (j, err) => System.err.println(s"[graft] FAIL $j: $err") }
+    report.errors.foreach { case (j, e) =>
+      System.err.println(s"[graft] FAIL $j: ${EtlRunner.describe(e)}") }
     spark.stop()
     if (report.failed.nonEmpty) sys.exit(1)
   }

@@ -16,8 +16,9 @@ final case class WriteGuard(
     writeTargets: Option[Set[String]] = None,
     log: String => Unit = s => System.err.println(s"[write-guard] $s")) {
 
+  // appended by concurrent writers (a pack writes its tables in parallel)
   private var dryRunLogBuf: List[String] = Nil
-  def dryRunLog: List[String] = dryRunLogBuf.reverse
+  def dryRunLog: List[String] = synchronized(dryRunLogBuf.reverse)
 
   private def check(target: SchemaId): Unit =
     writeTargets.foreach { allowed =>
@@ -32,7 +33,8 @@ final case class WriteGuard(
     check(target)
     if (!write) {
       val msg = s"DRY-RUN $mode $target -> $path (${df.schema.fieldNames.mkString(",")})"
-      dryRunLogBuf ::= msg; log(msg)
+      synchronized { dryRunLogBuf ::= msg }
+      log(msg)
       false
     } else {
       val w = df.write.mode(mode)
