@@ -8,9 +8,16 @@
 # Build:  sbt package && docker build -t graft-etl .
 # Run:    docker run graft-etl --data-dir <warehouse> --out <dir> \
 #           [--jobs webcompat-kb,llm-prep] [--no-write] [--list]
-# On a cluster, override the entrypoint's master via spark-submit conf
-# (e.g. --conf spark.master=k8s://... through SPARK_SUBMIT_OPTS) — the
-# app uses getOrCreate() so submitted conf wins.
+# Submitted Spark conf wins: graft's settings (graft.GraftSession) only
+# fill in what is missing, and the job logs the effective master,
+# shuffle partition count and extensions at start. The arguments after
+# the image name go to graft.Main, so pass conf around them:
+#   - the master through a mounted /opt/spark/conf/spark-defaults.conf
+#     (spark.master k8s://...) or -e MASTER=k8s://...; spark-submit
+#     itself sets local[*] when neither is given, and a -Dspark.master
+#     in SPARK_SUBMIT_OPTS does not win over that;
+#   - any other key (e.g. spark.sql.shuffle.partitions, which defaults
+#     to SPARK_GRAFT_CPUS, else 4) in spark-defaults.conf or as -D<key>=<value> in SPARK_SUBMIT_OPTS.
 FROM apache/spark:4.1.2-scala2.13-java17-ubuntu
 
 # https://github.com/mozilla-services/Dockerflow/blob/master/docs/building-container.md

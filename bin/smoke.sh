@@ -33,8 +33,17 @@ ADD_OPENS=(
 
 java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
   graft.Main --list
+# submitted conf must win over graft's defaults (local[SPARK_GRAFT_CPUS])
+LOG="$(mktemp /tmp/graft-smoke-log.XXXXXX)"
 java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
-  graft.Main --data-dir "$DATA" --out "$OUT" --jobs webcompat-kb,llm-prep
+  -Dspark.master='local[2]' -Dspark.sql.shuffle.partitions=3 \
+  graft.Main --data-dir "$DATA" --out "$OUT" --jobs webcompat-kb,llm-prep 2>&1 | tee "$LOG"
+conf="$(grep -m1 '^\[graft\] master=' "$LOG" || true)"
+rm -f "$LOG"
+case "$conf" in
+  *"master=local[2] shuffle.partitions=3 "*graft.GraftExtensions*) ;;
+  *) echo "smoke FAILED — submitted conf did not win: '$conf'" >&2; exit 1 ;;
+esac
 find "$OUT" -name "_SUCCESS" | sort
 # webcompat-kb writes 1 table and llm-prep 7, the latter concurrently
 n="$(find "$OUT" -name "_SUCCESS" | wc -l)"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // Locale.ROOT: "%.Nf" must never emit a comma decimal separator.
   def fmt(v: Double, dec: Int): String =
@@ -38,30 +37,10 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ObjectHashAggregate (TypedImperativeAggregate paths: TopKAgg,
-      // PairCountAgg, HistogramAgg, collect_*) abandons hashing and
-      // SORTS the whole input once a task sees >128 distinct groups —
-      // a 2006-era default far below any real keyspace. 64k groups of
-      // small buffers is a few MB per task at any scale; the knob is
-      // group COUNT, not data volume, so the same value is right on a
-      // cluster (it mirrors what HashAggregate already does for
-      // primitive buffers). Overridable for A/B via env.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same global rewrite as Verify: bench measures the plans the
-    // correctness gate proved
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.WindowTopKRewrite)
+    val cpus = GraftSession.cpus()
+    // the session Verify proves: bench times the plans the correctness
+    // gate checked, window-top-k rewrite included
+    val spark = GraftSession.getOrCreate("WARN", cpus)
     // Warmup: touch every table and run one representative query so the
     // first timed query doesn't absorb JVM/codegen/scan-init costs.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -95,7 +74,7 @@ object Bench {
     // min of 2 runs per query: reports steady-state cost, not whichever
     // query happened to absorb a GC pause / JIT recompile. On small
     // executors (slow total runtime) fall back to a single pass.
-    val runs = if (cpus.toInt >= 16) 2 else 1
+    val runs = if (cpus >= 16) 2 else 1
     // Dev-loop filter (comma-separated names); the driver sets no filter
     // and benches the full map.
     val only: Option[Set[String]] =
@@ -182,52 +161,62 @@ object Bench {
       // tail it next to q120/q279/q291 so the first-touch build never
       // lands mid-sequence
       "q304_cluster_sizes")
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy { case (name, _) => (heavyLast.contains(name), name) }
-    val results = ordered.map { case (name, fn) =>
-      // Heavy queries still neighbor each other at the tail: drop finished
-      // streaming state stores and take a bounded GC before timing each, so
-      // a heavy query is measured on its own footprint, not its
-      // predecessor's.
-      if (heavyLast.contains(name)) {
-        graft.streaming.StreamOps.unloadStateStores()
-        System.gc(); Thread.sleep(200)
+    val queries = SparkEntry.queries
+    // Mechanical 2x gate: BASELINE_BENCH.json pins the best-known
+    // per-query time at sf0.1; any query now >2x its pin is re-measured
+    // and then flagged, making "within 2x of recorded baseline" a
+    // per-query check instead of a round-over-round narrative.
+    val baselinePath = java.nio.file.Path.of(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BASELINE_BENCH.json"))
+    val baseline: Option[Map[String, Double]] =
+      if (sfDir.contains("sf0.1") && java.nio.file.Files.exists(baselinePath)) {
+        val entry = """"(q[^"]+)"\s*:\s*([0-9.]+)""".r
+        Some(entry.findAllMatchIn(java.nio.file.Files.readString(baselinePath))
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+      } else None
+    def over2x(name: String, v: Double): Boolean =
+      baseline.exists(_.get(name).exists(b => v > 2 * b))
+    // One timed run. Evaluate via the noop sink, NOT count(): under
+    // count() Catalyst prunes every unreferenced projection (and
+    // eliminates sorts), so a pure per-row query (q76 text stats, q79
+    // fingerprint, ...) would "time" a parquet metadata row-count —
+    // measured flat from sf0.1 to 100x. The noop write materializes
+    // every output column on the executors with zero sink cost, so the
+    // timed number is the real operator. A thrown query must NOT report
+    // its time-to-throw as a result: a failed run yields None.
+    def timeOnce(name: String): Option[Double] = {
+      // q109's treehash cache would make every run after the first a
+      // ~0.1 s hit, so min-of-N would gate the cache lookup instead of
+      // the fused deploy+execute path it exists to measure. Clear it so
+      // each timed run pays the real sweep (the cached path stays
+      // spec-gated in CorpusCacheSpec).
+      if (name == "q109_corpus_exec")
+        graft.dag.CorpusLoader.clearExecCache(spark)
+      val t0 = System.nanoTime()
+      try {
+        queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
       }
-      // Evaluate via the noop sink, NOT count(): under count() Catalyst
-      // prunes every unreferenced projection (and eliminates sorts), so a
-      // pure per-row query (q76 text stats, q79 fingerprint, ...) would
-      // "time" a parquet metadata row-count — measured flat from sf0.1 to
-      // 100x. The noop write materializes every output column on the
-      // executors with zero sink cost, so the timed number is the real
-      // operator. SPARK_GRAFT_BENCH_EVAL=count restores the old body for
-      // A/B comparisons against pre-r10 records.
-      val evalCount = sys.env.get("SPARK_GRAFT_BENCH_EVAL").contains("count")
-      // A thrown query must NOT report its time-to-throw as a result:
-      // failed runs yield NaN, and a query with no successful run is
-      // recorded as -1 (flagged below), never as a fast pass.
-      val times = (1 to runs).map { _ =>
-        // q109's treehash cache would make every run after the first a
-        // ~0.1 s hit, so min-of-2 would gate the cache lookup instead of
-        // the fused deploy+execute path it exists to measure. Clear it
-        // so each timed run pays the real sweep (the cached path stays
-        // spec-gated in CorpusCacheSpec).
-        if (name == "q109_corpus_exec")
-          graft.dag.CorpusLoader.clearExecCache(spark)
-        val t0 = System.nanoTime()
-        val ok = try {
-          val df = fn(spark, sfDir)
-          if (evalCount) df.count()
-          else df.write.mode("overwrite").format("noop").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-        if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-      }
-      val good = times.filterNot(_.isNaN)
-      name -> (if (good.nonEmpty) good.min else -1.0)
+    }
+    // Drop finished streaming state stores and take a bounded GC, so a
+    // query is measured on its own footprint, not its predecessor's.
+    def settle(ms: Long): Unit = {
+      graft.streaming.StreamOps.unloadStateStores()
+      System.gc(); Thread.sleep(ms)
+    }
+    val ordered = queries.keys.toSeq
+      .filter(name => only.forall(_.contains(name)))
+      .sortBy(name => (heavyLast.contains(name), name))
+    // a query with no successful run is recorded as -1 (flagged below),
+    // never as a fast pass
+    val results = ordered.map { name =>
+      // heavy queries still neighbor each other at the tail
+      if (heavyLast.contains(name)) settle(200)
+      name -> (1 to runs).flatMap(_ => timeOnce(name)).minOption.getOrElse(-1.0)
     }
     // Flag-triggered re-measurement (r11 verdict ask #5): the driver
     // runs ONE sweep, and a co-tenant spike that spans both back-to-back
@@ -238,37 +227,12 @@ object Bench {
     // regression is just as slow on the re-run and stays flagged, a
     // noise spike recovers. Retried names are printed (bench_retried=)
     // so a record that needed recovery is visible, never silent.
-    val basePath0 = java.nio.file.Path.of(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BASELINE_BENCH.json"))
-    val baseline: Map[String, Double] =
-      if (sfDir.contains("sf0.1") && java.nio.file.Files.exists(basePath0)) {
-        val entry = """"(q[^"]+)"\s*:\s*([0-9.]+)""".r
-        entry.findAllMatchIn(java.nio.file.Files.readString(basePath0))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    val byName = SparkEntry.queries
     val retried = scala.collection.mutable.ArrayBuffer.empty[String]
     val healed = results.map { case (name, v) =>
-      if (v > 0 && baseline.get(name).exists(b => v > 2 * b)) {
+      if (over2x(name, v)) {
         retried += name
-        graft.streaming.StreamOps.unloadStateStores()
-        System.gc(); Thread.sleep(500)
-        val evalCount = sys.env.get("SPARK_GRAFT_BENCH_EVAL").contains("count")
-        val again = (1 to 2).flatMap { _ =>
-          // same uncached-path contract as the main loop: a retry that
-          // hit the corpus exec cache would record a ~0.1 s "min" and
-          // un-gate the real deploy+execute path
-          if (name == "q109_corpus_exec")
-            graft.dag.CorpusLoader.clearExecCache(spark)
-          val t0 = System.nanoTime()
-          try {
-            val df = byName(name)(spark, sfDir)
-            if (evalCount) df.count()
-            else df.write.mode("overwrite").format("noop").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-        }
-        name -> (v +: again).min
+        settle(500)
+        name -> (v +: (1 to 2).flatMap(_ => timeOnce(name))).min
       } else name -> v
     }
     if (retried.nonEmpty)
@@ -291,20 +255,11 @@ object Bench {
     // driver records parsed:null (it did, rounds 1-9 — the line's head got
     // clipped). Budget per BenchLineSpec: short qNN keys, 2-decimal values,
     // short sf label, and NOTHING printed after the line.
-    // Mechanical 2x gate: BASELINE_BENCH.json pins the best-known
-    // per-query time at sf0.1; any query now >2x its pin is flagged
-    // here, making "within 2x of recorded baseline" a per-query check
-    // instead of a round-over-round narrative. Printed BEFORE the JSON
-    // line so the driver's 2000-byte stdout tail keeps the JSON whole.
-    val basePath = java.nio.file.Path.of(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BASELINE_BENCH.json"))
-    if (sfDir.contains("sf0.1") && java.nio.file.Files.exists(basePath)) {
-      val entry = """"(q[^"]+)"\s*:\s*([0-9.]+)""".r
-      val base = entry.findAllMatchIn(java.nio.file.Files.readString(basePath))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    // The 2x flags are printed BEFORE the JSON line so the driver's
+    // 2000-byte stdout tail keeps the JSON whole.
+    baseline.foreach { base =>
       val flags = resultsMap.collect {
-        case (k, v) if base.get(k).exists(b => v > 2 * b) =>
-          f"$k:${v}%.2fs>2x*${base(k)}%.2fs"
+        case (k, v) if over2x(k, v) => f"$k:${v}%.2fs>2x*${base(k)}%.2fs"
       }
       println(s"bench_2x_flags=${flags.mkString("[", ",", "]")}")
     }

@@ -38,9 +38,13 @@ import graft.catalog.SchemaId
   * job's exception class and root cause on stderr — the report shape
   * the reference's runner prints.
   *
-  * Scale note: the session is obtained via getOrCreate() so
-  * spark-submit's cluster conf (master, executors, shuffle partitions)
-  * wins; the local[*] fallback only engages when launched standalone.
+  * Scale note: the session comes from [[GraftSession]], whose settings
+  * are defaults only, so spark-submit's cluster conf (master, executors,
+  * shuffle partitions) wins. Without a submitted master (`java -cp`
+  * launch) it runs at local[SPARK_GRAFT_CPUS]; shuffle partitions
+  * default to SPARK_GRAFT_CPUS too (4 when unset). The effective
+  * master, shuffle partition count and session extensions are logged
+  * at start.
   */
 object Main {
 
@@ -135,14 +139,10 @@ object Main {
     require(dataDir.nonEmpty, "--data-dir is required")
     require(outDir.nonEmpty || !write, "--out is required unless --no-write")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = Seq(graft.plans.WindowTopKRewrite)
+    val spark = GraftSession.getOrCreate()
+    System.err.println(s"[graft] master=${spark.sparkContext.master} " +
+      s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
+      s"extensions=${spark.conf.get("spark.sql.extensions")}")
 
     val report = EtlRunner.run(spark, registry(dataDir, outDir), jobs,
       write = write, staging = staging, log = m => System.err.println(s"[graft] $m"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,12 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same ObjectHashAggregate fallback threshold as Bench: the gate
-      // must prove the same execution paths the bench times (results
-      // are strategy-independent; this keeps the physical paths equal)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The window-top-k rewrite runs GLOBALLY here: every window-top-k
-    // idiom in the query surface goes through the rule, and the DuckDB
-    // oracle replays the window form — so the full gate doubles as the
-    // rule's suite-wide semantic proof (every ORDER BY in the surface
-    // is total, so ties cannot diverge).
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.WindowTopKRewrite)
+    // GraftSession runs the window-top-k rewrite GLOBALLY here: every
+    // window-top-k idiom in the query surface goes through the rule, and
+    // the DuckDB oracle replays the window form — so the full gate
+    // doubles as the rule's suite-wide semantic proof (every ORDER BY in
+    // the surface is total, so ties cannot diverge).
+    val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

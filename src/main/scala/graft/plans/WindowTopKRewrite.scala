@@ -22,10 +22,11 @@ import graft.operators.{RankTopKRows, TopKRows}
   * (Spark's own InferWindowGroupLimit prunes rows before the shuffle
   * too, but still sorts each partition and runs the full Window
   * machinery; this rewrite removes the sort entirely — the win grows
-  * with rows-per-group. Measured at sf0.1 (tools/TopKProbe, top-3 per
-  * supplier over 600k lineitems, ~600 rows/group): 1.32 s window vs
-  * 0.67 s rewritten, warm min-of-3 — ~2x, against a window plan that
-  * already benefits from WindowGroupLimit.)
+  * with rows-per-group. Measured at sf0.1 (PERF_NOTES.md, round-12
+  * "q262 topk_rewrite" entry: top-3 per supplier over 600k lineitems,
+  * ~600 rows/group): 1.32 s window vs 0.67 s rewritten, warm min-of-3
+  * — ~2x, against a window plan that already benefits from
+  * WindowGroupLimit.)
   *
   * Semantics: exact row_number semantics including ties broken by
   * heap order — like the window form, the choice among order-key ties

@@ -1644,10 +1644,11 @@ object StatQueries {
     // filter rn <= 3) and plans/WindowTopKRewrite turns it into the
     // bounded-heap TopKRows aggregate — no Window, no per-group sort,
     // ≤ k rows per group per map task into the exchange (~2x the
-    // already-WindowGroupLimit'd window plan at sf0.1; tools/
-    // TopKProbe). The oracle replays the window form in DuckDB, so
-    // the gate proves the REWRITE's semantics, tie-break included
-    // (total order via the orderkey/linenumber tiebreaks).
+    // already-WindowGroupLimit'd window plan at sf0.1; PERF_NOTES.md,
+    // round-12 "q262 topk_rewrite" entry). The oracle replays the
+    // window form in DuckDB, so the gate proves the REWRITE's
+    // semantics, tie-break included (total order via the
+    // orderkey/linenumber tiebreaks).
     "q262_topk_rewrite" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val li = t(s, dir, "lineitem")

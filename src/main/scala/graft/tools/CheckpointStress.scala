@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,14 +18,7 @@ object CheckpointStress {
   def main(args: Array[String]): Unit = {
     val variant = args.headOption.getOrElse(sys.error("variant required"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfbig")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("ERROR", graft.GraftSession.cpus(32))
     def noop(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
     def docs = spark.read.parquet(s"$sfDir/documents.parquet")

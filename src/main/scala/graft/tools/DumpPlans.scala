@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` of representative queries to
   * PLANS.md — the physical-plan evidence (pushdown, pruning, broadcast,
   * partial aggregation, no cartesian products) behind the scale claims
@@ -10,17 +8,9 @@ import org.apache.spark.sql.SparkSession
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same session-injected rule as Verify/Bench (and therefore the
-    // corpus path, which runs spark.sql in that session)
-    spark.experimental.extraOptimizations = Seq(graft.plans.WindowTopKRewrite)
+    // the session Verify/Bench use, so the plans (the corpus path's
+    // spark.sql included) are theirs
+    val spark = graft.GraftSession.getOrCreate("ERROR", cpus = 8)
     val picks = Seq(
       "q01_pricing_summary" -> "scan pushdown + pruning + partial agg",
       "q07_join_inner" -> "shuffle join on keys",

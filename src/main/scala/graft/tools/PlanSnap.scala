@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` of named queries to
   * individual files — the before/after plan evidence for optimization
   * rounds (`plans/rNN/<query>_<suffix>.txt`). Not part of the query
@@ -14,16 +12,8 @@ object PlanSnap {
     require(args.length == 3, "PlanSnap <outDir> <suffix> <q1,q2,...>")
     val Array(outDir, suffix, names) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // same session-injected rule as Verify/Bench
-    spark.experimental.extraOptimizations = Seq(graft.plans.WindowTopKRewrite)
+    // the session Verify/Bench use, so the plans are theirs
+    val spark = graft.GraftSession.getOrCreate("ERROR", cpus = 8)
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(outDir))
     names.split(",").foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

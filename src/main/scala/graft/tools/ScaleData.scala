@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -45,17 +44,10 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val n = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (the same
-      // flag Verify/Bench set) — the scaled copy then carries a plain
-      // INT64 ts, which util.Tables.t converts back to a timestamp
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // GraftSession reads events.parquet's TIMESTAMP(NANOS) as a long, so
+    // the scaled copy carries a plain INT64 ts, which util.Tables.t
+    // converts back to a timestamp
+    val spark = graft.GraftSession.getOrCreate("WARN", graft.GraftSession.cpus(32))
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(out))
 
     val copies = explode(sequence(lit(0), lit(n - 1))).as("k")

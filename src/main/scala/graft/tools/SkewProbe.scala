@@ -127,14 +127,7 @@ object SkewProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate("ERROR", cpus = 32)
     // amplify deterministically ×32 (~3.2M rows at sf0.1): the raw
     // events table is too small for skew to move any needle; the probe
     // is about the 100 TB mechanisms, not the fixture's absolute size

@@ -1,0 +1,47 @@
+package graft
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.SparkConf
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `GraftSession.conf` is pure conf arithmetic: no SparkContext starts. */
+class GraftSessionSpec extends AnyFunSuite {
+
+  test("submitted master, shuffle partitions and extensions win") {
+    val base = new SparkConf(false)
+      .set("spark.master", "local[1]")
+      .set("spark.sql.shuffle.partitions", "7")
+      .set("spark.sql.extensions", "foo")
+    val once = GraftSession.conf(base, cpus = 4)
+    assert(once.get("spark.master") == "local[1]")
+    assert(once.get("spark.sql.shuffle.partitions") == "7")
+    assert(once.get("spark.sql.extensions") == "foo,graft.GraftExtensions")
+    assert(base.get("spark.sql.extensions") == "foo", "the base conf must not change")
+    val twice = GraftSession.conf(once, cpus = 4)
+    assert(twice.get("spark.sql.extensions") == "foo,graft.GraftExtensions")
+  }
+
+  test("an empty conf gets local[cpus] and as many shuffle partitions") {
+    val c = GraftSession.conf(new SparkConf(false), cpus = 3)
+    assert(c.get("spark.master") == "local[3]")
+    assert(c.get("spark.sql.shuffle.partitions") == "3")
+    assert(c.get("spark.sql.extensions") == "graft.GraftExtensions")
+  }
+
+  // The benchmark times its queries with perfbench/workloads.json's
+  // query_conf; Verify and Main run with GraftSession's conf. They must
+  // not drift apart.
+  test("perfbench's query_conf equals GraftSession's conf") {
+    val queryConf = new ObjectMapper()
+      .readTree(new java.io.File("perfbench/workloads.json")).get("query_conf")
+    assert(queryConf != null && queryConf.size > 0)
+    val cpus = 3
+    val c = GraftSession.conf(new SparkConf(false), cpus)
+    queryConf.properties.asScala.foreach { e =>
+      val expected = e.getValue.asText.replace("$CPUS", cpus.toString)
+      assert(c.getOption(e.getKey).contains(expected), s"${e.getKey}")
+    }
+  }
+}
