@@ -33,11 +33,16 @@ ADD_OPENS=(
 
 java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
   graft.Main --list
-# submitted conf must win over graft's defaults (local[SPARK_GRAFT_CPUS])
+# submitted conf must win over graft's defaults (local[SPARK_GRAFT_CPUS]);
+# the run gets an empty java.io.tmpdir that must be empty again at exit
 LOG="$(mktemp /tmp/graft-smoke-log.XXXXXX)"
+JTMP="$(mktemp -d /tmp/graft-smoke-tmp.XXXXXX)"
 java -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" -Dspark.ui.enabled=false \
-  -Dspark.master='local[2]' -Dspark.sql.shuffle.partitions=3 \
+  -Dspark.master='local[2]' -Dspark.sql.shuffle.partitions=3 -Djava.io.tmpdir="$JTMP" \
   graft.Main --data-dir "$DATA" --out "$OUT" --jobs webcompat-kb,llm-prep 2>&1 | tee "$LOG"
+left="$(ls -A "$JTMP")"
+rmdir "$JTMP" 2>/dev/null || true
+[ -z "$left" ] || { echo "smoke FAILED — graft.Main left scratch in java.io.tmpdir: $left" >&2; exit 1; }
 conf="$(grep -m1 '^\[graft\] master=' "$LOG" || true)"
 rm -f "$LOG"
 case "$conf" in

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Scratch
 import graft.util.Tables._
 import graft.catalog.MutableTable
 import graft.dag.{CorpusLoader, ViewDag, ViewDef}
@@ -17,54 +18,6 @@ import graft.streaming.StreamOps
 object InfraQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private def deleteTree(p: String): Unit = {
-    import java.nio.file._
-    if (Files.exists(Paths.get(p)))
-      Files.walk(Paths.get(p)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-  }
-
-  // q199 fixture: the q129 changelog chopped into 4 arrival files, built
-  // once per sf dir; the per-run state scratch is rotated on reuse.
-  private val cdcLogDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val cdcScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // q258 fixture: events staged as ordered arrival files + watermark
-  // sentinel, built once per sf dir.
-  private val sloStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // build-once fixtures + last-run scratch reclaimed at JVM exit
-  // (graft.util.ScratchSweep — ADVICE r14 leak fix)
-  locally {
-    import scala.jdk.CollectionConverters._
-    graft.util.ScratchSweep.atExit {
-      Seq(cdcLogDirs, cdcScratch, sloStaged).flatMap(_.values.asScala)
-    }
-  }
-
-  /** Write `df` as ONE parquet file `<name>.parquet` in `dirPath` with
-    * an explicit modification time — file-source streaming orders its
-    * micro-batches by mtime, so staged arrival order is controlled
-    * here, not left to filesystem timing. */
-  private def stageFile(dirPath: String, name: String, df: DataFrame,
-      mtime: Long): Unit = {
-    val tmp = tmpDir("graft_stage_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val dest = java.nio.file.Paths.get(dirPath, s"$name.parquet")
-    java.nio.file.Files.move(part.toPath, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dest.toFile.setLastModified(mtime)
-    deleteTree(tmp)
-  }
 
   /** Root of the reference SQL corpus (q108/q109). Overridable so the
     * bench/verify harness isn't coupled to one machine's checkout; fails
@@ -108,7 +61,7 @@ object InfraQueries {
     // copy: bump BUILDING balances by their order count, delete AUTOMOBILE
     // rows, return the final table.
     "q91_dml_rewrite" -> ((s, dir) => {
-      val path = tmpDir("graft_dml")
+      val path = Scratch.fresh(s"dml|$dir")
       t(s, dir, "customer").write.mode(SaveMode.Overwrite).parquet(path)
       val tbl = MutableTable(s, path)
       val orderCounts = t(s, dir, "orders")
@@ -508,8 +461,9 @@ object InfraQueries {
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
           col("o_orderstatus").as("status"))
-      val logDir = cdcLogDirs.computeIfAbsent(dir, _ => {
-        val ld = tmpDir("graft_cdclog")
+      // the q129 changelog chopped into 4 arrival files, built once per
+      // (JVM, sf dir); the per-run state dir is fresh on each call
+      val logDir = Scratch.once(s"cdclog|$dir") { ld =>
         val upserts = o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey").as("k"),
             (col("o_orderkey") % 7).as("seq"), lit("U").as("op"),
@@ -523,13 +477,10 @@ object InfraQueries {
             lit(null).cast(StringType).as("status"))
         upserts.unionByName(deletes).repartition(4)
           .write.mode("overwrite").parquet(ld)
-        ld
-      })
-      Option(cdcScratch.remove(dir)).foreach(deleteTree)
-      val stateDir = tmpDir("graft_cdcstate")
-      cdcScratch.put(dir, stateDir)
+      }
       // DOUBLE publish for the same driver-comparator reason as q204.
-      StreamOps.cdcUpsertStream(s, logDir, stateDir, logSchema, snap)
+      StreamOps.cdcUpsertStream(s, logDir, Scratch.fresh(s"cdcstate|$dir"),
+          logSchema, snap)
         .withColumn("price", col("price").cast(DoubleType))
         .orderBy("k")
     }),
@@ -551,11 +502,12 @@ object InfraQueries {
         StructField("event_id", LongType), StructField("ts", TimestampNTZType),
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
-      val staged = sloStaged.computeIfAbsent(dir, _ => {
-        val sd = tmpDir("graft_slostage")
+      // events staged once per (JVM, sf dir) as ordered arrival files +
+      // the watermark sentinel
+      val staged = Scratch.once(s"slostage|$dir") { sd =>
         val e = t(s, dir, "events")
         val base = System.currentTimeMillis()
-        stageFile(sd, "00_data",
+        Scratch.stageFile(sd, "00_data",
           e.filter(col("event_type").isin("purchase", "click")), base)
         import s.implicits._
         val far = java.time.LocalDateTime.of(2100, 1, 1, 0, 0)
@@ -563,13 +515,11 @@ object InfraQueries {
           (-1L, far, -1L, "purchase", 0.0, "{}"),
           (-2L, far, -1L, "click", 0.0, "{}"))
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        stageFile(sd, "01_sentinel", sentinel, base + 20000)
-        sd
-      })
+        Scratch.stageFile(sd, "01_sentinel", sentinel, base + 20000)
+      }
       StreamOps.streamLeftOuterJoinAvailableNow(s, staged, schema,
           anchorType = "purchase", otherType = "click", window = "1 DAY",
-          queryName = "stream_louter_" +
-            java.util.UUID.randomUUID().toString.replace("-", ""))
+          queryName = "stream_louter")
         .groupBy(col("a_user").as("user_id"))
         .agg(countDistinct("a_id").as("n_anchors"),
           count(col("b_id")).as("n_matched"),
@@ -742,7 +692,7 @@ object InfraQueries {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
       StreamOps.sessionWindowsAvailableNow(s, dir, schema, gap = "6 hours",
-          queryName = "stream_sess_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "stream_sess",
           globFilter = Some("events.parquet"))
         .orderBy("user_id", "sess_start")
     }),
@@ -753,7 +703,7 @@ object InfraQueries {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
       StreamOps.windowedCountsAvailableNow(s, dir, schema,
-          queryName = "stream_counts_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "stream_counts",
           globFilter = Some("events.parquet"))
         .orderBy("day", "event_type")
     }),
@@ -775,7 +725,7 @@ object InfraQueries {
         StructField("user_id", LongType), StructField("event_type", StringType),
         StructField("value", DoubleType), StructField("props", StringType)))
       StreamOps.dedupAvailableNow(s, dir, schema, "event_id",
-          queryName = "stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "stream_dedup",
           globFilter = Some("events.parquet"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), min("event_id").as("min_id"),
@@ -794,7 +744,7 @@ object InfraQueries {
         StructField("value", DoubleType), StructField("props", StringType)))
       StreamOps.streamSelfJoinAvailableNow(s, dir, schema,
           anchorFilter = col("event_id") % 97 === 0, window = "1 DAY",
-          queryName = "stream_join_" + java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "stream_join",
           globFilter = Some("events.parquet"))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_pairs"), countDistinct("a_id").as("n_anchors"))
@@ -817,8 +767,7 @@ object InfraQueries {
       graft.streaming.StreamOps.streamStaticEnrichAvailableNow(s, dir, schema,
           keyExpr = pmod(col("user_id"), lit(25L)), dim = dim,
           dimKey = "n_nationkey",
-          queryName = "stream_enrich_" +
-            java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "stream_enrich",
           globFilter = Some("events.parquet"))
         .groupBy("n_name")
         .agg(count(lit(1)).as("n"), countDistinct("user_id").as("n_users"))
@@ -948,7 +897,7 @@ object InfraQueries {
         writeTargets = Some(Set("t_ok")), log = _ => ())
       val live = WriteGuard(write = true,
         writeTargets = Some(Set("t_ok")), log = _ => ())
-      val out = tmpDir("graft_wguard")
+      val out = Scratch.fresh(s"wguard|$dir")
       val rows = Seq(
         (1L, "t_ok") -> attempt(dry, "t_ok", s"$out/a1"),
         (2L, "t_secret") -> attempt(dry, "t_secret", s"$out/a2"),

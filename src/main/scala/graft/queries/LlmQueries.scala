@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Scratch
 import graft.util.Tables._
 import graft.llm.{Ann, Decontaminate, MixtureSample, MlService, Multimodal, Pq, PrepPipeline, SemDedup, SeqPack, ShardBalance, TextDedup, TextStats, UniMax}
 
@@ -34,88 +35,11 @@ object LlmQueries {
           .as("recall"))
   }
 
-  /** q88's reusable shard-export dirs, keyed by sf dir (see q88). */
-  private val shardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q117's persisted LSH signature index, built ONCE per (JVM, sf dir)
-    * — the incremental-dedup contract is that batches never re-sign the
-    * existing corpus, so the index build must not sit in the repeated
-    * query body (same reuse rationale as [[shardDirs]]/exactTruth). */
-  private val sigIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q142's persisted IVF index (centroids + cell-partitioned
-    * assignments), built ONCE per (JVM, sf dir) — same amortization
-    * contract as [[sigIndexDirs]]: the benched body is the PROBE. */
-  private val ivfIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Partition fan-out of the persisted signature index (band × pkey
     * directories — see TextDedup.sigPartition). 8 at test SF keeps the
     * directory count sane; at corpus scale this is thousands so a daily
     * batch's probe prunes to a fraction of the index. */
   private val sigIndexParts = 8
-
-  /** q118's staged (batch-docs dir, seeded PRISTINE index dir), once
-    * per (JVM, sf dir). Each invocation copies the pristine seed to a
-    * FRESH working index (the stream appends its batch signatures to
-    * the working copy), so repeated runs — bench min-of-2, bench then
-    * correctness — measure the SAME input instead of an index that
-    * grew by one batch per prior run. */
-  private val streamDedupDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** q118's previous invocation's (working index, stream output) temp
-    * dirs, deleted at the start of the next invocation (the returned
-    * DataFrame reads the output dir lazily, so cleanup must wait until
-    * the next run rather than happen in the query body). */
-  private val streamDedupScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** q286's staged corpus-batch dir (4 part files = 4 triggers), once
-    * per (JVM, sf dir); the stream is stateless so the input never
-    * mutates across runs. */
-  private val streamDeconDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q286's previous invocation's output dir, deleted at the start of
-    * the next invocation (same lazy-read contract as q118's scratch). */
-  private val streamDeconScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q292's staged full-corpus batch dir + previous output scratch —
-    * same contracts as q286's pair above. */
-  private val streamManifestDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamManifestScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q297's staged batch dir + previous output scratch — same
-    * contracts as q286's pair above. */
-  private val streamSampleDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamSampleScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q302's persisted gram-count index dir — same build-once contract
-    * as q117's signature index. */
-  private val gramIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // every build-once dir and last-run scratch above is reclaimed at
-  // JVM exit (graft.util.ScratchSweep — ADVICE r14 leak fix)
-  locally {
-    import scala.jdk.CollectionConverters._
-    graft.util.ScratchSweep.atExit {
-      Seq(shardDirs, sigIndexDirs, ivfIndexDirs,
-        streamDeconDirs, streamDeconScratch, streamManifestDirs,
-        streamManifestScratch, streamSampleDirs, streamSampleScratch,
-        gramIndexDirs).flatMap(_.values.asScala) ++
-      Seq(streamDedupDirs, streamDedupScratch)
-        .flatMap(_.values.asScala).flatMap { case (a, b) => Seq(a, b) }
-    }
-  }
 
   /** Verbatim 8-token windows as portable 60-bit hashes (the q168/q271
     * window unit) — one exploded row per window; docs under 8 tokens
@@ -138,19 +62,6 @@ object LlmQueries {
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } finally it.close()
-  }
-
-  private def deleteTree(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val it = java.nio.file.Files.walk(p)
-      try {
-        val all = new java.util.ArrayList[java.nio.file.Path]()
-        it.forEach(x => { all.add(x); () })
-        java.util.Collections.reverse(all)
-        all.forEach(x => { java.nio.file.Files.deleteIfExists(x); () })
-      } finally it.close()
-    }
   }
 
   /** Exact top-k ground truth for the ANN recall gates, computed ONCE
@@ -349,16 +260,16 @@ object LlmQueries {
     // follows the batch, not the corpus).
     "q117_incremental_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idxPath = sigIndexDirs.computeIfAbsent(dir, _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft_sigidx").toString
+      // built once per (JVM, sf dir), outside the repeated query body:
+      // batches never re-sign the existing corpus
+      val idxPath = Scratch.once(s"sigidx|$dir") { p =>
         // partitionBy(band, pkey) layout: batch probes prune the scan
         // to their touched pkey directories (asserted in PlanAuditSpec)
         TextDedup.writeSigIndex(
           TextDedup.bandedSignatures(docs.filter(col("doc_id") % 5 =!= 0),
             k = 32, bands = 4, shingleW = 3, portable = true),
           p, parts = sigIndexParts)
-        p
-      })
+      }
       TextDedup.incrementalCandidates(docs.filter(col("doc_id") % 5 === 0),
           s.read.parquet(idxPath), k = 32, bands = 4, shingleW = 3,
           portable = true, pruneParts = sigIndexParts)
@@ -379,35 +290,28 @@ object LlmQueries {
     // by arrival cadence, not by this knob.
     "q118_stream_incr_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val (batchDir, seedDir) = streamDedupDirs.computeIfAbsent(dir, _ => {
-        val bd = java.nio.file.Files.createTempDirectory("graft_sbatch").toString
+      // the batch docs and the PRISTINE seeded index are staged once
+      // per (JVM, sf dir)
+      val batchDir = Scratch.once(s"sbatch|$dir") { bd =>
         docs.filter(col("doc_id") % 5 === 0).select("doc_id", "text")
           .repartition(4).write.mode("overwrite").parquet(bd)
-        val ix = java.nio.file.Files.createTempDirectory("graft_sigidx_s").toString
+      }
+      val seedDir = Scratch.once(s"sigidx_s|$dir") { ix =>
         TextDedup.writeSigIndex(
           TextDedup.bandedSignatures(docs.filter(col("doc_id") % 5 =!= 0),
             k = 32, bands = 4, shingleW = 3, portable = true),
           ix, parts = sigIndexParts)
-        (bd, ix)
-      })
-      // truncate-on-reuse: previous run's working index + output are
-      // dropped, the pristine seed is copied to a fresh working dir —
-      // every invocation streams against an identical input.
-      Option(streamDedupScratch.remove(dir)).foreach {
-        case (oldIdx, oldOut) => deleteTree(oldIdx); deleteTree(oldOut)
       }
-      val workIdx = java.nio.file.Files
-        .createTempDirectory("graft_sigidx_w").toString
+      // the stream appends to its index, so each invocation copies the
+      // pristine seed to a fresh working index — repeated runs (bench
+      // min-of-2, bench then verify) measure the SAME input instead of
+      // an index that grew by one batch per prior run
+      val workIdx = Scratch.fresh(s"sigidx_w|$dir")
       copyTree(seedDir, workIdx)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_sdedup_out").toString
-      streamDedupScratch.put(dir, (workIdx, outDir))
       graft.streaming.StreamOps.incrementalDedupStream(s, batchDir, workIdx,
-          queryName = "q118_" +
-            java.util.UUID.randomUUID().toString.replace("-", ""),
+          queryName = "q118_stream_dedup",
           k = 32, bands = 4, shingleW = 3, portable = true,
-          maxFilesPerTrigger = 2, pruneParts = sigIndexParts,
-          outDir = Some(outDir))
+          maxFilesPerTrigger = 2, pruneParts = sigIndexParts)
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -471,11 +375,10 @@ object LlmQueries {
     // pinned-recall oracle gates both.
     "q142_ann_ivf_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val idxPath = ivfIndexDirs.computeIfAbsent(dir, _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft_ivfidx").toString
+      // built once per (JVM, sf dir): the benched body is the PROBE
+      val idxPath = Scratch.once(s"ivfidx|$dir") { p =>
         Ann.writeIvfIndex(emb, nCells = 16, kmeansIters = 1, p)
-        p
-      })
+      }
       val qs = emb.filter(col("vec_id") < 20)
       recallSummary(
         Ann.ivfTopKFromIndex(s, idxPath, qs, k = 3, nProbe = 8),
@@ -1255,19 +1158,13 @@ object LlmQueries {
         ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
           .cast("int")
       }
-      val batchDir = streamManifestDirs.computeIfAbsent(dir, _ => {
-        val bd = java.nio.file.Files
-          .createTempDirectory("graft_smani_in").toString
+      // staged once per (JVM, sf dir) as 4 part files = 4 triggers
+      val batchDir = Scratch.once(s"smani_in|$dir") { bd =>
         t(s, dir, "documents").select("doc_id", "text")
           .repartition(4).write.mode("overwrite").parquet(bd)
-        bd
-      })
-      Option(streamManifestScratch.remove(dir)).foreach(deleteTree)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_smani_out").toString
-      streamManifestScratch.put(dir, outDir)
+      }
       graft.streaming.StreamOps.shardManifestStream(s, batchDir,
-          shardOf, c => TextDedup.portableHash(c), outDir)
+          shardOf, c => TextDedup.portableHash(c), Scratch.fresh(s"smani_out|$dir"))
         .orderBy("shard")
     }),
 
@@ -1369,20 +1266,15 @@ object LlmQueries {
     "q286_stream_decon" -> ((s, dir) => {
       val block = t(s, dir, "documents")
         .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      val batchDir = streamDeconDirs.computeIfAbsent(dir, _ => {
-        val bd = java.nio.file.Files
-          .createTempDirectory("graft_sdecon_in").toString
+      // staged once per (JVM, sf dir) as 4 part files = 4 triggers; the
+      // stream is stateless, so the input never mutates across runs
+      val batchDir = Scratch.once(s"sdecon_in|$dir") { bd =>
         block.filter(col("doc_id") % 7 =!= 0).select("doc_id", "text")
           .repartition(4).write.mode("overwrite").parquet(bd)
-        bd
-      })
-      Option(streamDeconScratch.remove(dir)).foreach(deleteTree)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_sdecon_out").toString
-      streamDeconScratch.put(dir, outDir)
+      }
       graft.streaming.StreamOps.decontaminateStream(s, batchDir,
           block.filter(col("doc_id") % 7 === 0), n = 3, flagRatio = 0.1,
-          outDir = outDir)
+          outDir = Scratch.fresh(s"sdecon_out|$dir"))
         .orderBy("doc_id")
     }),
 
@@ -1553,8 +1445,7 @@ object LlmQueries {
       // PlanAuditSpec) also construct this query — a fresh never-deleted
       // temp dir per call leaked one full corpus copy each time. The
       // overwrite-mode write keeps the reused dir correct.
-      val path = shardDirs.computeIfAbsent(dir, d =>
-        java.nio.file.Files.createTempDirectory("graft_shards").toString)
+      val path = Scratch.once(s"shards|$dir")(_ => ())
       docs.repartition(col("shard"))
         .write.mode("overwrite").partitionBy("shard").parquet(path)
       s.read.parquet(path)
@@ -1643,8 +1534,7 @@ object LlmQueries {
         .localCheckpoint()
       // export the sampled set sharded (side effect + read-back proof,
       // the q88 pattern: shared dir per sf, overwrite keeps it correct)
-      val path = shardDirs.computeIfAbsent(s"$dir#card",
-        _ => java.nio.file.Files.createTempDirectory("graft_card").toString)
+      val path = Scratch.once(s"card|$dir")(_ => ())
       val exportDf = flagged.filter(col("s4"))
         .select(col("doc_id"), col("source"), col("n_tok"), col("bin"), col("shard"))
       exportDf.repartition(col("shard"))
@@ -2455,20 +2345,14 @@ object LlmQueries {
     // function (no cross-batch state), so stream == batch independent
     // of trigger chopping — the oracle is the one-shot batch rule.
     "q297_stream_stratified" -> ((s, dir) => {
-      val batchDir = streamSampleDirs.computeIfAbsent(dir, _ => {
-        val bd = java.nio.file.Files
-          .createTempDirectory("graft_ssamp_in").toString
+      // staged once per (JVM, sf dir), same contract as q286's input
+      val batchDir = Scratch.once(s"ssamp_in|$dir") { bd =>
         t(s, dir, "documents").select("doc_id", "source")
           .repartition(4).write.mode("overwrite").parquet(bd)
-        bd
-      })
-      Option(streamSampleScratch.remove(dir)).foreach(deleteTree)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_ssamp_out").toString
-      streamSampleScratch.put(dir, outDir)
+      }
       graft.streaming.StreamOps.stratifiedSampleStream(s, batchDir,
           Map("src0" -> 80, "src1" -> 50, "src2" -> 25, "src3" -> 10),
-          defaultRate = 40, outDir = outDir)
+          defaultRate = 40, outDir = Scratch.fresh(s"ssamp_out|$dir"))
         .orderBy("source")
     }),
 
@@ -2604,17 +2488,15 @@ object LlmQueries {
     // with the above-delta-mean seen-rate flag (cross-multiplied).
     "q302_incr_novelty" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val idxPath = gramIndexDirs.computeIfAbsent(dir, _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_gramidx").toString
+      // built once per (JVM, sf dir), same contract as q117's index
+      val idxPath = Scratch.once(s"gramidx|$dir") { p =>
         docs.filter(col("doc_id") % 5 =!= 0)
           .select(graft.llm.Surprisal.tokens(col("text")).as("ws"))
           .select(gram8(col("ws")).as("g"))
           .groupBy("g").agg(count(lit(1)).as("n"))
           .withColumn("bucket", pmod(col("g"), lit(32L)))
           .write.partitionBy("bucket").mode("overwrite").parquet(p)
-        p
-      })
+      }
       val idx = s.read.parquet(idxPath)
         .select(col("bucket"), col("g"), lit(1).as("seen"))
       val all = Window.partitionBy()

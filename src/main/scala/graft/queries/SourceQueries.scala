@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Scratch
 import graft.util.Tables._
 
 /** Sources/sinks + remaining operator coverage (SURVEY §2.1 S3/S5-S7/
@@ -14,44 +15,6 @@ object SourceQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** q133's persisted daily sketch cube, built once per (JVM, sf dir)
-    * and reused across invocations (bench runs each query twice). */
-  private val sketchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q146's persisted daily quantile-sketch cube (same lifecycle). */
-  private val qsketchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q157's persisted bloom-filter sidecar (same lifecycle). */
-  private val bloomDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q169's ORC copy of the lineitem projection (same lifecycle). */
-  private val orcDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q170's persisted zone-map sidecar (same lifecycle). */
-  private val zoneDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** q183's staged binary-blob directory (same lifecycle). */
-  private val blobDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  // build-once sidecars reclaimed at JVM exit (graft.util.ScratchSweep
-  // — ADVICE r14 leak fix)
-  locally {
-    import scala.jdk.CollectionConverters._
-    graft.util.ScratchSweep.atExit {
-      Seq(sketchDirs, qsketchDirs, bloomDirs, orcDirs, zoneDirs, blobDirs)
-        .flatMap(_.values.asScala)
-    }
-  }
-
   val queries: Map[String, Q] = Map(
     // Small-file compaction (the streaming-sink hygiene op): a freshly
     // fragmented 64-file copy of orders is rewritten to
@@ -60,7 +23,7 @@ object SourceQueries {
     // the CONTRACT booleans (q133 pattern) plus the exact row count.
     "q165_compaction" -> ((s, dir) => {
       import graft.operators.Compaction
-      val work = tmpDir("graft_compact") + "/tbl"
+      val work = Scratch.fresh(s"compact|$dir") + "/tbl"
       t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
         .repartition(64).write.parquet(work)
       val (nb, na, rows) = Compaction.compact(s, work,
@@ -79,14 +42,12 @@ object SourceQueries {
     // oracle computes the same aggregate from the parquet table, so a
     // lossy round trip (types, nulls, decimals) turns the row red.
     "q169_orc_roundtrip" -> ((s, dir) => {
-      val path = orcDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_orc") + "/li"
+      val path = Scratch.once(s"orc|$dir") { p =>
         t(s, dir, "lineitem")
           .select("l_orderkey", "l_returnflag", "l_quantity",
             "l_extendedprice")
           .write.mode("overwrite").orc(p)
-        p
-      })
+      }
       s.read.orc(path)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
@@ -104,8 +65,7 @@ object SourceQueries {
     // red. Scale shape: binaryFile lists + reads distributed; per-file
     // rows carry bounded metadata, content stays columnar-opaque.
     "q183_binaryfile_source" -> ((s, dir) => {
-      val path = blobDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_blobs")
+      val path = Scratch.once(s"blobs|$dir") { p =>
         t(s, dir, "nation").select("n_nationkey", "n_name").collect()
           .foreach { r =>
             java.nio.file.Files.write(
@@ -113,8 +73,7 @@ object SourceQueries {
                 f"nation_${r.getAs[Number](0).longValue}%02d.bin"),
               r.getString(1).getBytes("UTF-8"))
           }
-        p
-      })
+      }
       s.read.format("binaryFile").load(path)
         .select(col("length"), length(col("content")).cast(LongType)
           .as("content_len"))
@@ -138,12 +97,10 @@ object SourceQueries {
         .select(col("event_id"), col("value"),
           epochMicros(col("ts")).as("tsm"))
         .withColumn("zone", expr("event_id div 500"))
-      val statsPath = zoneDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_zonemap") + "/stats"
+      val statsPath = Scratch.once(s"zonemap|$dir") { p =>
         graft.operators.ZoneMap.build(e, "zone", "tsm")
           .write.mode("overwrite").parquet(p)
-        p
-      })
+      }
       val stats = s.read.parquet(statsPath)
       val day = 86400L * 1000000L
       val bounds = e.agg((min(col("tsm")) + lit(10L * day)).as("lo"))
@@ -170,15 +127,13 @@ object SourceQueries {
     "q157_bloom_prune" -> ((s, dir) => {
       import graft.operators.BloomPrune
       val (k, m) = (4, 4096)
-      val path = bloomDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_bloom")
+      val path = Scratch.once(s"bloom|$dir") { p =>
         BloomPrune.build(
             t(s, dir, "orders")
               .filter(col("o_orderpriority") === "1-URGENT")
               .select("o_custkey").distinct(), "o_custkey", k, m)
           .write.mode(SaveMode.Overwrite).parquet(p)
-        p
-      })
+      }
       val probe = t(s, dir, "customer")
         .select(col("c_custkey").as("o_custkey")).distinct()
       val cand = BloomPrune.candidates(probe, "o_custkey",
@@ -205,14 +160,12 @@ object SourceQueries {
     "q146_quantile_rollup" -> ((s, dir) => {
       import graft.operators.QuantileSketch
       val w = 0.5
-      val path = qsketchDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_qsketch")
+      val path = Scratch.once(s"qsketch|$dir") { p =>
         QuantileSketch.build(
             t(s, dir, "events").withColumn("day", to_date(col("ts"))),
             Seq("event_type", "day"), "value", w)
           .write.mode(SaveMode.Overwrite).parquet(p)
-        p
-      })
+      }
       val est = QuantileSketch.mergeEstimate(s.read.parquet(path),
         Seq("event_type"), w,
         Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)))
@@ -255,15 +208,13 @@ object SourceQueries {
     // point: naive daily-count sums double-count movers, sketch merges
     // don't.
     "q133_sketch_rollup" -> ((s, dir) => {
-      val path = sketchDirs.computeIfAbsent(dir, _ => {
-        val p = tmpDir("graft_sketch")
+      val path = Scratch.once(s"sketch|$dir") { p =>
         t(s, dir, "events")
           .groupBy(col("event_type"), to_date(col("ts")).as("day"))
           .agg(hll_sketch_agg(col("user_id")).as("sk"),
             count_distinct(col("user_id")).as("daily_users"))
           .write.mode(SaveMode.Overwrite).parquet(p)
-        p
-      })
+      }
       val merged = s.read.parquet(path)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_days"),
@@ -297,7 +248,7 @@ object SourceQueries {
     // (Tranco CSV import etl/siterank.py:138-159; AMO CSV load
     // extensions/main.py:683-747): parquet → csv → csv-read → aggregate.
     "q96_csv_roundtrip" -> ((s, dir) => {
-      val path = tmpDir("graft_csv")
+      val path = Scratch.fresh(s"csv|$dir")
       t(s, dir, "customer").write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(path)
       val schema = StructType(Seq(
@@ -317,7 +268,7 @@ object SourceQueries {
     // "what changed" report a data contract reviews. Metadata-only:
     // reads two footers, never a row.
     "q239_schema_contract" -> ((s, dir) => {
-      val path = tmpDir("graft_contract")
+      val path = Scratch.fresh(s"contract|$dir")
       val o = t(s, dir, "orders").limit(10)
       val gen1 = o.select(col("o_orderkey").as("k"),
         col("o_orderpriority").as("legacy"),
@@ -383,7 +334,7 @@ object SourceQueries {
     // wrong-type row in the valid set with a NULL field, matching
     // permissive semantics.
     "q211_corrupt_records" -> ((s, dir) => {
-      val path = tmpDir("graft_badjson")
+      val path = Scratch.fresh(s"badjson|$dir")
       val n = t(s, dir, "nation")
       val good = n.select(to_json(struct(col("n_nationkey").as("k"),
         col("n_name").as("name"), col("n_regionkey").as("r"))).as("line"))
@@ -422,7 +373,7 @@ object SourceQueries {
     // per-FILE, not per-row.
     "q203_schema_evolution" -> ((s, dir) => {
       val o = t(s, dir, "orders")
-      val path = tmpDir("graft_schevo")
+      val path = Scratch.fresh(s"schevo|$dir")
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey").as("k"),
           col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
@@ -442,7 +393,7 @@ object SourceQueries {
     // S7 — gzipped TSV source (pg_dump_to_parquet.py:104-112: read
     // *.dat.gz tab-separated with explicit schema).
     "q97_tsv_gz" -> ((s, dir) => {
-      val path = tmpDir("graft_tsv")
+      val path = Scratch.fresh(s"tsv|$dir")
       t(s, dir, "nation")
         .select(col("n_nationkey").cast(StringType), col("n_name"))
         .write.mode(SaveMode.Overwrite)
@@ -463,7 +414,7 @@ object SourceQueries {
     // aggregate from the flat orders table, proving the nested
     // round-trip + filtered scan is lossless.
     "q322_nested_pushdown" -> ((s, dir) => {
-      val path = tmpDir("graft_nested")
+      val path = Scratch.fresh(s"nested|$dir")
       t(s, dir, "orders").select(col("o_orderkey").as("k"),
         struct(col("o_orderstatus").as("status"),
           col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
@@ -485,7 +436,7 @@ object SourceQueries {
     // bqhelpers.py:564-593) unioned with table data, through a JSON
     // sink round-trip (experiments-monitoring export.py:70-90).
     "q98_json_rows" -> ((s, dir) => {
-      val path = tmpDir("graft_json")
+      val path = Scratch.fresh(s"json|$dir")
       val schema = StructType(Seq(
         StructField("n_nationkey", IntegerType), StructField("n_name", StringType)))
       val driverRows = s.createDataFrame(
@@ -509,7 +460,7 @@ object SourceQueries {
     // extraction → aggregate; the oracle recomputes from the parquet
     // table, proving the variant decode is lossless.
     "q275_variant_ingest" -> ((s, dir) => {
-      val path = tmpDir("graft_varjson")
+      val path = Scratch.fresh(s"varjson|$dir")
       t(s, dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
         .write.mode(SaveMode.Overwrite).json(path)
       s.read.option("singleVariantColumn", "v").json(path)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Scratch
 import graft.util.Tables._
 import graft.operators.{HistogramAgg, JackknifeCI, Stats}
 
@@ -13,28 +14,6 @@ import graft.operators.{HistogramAgg, JackknifeCI, Stats}
 object StatQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  // q208 fixture: events chopped into 4 arrival files (built once per sf
-  // dir); per-run summary-state scratch rotated on reuse.
-  private val hhSrcDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val hhScratch =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def deleteTree(p: String): Unit = {
-    import java.nio.file._
-    if (Files.exists(Paths.get(p)))
-      Files.walk(Paths.get(p)).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.deleteIfExists(f))
-  }
-
-  // build-once fixture + last-run scratch reclaimed at JVM exit
-  // (graft.util.ScratchSweep — ADVICE r14 leak fix)
-  locally {
-    import scala.jdk.CollectionConverters._
-    graft.util.ScratchSweep.atExit {
-      Seq(hhSrcDirs, hhScratch).flatMap(_.values.asScala)
-    }
-  }
 
   val queries: Map[String, Q] = Map(
     // Grouped top-k through the native bounded-heap aggregate
@@ -152,23 +131,19 @@ object StatQueries {
     // counts: every true heavy hitter is present with error ≤ N/(k+1).
     "q208_stream_heavy_hitters" -> ((s, dir) => {
       val k = 8
-      val srcDir = hhSrcDirs.computeIfAbsent(dir, _ => {
-        val d = java.nio.file.Files.createTempDirectory("graft_hhsrc").toString
+      // events chopped into 4 arrival files once per (JVM, sf dir); the
+      // per-run summary state dir is fresh on each call
+      val srcDir = Scratch.once(s"hhsrc|$dir") { d =>
         t(s, dir, "events").select("event_id", "user_id")
           .repartition(4).write.mode("overwrite").parquet(d)
-        d
-      })
-      Option(hhScratch.remove(dir)).foreach(deleteTree)
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft_hhstate").toString
-      hhScratch.put(dir, stateDir)
+      }
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType)))
       def toKeys(b: DataFrame) = b.select(
         floor(sqrt(col("user_id").cast(DoubleType))).cast(LongType)
           .cast(StringType).as("key"))
       val summary = graft.streaming.StreamOps.heavyHittersStream(
-        s, srcDir, schema, toKeys, k, stateDir)
+        s, srcDir, schema, toKeys, k, Scratch.fresh(s"hhstate|$dir"))
       val e = toKeys(t(s, dir, "events"))
       val n = e.agg(count(lit(1)).as("n"))
       e.groupBy("key").agg(count(lit(1)).as("exact_n"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType, TimestampType}
+import graft.util.Scratch
 
 /** Structured Streaming equivalents of the reference's batch-watermark
   * jobs (SURVEY §2.11: "optionally Trigger.AvailableNow streaming for
@@ -11,6 +12,11 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType, 
   * Spark-native upgrade path: the same daily-rollup semantics expressed
   * as a watermarked windowed aggregation that can also run as a
   * synchronous batch via processAllAvailable.
+  *
+  * A runner that makes its own output dir takes it from
+  * `Scratch.fresh(s"$queryName|$srcDir")`: a rerun with the same name
+  * and source deletes the previous run's output, and the last one is
+  * swept at JVM exit.
   */
 object StreamOps {
 
@@ -40,6 +46,18 @@ object StreamOps {
         }
     }
   @volatile private var unloadWarned = false
+
+  /** Runs `df` to the end of its source as one bounded AvailableNow
+    * query, each micro-batch handed to `sink`, then unloads the
+    * finished query's state stores. The checkpoint is Spark's temporary
+    * one: these runners are single-shot by design (the restartable form
+    * is [[checkpointedAppendRun]]). */
+  private def runAvailableNow(df: DataFrame, mode: String)(
+      sink: (DataFrame, Long) => Unit): Unit = {
+    df.writeStream.outputMode(mode).foreachBatch(sink)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    unloadStateStores()
+  }
 
   /** Run `f` with `spark.sql.shuffle.partitions` temporarily set to
     * `n` — the knob that sizes a stateful streaming query's state
@@ -102,18 +120,12 @@ object StreamOps {
       .withWatermark("ts_ts", "1 hour")
       .groupBy(window(col("ts_ts"), windowDur), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
+    val outDir = Scratch.fresh(s"$queryName|$srcDir")
     withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(agg, "complete") { (batch, _) =>
+        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
+      }
     }
-    unloadStateStores()
     spark.read.parquet(outDir)
       .select(to_date(col("window.start")).as("day"), col("event_type"), col("n"))
   }
@@ -146,18 +158,12 @@ object StreamOps {
       .withWatermark("ts_ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts_ts"), gap))
       .agg(count(lit(1)).as("n"))
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
+    val outDir = Scratch.fresh(s"$queryName|$srcDir")
     withStatePartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(agg, "append") { (batch, _) =>
+        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+      }
     }
-    unloadStateStores()
     spark.read.parquet(outDir)
       .select(col("user_id"),
         graft.functions.BqShims.epochMicros(col("session_window.start"))
@@ -192,18 +198,12 @@ object StreamOps {
       .withWatermark("ts_ts", "1 hour")
       .dropDuplicatesWithinWatermark(idCol)
       .drop("ts_ts")
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
+    val outDir = Scratch.fresh(s"$queryName|$srcDir")
     withStatePartitions(spark, 8) {
-      val q = doubled.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(doubled, "append") { (batch, _) =>
+        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+      }
     }
-    unloadStateStores()
     spark.read.schema(StructType(schema.fields)).parquet(outDir)
   }
 
@@ -235,19 +235,13 @@ object StreamOps {
     val joined = anchors.join(others,
       expr(s"a_user = b_user AND a_id != b_id AND " +
         s"b_ts BETWEEN a_ts - INTERVAL $window AND a_ts"))
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
+    val outDir = Scratch.fresh(s"$queryName|$srcDir")
     withStatePartitions(spark, 8) {
-      val q = joined.select(col("a_id"), col("a_user").as("user_id"), col("b_id"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(joined.select(col("a_id"), col("a_user").as("user_id"), col("b_id")),
+          "append") { (batch, _) =>
+        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+      }
     }
-    unloadStateStores()
     // explicit schema: if the join legitimately emits zero rows (stricter
     // anchorFilter, small SF), foreachBatch never writes a file and a
     // schema-less read would fail with 'Unable to infer schema'
@@ -293,24 +287,18 @@ object StreamOps {
       expr("a_user = b_user AND " +
         s"b_ts BETWEEN a_ts - INTERVAL $window AND a_ts"),
       "left_outer")
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
+    val outDir = Scratch.fresh(s"$queryName|$stagedDir")
     // 4 state partitions, not 8: a stream-stream join commits FOUR
     // stores per partition per batch (keyToNumValues/keyWithIndexToValue
     // × both sides), so partition count multiplies fixed commit cost
     // 4×; at production rates this is sized to throughput, here to the
     // fixed-cost floor.
     withStatePartitions(spark, 4) {
-      val q = joined.select(col("a_id"), col("a_user"), col("b_id"))
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      runAvailableNow(joined.select(col("a_id"), col("a_user"), col("b_id")),
+          "append") { (batch, _) =>
+        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+      }
     }
-    unloadStateStores()
     val outSchema = StructType(Seq(
       StructField("a_id", LongType), StructField("a_user", LongType),
       StructField("b_id", LongType)))
@@ -359,15 +347,10 @@ object StreamOps {
     val enriched = events.withColumn("_k", keyExpr)
       .join(broadcast(dim), col("_k") === dim(dimKey))
       .drop("_k")
-    val outDir = java.nio.file.Files.createTempDirectory(queryName).toString
-    val q = enriched.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val outDir = Scratch.fresh(s"$queryName|$srcDir")
+    runAvailableNow(enriched, "append") { (batch, _) =>
+      batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+    }
     spark.read.parquet(outDir)
   }
 
@@ -397,8 +380,7 @@ object StreamOps {
   def incrementalDedupStream(spark: SparkSession, batchDocsDir: String,
       indexDir: String, queryName: String, k: Int, bands: Int,
       shingleW: Int, portable: Boolean,
-      maxFilesPerTrigger: Int = 1, pruneParts: Int = 0,
-      outDir: Option[String] = None): DataFrame = {
+      maxFilesPerTrigger: Int = 1, pruneParts: Int = 0): DataFrame = {
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", org.apache.spark.sql.types.StringType)))
@@ -414,36 +396,28 @@ object StreamOps {
       (if (pruneParts > 0)
         Seq(StructField("pkey", org.apache.spark.sql.types.IntegerType))
       else Nil))
-    val out = outDir.getOrElse(
-      java.nio.file.Files.createTempDirectory(queryName).toString)
+    val out = Scratch.fresh(s"$queryName|$batchDocsDir")
     val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(batchDocsDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per-trigger batch joins carry one micro-batch of docs: size
-        // their shuffles to the trigger volume, not the session default
-        withStatePartitions(spark, 8) {
-          val idx = spark.read.schema(sigSchema).parquet(indexDir)
-          graft.llm.TextDedup.incrementalCandidates(batch, idx,
-              k = k, bands = bands, shingleW = shingleW, portable = portable,
-              pruneParts = pruneParts)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(out)
-          val sigs = graft.llm.TextDedup.bandedSignatures(batch,
-            k = k, bands = bands, shingleW = shingleW, portable = portable)
-          if (pruneParts > 0)
-            graft.llm.TextDedup.writeSigIndex(sigs, indexDir, pruneParts,
-              mode = "append")
-          else sigs.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(indexDir)
-        }
-        ()
+    runAvailableNow(src, "append") { (batch, _) =>
+      // per-trigger batch joins carry one micro-batch of docs: size
+      // their shuffles to the trigger volume, not the session default
+      withStatePartitions(spark, 8) {
+        val idx = spark.read.schema(sigSchema).parquet(indexDir)
+        graft.llm.TextDedup.incrementalCandidates(batch, idx,
+            k = k, bands = bands, shingleW = shingleW, portable = portable,
+            pruneParts = pruneParts)
+          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(out)
+        val sigs = graft.llm.TextDedup.bandedSignatures(batch,
+          k = k, bands = bands, shingleW = shingleW, portable = portable)
+        if (pruneParts > 0)
+          graft.llm.TextDedup.writeSigIndex(sigs, indexDir, pruneParts,
+            mode = "append")
+        else sigs.write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(indexDir)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    }
     val outSchema = StructType(Seq(
       StructField("doc_a", LongType), StructField("doc_b", LongType)))
     spark.read.schema(outSchema).parquet(out).distinct()
@@ -469,20 +443,13 @@ object StreamOps {
     val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(batchDocsDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        withStatePartitions(spark, 8) {
-          graft.llm.Decontaminate.report(batch, evalDocs, n, flagRatio)
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(outDir)
-        }
-        ()
+    runAvailableNow(src, "append") { (batch, _) =>
+      withStatePartitions(spark, 8) {
+        graft.llm.Decontaminate.report(batch, evalDocs, n, flagRatio)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(outDir)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    }
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_grams", LongType),
@@ -512,27 +479,20 @@ object StreamOps {
     val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(batchDocsDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        withStatePartitions(spark, 8) {
-          batch
-            .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
-              hashOf(col("text")).as("h"))
-            .groupBy("shard")
-            .agg(count(lit(1)).as("n_docs"),
-              expr("bit_xor(h)").as("fingerprint"),
-              min("doc_id").as("min_doc_id"),
-              max("doc_id").as("max_doc_id"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(outDir)
-        }
-        ()
+    runAvailableNow(src, "append") { (batch, _) =>
+      withStatePartitions(spark, 8) {
+        batch
+          .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
+            hashOf(col("text")).as("h"))
+          .groupBy("shard")
+          .agg(count(lit(1)).as("n_docs"),
+            expr("bit_xor(h)").as("fingerprint"),
+            min("doc_id").as("min_doc_id"),
+            max("doc_id").as("max_doc_id"))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(outDir)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    }
     val outSchema = StructType(Seq(
       StructField("shard", org.apache.spark.sql.types.IntegerType),
       StructField("n_docs", LongType),
@@ -570,22 +530,15 @@ object StreamOps {
     val src = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(batchDocsDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .join(rateDf, Seq("source"), "left")
-          .filter(pmod(graft.functions.BqShims.md5Bucket(col("doc_id")),
-            lit(100L)) < coalesce(col("rate"), lit(defaultRate)))
-          .select("doc_id", "source")
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    runAvailableNow(src, "append") { (batch, _) =>
+      batch
+        .join(rateDf, Seq("source"), "left")
+        .filter(pmod(graft.functions.BqShims.md5Bucket(col("doc_id")),
+          lit(100L)) < coalesce(col("rate"), lit(defaultRate)))
+        .select("doc_id", "source")
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .parquet(outDir)
+    }
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("source", org.apache.spark.sql.types.StringType)))
@@ -639,39 +592,32 @@ object StreamOps {
     val src = spark.readStream.schema(logSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(changelogDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        withStatePartitions(spark, 8) {
-          val st = spark.read.parquet(vPath(cur))
-          val w = Window.partitionBy("k").orderBy(desc("seq"), desc("op"))
-          val win = batch.withColumn("rn", row_number().over(w))
-            .filter(col("rn") === 1).drop("rn")
-          val j = st.alias("s").join(win.alias("c"),
-            col("s.k") === col("c.k"), "full_outer")
-          val newer = col("c.k").isNotNull && (col("s.k").isNull ||
-            col("s.last_seq").isNull ||
-            col("c.seq") > col("s.last_seq") ||
-            (col("c.seq") === col("s.last_seq") &&
-              col("c.op") > col("s.last_op")))
-          val outCols =
-            coalesce(col("s.k"), col("c.k")).as("k") +:
-            payload.map(p =>
-              when(newer, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)) :+
-            when(newer, col("c.seq")).otherwise(col("s.last_seq")).as("last_seq") :+
-            when(newer, col("c.op")).otherwise(col("s.last_op")).as("last_op") :+
-            when(newer, col("c.op") === "D").otherwise(col("s.deleted")).as("deleted") :+
-            when(newer, lit(true)).otherwise(col("s.from_change")).as("from_change")
-          j.select(outCols: _*)
-            .write.mode("overwrite").parquet(vPath(id + 1))
-          cur = id + 1
-        }
-        ()
+    runAvailableNow(src, "append") { (batch, id) =>
+      withStatePartitions(spark, 8) {
+        val st = spark.read.parquet(vPath(cur))
+        val w = Window.partitionBy("k").orderBy(desc("seq"), desc("op"))
+        val win = batch.withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1).drop("rn")
+        val j = st.alias("s").join(win.alias("c"),
+          col("s.k") === col("c.k"), "full_outer")
+        val newer = col("c.k").isNotNull && (col("s.k").isNull ||
+          col("s.last_seq").isNull ||
+          col("c.seq") > col("s.last_seq") ||
+          (col("c.seq") === col("s.last_seq") &&
+            col("c.op") > col("s.last_op")))
+        val outCols =
+          coalesce(col("s.k"), col("c.k")).as("k") +:
+          payload.map(p =>
+            when(newer, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)) :+
+          when(newer, col("c.seq")).otherwise(col("s.last_seq")).as("last_seq") :+
+          when(newer, col("c.op")).otherwise(col("s.last_op")).as("last_op") :+
+          when(newer, col("c.op") === "D").otherwise(col("s.deleted")).as("deleted") :+
+          when(newer, lit(true)).otherwise(col("s.from_change")).as("from_change")
+        j.select(outCols: _*)
+          .write.mode("overwrite").parquet(vPath(id + 1))
+        cur = id + 1
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    }
     spark.read.parquet(vPath(cur))
       .filter(!col("deleted"))
       .select((col("k") +: payload.map(col)) :+ col("from_change"): _*)
@@ -709,32 +655,25 @@ object StreamOps {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
     val src = globFilter.fold(rdr)(g => rdr.option("pathGlobFilter", g))
       .parquet(srcDir)
-    val q = src.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        withStatePartitions(spark, 4) {
-          val bs = toKeys(batch)
-            .agg(graft.operators.MisraGries.summary(col("key"), k).as("mg"))
-            .select(explode(col("mg")).as(Seq("key", "cnt")))
-          val st = spark.read.schema(stateSchema).parquet(vPath(cur))
-          val uni = st.unionByName(bs)
-            .groupBy("key").agg(sum("cnt").as("cnt"))
-          val w = Window.orderBy(desc("cnt"), col("key"))
-          val ranked = uni.withColumn("rk", row_number().over(w))
-          val sub = ranked.filter(col("rk") === k + 1)
-            .agg(coalesce(max("cnt"), lit(0L)).as("sub"))
-          ranked.crossJoin(broadcast(sub))
-            .select(col("key"), (col("cnt") - col("sub")).as("cnt"))
-            .filter(col("cnt") > 0)
-            .write.mode("overwrite").parquet(vPath(id + 1))
-          cur = id + 1
-        }
-        ()
+    runAvailableNow(src, "append") { (batch, id) =>
+      withStatePartitions(spark, 4) {
+        val bs = toKeys(batch)
+          .agg(graft.operators.MisraGries.summary(col("key"), k).as("mg"))
+          .select(explode(col("mg")).as(Seq("key", "cnt")))
+        val st = spark.read.schema(stateSchema).parquet(vPath(cur))
+        val uni = st.unionByName(bs)
+          .groupBy("key").agg(sum("cnt").as("cnt"))
+        val w = Window.orderBy(desc("cnt"), col("key"))
+        val ranked = uni.withColumn("rk", row_number().over(w))
+        val sub = ranked.filter(col("rk") === k + 1)
+          .agg(coalesce(max("cnt"), lit(0L)).as("sub"))
+        ranked.crossJoin(broadcast(sub))
+          .select(col("key"), (col("cnt") - col("sub")).as("cnt"))
+          .filter(col("cnt") > 0)
+          .write.mode("overwrite").parquet(vPath(id + 1))
+        cur = id + 1
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    unloadStateStores()
+    }
     spark.read.schema(stateSchema).parquet(vPath(cur))
   }
 

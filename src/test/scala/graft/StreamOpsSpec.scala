@@ -262,4 +262,23 @@ class StreamOpsSpec extends SparkTestBase {
         r.getLong(3))).toSet
     assert(fine == truth, s"stream $fine vs batch $truth")
   }
+
+  test("windowedCountsAvailableNow reruns keep only the last output dir") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampNTZType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    val runs = (1 to 3).map { _ =>
+      val df = StreamOps.windowedCountsAvailableNow(spark, sfDir, schema,
+        queryName = "stream_counts_rerun", globFilter = Some("events.parquet"))
+      (df, java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head)).getParent)
+    }
+    val dirs = runs.map(_._2)
+    assert(dirs.distinct.size == 3, s"runs shared an output dir: $dirs")
+    assert(dirs.init.forall(d => !java.nio.file.Files.exists(d)),
+      s"earlier output dirs leaked: ${dirs.init.filter(java.nio.file.Files.exists(_))}")
+    assert(java.nio.file.Files.isDirectory(dirs.last))
+    assert(runs.last._1.count() == 150)
+  }
 }
