@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-/** SQL surface for the engine's native Catalyst expressions:
+/** graft's one session hook (`spark.sql.extensions=graft.GraftExtensions`,
+  * set by [[GraftSession]]): it injects the window-top-k optimizer rule
+  * ([[graft.plans.WindowTopKRewrite]]) and the SQL surface of the
+  * engine's native Catalyst expressions:
   *
   *   SELECT dot_product_f32(a.embedding, b.embedding) ...
   *   SELECT misra_gries(key, 8)           -- heavy-hitters summary
@@ -12,18 +15,25 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *   SELECT top_k_by_value(score, id, 10)
   *   SELECT sum_sparse_histograms(hist)
   *
-  * Two registration paths, same builders:
-  *   - `spark.sql.extensions=graft.GraftExtensions` (or
-  *     `builder.withExtensions(new GraftExtensions)`) at session
-  *     construction — the PUBLIC injectFunction API;
-  *   - [[GraftFunctions.registerAll]] on an existing session
-  *     (temp-function scope), for hosts that own session creation.
+  * Every session the engine plans on is built with it, so a query sees
+  * the same functions and rules in Main, Verify, Bench and the tests.
   *
   * Integer parameters must be foldable literals, mirroring how Spark's
   * own parameterized aggregates (approx_percentile, ...) validate
   * their arguments.
   */
-object GraftFunctions {
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
+    }
+    // window-top-k → bounded-heap aggregate (see the rule's scaladoc)
+    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
+  }
+}
+
+object GraftExtensions {
 
   private def intArg(e: Expression, fn: String, pos: Int): Int = e match {
     case Literal(v: Int, _) => v
@@ -33,7 +43,7 @@ object GraftFunctions {
   }
 
   /** (name, implementing class, builder) for every native function. */
-  val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("dot_product_f32", classOf[graft.functions.DotProductF32].getName,
       (args: Seq[Expression]) =>
         graft.functions.DotProductF32(args(0), args(1))),
@@ -63,23 +73,4 @@ object GraftFunctions {
       classOf[graft.operators.SumSparseHistograms].getName,
       (args: Seq[Expression]) =>
         graft.operators.SumSparseHistograms(args(0)).toAggregateExpression()))
-
-  /** Register every native function on an existing session
-    * (session-local temp functions). Idempotent. */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.graft.ColumnShim
-        .registerFunction(spark, name, builder)
-    }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, cls, builder) =>
-      ext.injectFunction(
-        (FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
-    }
-    // window-top-k → bounded-heap aggregate (see the rule's scaladoc)
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-  }
 }

@@ -70,14 +70,19 @@ object Main {
   /** One job pack. Each query's build and guarded write run as one task
     * on a fixed pool of min(#queries, defaultParallelism) threads that
     * lives only for this run of the pack, so the pool grows with the
-    * cluster's cores. A failing query does not stop its siblings: the
-    * pack waits for all of them, then fails with the first failure in
-    * registration order. */
+    * cluster's cores. Each task plans on its own child session
+    * (`newSession`): the context, cache and extensions are shared, but
+    * the temp views a query registers and the SQL conf it sets are its
+    * own, so concurrent siblings cannot see or undo each other's (q108
+    * and q109 deploy the same view names and set
+    * `storeAnalyzedPlanForView` differently). A failing query does not
+    * stop its siblings: the pack waits for all of them, then fails with
+    * the first failure in registration order. */
   private[graft] def pack(job: String, qs: Seq[String], dataDir: String, outDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries): JobSpec =
     JobSpec(job, Some(qs.toSet), (ctx: JobContext) =>
       runAll(s"graft-pack-$job", ctx.spark.sparkContext.defaultParallelism, qs.map { q => () =>
-        val df = queries(q)(ctx.spark, dataDir)
+        val df = queries(q)(ctx.spark.newSession(), dataDir)
         val target = ctx.staging.mapId(SchemaId("graft", job.replace('-', '_'), q))
         ctx.guard.writeTable(df, target, s"$outDir/${target.sparkName}", SaveMode.Overwrite)
         ()

@@ -32,7 +32,6 @@ object SchemaType {
 }
 
 final case class SchemaId(project: String, dataset: String, name: String) {
-  def datasetId: DatasetId = DatasetId(project, dataset)
   override def toString: String = s"$project.$dataset.$name"
   /** Spark-side identifier (catalog-safe, no ':'). */
   def sparkName: String = s"${project}_${dataset}_$name".replaceAll("[^A-Za-z0-9_]", "_")

@@ -25,8 +25,6 @@ object TomlLite {
   final case class Section(path: Seq[String], entries: mutable.LinkedHashMap[String, Value])
 
   final case class Doc(root: mutable.LinkedHashMap[String, Value], sections: Seq[Section]) {
-    /** Ordered top-level section names (first path segment, deduped). */
-    def sectionNames: Seq[String] = sections.map(_.path.head).distinct
     def section(path: Seq[String]): Option[Section] = sections.find(_.path == path)
     def str(sec: Section, key: String): Option[String] =
       sec.entries.get(key).collect { case TStr(s) => s }

@@ -834,20 +834,6 @@ object CorpusLoader {
     done.toSeq
   }
 
-  /** Fully rendered+translated SQL per deployable object (debugging /
-    * lint surface; tables are schema TOML, not SQL). */
-  def renderedSql(dataRoot: Path): Map[String, String] = {
-    val objects = scan(dataRoot.resolve("sql"))
-    val base = metricsContext(dataRoot)
-    objects.filterNot(_.kind == "table").map { o =>
-      o.qualName -> (try {
-        val r = JinjaLite.render(o.template, templateContext(base, o))
-        if (o.kind == "routine") translateRoutine(r, routineOverrides.get(o.name))
-        else Dialect.translate(r)
-      } catch { case e: Throwable => s"-- render error: ${e.getMessage}" })
-    }.toMap
-  }
-
   // ---- execution sweep -------------------------------------------------
 
   final case class ExecOutcome(dataset: String, name: String, ok: Boolean,

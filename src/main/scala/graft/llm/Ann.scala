@@ -389,11 +389,4 @@ object Ann {
       .select(col("qid"), col("rank"), col("cid"),
         round(col("cosine"), 6).as("cosine"))
   }
-
-  /** [[lshTopK]] with nBits sized from the actual corpus count — the
-    * shape to use when the corpus size is not known a priori (one cheap
-    * count job against the, typically columnar-pruned, id column). */
-  def lshTopKAuto(corpus: DataFrame, queries: DataFrame, k: Int,
-      targetBucket: Int = 1024): DataFrame =
-    lshTopK(corpus, queries, k, autoBits(corpus.count(), targetBucket))
 }

@@ -35,13 +35,8 @@ object Decontaminate {
   /** Distinct word n-grams of a text column; docs shorter than n tokens
     * contribute their whole text as a single gram (a short eval item is
     * still a verbatim leak when it appears wholesale). */
-  def ngrams(text: Column, n: Int): Column = {
-    val toks = split(text, " ")
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(0), size(toks) - lit(n)),
-        i => array_join(slice(toks, i + 1, lit(n)), " "))))
-      .otherwise(array(array_join(toks, " ")))
-  }
+  def ngrams(text: Column, n: Int): Column =
+    array_distinct(TextDedup.shingles(text, n))
 
   /** Hashed twin of [[ngrams]]: xxhash64 over the token slice, no gram
     * STRING ever built. Join-with-space is injective over space-free
@@ -49,21 +44,8 @@ object Decontaminate {
     * string-gram ones short of a 2⁻⁶⁴ collision. The broadcast eval
     * set becomes 8 bytes/gram and the corpus side skips two string
     * allocations per token position (measured 3× on q84). */
-  def ngramKeys(text: Column, n: Int): Column = {
-    val toks = split(text, " ")
-    // per-token hash once + chained xxhash64 combine per position, with
-    // the hashed-token array let-bound through a single-element
-    // transform (see TextStats.wordGramKeys: a bare subexpression in
-    // the position lambda re-evaluates per position — O(tokens²))
-    def keysFrom(hs: Column): Column =
-      array_distinct(transform(sequence(lit(0), size(hs) - lit(n)), i =>
-        (1 until n).foldLeft(element_at(hs, i + 1))((acc, j) =>
-          xxhash64(acc, element_at(hs, i + (j + 1))))))
-    when(size(toks) >= n,
-      element_at(transform(array(transform(toks, t => xxhash64(t))),
-        hs => keysFrom(hs)), 1))
-      .otherwise(array(xxhash64(toks)))
-  }
+  def ngramKeys(text: Column, n: Int): Column =
+    array_distinct(TextStats.wordGramKeys(text, n))
 
   /** Per-corpus-doc contamination report against `evalSet`:
     * (doc_id, n_grams, n_overlap, overlap_ratio, contaminated).

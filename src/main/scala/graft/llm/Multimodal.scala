@@ -32,11 +32,6 @@ object Multimodal {
   case class MediaFeatures(doc_id: Long, media_type: String, byte_len: Int,
       width: Int, height: Int, feature: Array[Float])
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = false),
-    StructField("media_type", StringType, nullable = false)))
-
   /** Build a synthetic media table from documents: utf-8 payload bytes
     * standing in for encoded media. */
   def syntheticMedia(documents: DataFrame): DataFrame =

@@ -78,14 +78,6 @@ object Pooling {
       .groupBy("g", "pos")
       .agg(max(col("v").cast(DoubleType)).as("m"))
 
-  /** Max pooling, array form: (g, pooled ARRAY<DOUBLE>, dim). */
-  def maxPool(df: DataFrame, groupCol: Column,
-      vecCol: Column): DataFrame =
-    maxPoolCells(df, groupCol, vecCol)
-      .groupBy("g")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-        .getField("m").as("pooled"), count(lit(1)).as("dim"))
-
   /** CLS pooling: each group's vector with the MINIMUM orderCol (ties
     * broken by orderCol only — pass a unique key). One max_by-shaped
     * aggregation, no window: (g, pooled, ord). */

@@ -95,16 +95,6 @@ object TextStats {
       (acc, tok) => pmod(acc * 31 + (length(tok) * 17 + ascii(tok)), lit(1000000007L)))
   }
 
-  /** Word n-grams of a document as strings ("a b c" for n=3); documents
-    * shorter than n yield the whole text as one gram. */
-  def wordGrams(text: Column, n: Int): Column = {
-    val ws = split(text, " ")
-    when(size(ws) >= n,
-      transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")))
-      .otherwise(array(array_join(ws, " ")))
-  }
-
   /** Hashed word n-gram keys: xxhash64 over the token slice instead of
     * building the joined gram STRING. Tokens come from split(text, " ")
     * so they cannot contain a space, which makes join-with-space

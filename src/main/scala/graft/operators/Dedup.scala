@@ -27,9 +27,4 @@ object Dedup {
     * for reproducibility and so re-runs pick identical representatives. */
   def deterministicSamplePerKey(df: DataFrame, keys: Seq[String], hashCol: Column): DataFrame =
     latestPerKey(df, keys, Seq(hashCol.asc))
-
-  /** Dedup-by-key min-wins + join back (user_reports_dedupe/view.sql:1-6):
-    * keeps the full first-seen row per uuid. */
-  def firstReportPerKey(df: DataFrame, key: String, ts: String): DataFrame =
-    latestPerKey(df, Seq(key), Seq(col(ts).asc, col(key).asc))
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Ascending, Attribute, AttributeReference, Cast, DenseRank, EqualTo, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, IntegerLiteral, LessThan, LessThanOrEqual, Literal, NullsFirst, PosExplode, Rank, RowNumber, SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.{CurrentRow, RowFrame, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, Window, WindowGroupLimit}
@@ -46,22 +45,14 @@ import graft.operators.{RankTopKRows, TopKRows}
   *
   * The rewritten subtree reproduces the Filter's exact output
   * (child columns + rn, original exprIds), so any parent plan is
-  * untouched. Registered via GraftExtensions.injectOptimizerRule;
-  * [[apply(df)]] applies it to a single DataFrame without touching
-  * session state.
+  * untouched. [[graft.GraftExtensions]] injects it into every session
+  * graft builds, so it is the one way a plan gets rewritten; a session
+  * that must keep the Window form (a test's baseline) excludes it with
+  * `spark.sql.optimizer.excludedRules=graft.plans.WindowTopKRewrite`.
   */
 object WindowTopKRewrite extends Rule[LogicalPlan] {
 
   private val MaxK = 10000
-
-  /** One-shot form: rewrite a DataFrame's plan (no session mutation).
-    * Runs over the OPTIMIZED plan — the analyzer leaves stacked
-    * pass-through Projects between Filter and Window that the
-    * optimizer collapses, giving the same shape the injected-rule
-    * path sees. */
-  def apply(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.ColumnShim.ofRows(df.sparkSession,
-      apply(df.queryExecution.optimizedPlan))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, w: Window) =>

@@ -399,7 +399,7 @@ object InfraQueries {
       // for a branch whose map side reduces to ~nothing (the distinct
       // count partial-aggregates to <= NDV rows per task) — at 8x
       // lineitem the stress A/B measured checkpoint 25.6 s vs recompute
-      // 8.1 s (CheckpointStress, r17): re-running the scan+Expand twice
+      // 8.1 s (r17 stress A/B, PERF_NOTES): re-running the scan+Expand twice
       // is scan-bound and cheap; pinning O(rows) to block storage
       // spills and evicts. sf0.1 confirmed flat.
       val long = li.unpivot(Array(col("ok"), col("ln")),

@@ -1264,14 +1264,13 @@ object StatQueries {
       base.unionByName(ri).orderBy("check")
     }),
 
-    // The SQL-text surface of the native aggregates (GraftFunctions /
-    // GraftExtensions): the q167 CMS pipeline expressed entirely as
-    // spark.sql over a temp view, with the sketch built and probed by
-    // the SQL-registered count_min_sketch function — the path a
+    // The SQL-text surface of the native aggregates: the q167 CMS
+    // pipeline expressed entirely as spark.sql over a temp view, with
+    // the sketch built and probed by the count_min_sketch function that
+    // GraftExtensions injects into every session — the path a
     // SQL-corpus user (the reference's audience) actually takes.
     // Same oracle as q167: cell-by-cell md5 replay.
     "q171_sql_native_fns" -> ((s, dir) => {
-      graft.GraftFunctions.registerAll(s)
       t(s, dir, "events").createOrReplaceTempView("graft_q171_events")
       def cell(d: Int) =
         s"element_at(c, CAST(pmod(CAST(conv(substring(md5(concat(key, '#$d')), 1, 8), 16, 10) AS BIGINT), 64) AS INT) + ${d * 64 + 1})"
@@ -1616,8 +1615,9 @@ object StatQueries {
 
     // Grouped top-k THROUGH the optimizer rule: the query is written
     // in the textbook window form (row_number over partition/order,
-    // filter rn <= 3) and plans/WindowTopKRewrite turns it into the
-    // bounded-heap TopKRows aggregate — no Window, no per-group sort,
+    // filter rn <= 3) and the session's plans/WindowTopKRewrite
+    // (injected by GraftExtensions) turns it into the bounded-heap
+    // TopKRows aggregate — no Window, no per-group sort,
     // ≤ k rows per group per map task into the exchange (~2x the
     // already-WindowGroupLimit'd window plan at sf0.1; PERF_NOTES.md,
     // round-12 "q262 topk_rewrite" entry). The oracle replays the
@@ -1633,8 +1633,7 @@ object StatQueries {
           Window.partitionBy("l_suppkey").orderBy(desc("l_extendedprice"),
             col("l_orderkey"), col("l_linenumber"))))
         .filter(col("rn") <= 3)
-      graft.plans.WindowTopKRewrite(q)
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
+      q.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").cast(DoubleType).as("price"),
           col("rn").cast(LongType).as("rn"))
         .orderBy("l_suppkey", "rn")

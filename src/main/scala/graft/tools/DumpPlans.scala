@@ -109,8 +109,8 @@ object DumpPlans {
     // Corpus-path proof (r12 ask #4): the reference's QUALIFY
     // ROW_NUMBER dedup idiom (graphics_dashboard.sql:165-169),
     // Dialect-translated exactly as CorpusLoader would and planned
-    // under the SESSION-injected rule (not the one-shot apply) — the
-    // dump must show topk_rows with no Window node. Second shape: the
+    // under the session-injected rule, the only way the rule runs —
+    // the dump must show topk_rows with no Window node. Second shape: the
     // multi-window-expression QUALIFY (other window functions share
     // the node with the filtered rank) — the rank becomes the
     // aggregate, the others keep their own Window below it.

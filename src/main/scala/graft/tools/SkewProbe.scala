@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * three skew-sensitive paths over BOTH the uniform and skewed layouts
   * at equal volume:
   *
-  *   1. W1 dedup (rn = 1) through the WindowTopKRewrite aggregate —
+  *   1. W1 dedup (rn = 1) through the WindowTopKRewrite aggregate
+  *      (the rule GraftSession's extensions inject) —
   *      the hot group collapses MAP-SIDE (partial_topk keeps 1 row per
   *      key per task), so the exchange never sees the skew;
   *   2. grouped top-3, same mechanism (≤ 3 rows per key per task);
@@ -36,16 +37,14 @@ object SkewProbe {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("skey")
       .orderBy(col("ts").desc, col("event_id"))
-    graft.plans.WindowTopKRewrite(
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1))
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
   }
 
   def topK(df: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("skey")
       .orderBy(col("ts").desc, col("event_id"))
-    graft.plans.WindowTopKRewrite(
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k))
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
   /** Key→count dim, MATERIALIZED (localCheckpoint): a real dimension is

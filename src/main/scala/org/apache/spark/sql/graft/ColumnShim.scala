@@ -12,24 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a SQL function builder on an EXISTING session (the
-    * extensions path in [[graft.GraftExtensions]] only applies at
-    * session construction; `sessionState` is `private[sql]`, hence this
-    * shim). Temp-function scope — session-local, like CREATE TEMPORARY
-    * FUNCTION. */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
-  /** DataFrame from a raw logical plan (Dataset.ofRows is
-    * `private[sql]`) — used by plan-rewrite APIs that transform a
-    * frame's plan without mutating session optimizer state. */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -133,7 +133,7 @@ class DialectSpec extends SparkTestBase {
     val translated = Dialect.translate(
       """SELECT * FROM q_pings
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY client_id ORDER BY submission_timestamp DESC, v) = 1""".stripMargin)
-    val rewritten = graft.plans.WindowTopKRewrite(spark.sql(translated))
+    val rewritten = spark.sql(translated)
     val plan = rewritten.queryExecution.optimizedPlan.toString
     assert(plan.contains("topk_rows"), s"rule did not fire on translated QUALIFY:\n$plan")
     assert(!plan.contains("Window"), s"window survived on translated QUALIFY:\n$plan")

@@ -1,79 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
-/** The SQL surface of the native expressions: a session created with
+/** The SQL surface of the native expressions: the session built with
   * spark.sql.extensions=graft.GraftExtensions can call every custom
-  * Catalyst expression/aggregate from plain SQL. Uses its own
-  * SparkSession (extensions apply at session construction) on the
-  * shared context; the shared test session is restored afterwards.
+  * Catalyst expression/aggregate from plain SQL.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  private def withExtSession[T](f: SparkSession => T): T = {
-    val base = SparkTestBase.session // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    try f(s)
-    finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
-    }
-  }
+class GraftExtensionsSpec extends SparkTestBase {
 
   test("dot_product_f32 is callable from SQL") {
-    withExtSession { s =>
-      val r = s.sql(
-        """SELECT dot_product_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
-          |                       array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d
-          |""".stripMargin).head.getDouble(0)
-      assert(math.abs(r - 11.0) < 1e-9)
-    }
+    val r = spark.sql(
+      """SELECT dot_product_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+        |                       array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d
+        |""".stripMargin).head.getDouble(0)
+    assert(math.abs(r - 11.0) < 1e-9)
   }
 
   test("portable_hash60 is callable from SQL and matches the md5 derivation") {
-    withExtSession { s =>
-      val r = s.sql(
-        """SELECT portable_hash60('spark') AS h,
-          |  CAST(conv(substring(md5('spark'), 1, 15), 16, 10) AS BIGINT) AS ref
-          |""".stripMargin).head
-      assert(r.getLong(0) == r.getLong(1))
-    }
+    val r = spark.sql(
+      """SELECT portable_hash60('spark') AS h,
+        |  CAST(conv(substring(md5('spark'), 1, 15), 16, 10) AS BIGINT) AS ref
+        |""".stripMargin).head
+    assert(r.getLong(0) == r.getLong(1))
   }
 
   test("native aggregates are callable from SQL") {
-    withExtSession { s =>
-      import s.implicits._
-      Seq("a", "a", "b", "a", "c").toDF("k").createOrReplaceTempView("t")
-      val mg = s.sql("SELECT misra_gries(k, 4) AS m FROM t")
-        .head.getMap[String, Long](0)
-      assert(mg("a") == 3L)
-      val cms = s.sql("SELECT count_min_sketch(k, 2, 8) AS c FROM t")
-        .head.getSeq[Long](0)
-      assert(cms.length == 16 && cms.sum == 5L * 2)
-      Seq((1.0, 10L), (5.0, 20L), (3.0, 30L)).toDF("v", "id")
-        .createOrReplaceTempView("s")
-      val tk = s.sql("SELECT top_k_by_value(v, id, 2) AS t FROM s")
-        .head.getSeq[org.apache.spark.sql.Row](0)
-      assert(tk.map(_.getLong(1)) == Seq(20L, 30L))
-    }
+    import spark.implicits._
+    Seq("a", "a", "b", "a", "c").toDF("k").createOrReplaceTempView("t")
+    val mg = spark.sql("SELECT misra_gries(k, 4) AS m FROM t")
+      .head.getMap[String, Long](0)
+    assert(mg("a") == 3L)
+    val cms = spark.sql("SELECT count_min_sketch(k, 2, 8) AS c FROM t")
+      .head.getSeq[Long](0)
+    assert(cms.length == 16 && cms.sum == 5L * 2)
+    Seq((1.0, 10L), (5.0, 20L), (3.0, 30L)).toDF("v", "id")
+      .createOrReplaceTempView("s")
+    val tk = spark.sql("SELECT top_k_by_value(v, id, 2) AS t FROM s")
+      .head.getSeq[org.apache.spark.sql.Row](0)
+    assert(tk.map(_.getLong(1)) == Seq(20L, 30L))
   }
 
   test("non-literal sketch parameters are rejected with a clear error") {
-    withExtSession { s =>
-      import s.implicits._
-      Seq("a").toDF("k").createOrReplaceTempView("t2")
-      val e = intercept[Exception](
-        s.sql("SELECT misra_gries(k, length(k)) FROM t2").collect())
-      assert(e.getMessage.contains("integer literal"))
-    }
+    import spark.implicits._
+    Seq("a").toDF("k").createOrReplaceTempView("t2")
+    val e = intercept[Exception](
+      spark.sql("SELECT misra_gries(k, length(k)) FROM t2").collect())
+    assert(e.getMessage.contains("integer literal"))
   }
 }

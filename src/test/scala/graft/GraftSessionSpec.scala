@@ -1,12 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `GraftSession.conf` is pure conf arithmetic: no SparkContext starts. */
+/** `GraftSession.conf` is pure conf arithmetic: no SparkContext starts.
+  * The source scan pins that it stays the only way into the engine. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("submitted master, shuffle partitions and extensions win") {
@@ -43,5 +47,19 @@ class GraftSessionSpec extends AnyFunSuite {
       val expected = e.getValue.asText.replace("$CPUS", cpus.toString)
       assert(c.getOption(e.getKey).contains(expected), s"${e.getKey}")
     }
+  }
+
+  // Every session is a GraftSession, so GraftExtensions is the one way a
+  // session gets graft's functions and rules. This file is skipped: it
+  // has to spell the patterns it looks for.
+  test("only GraftSession builds a session, and nothing registers functions or rules on one") {
+    val sources = Using.resource(Files.walk(Paths.get("src")))(_.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "GraftSessionSpec.scala")
+      .toList)
+    def mentioning(pattern: String): Seq[Path] =
+      sources.filter(p => Files.readString(p).contains(pattern))
+    assert(mentioning("SparkSession.builder") == Seq(Paths.get("src/main/scala/graft/GraftSession.scala")))
+    assert(mentioning("registerFunction").isEmpty)
+    assert(mentioning("extraOptimizations").isEmpty)
   }
 }

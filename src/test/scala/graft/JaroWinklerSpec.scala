@@ -95,7 +95,6 @@ class JaroWinklerSpec extends SparkTestBase {
 
   test("expression works through codegen and the SQL surface") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = fixtures.toDF("a", "b", "want")
     val viaColumn = df
       .withColumn("got", JaroWinklerMicro(col("a"), col("b")))

@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -56,6 +56,26 @@ class MainPackSpec extends SparkTestBase {
       assert(new java.io.File(path, "_SUCCESS").exists(), s"sibling $q was not written")
     }
     assert(poolThreads("graft-pack-fail-probe-").isEmpty)
+  }
+
+  test("concurrent tasks of a pack do not share temp views") {
+    val out = java.nio.file.Files.createTempDirectory("graft_packiso").toString
+    // both tasks register `pack_probe` before either reads it back
+    val registered = new CountDownLatch(2)
+    def probe(v: Int): (SparkSession, String) => DataFrame = (s, _) => {
+      s.range(1).selectExpr(s"$v AS v").createOrReplaceTempView("pack_probe")
+      registered.countDown()
+      if (!registered.await(60, TimeUnit.SECONDS)) sys.error("the sibling task never started")
+      s.table("pack_probe")
+    }
+    val qs = Map("probe_a" -> probe(1), "probe_b" -> probe(2))
+    val report = EtlRunner.run(spark, Seq(Main.pack("iso-probe", qs.keys.toSeq.sorted, sfDir, out, qs)))
+    assert(report.failed.isEmpty, report.failed)
+    Seq("probe_a" -> 1, "probe_b" -> 2).foreach { case (q, v) =>
+      val path = s"$out/${SchemaId("graft", "iso_probe", q).sparkName}"
+      assert(spark.read.parquet(path).as[Int].collect().toSeq == Seq(v), q)
+    }
+    assert(!spark.catalog.tableExists("pack_probe"), "a task's view leaked into the pack's session")
   }
 
   test("the first failure in registration order is the one reported") {

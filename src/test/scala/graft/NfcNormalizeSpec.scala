@@ -39,7 +39,6 @@ class NfcNormalizeSpec extends SparkTestBase {
 
   test("expression works through codegen and the SQL surface") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = cases.toDF("s", "want")
     assert(df.withColumn("got", NfcNormalize(col("s")))
       .filter(col("got") =!= col("want")).count() == 0)

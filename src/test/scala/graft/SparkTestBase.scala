@@ -10,15 +10,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The session every entrypoint plans on, at a fixed local[4] and 4
+    * shuffle partitions whatever `SPARK_GRAFT_CPUS` says. */
+  lazy val session: SparkSession = GraftSession.getOrCreate("WARN", cpus = 4)
 }

@@ -2,14 +2,32 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.plans.WindowTopKRewrite
 
+/** The shared session carries the rule (GraftExtensions), so a query
+  * built on `spark` is the rewritten side. The Window baseline is the
+  * same query on a child session that excludes the rule; the shared
+  * session's conf is never changed. */
 class WindowTopKRuleSpec extends SparkTestBase {
   import spark.implicits._
+
+  private lazy val windowed: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules", WindowTopKRewrite.ruleName)
+    s
+  }
+
+  /** `q`, asserted to be planned with its Window (the baseline side). */
+  private def window(q: DataFrame): DataFrame = {
+    val plan = q.queryExecution.optimizedPlan.toString
+    assert(plan.contains("Window"), s"baseline lost its Window:\n$plan")
+    q
+  }
 
   private def windowTopK(df: DataFrame, k: Int, desc0: Boolean): DataFrame = {
     val o = if (desc0) desc("v") else asc("v")
@@ -18,12 +36,16 @@ class WindowTopKRuleSpec extends SparkTestBase {
       .filter(col("rn") <= k)
   }
 
-  private def data(seed: Int, n: Int): DataFrame = {
+  private val schema = StructType(Seq(StructField("g", LongType, nullable = false),
+    StructField("v", DoubleType), StructField("id", LongType, nullable = false)))
+
+  private def data(seed: Int, n: Int, s: SparkSession = spark): DataFrame = {
     val rnd = new Random(seed)
-    (1 to n).map { i =>
-      (rnd.nextInt(7).toLong, if (rnd.nextInt(10) == 0) null
+    val rows = (1 to n).map { i =>
+      Row(rnd.nextInt(7).toLong, if (rnd.nextInt(10) == 0) null
       else java.lang.Double.valueOf(rnd.nextInt(40) / 4.0), i.toLong)
-    }.toDF("g", "v", "id")
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   private def canon(df: DataFrame): Set[(Long, Option[Double], Long, Int)] =
@@ -32,9 +54,8 @@ class WindowTopKRuleSpec extends SparkTestBase {
 
   test("rewrite removes the Window and matches, asc and desc, with ties and nulls") {
     for (desc0 <- Seq(true, false); seed <- Seq(1, 2)) {
-      val df = data(seed, 500)
-      val q = windowTopK(df, 3, desc0)
-      val r = WindowTopKRewrite(q)
+      val q = window(windowTopK(data(seed, 500, windowed), 3, desc0))
+      val r = windowTopK(data(seed, 500), 3, desc0)
       val plan = r.queryExecution.optimizedPlan.toString
       assert(!plan.contains("Window"), s"window survived:\n$plan")
       assert(plan.contains("topk_rows"), s"no topk_rows:\n$plan")
@@ -44,56 +65,56 @@ class WindowTopKRuleSpec extends SparkTestBase {
 
   test("k larger than every group returns all rows with full numbering") {
     val df = data(3, 60)
-    val q = windowTopK(df, 1000, desc0 = true)
-    val r = WindowTopKRewrite(q)
+    val q = window(windowTopK(data(3, 60, windowed), 1000, desc0 = true))
+    val r = windowTopK(df, 1000, desc0 = true)
     assert(canon(r) == canon(q))
     assert(r.count() == df.count())
   }
 
   test("nulls-first ordering (asc_nulls_first) is preserved") {
-    val df = data(4, 300)
-    val q = df.withColumn("rn", row_number().over(
+    def shaped(df: DataFrame) = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy(asc_nulls_first("v"), col("id"))))
       .filter(col("rn") <= 2)
-    val r = WindowTopKRewrite(q)
+    val q = window(shaped(data(4, 300, windowed)))
+    val r = shaped(data(4, 300))
     assert(!r.queryExecution.optimizedPlan.toString.contains("Window"))
     assert(canon(r) == canon(q))
   }
 
   test("rn = 1 (latest-row-per-key) and flipped-literal forms rewrite") {
-    val df = data(7, 300)
-    val latest = df.withColumn("rn", row_number().over(
+    def latest(df: DataFrame) = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy(desc("v"), col("id"))))
       .filter(col("rn") === 1)
-    val r1 = WindowTopKRewrite(latest)
+    val r1 = latest(data(7, 300))
     assert(!r1.queryExecution.optimizedPlan.toString.contains("Window"))
-    assert(canon(r1) == canon(latest))
-    val flipped = df.withColumn("rn", row_number().over(
+    assert(canon(r1) == canon(window(latest(data(7, 300, windowed)))))
+    def flipped(df: DataFrame) = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy(desc("v"), col("id"))))
       .filter(lit(2) >= col("rn"))
-    val r2 = WindowTopKRewrite(flipped)
+    val r2 = flipped(data(7, 300))
     assert(!r2.queryExecution.optimizedPlan.toString.contains("Window"))
-    assert(canon(r2) == canon(flipped))
+    assert(canon(r2) == canon(window(flipped(data(7, 300, windowed)))))
   }
 
   test("rank() and dense_rank() rewrite tie-aware (boundary ties kept)") {
     // v = i/4 over a small domain → heavy ties, including at the
     // boundary; rank<=k may keep MORE than k rows per group
     for (seed <- Seq(8, 9); k <- Seq(1, 3)) {
-      val df = data(seed, 400)
-      val qr = df.withColumn("rn", rank().over(
+      def ranked(df: DataFrame) = df.withColumn("rn", rank().over(
           Window.partitionBy("g").orderBy(desc("v"))))
         .filter(col("rn") <= k)
-      val rr = WindowTopKRewrite(qr)
+      val rr = ranked(data(seed, 400))
       assert(!rr.queryExecution.optimizedPlan.toString.contains("Window"))
       assert(rr.queryExecution.optimizedPlan.toString.contains("rank_topk_rows"))
-      assert(canon(rr) == canon(qr), s"rank seed=$seed k=$k")
-      val qd = df.withColumn("rn", dense_rank().over(
+      assert(canon(rr) == canon(window(ranked(data(seed, 400, windowed)))),
+        s"rank seed=$seed k=$k")
+      def dense(df: DataFrame) = df.withColumn("rn", dense_rank().over(
           Window.partitionBy("g").orderBy(desc("v"))))
         .filter(col("rn") <= k)
-      val rd = WindowTopKRewrite(qd)
+      val rd = dense(data(seed, 400))
       assert(!rd.queryExecution.optimizedPlan.toString.contains("Window"))
-      assert(canon(rd) == canon(qd), s"dense seed=$seed k=$k")
+      assert(canon(rd) == canon(window(dense(data(seed, 400, windowed)))),
+        s"dense seed=$seed k=$k")
     }
   }
 
@@ -103,18 +124,16 @@ class WindowTopKRuleSpec extends SparkTestBase {
     val q1 = df.withColumn("rn", ntile(4).over(
         Window.partitionBy("g").orderBy("v")))
       .filter(col("rn") <= 3)
-    assert(WindowTopKRewrite(q1).queryExecution.optimizedPlan
-      .toString.contains("Window"))
+    assert(q1.queryExecution.optimizedPlan.toString.contains("Window"))
     // filter on the wrong side (rn >= k): no rewrite
-    val q2 = windowTopK(df, 3, desc0 = true).drop("rn")
     val q3 = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy("v"))).filter(col("rn") >= 3)
-    assert(WindowTopKRewrite(q3).queryExecution.optimizedPlan
-      .toString.contains("Window"))
+    assert(q3.queryExecution.optimizedPlan.toString.contains("Window"))
     // matching shape under a projection that DROPS rn still rewrites
-    assert(!WindowTopKRewrite(q2).queryExecution.optimizedPlan
-      .toString.contains("Window"))
-    assert(q2.collect().length == WindowTopKRewrite(q2).collect().length)
+    val q2 = windowTopK(df, 3, desc0 = true).drop("rn")
+    assert(!q2.queryExecution.optimizedPlan.toString.contains("Window"))
+    assert(window(windowTopK(data(5, 100, windowed), 3, desc0 = true).drop("rn"))
+      .collect().length == q2.collect().length)
   }
 
   test("multi-window-expression QUALIFY shape: rank splits out, others keep QUALIFY semantics") {
@@ -124,15 +143,14 @@ class WindowTopKRuleSpec extends SparkTestBase {
     // over ALL rows (QUALIFY applies after every window), so their
     // values must equal the unrewritten plan's on surviving rows.
     for (seed <- Seq(11, 12); k <- Seq(1, 2)) {
-      val df = data(seed, 400)
       val w = Window.partitionBy("g").orderBy(desc("v"), col("id"))
       def shaped(d: DataFrame) = d
         .withColumn("run_sum", sum(coalesce(col("v"), lit(0.0))).over(w))
         .withColumn("prev_v", lag("v", 1).over(w))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k)
-      val q = shaped(df)
-      val r = WindowTopKRewrite(q)
+      val q = window(shaped(data(seed, 400, windowed)))
+      val r = shaped(data(seed, 400))
       val plan = r.queryExecution.optimizedPlan.toString
       // the rank window is gone (aggregate in its place) but exactly
       // one Window node remains for the non-rank expressions
@@ -148,38 +166,22 @@ class WindowTopKRuleSpec extends SparkTestBase {
   }
 
   test("downstream operators see identical resolution (join on rewritten frame)") {
-    val df = data(6, 200)
-    val top = WindowTopKRewrite(windowTopK(df, 2, desc0 = true))
-    val joined = top.join(df.select(col("id"), col("v").as("v2")), "id")
-      .filter(col("rn") === 1)
-    val expect = windowTopK(df, 2, desc0 = true)
+    def joined(df: DataFrame) = windowTopK(df, 2, desc0 = true)
       .join(df.select(col("id"), col("v").as("v2")), "id")
       .filter(col("rn") === 1)
-    assert(joined.collect().toSet.map((r: org.apache.spark.sql.Row) =>
-      r.toString) == expect.collect().toSet.map(
-      (r: org.apache.spark.sql.Row) => r.toString))
+    val got = joined(data(6, 200))
+    assert(got.queryExecution.optimizedPlan.toString.contains("topk_rows"))
+    val expect = window(joined(data(6, 200, windowed)))
+    assert(got.collect().toSet.map((r: Row) => r.toString) ==
+      expect.collect().toSet.map((r: Row) => r.toString))
   }
 
   test("sessions built with GraftExtensions rewrite automatically") {
-    val base = SparkTestBase.session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .withExtensions(new GraftExtensions())
-      .getOrCreate()
-    try {
-      import s.implicits._
-      val df = (1 to 100).map(i => (i % 5, i * 1.0, i)).toDF("g", "v", "id")
-      val q = df.withColumn("rn", row_number().over(
-          Window.partitionBy("g").orderBy(desc("v"), col("id"))))
-        .filter(col("rn") <= 3)
-      assert(q.queryExecution.optimizedPlan.toString.contains("topk_rows"))
-      assert(q.count() == 15)
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
-    }
+    val df = (1 to 100).map(i => (i % 5, i * 1.0, i)).toDF("g", "v", "id")
+    val q = df.withColumn("rn", row_number().over(
+        Window.partitionBy("g").orderBy(desc("v"), col("id"))))
+      .filter(col("rn") <= 3)
+    assert(q.queryExecution.optimizedPlan.toString.contains("topk_rows"))
+    assert(q.count() == 15)
   }
 }

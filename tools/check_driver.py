@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
 """Driver-faithful correctness gate (round 12 replacement for the
-str()-normalizing check_local.py, which silently passed queries the
+str()-normalizing duckdb-based checker, which silently passed queries the
 driver failed).
 
-Key difference from check_local.py: the Spark side is read with
+Key difference from that checker: the Spark side is read with
 pandas/pyarrow (pd.read_parquet), NOT duckdb — so DECIMAL columns stay
 Python Decimal objects ('123.40') instead of being coerced to float64
 ('123.4'), and ARRAY columns stay numpy arrays that crash sort_values.
