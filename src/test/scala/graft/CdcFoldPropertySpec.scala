@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,7 +40,8 @@ class CdcFoldPropertySpec extends SparkTestBase {
   /** Random snapshot + changelog. Small key/seq domains force
     * collisions and exact ties; ~1-in-4 ops are tombstones and a few
     * keys are changelog-only (inserts). */
-  private def genCase(seed: Int): (DataFrame, DataFrame) = {
+  private def genCase(seed: Int, s: SparkSession = spark): (DataFrame, DataFrame) = {
+    import s.implicits._
     val rnd = new Random(seed)
     val snapKeys = (0L until 30L).filter(_ => rnd.nextBoolean())
     val snap = snapKeys.map(k => (k, k * 2.0, s"base${k % 5}"))
@@ -64,10 +65,12 @@ class CdcFoldPropertySpec extends SparkTestBase {
       .as[(Long, Option[Double], Option[String], Boolean)]
       .collect().toSet
 
-  private def sqlFold(snap: DataFrame, ch: DataFrame): DataFrame = {
+  /** The window form, planned on `windowed` so it keeps its Window. */
+  private def sqlFold(seed: Int): DataFrame = {
+    val (snap, ch) = genCase(seed, windowed)
     snap.createOrReplaceTempView("cdc_snap")
     ch.createOrReplaceTempView("cdc_ch")
-    spark.sql(
+    windowBaseline(windowed.sql(
       """WITH latest AS (
         |  SELECT * FROM (
         |    SELECT *, row_number() OVER
@@ -77,14 +80,14 @@ class CdcFoldPropertySpec extends SparkTestBase {
         |FROM cdc_snap s LEFT JOIN latest l ON s.k = l.k WHERE l.k IS NULL
         |UNION ALL
         |SELECT k, price, status, TRUE FROM latest WHERE op <> 'D'
-        |""".stripMargin)
+        |""".stripMargin))
   }
 
   test("batch operator == SQL window form on 12 random cases") {
     (1 to 12).foreach { seed =>
       val (snap, ch) = genCase(seed)
       val a = canon(CdcApply(snap, ch, "k", Seq("seq")))
-      val b = canon(sqlFold(snap, ch))
+      val b = canon(sqlFold(seed))
       assert(a == b, s"seed=$seed batch-vs-sql")
     }
   }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.{SchemaId, WriteGuard}
+import graft.util.Scratch
 
 /** `graft.Main`'s job packs write their tables concurrently; these pin
   * that the concurrent path writes every table, fails like the
@@ -59,7 +60,7 @@ class MainPackSpec extends SparkTestBase {
   }
 
   test("concurrent tasks of a pack do not share temp views") {
-    val out = java.nio.file.Files.createTempDirectory("graft_packiso").toString
+    val out = Scratch.fresh("pack_iso")
     // both tasks register `pack_probe` before either reads it back
     val registered = new CountDownLatch(2)
     def probe(v: Int): (SparkSession, String) => DataFrame = (s, _) => {
@@ -69,13 +70,15 @@ class MainPackSpec extends SparkTestBase {
       s.table("pack_probe")
     }
     val qs = Map("probe_a" -> probe(1), "probe_b" -> probe(2))
-    val report = EtlRunner.run(spark, Seq(Main.pack("iso-probe", qs.keys.toSeq.sorted, sfDir, out, qs)))
-    assert(report.failed.isEmpty, report.failed)
-    Seq("probe_a" -> 1, "probe_b" -> 2).foreach { case (q, v) =>
-      val path = s"$out/${SchemaId("graft", "iso_probe", q).sparkName}"
-      assert(spark.read.parquet(path).as[Int].collect().toSeq == Seq(v), q)
-    }
-    assert(!spark.catalog.tableExists("pack_probe"), "a task's view leaked into the pack's session")
+    try {
+      val report = EtlRunner.run(spark, Seq(Main.pack("iso-probe", qs.keys.toSeq.sorted, sfDir, out, qs)))
+      assert(report.failed.isEmpty, report.failed)
+      Seq("probe_a" -> 1, "probe_b" -> 2).foreach { case (q, v) =>
+        val path = s"$out/${SchemaId("graft", "iso_probe", q).sparkName}"
+        assert(spark.read.parquet(path).as[Int].collect().toSeq == Seq(v), q)
+      }
+      assert(!spark.catalog.tableExists("pack_probe"), "a task's view leaked into the pack's session")
+    } finally Scratch.delete(out)
   }
 
   test("the first failure in registration order is the one reported") {

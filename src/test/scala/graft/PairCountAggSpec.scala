@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.PairCountAgg
 import graft.util.Tables.t
@@ -11,21 +12,23 @@ class PairCountAggSpec extends SparkTestBase {
   import spark.implicits._
 
   test("pairTopK matches count + TopK window on real pair data") {
-    val li = t(spark, sfDir, "lineitem").select("l_orderkey", "l_partkey")
-    val pairs = li.select(col("l_orderkey"), col("l_partkey").as("a"))
-      .join(li.select(col("l_orderkey"), col("l_partkey").as("b")),
-        Seq("l_orderkey"))
-      .filter(col("a") =!= col("b"))
-    val got = pairs.groupBy("a")
+    def pairs(s: SparkSession) = {
+      val li = t(s, sfDir, "lineitem").select("l_orderkey", "l_partkey")
+      li.select(col("l_orderkey"), col("l_partkey").as("a"))
+        .join(li.select(col("l_orderkey"), col("l_partkey").as("b")),
+          Seq("l_orderkey"))
+        .filter(col("a") =!= col("b"))
+    }
+    val got = pairs(spark).groupBy("a")
       .agg(PairCountAgg.pairTopK(col("b"), 3).as("top"))
       .select(col("a"), posexplode(col("top")))
       .select(col("a"), (col("pos") + 1).as("rank"), col("col.b"), col("col.n"))
       .as[(Long, Int, Long, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("a").orderBy(col("n").desc, col("b").asc)
-    val want = pairs.groupBy("a", "b").agg(count(lit(1)).as("n"))
+    val want = windowBaseline(pairs(windowed).groupBy("a", "b").agg(count(lit(1)).as("n"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-      .select(col("a"), col("rank"), col("b"), col("n"))
+      .select(col("a"), col("rank"), col("b"), col("n")))
       .as[(Long, Int, Long, Long)].collect().toSet
     assert(got === want)
   }

@@ -17,16 +17,17 @@ class TopKAggSpec extends SparkTestBase {
       .as[(String, Int, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy(col("value").desc, col("event_id").asc)
-    val want = e.withColumn("rank", row_number().over(w))
+    val want = windowBaseline(t(windowed, sfDir, "events")
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
-      .select(col("event_type"), col("rank"), col("event_id"))
+      .select(col("event_type"), col("rank"), col("event_id")))
       .as[(String, Int, Long)].collect().toSet
     assert(got === want)
   }
 
   test("survives many partial buffers (merge + serde path)") {
-    val df = (1 to 1000).map(i => (i % 7, i.toDouble % 13, i.toLong))
-      .toDF("g", "v", "id").repartition(32)
+    val rows = (1 to 1000).map(i => (i % 7, i.toDouble % 13, i.toLong))
+    val df = rows.toDF("g", "v", "id").repartition(32)
     val got = df.groupBy("g")
       .agg(TopKAgg.topK(col("v"), col("id"), 3).as("top"))
       .select(col("g"), explode(col("top")).as("e"))
@@ -34,8 +35,9 @@ class TopKAggSpec extends SparkTestBase {
       .as[(Int, Double, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy(col("v").desc, col("id").asc)
-    val want = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .select(col("g"), col("v"), col("id"))
+    val want = windowBaseline(windowed.createDataFrame(rows).toDF("g", "v", "id")
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      .select(col("g"), col("v"), col("id")))
       .as[(Int, Double, Long)].collect().toSet
     assert(got === want)
   }

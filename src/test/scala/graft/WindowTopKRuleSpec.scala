@@ -7,27 +7,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-import graft.plans.WindowTopKRewrite
-
 /** The shared session carries the rule (GraftExtensions), so a query
   * built on `spark` is the rewritten side. The Window baseline is the
-  * same query on a child session that excludes the rule; the shared
-  * session's conf is never changed. */
+  * same query on `windowed`, the child session that excludes the rule
+  * (see [[SparkTestBase]]). */
 class WindowTopKRuleSpec extends SparkTestBase {
   import spark.implicits._
-
-  private lazy val windowed: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.excludedRules", WindowTopKRewrite.ruleName)
-    s
-  }
-
-  /** `q`, asserted to be planned with its Window (the baseline side). */
-  private def window(q: DataFrame): DataFrame = {
-    val plan = q.queryExecution.optimizedPlan.toString
-    assert(plan.contains("Window"), s"baseline lost its Window:\n$plan")
-    q
-  }
 
   private def windowTopK(df: DataFrame, k: Int, desc0: Boolean): DataFrame = {
     val o = if (desc0) desc("v") else asc("v")
@@ -54,7 +39,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
 
   test("rewrite removes the Window and matches, asc and desc, with ties and nulls") {
     for (desc0 <- Seq(true, false); seed <- Seq(1, 2)) {
-      val q = window(windowTopK(data(seed, 500, windowed), 3, desc0))
+      val q = windowBaseline(windowTopK(data(seed, 500, windowed), 3, desc0))
       val r = windowTopK(data(seed, 500), 3, desc0)
       val plan = r.queryExecution.optimizedPlan.toString
       assert(!plan.contains("Window"), s"window survived:\n$plan")
@@ -65,7 +50,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
 
   test("k larger than every group returns all rows with full numbering") {
     val df = data(3, 60)
-    val q = window(windowTopK(data(3, 60, windowed), 1000, desc0 = true))
+    val q = windowBaseline(windowTopK(data(3, 60, windowed), 1000, desc0 = true))
     val r = windowTopK(df, 1000, desc0 = true)
     assert(canon(r) == canon(q))
     assert(r.count() == df.count())
@@ -75,7 +60,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
     def shaped(df: DataFrame) = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy(asc_nulls_first("v"), col("id"))))
       .filter(col("rn") <= 2)
-    val q = window(shaped(data(4, 300, windowed)))
+    val q = windowBaseline(shaped(data(4, 300, windowed)))
     val r = shaped(data(4, 300))
     assert(!r.queryExecution.optimizedPlan.toString.contains("Window"))
     assert(canon(r) == canon(q))
@@ -87,13 +72,13 @@ class WindowTopKRuleSpec extends SparkTestBase {
       .filter(col("rn") === 1)
     val r1 = latest(data(7, 300))
     assert(!r1.queryExecution.optimizedPlan.toString.contains("Window"))
-    assert(canon(r1) == canon(window(latest(data(7, 300, windowed)))))
+    assert(canon(r1) == canon(windowBaseline(latest(data(7, 300, windowed)))))
     def flipped(df: DataFrame) = df.withColumn("rn", row_number().over(
         Window.partitionBy("g").orderBy(desc("v"), col("id"))))
       .filter(lit(2) >= col("rn"))
     val r2 = flipped(data(7, 300))
     assert(!r2.queryExecution.optimizedPlan.toString.contains("Window"))
-    assert(canon(r2) == canon(window(flipped(data(7, 300, windowed)))))
+    assert(canon(r2) == canon(windowBaseline(flipped(data(7, 300, windowed)))))
   }
 
   test("rank() and dense_rank() rewrite tie-aware (boundary ties kept)") {
@@ -106,14 +91,14 @@ class WindowTopKRuleSpec extends SparkTestBase {
       val rr = ranked(data(seed, 400))
       assert(!rr.queryExecution.optimizedPlan.toString.contains("Window"))
       assert(rr.queryExecution.optimizedPlan.toString.contains("rank_topk_rows"))
-      assert(canon(rr) == canon(window(ranked(data(seed, 400, windowed)))),
+      assert(canon(rr) == canon(windowBaseline(ranked(data(seed, 400, windowed)))),
         s"rank seed=$seed k=$k")
       def dense(df: DataFrame) = df.withColumn("rn", dense_rank().over(
           Window.partitionBy("g").orderBy(desc("v"))))
         .filter(col("rn") <= k)
       val rd = dense(data(seed, 400))
       assert(!rd.queryExecution.optimizedPlan.toString.contains("Window"))
-      assert(canon(rd) == canon(window(dense(data(seed, 400, windowed)))),
+      assert(canon(rd) == canon(windowBaseline(dense(data(seed, 400, windowed)))),
         s"dense seed=$seed k=$k")
     }
   }
@@ -132,7 +117,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
     // matching shape under a projection that DROPS rn still rewrites
     val q2 = windowTopK(df, 3, desc0 = true).drop("rn")
     assert(!q2.queryExecution.optimizedPlan.toString.contains("Window"))
-    assert(window(windowTopK(data(5, 100, windowed), 3, desc0 = true).drop("rn"))
+    assert(windowBaseline(windowTopK(data(5, 100, windowed), 3, desc0 = true).drop("rn"))
       .collect().length == q2.collect().length)
   }
 
@@ -149,7 +134,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
         .withColumn("prev_v", lag("v", 1).over(w))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= k)
-      val q = window(shaped(data(seed, 400, windowed)))
+      val q = windowBaseline(shaped(data(seed, 400, windowed)))
       val r = shaped(data(seed, 400))
       val plan = r.queryExecution.optimizedPlan.toString
       // the rank window is gone (aggregate in its place) but exactly
@@ -171,7 +156,7 @@ class WindowTopKRuleSpec extends SparkTestBase {
       .filter(col("rn") === 1)
     val got = joined(data(6, 200))
     assert(got.queryExecution.optimizedPlan.toString.contains("topk_rows"))
-    val expect = window(joined(data(6, 200, windowed)))
+    val expect = windowBaseline(joined(data(6, 200, windowed)))
     assert(got.collect().toSet.map((r: Row) => r.toString) ==
       expect.collect().toSet.map((r: Row) => r.toString))
   }
