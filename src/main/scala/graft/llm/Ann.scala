@@ -67,21 +67,58 @@ object Ann {
   def cosineFrom(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast(DoubleType) / (sqrt(n2a.cast(DoubleType)) * sqrt(n2b.cast(DoubleType)))
 
-  /** Exact cosine top-k of `queries` against `corpus` (both shaped
-    * (id, embedding)). Queries must be small/broadcastable. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
+  /** The corpus side of a re-rank: (cid, ce, cn2). */
+  private[llm] def corpusSide(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
       norm2Exact(col("embedding")).as("cn2"))
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+
+  /** The query side of a re-rank: (qid, qe, qn2). */
+  private[llm] def querySide(queries: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
       norm2Exact(col("embedding")).as("qn2"))
-    val scored = c.join(broadcast(q), col("cid") =!= col("qid"))
+
+  /** The scoring tail every ANN path ends in: exact integer-dot cosine
+    * of the (qe, ce, qn2, cn2) candidate rows, top `k` per query in
+    * (cosine desc, cid) order — the tie order the recall gates pin —
+    * as (qid, `qCols`, rank, cid, `cCols`, cosine rounded to 6 places). */
+  private[llm] def exactTopK(cand: DataFrame, k: Int,
+      qCols: Seq[Column] = Nil, cCols: Seq[Column] = Nil): DataFrame = {
+    val scored = cand
       .withColumn("dot", dotExact(col("qe"), col("ce")))
       .withColumn("cosine", cosineFrom(col("dot"), col("qn2"), col("cn2")))
     val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), round(col("cosine"), 6).as("cosine"))
+      .select((col("qid") +: qCols) ++ (col("rank") +: col("cid") +: cCols) :+
+        round(col("cosine"), 6).as("cosine"): _*)
   }
+
+  /** Two-phase re-rank of in-bucket candidates: a cheap double cosine
+    * prunes to k+8 per query — covering the ≤ ~1e-4 double-vs-quantized
+    * cosine drift — and only the survivors pay the exact integer dot.
+    * At scale the candidate volume is bucket occupancy × probes per
+    * query, so keeping the exact arithmetic off that path is what makes
+    * the re-rank affordable. */
+  private def twoPhaseTopK(cand: DataFrame, k: Int): DataFrame = {
+    val wFast = Window.partitionBy("qid").orderBy(col("cos_fast").desc, col("cid"))
+    exactTopK(cand
+      // native codegen'd dot (bit-identical summation to dotDouble) —
+      // the HOF chain allocates an intermediate array per candidate row.
+      // Both norms are quantized (×2⁴⁰ each) while the double dot is
+      // unscaled; the exact 2⁴⁰ factor keeps cos_fast in true-cosine
+      // units (rank-equivalent either way).
+      .withColumn("cos_fast",
+        graft.functions.ArrayKernels.dotArr(col("qe"), col("ce")) * Q40 /
+          (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
+      .withColumn("fast_rank", row_number().over(wFast))
+      .filter(col("fast_rank") <= k + 8), k)
+  }
+
+  /** Exact cosine top-k of `queries` against `corpus` (both shaped
+    * (id, embedding)). Queries must be small/broadcastable. */
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    exactTopK(corpusSide(corpus)
+      .join(broadcast(querySide(queries)), col("cid") =!= col("qid")), k)
 
   /** HARD-NEGATIVE mining for contrastive training: for each query
     * vector, the k nearest candidates with a DIFFERENT label — the
@@ -98,15 +135,9 @@ object Ann {
       col("embedding").as("ce"), norm2Exact(col("embedding")).as("cn2"))
     val q = queries.select(col("vec_id").as("qid"), col("label").as("qlabel"),
       col("embedding").as("qe"), norm2Exact(col("embedding")).as("qn2"))
-    val scored = c.join(broadcast(q),
-      col("cid") =!= col("qid") && col("clabel") =!= col("qlabel"))
-      .withColumn("dot", dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", cosineFrom(col("dot"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("qlabel"), col("rank"), col("cid"),
-        col("clabel").as("neg_label"), round(col("cosine"), 6).as("cosine"))
+    exactTopK(c.join(broadcast(q),
+        col("cid") =!= col("qid") && col("clabel") =!= col("qlabel")), k,
+      qCols = Seq(col("qlabel")), cCols = Seq(col("clabel").as("neg_label")))
   }
 
   /** Deterministic pseudo-random hyperplane weight for (dim i, plane p):
@@ -211,20 +242,6 @@ object Ann {
         graft.functions.ArrayKernels.dotArr(col("centroid"), col("centroid")))
   }
 
-  /** IVF-style ANN: `nCells` centroids seeded from the lowest-id corpus
-    * vectors and refined with `kmeansIters` Lloyd steps; the corpus is
-    * assigned once to its nearest cell, each query probes its `nProbe`
-    * nearest cells, and candidates are re-ranked two-phase (double
-    * prefilter keeps top k+8 per query — covering the ≤ ~1e-4
-    * double-vs-quantized cosine drift — then the exact integer dot on
-    * survivors, the q81 scheme).
-    *
-    * Scale: centroid build is bounded work (broadcast assignments, one
-    * elementwise-mean shuffle per iteration); probing turns all-pairs
-    * search into an equi-join on cell id over ~nProbe/nCells of the
-    * corpus. The inverted-file layout is the same partition-pruning idea
-    * as partitioned parquet — a query touches only its cells.
-    */
   /** Coarse-quantizer centroids for a prepared (cid, ce, cn2) frame:
     * lowest-id seeding + `kmeansIters` Lloyd steps, PINNED (multi-
     * consumer plans would otherwise re-run the whole fold per consumer).
@@ -239,43 +256,35 @@ object Ann {
     pin((1 to kmeansIters).foldLeft(seed)((cur, _) => lloydStep(c, cur)))
   }
 
+  /** IVF-style ANN: `nCells` centroids seeded from the lowest-id corpus
+    * vectors and refined with `kmeansIters` Lloyd steps; the corpus is
+    * assigned once to its nearest cell, each query probes its `nProbe`
+    * nearest cells, and candidates are re-ranked two-phase (double
+    * prefilter keeps top k+8 per query — covering the ≤ ~1e-4
+    * double-vs-quantized cosine drift — then the exact integer dot on
+    * survivors, the q81 scheme).
+    *
+    * Scale: centroid build is bounded work (broadcast assignments, one
+    * elementwise-mean shuffle per iteration); probing turns all-pairs
+    * search into an equi-join on cell id over ~nProbe/nCells of the
+    * corpus. The inverted-file layout is the same partition-pruning idea
+    * as partitioned parquet — a query touches only its cells.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4, kmeansIters: Int = 1): DataFrame = {
-    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      norm2Exact(col("embedding")).as("cn2"))
+    val c = corpusSide(corpus)
     val centroids = cellCentroids(c, corpus, nCells, kmeansIters)
     val assigned = nearestCells(c, "cid", "ce", "cn2", 1, centroids)
-    val probed = nearestCells(
-      queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm2Exact(col("embedding")).as("qn2")), "qid", "qe", "qn2", nProbe, centroids)
+    val probed = nearestCells(querySide(queries), "qid", "qe", "qn2", nProbe,
+      centroids)
     ivfRerank(assigned, probed, k)
   }
 
   /** In-cell candidate re-rank shared by [[ivfTopK]] and
-    * [[ivfTopKFromIndex]]: fast double-dot prune to k+8, then exact
-    * integer cosine for the final ordering. */
-  private def ivfRerank(assigned: DataFrame, probed: DataFrame, k: Int): DataFrame = {
-    val joined = assigned.join(probed, Seq("cell"))
-      .filter(col("cid") =!= col("qid"))
-      // native codegen'd dot (bit-identical summation to dotDouble) —
-      // the HOF chain allocates an intermediate array per candidate row.
-      // Both norms are quantized (×2⁴⁰ each) while the double dot is
-      // unscaled; the exact 2⁴⁰ factor keeps cos_fast in true-cosine
-      // units (rank-equivalent either way).
-      .withColumn("cos_fast",
-        graft.functions.ArrayKernels.dotArr(col("qe"), col("ce")) * Q40 /
-          (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
-    val wFast = Window.partitionBy("qid").orderBy(col("cos_fast").desc, col("cid"))
-    val pruned = joined.withColumn("fast_rank", row_number().over(wFast))
-      .filter(col("fast_rank") <= k + 8)
-    val scored = pruned
-      .withColumn("dot", dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", cosineFrom(col("dot"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), round(col("cosine"), 6).as("cosine"))
-  }
+    * [[ivfTopKFromIndex]]. */
+  private def ivfRerank(assigned: DataFrame, probed: DataFrame, k: Int): DataFrame =
+    twoPhaseTopK(assigned.join(probed, Seq("cell"))
+      .filter(col("cid") =!= col("qid")), k)
 
   /** Persist the IVF index: the trained centroids plus the corpus
     * assignments laid out as parquet PARTITIONED BY cell — the 100 TB
@@ -284,8 +293,7 @@ object Ann {
     * query batch's probe reads only its nProbe cells' directories. */
   def writeIvfIndex(corpus: DataFrame, nCells: Int, kmeansIters: Int,
       path: String): Unit = {
-    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      norm2Exact(col("embedding")).as("cn2"))
+    val c = corpusSide(corpus)
     val centroids = cellCentroids(c, corpus, nCells, kmeansIters)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     nearestCells(c, "cid", "ce", "cn2", 1, centroids)
@@ -301,9 +309,8 @@ object Ann {
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val centroids = pin(spark.read.parquet(s"$path/centroids"))
-    val probed = nearestCells(
-      queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        norm2Exact(col("embedding")).as("qn2")), "qid", "qe", "qn2", nProbe, centroids)
+    val probed = nearestCells(querySide(queries), "qid", "qe", "qn2", nProbe,
+      centroids)
     // bounded collect: at most |queries| * nProbe cell ids
     val touched = probed.select("cell").distinct().collect()
       .map(_.get(0).toString.toLong)
@@ -366,27 +373,7 @@ object Ann {
     val cand = c.join(q, Seq("bucket"))
       .filter(col("cid") =!= col("qid"))
       .dropDuplicates("qid", "cid")
-    // two-phase re-rank (same shape as ivfTopK): a cheap double-precision
-    // cosine prunes the candidate set to k+8 per query, and only the
-    // survivors pay the exact integer dot — at scale the candidate volume
-    // is (nBits+1)·nTables·occupancy per query, so keeping the exact
-    // arithmetic off that path is what makes the re-rank affordable
-    val wFast = Window.partitionBy("qid").orderBy(col("cos_fast").desc, col("cid"))
-    val pruned = cand
-      // native codegen'd dot, bit-identical to dotDouble (see ivfTopK);
-      // same exact 2⁴⁰ rescale to true-cosine units as ivfRerank
-      .withColumn("cos_fast",
-        graft.functions.ArrayKernels.dotArr(col("qe"), col("ce")) * Q40 /
-          (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
-      .withColumn("fast_rank", row_number().over(wFast))
-      .filter(col("fast_rank") <= k + 8)
-    val scored = pruned
-      .withColumn("dot", dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", cosineFrom(col("dot"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"),
-        round(col("cosine"), 6).as("cosine"))
+    // candidate volume is (nBits+1)·nTables·occupancy per query
+    twoPhaseTopK(cand, k)
   }
 }

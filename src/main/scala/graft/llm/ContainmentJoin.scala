@@ -31,32 +31,23 @@ object ContainmentJoin {
     * (containment ≥ num/den), over distinct `shingleW`-shingle sets of
     * `textCol`.
     *
-    * LAZY: returns the plan; nothing executes until the caller's first
-    * action. The two internal `cache()` frames (shingle sets, rarity
-    * ranks) stay registered with the session until LRU eviction — that
-    * is the right trade for the query/bench path, where the plan runs
-    * once and the session ends (r13 learned this the hard way: an
-    * eager `localCheckpoint(true)` here, added for cache hygiene, ran
-    * a full extra materialization job inside the query path and
-    * quadrupled the measured cost of q184, and its truncated lineage
-    * was non-recomputable on executor loss). Long-lived services that
-    * call this repeatedly should use [[pairsReleasing]] instead. */
+    * The shingle sets and the rarity ranks each feed several joins, so
+    * each is materialized once behind an eager `localCheckpoint`. Its
+    * blocks belong to the returned plan and go when that plan is
+    * garbage. Not `cache()`: that registers with the CacheManager every
+    * session in the JVM shares, so the entry would outlive the query
+    * and any later plan with a matching subplan would read it instead
+    * of recomputing. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleW: Int, num: Int, den: Int): DataFrame =
-    pairsImpl(docs, idCol, textCol, shingleW, num, den)._1
-
-  /** [[pairs]] plus the internal cache handles, for callers that
-    * manage cache lifetime themselves. */
-  private def pairsImpl(docs: DataFrame, idCol: String, textCol: String,
-      shingleW: Int, num: Int, den: Int): (DataFrame, Seq[DataFrame]) = {
+      shingleW: Int, num: Int, den: Int): DataFrame = {
     // shingles become portable 60-bit md5 ids BEFORE any shuffle: the
     // join/intersect key is a long, not a ~35-byte string (identical
     // ids on both engines, so the oracle replays exactly).
-    // CACHED: the set frame feeds the shingle explode AND both sides
-    // of the final array-attach join — uncached, Spark re-runs the
-    // per-doc shingle hashing up to 4x, which (not the verify join)
+    // MATERIALIZED: the set frame feeds the shingle explode AND both
+    // sides of the final array-attach join — recomputed, Spark re-runs
+    // the per-doc shingle hashing up to 4x, which (not the verify join)
     // was q184's actual cost at sf0.1 (probe: 3.8 s of the 10 s
-    // budget per recompute). MEMORY_AND_DISK spills at corpus scale —
+    // budget per recompute). The blocks spill to disk at corpus scale —
     // compute-once-reuse-thrice is the plan you'd want at 100 TB too.
     // sz rides along from size(sset): a column, not a second window.
     val sets = docs.select(col(idCol).as("id"),
@@ -64,17 +55,17 @@ object ContainmentJoin {
         TextDedup.shingles(col(textCol), shingleW),
         s => TextDedup.portableHash(s))).as("sset"))
       .withColumn("sz", size(col("sset")).cast("long"))
-      .cache()
+      .localCheckpoint(true)
     val sh = sets.select(col("id"), col("sz"), explode(col("sset")).as("sh"))
     val dfs = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     // every doc's shingles ranked by GLOBAL rarity (df, sh) — the same
     // total order on both sides, which is what makes the positional
-    // bound below valid. Cached: probed by the prefix side AND the
-    // full side of the candidate join.
+    // bound below valid. Materialized: probed by the prefix side AND
+    // the full side of the candidate join.
     val byRarity = Window.partitionBy("id").orderBy(col("df"), col("sh"))
     val ranked = sh.join(dfs, "sh")
       .withColumn("rk", row_number().over(byRarity))
-      .cache()
+      .localCheckpoint(true)
     // prefix size ⌊(1-t)·sz⌋+1 = sz - ceil(t·sz) + 1 = sz - ⌈sz·num/den⌉ + 1
     val prefixes = ranked
       .filter(col("rk") <= col("sz") - expr(s"cast(ceil(sz * $num / $den) as bigint)") + 1)
@@ -102,35 +93,12 @@ object ContainmentJoin {
       .agg(min("ub").as("ub"))
       .filter(col("ub") * den >= col("sza") * num)
       .select("a", "b")
-    val result = cands
+    cands
       .join(sets.select(col("id").as("a"), col("sset").as("sa")), Seq("a"))
       .join(sets.select(col("id").as("b"), col("sset").as("sb")), Seq("b"))
       .select(col("a"), col("b"),
         size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
         size(col("sa")).cast("long").as("size_a"))
       .filter(col("inter") * den >= col("size_a") * num)
-    (result, Seq(sets, ranked))
-  }
-
-  /** [[pairs]] for long-lived sessions: materializes the (small)
-    * surviving-pair set so the two internal cached frames can be
-    * released before returning — no cached partitions leak into the
-    * session per call. Mechanism: persist the survivor set (lineage
-    * INTACT — on executor loss the blocks recompute from the plan,
-    * unlike a truncated localCheckpoint), force it with a count, then
-    * unpersist the inputs. The caller owns the returned frame's
-    * lifetime and should `unpersist()` it when done. Eager: runs one
-    * job at call time — use [[pairs]] on query/bench paths. */
-  def pairsReleasing(docs: DataFrame, idCol: String, textCol: String,
-      shingleW: Int, num: Int, den: Int): DataFrame = {
-    val (plan, caches) = pairsImpl(docs, idCol, textCol, shingleW, num, den)
-    val p = plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    // the survivor blocks are in; the big intermediates can go. p's
-    // lineage still reaches the raw input, so a lost block recomputes
-    // (slower, through the then-uncached intermediates) instead of
-    // failing the job.
-    caches.foreach(_.unpersist())
-    p
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import Ann.{cosineFrom, dotExact, norm2Exact, Q40}
+import Ann.Q40
 
 /** Product-quantization ANN: each corpus vector is compressed to `m`
   * small codes (one per embedding subspace), queries score candidates
@@ -127,19 +127,9 @@ object Pq {
   /** Exact integer-dot re-rank of (qid, cid) survivors only — the q81
     * two-phase trick; touches `refine·k` rows per query. */
   private def exactRerank(candidates: DataFrame, corpus: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      norm2Exact(col("embedding")).as("cn2"))
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      norm2Exact(col("embedding")).as("qn2"))
-    val scored = candidates.join(c, "cid").join(broadcast(q), "qid")
-      .withColumn("dot", dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", cosineFrom(col("dot"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("cid"), round(col("cosine"), 6).as("cosine"))
-  }
+      queries: DataFrame, k: Int): DataFrame =
+    Ann.exactTopK(candidates.join(Ann.corpusSide(corpus), "cid")
+      .join(broadcast(Ann.querySide(queries)), "qid"), k)
 
   /** IVF-PQ: the canonical 100 TB ANN layout — a coarse quantizer
     * (shared with [[Ann.ivfTopK]]) prunes the scan to `nProbe` cells
@@ -164,10 +154,8 @@ object Pq {
       m: Int = 4, ksub: Int = 16, nCells: Int = 16, nProbe: Int = 4,
       lloydIters: Int = 1, kmeansIters: Int = 1, refine: Int = 4): DataFrame = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
-    val c = corpus.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      norm2Exact(col("embedding")).as("cn2"))
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      norm2Exact(col("embedding")).as("qn2"))
+    val c = Ann.corpusSide(corpus)
+    val q = Ann.querySide(queries)
     // coarse routing: corpus→1 cell, query→nProbe cells
     val centroids = Ann.cellCentroids(c, corpus, nCells, kmeansIters)
     val assigned = Ann.nearestCells(c, "cid", "ce", "cn2", 1, centroids)

@@ -25,6 +25,16 @@ object SeqPack {
     ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % nShards).cast("int")
   }
 
+  /** [[shardOf]] of `doc_id` in DuckDB SQL, the oracle side; the bare
+    * arithmetic, without the INTEGER cast. */
+  def shardIdSql(nShards: Int): String =
+    "(ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31 " +
+      s"+ ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % $nShards"
+
+  /** [[shardOf]] of `doc_id` in DuckDB SQL, cast to INTEGER like the
+    * engine side. */
+  def shardOfSql(nShards: Int): String = s"CAST(${shardIdSql(nShards)} AS INTEGER)"
+
   /** Per-doc packing assignment: (input columns) + shard, n_tok, offset
     * (prefix token sum within the shard, in doc_id order), bin
     * (offset / seqLen). Docs may straddle bin boundaries — fill stays

@@ -55,6 +55,26 @@ object TextStats {
     lengthOk + stopOk + punctOk
   }
 
+  /** [[qualityScore]] in integer deci-units (5/3/2 for the length,
+    * stopword and punctuation bands), so threshold comparisons are
+    * exact on any engine. Int-typed; callers cast to the width they
+    * aggregate in. */
+  def qualityScore10(text: Column, stopwords: Seq[String]): Column =
+    when(tokenCount(text).between(10, 1000), lit(5)).otherwise(lit(0)) +
+      when(stopwordRatio(text, stopwords) > 0.01, lit(3)).otherwise(lit(0)) +
+      when(punctRatio(text) < 0.2, lit(2)).otherwise(lit(0))
+
+  /** [[qualityScore10]] of `text` in DuckDB SQL, the oracle side. */
+  def qualityScore10Sql(stopwords: Seq[String]): String = {
+    val words = stopwords.map(w => s"'$w'").mkString(", ")
+    raw"""CASE WHEN len(string_split_regex(text, '\s+')) BETWEEN 10 AND 1000 THEN 5 ELSE 0 END +
+       |  CASE WHEN CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
+       |    t -> t IN ($words))) AS DOUBLE)
+       |    / len(string_split_regex(lower(text), '\s+')) > 0.01 THEN 3 ELSE 0 END +
+       |  CASE WHEN CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
+       |    / length(text) < 0.2 THEN 2 ELSE 0 END""".stripMargin
+  }
+
   /** Language-ID n-gram/stopword heuristic: per-language marker hit
     * counts, argmax with alphabetical tiebreak. Markers are tiny fixed
     * lexica — the real-world shape (fastText-style scoring) with a

@@ -75,7 +75,13 @@ object CdcApply {
     * came from the changelog (upsert) or passed through untouched. */
   def apply(snapshot: DataFrame, changelog: DataFrame, key: String,
       seqCols: Seq[String]): DataFrame = {
-    val win = latest(changelog, key, seqCols).cache()
+    // Both branches read the per-key verdict, materialized once behind an
+    // eager localCheckpoint. Left lazy, the window-top-k rule rewrites the
+    // key-only branch and not the filtered one, so no exchange is shared
+    // and the changelog is distilled twice. Not cache(): that registers
+    // with the CacheManager every session in the JVM shares, and the
+    // entry would outlive the query.
+    val win = latest(changelog, key, seqCols).localCheckpoint(true)
     val payload = snapshot.columns.toSeq
     val untouched = snapshot
       .join(win.select(key), Seq(key), "left_anti")

@@ -48,7 +48,7 @@ object FuzzyJoin {
 
   /** Even-partition segment bounds: segment `j` of a length-`len` string
     * spans [floor(len·j/segs), floor(len·(j+1)/segs)). */
-  private def segStart(len: Column, j: Int, segs: Int): Column =
+  private def segStart(len: Column, j: Column, segs: Int): Column =
     floor(len * j / segs).cast("int")
 
   /** Resolve `dirty` (id, name) against `clean` (id, name).
@@ -81,8 +81,8 @@ object FuzzyJoin {
     val cKeys = c.select(col("clean_id"), col("clean_name"), col("block"),
       col("l"),
       explode(array((0 until segs).map { j =>
-        val s = segStart(col("l"), j, segs)
-        val e = segStart(col("l"), j + 1, segs)
+        val s = segStart(col("l"), lit(j), segs)
+        val e = segStart(col("l"), lit(j + 1), segs)
         struct(lit(j).as("j"),
           col("clean_name").substr(s + 1, e - s).as("sub"))
       }: _*)).as("k"))
@@ -90,26 +90,32 @@ object FuzzyJoin {
         col("k.j").as("j"), col("k.sub").as("sub"))
       .filter(length(col("sub")) > 0)
     // dirty side: probe every (candidate length, segment, shift) — the
-    // pigeonhole guarantee needs only shifts within ±maxDist
+    // pigeonhole guarantee needs only shifts within ±maxDist. The
+    // (dl, j, sh) grid is one literal array mapped by one lambda: as
+    // (2·maxDist+1)²·(maxDist+1) separate expressions (75 at maxDist 2)
+    // the probe projection outgrows Janino's 64 KB method limit and its
+    // whole stage falls back to interpreted evaluation.
     val d = dirtyNames.select(col("name").as("dirty_name"),
       substring(col("name"), 1, prefixLen).as("block"),
       length(col("name")).as("m"))
-    val probes = for {
+    val grid = typedLit(for {
       dl <- -maxDist to maxDist
       j <- 0 until segs
       sh <- -maxDist to maxDist
-    } yield {
-      val l = col("m") + dl // candidate clean length
+    } yield (dl, j, sh))
+    val probes = transform(grid, g => {
+      val j = g.getField("_2")
+      val l = col("m") + g.getField("_1") // candidate clean length
       val s = segStart(l, j, segs)
       val e = segStart(l, j + 1, segs)
-      val p = s + sh // shifted start within the dirty name
+      val p = s + g.getField("_3") // shifted start within the dirty name
       val valid = l > lit(0) && e > s && p >= lit(0) && (p + (e - s)) <= col("m")
-      when(valid, struct(lit(j).as("j"), l.cast("int").as("l"),
+      when(valid, struct(j.as("j"), l.cast("int").as("l"),
         col("dirty_name").substr(p + 1, e - s).as("sub")))
         .otherwise(lit(null))
-    }
+    })
     val dKeys = d.select(col("dirty_name"), col("block"),
-        explode(array_distinct(array(probes: _*))).as("k"))
+        explode(array_distinct(probes)).as("k"))
       .filter(col("k").isNotNull)
       .select(col("dirty_name"), col("block"),
         col("k.j").as("j"), col("k.l").as("l"), col("k.sub").as("sub"))

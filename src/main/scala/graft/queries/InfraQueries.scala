@@ -20,15 +20,25 @@ object InfraQueries {
   type Q = (SparkSession, String) => DataFrame
 
   /** Root of the reference SQL corpus (q108/q109). Overridable so the
-    * bench/verify harness isn't coupled to one machine's checkout; fails
-    * with a clear message rather than a deep FileNotFound mid-query. */
-  private def corpusRoot: java.nio.file.Path = {
-    val p = java.nio.file.Path.of(sys.env.getOrElse(
+    * bench/verify harness isn't coupled to one machine's checkout. */
+  private[graft] def corpusDir: java.nio.file.Path =
+    java.nio.file.Path.of(sys.env.getOrElse(
       "SPARK_GRAFT_CORPUS_ROOT", "/root/reference/jobs/webcompat-kb/data"))
+
+  /** [[corpusDir]], failing with a clear message rather than a deep
+    * FileNotFound mid-query. */
+  private def corpusRoot: java.nio.file.Path = {
+    val p = corpusDir
     require(java.nio.file.Files.isDirectory(p),
       s"SQL corpus root not found: $p (set SPARK_GRAFT_CORPUS_ROOT)")
     p
   }
+
+  /** The `events` table's schema, for the queries that stream it. */
+  private val eventsSchema = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", TimestampNTZType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
 
   val queries: Map[String, Q] = Map(
     // D6 — deploy a 3-level view DAG (declared out of dependency order;
@@ -498,10 +508,6 @@ object InfraQueries {
     // spec-pinned in StreamOpsSpec. Oracle = the batch LEFT JOIN:
     // same pairs, same unmatched anchors, regardless of chop.
     "q258_stream_left_outer" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
       // events staged once per (JVM, sf dir) as ordered arrival files +
       // the watermark sentinel
       val staged = Scratch.once(s"slostage|$dir") { sd =>
@@ -517,7 +523,7 @@ object InfraQueries {
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         Scratch.stageFile(sd, "01_sentinel", sentinel, base + 20000)
       }
-      StreamOps.streamLeftOuterJoinAvailableNow(s, staged, schema,
+      StreamOps.streamLeftOuterJoinAvailableNow(s, staged, eventsSchema,
           anchorType = "purchase", otherType = "click", window = "1 DAY",
           queryName = "stream_louter")
         .groupBy(col("a_user").as("user_id"))
@@ -687,22 +693,14 @@ object InfraQueries {
     // (emit sessions whose end ≤ max event time) — the contract an
     // unbounded deployment actually observes.
     "q161_stream_session_window" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      StreamOps.sessionWindowsAvailableNow(s, dir, schema, gap = "6 hours",
+      StreamOps.sessionWindowsAvailableNow(s, dir, eventsSchema, gap = "6 hours",
           queryName = "stream_sess",
           globFilter = Some("events.parquet"))
         .orderBy("user_id", "sess_start")
     }),
 
     "q94_stream_window" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      StreamOps.windowedCountsAvailableNow(s, dir, schema,
+      StreamOps.windowedCountsAvailableNow(s, dir, eventsSchema,
           queryName = "stream_counts",
           globFilter = Some("events.parquet"))
         .orderBy("day", "event_type")
@@ -720,11 +718,7 @@ object InfraQueries {
     // and the join could lose cross-batch pairs — the unbounded-stream
     // semantics, correct for production but not oracle-comparable.
     "q56_stream_dedup" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      StreamOps.dedupAvailableNow(s, dir, schema, "event_id",
+      StreamOps.dedupAvailableNow(s, dir, eventsSchema, "event_id",
           queryName = "stream_dedup",
           globFilter = Some("events.parquet"))
         .groupBy("event_type")
@@ -738,11 +732,7 @@ object InfraQueries {
     // AvailableNow result equals the batch join (the oracle) under the
     // same single-micro-batch precondition documented at q56.
     "q69_stream_join" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      StreamOps.streamSelfJoinAvailableNow(s, dir, schema,
+      StreamOps.streamSelfJoinAvailableNow(s, dir, eventsSchema,
           anchorFilter = col("event_id") % 97 === 0, window = "1 DAY",
           queryName = "stream_join",
           globFilter = Some("events.parquet"))
@@ -757,14 +747,10 @@ object InfraQueries {
     // tracking + triggers; the join is the enrich-on-ingest shape every
     // ingestion pipeline runs. Oracle = the batch join.
     "q177_stream_static_join" -> ((s, dir) => {
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
       val dim = t(s, dir, "nation")
         .select(col("n_nationkey").cast(LongType).as("n_nationkey"),
           col("n_name"))
-      graft.streaming.StreamOps.streamStaticEnrichAvailableNow(s, dir, schema,
+      graft.streaming.StreamOps.streamStaticEnrichAvailableNow(s, dir, eventsSchema,
           keyExpr = pmod(col("user_id"), lit(25L)), dim = dim,
           dimKey = "n_nationkey",
           queryName = "stream_enrich",

@@ -107,6 +107,24 @@ object LlmQueries {
     stageCache.computeIfAbsent(
       s"${s.sparkContext.applicationId}|$key", _ => make.localCheckpoint())
 
+  /** The 5-source block every near-dup query runs on. */
+  private def dedupBlock(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+
+  /** q83's cluster stage over `block`: token-minhash LSH candidates →
+    * exact Jaccard ≥ 0.95 → connected components. */
+  private def clusterStage(block: DataFrame): DataFrame =
+    TextDedup.clusterAssignments(block, threshold = 0.95, k = 32, bands = 8,
+      shingleW = 1)
+
+  /** [[clusterStage]] over [[dedupBlock]], pinned once per (app, sf
+    * dir) — the materialized cluster table q120/q279/q291/q304 read.
+    * The pin key names no parameters, so this is the one place that
+    * builds it. */
+  private def clusters(s: SparkSession, dir: String): DataFrame =
+    pinnedStage(s, s"$dir|clusters", clusterStage(dedupBlock(s, dir)))
+
   private val stopwords = Seq("the", "a", "and", "of", "to")
   private val langMarkers = Map(
     "en" -> Seq("the", "a", "fast", "slow"),
@@ -162,8 +180,7 @@ object LlmQueries {
     // near-dup-dense, so the candidate set is large and verify cost,
     // not blocking, is the hot path.
     "q71_jaccard_neardup" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val d = dedupBlock(s, dir)
       TextDedup.verifyJaccard(
         TextDedup.minhashCandidates(d, k = 32, bands = 8, shingleW = 1),
         d, threshold = 0.95)
@@ -176,11 +193,7 @@ object LlmQueries {
     // all-pairs ground truth + a recursive-CTE closure, so a green hash
     // certifies both 100% candidate recall AND the component labels.
     "q83_dedup_clusters" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      TextDedup.clusterAssignments(d, threshold = 0.95, k = 32, bands = 8,
-        shingleW = 1)
-        .orderBy("doc_id")
+      clusterStage(dedupBlock(s, dir)).orderBy("doc_id")
     }),
 
     // Quality-aware keeper selection — the step AFTER clustering: for
@@ -190,14 +203,10 @@ object LlmQueries {
     // oracle recomputes clusters from all-pairs ground truth + the same
     // score, so a green hash certifies the whole composition.
     "q120_quality_keeper" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      val clusters = pinnedStage(s, s"$dir|clusters",
-        TextDedup.clusterAssignments(d, threshold = 0.95,
-          k = 32, bands = 8, shingleW = 1))
-      val quality = d.select(col("doc_id"),
+      val quality = dedupBlock(s, dir).select(col("doc_id"),
         TextStats.qualityScore(col("text"), stopwords).as("quality"))
-      val j = clusters.select("doc_id", "cluster_id").join(quality, "doc_id")
+      val j = clusters(s, dir).select("doc_id", "cluster_id")
+        .join(quality, "doc_id")
       val w = Window.partitionBy("cluster_id")
         .orderBy(col("quality").desc, col("doc_id"))
       j.withColumn("rn", row_number().over(w))
@@ -215,8 +224,7 @@ object LlmQueries {
     // n-grams never collide; trigrams expose the shared phrasing while
     // staying order-sensitive, which is the point of the check).
     "q84_decontaminate" -> ((s, dir) => {
-      val block = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val block = dedupBlock(s, dir)
       Decontaminate.report(
         block.filter(col("doc_id") % 7 =!= 0),
         block.filter(col("doc_id") % 7 === 0),
@@ -979,12 +987,7 @@ object LlmQueries {
     // the split is a per-row hash of an already-computed cluster id —
     // zero extra shuffles beyond the cluster stage itself.
     "q279_cluster_split" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      val clusters = pinnedStage(s, s"$dir|clusters",
-        TextDedup.clusterAssignments(d, threshold = 0.95,
-          k = 32, bands = 8, shingleW = 1))
-        .select("doc_id", "cluster_id")
+      val d = dedupBlock(s, dir)
       def splitOf(c: org.apache.spark.sql.Column) = {
         val b = graft.functions.BqShims.md5Bucket(c) % 10
         when(b < 8, lit("train")).when(b === 8, lit("val"))
@@ -995,7 +998,7 @@ object LlmQueries {
       // the ≤3-row split level carrying their straddle partials, and
       // the global straddle totals are an unpartitioned window over
       // those ≤3 rows — no branch re-joins the corpus.
-      val perCluster = clusters
+      val perCluster = clusters(s, dir).select("doc_id", "cluster_id")
         .join(d.select("doc_id", "n_chars"), "doc_id")
         .withColumn("split", splitOf(col("cluster_id")))
         .withColumn("naive_split", splitOf(col("doc_id")))
@@ -1032,12 +1035,7 @@ object LlmQueries {
     // q271-style saturation failure before it ships.
     "q280_quality_sweep" -> ((s, dir) => {
       val score10 =
-        (when(TextStats.tokenCount(col("text")).between(10, 1000), lit(5))
-            .otherwise(lit(0)) +
-          when(TextStats.stopwordRatio(col("text"), stopwords) > 0.01,
-            lit(3)).otherwise(lit(0)) +
-          when(TextStats.punctRatio(col("text")) < 0.2, lit(2))
-            .otherwise(lit(0))).cast(IntegerType)
+        TextStats.qualityScore10(col("text"), stopwords).cast(IntegerType)
       val scored = t(s, dir, "documents").select(score10.as("s10"),
         TextStats.tokenCount(col("text")).cast(LongType).as("n_tok"))
       val aggs = (0 to 10).flatMap { th => Seq(
@@ -1063,12 +1061,7 @@ object LlmQueries {
     // and no second pass to compute the denominator.
     "q281_budget_cut" -> ((s, dir) => {
       val score10 =
-        (when(TextStats.tokenCount(col("text")).between(10, 1000), lit(5))
-            .otherwise(lit(0)) +
-          when(TextStats.stopwordRatio(col("text"), stopwords) > 0.01,
-            lit(3)).otherwise(lit(0)) +
-          when(TextStats.punctRatio(col("text")) < 0.2, lit(2))
-            .otherwise(lit(0))).cast(IntegerType)
+        TextStats.qualityScore10(col("text"), stopwords).cast(IntegerType)
       val scored = t(s, dir, "documents").select(col("doc_id"),
         col("source"), score10.as("s10"),
         TextStats.tokenCount(col("text")).cast(LongType).as("n_tok"))
@@ -1129,13 +1122,8 @@ object LlmQueries {
     // on any cluster and diffing manifests is the cheap end-to-end
     // "did we ship the same bytes" audit.
     "q287_shard_manifest" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       t(s, dir, "documents")
-        .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
+        .select(col("doc_id"), SeqPack.shardOf(col("doc_id"), 16).as("shard"),
           TextDedup.portableHash(col("text")).as("h"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"),
@@ -1153,18 +1141,13 @@ object LlmQueries {
     // verbatim (the same algebra that makes the manifest incrementally
     // maintainable makes stream == batch provable by one gate).
     "q292_stream_manifest" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       // staged once per (JVM, sf dir) as 4 part files = 4 triggers
       val batchDir = Scratch.once(s"smani_in|$dir") { bd =>
         t(s, dir, "documents").select("doc_id", "text")
           .repartition(4).write.mode("overwrite").parquet(bd)
       }
       graft.streaming.StreamOps.shardManifestStream(s, batchDir,
-          shardOf, c => TextDedup.portableHash(c), Scratch.fresh(s"smani_out|$dir"))
+          SeqPack.shardOf(_, 16), c => TextDedup.portableHash(c), Scratch.fresh(s"smani_out|$dir"))
         .orderBy("shard")
     }),
 
@@ -1177,16 +1160,13 @@ object LlmQueries {
     // number that decides whether the near-dup pass is worth its cost
     // on a new feed. One corpus pass + two keeper-id semi-flags.
     "q291_dedup_savings" -> ((s, dir) => {
-      val block = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val block = dedupBlock(s, dir)
       val d = block.select(col("doc_id"), col("source"),
         TextStats.tokenCount(col("text")).cast(LongType).as("tok"),
         TextDedup.contentKey(col("text")).as("ck"))
       val exactKeep = d.groupBy("ck").agg(min("doc_id").as("doc_id"))
         .select(col("doc_id"), lit(1).as("ek"))
-      val canon = pinnedStage(s, s"$dir|clusters",
-        TextDedup.clusterAssignments(block, threshold = 0.95,
-          k = 32, bands = 8, shingleW = 1))
+      val canon = clusters(s, dir)
         .filter(col("is_canonical") === 1)
         .select(col("doc_id"), lit(1).as("nk"))
       d.join(exactKeep, Seq("doc_id"), "left")
@@ -1210,13 +1190,8 @@ object LlmQueries {
     // only needs the changed shards. This algebraic incrementality is
     // why the manifest uses xor rather than a concatenation hash.
     "q290_manifest_diff" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       val d = t(s, dir, "documents")
-        .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
+        .select(col("doc_id"), SeqPack.shardOf(col("doc_id"), 16).as("shard"),
           TextDedup.portableHash(col("text")).as("h"))
       d.groupBy("shard")
         .agg(
@@ -1264,8 +1239,7 @@ object LlmQueries {
     // stream == batch independent of trigger chopping — which is why
     // the oracle below IS q84's oracle, shared verbatim.
     "q286_stream_decon" -> ((s, dir) => {
-      val block = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val block = dedupBlock(s, dir)
       // staged once per (JVM, sf dir) as 4 part files = 4 triggers; the
       // stream is stateless, so the input never mutates across runs
       val batchDir = Scratch.once(s"sdecon_in|$dir") { bd =>
@@ -1435,11 +1409,7 @@ object LlmQueries {
     }),
 
     "q88_shard_export" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16).cast("int")
-      }
-      val docs = t(s, dir, "documents").withColumn("shard", shardOf(col("doc_id")))
+      val docs = t(s, dir, "documents").withColumn("shard", SeqPack.shardOf(col("doc_id"), 16))
       // one shard dir per (JVM, sf-dir), reused across invocations: bench
       // runs each query twice and plan-only consumers (DumpPlans,
       // PlanAuditSpec) also construct this query — a fresh never-deleted
@@ -2120,8 +2090,7 @@ object LlmQueries {
     // intersects the raw strings: the CARDINALITIES are identical, and
     // cardinalities are all the curve consumes.
     "q293_dedup_threshold_curve" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val d = dedupBlock(s, dir)
       val cands = TextDedup.minhashCandidates(d, k = 32, bands = 8,
         shingleW = 1, portable = true)
       val sets = d.select(col("doc_id"),
@@ -2160,8 +2129,7 @@ object LlmQueries {
     // source. Docs with NO candidate are the 'none' band (banded
     // recall bounds what any profile can see — q293's honesty note).
     "q321_nearest_dup_profile" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val d = dedupBlock(s, dir)
       val cands = TextDedup.minhashCandidates(d, k = 32, bands = 8,
         shingleW = 1, portable = true)
       val sets = d.select(col("doc_id"),
@@ -2304,14 +2272,9 @@ object LlmQueries {
     // which a 50% delta (the q290 fixture split) is not. The totals
     // ride an unpartitioned window over the 16-row shard frame.
     "q296_reexport_plan" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       val all = Window.partitionBy()
       t(s, dir, "documents")
-        .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
+        .select(col("doc_id"), SeqPack.shardOf(col("doc_id"), 16).as("shard"),
           TextDedup.portableHash(col("text")).as("h"),
           TextStats.tokenCount(col("text")).cast(LongType).as("n_tok"))
         .groupBy("shard")
@@ -2403,20 +2366,10 @@ object LlmQueries {
     // shuffle every curriculum schedule needs). One corpus pass to the
     // 16-row shard frame; every window runs on those 16 rows.
     "q299_curriculum_order" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       val score10 =
-        (when(TextStats.tokenCount(col("text")).between(10, 1000), lit(5))
-            .otherwise(lit(0)) +
-          when(TextStats.stopwordRatio(col("text"), stopwords) > 0.01,
-            lit(3)).otherwise(lit(0)) +
-          when(TextStats.punctRatio(col("text")) < 0.2, lit(2))
-            .otherwise(lit(0))).cast(LongType)
+        TextStats.qualityScore10(col("text"), stopwords).cast(LongType)
       val per = t(s, dir, "documents")
-        .select(shardOf(col("doc_id")).as("shard"), score10.as("s10"))
+        .select(SeqPack.shardOf(col("doc_id"), 16).as("shard"), score10.as("s10"))
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("s10").as("sum_s10"))
         .withColumn("mean_q_micro",
@@ -2528,8 +2481,7 @@ object LlmQueries {
     // at 0.95); lang pair normalized (lexicographic) so the grid is
     // triangular. Exact counts; share published as one exact division.
     "q303_cross_lang_dups" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
+      val d = dedupBlock(s, dir)
       val pairs = TextDedup.verifyJaccard(
         TextDedup.minhashCandidates(d, k = 32, bands = 8, shingleW = 1),
         d, threshold = 0.95)
@@ -2561,12 +2513,7 @@ object LlmQueries {
     // means one template owns the corpus; the cluster stage is the
     // shared pinned q83 pipeline, the histogram is two tiny aggregates.
     "q304_cluster_sizes" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-        .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
-      val clusters = pinnedStage(s, s"$dir|clusters",
-        TextDedup.clusterAssignments(d, threshold = 0.95,
-          k = 32, bands = 8, shingleW = 1))
-      val sizes = clusters.groupBy("cluster_id")
+      val sizes = clusters(s, dir).groupBy("cluster_id")
         .agg(count(lit(1)).as("sz"))
         .filter(col("sz") > 1)
       val all = Window.partitionBy()
@@ -2657,12 +2604,7 @@ object LlmQueries {
     // every window runs on 16 rows.
     "q307_training_manifest" -> ((s, dir) => {
       val score10 =
-        (when(TextStats.tokenCount(col("text")).between(10, 1000), lit(5))
-            .otherwise(lit(0)) +
-          when(TextStats.stopwordRatio(col("text"), stopwords) > 0.01,
-            lit(3)).otherwise(lit(0)) +
-          when(TextStats.punctRatio(col("text")) < 0.2, lit(2))
-            .otherwise(lit(0))).cast(LongType)
+        TextStats.qualityScore10(col("text"), stopwords).cast(LongType)
       val d = t(s, dir, "documents")
       val assigned = ShardBalance.assign(d, "doc_id",
         TextStats.tokenCount(col("text")), nShards = 16)
@@ -2701,13 +2643,8 @@ object LlmQueries {
     // match) must be 1 on every shard — the q226/q227 IVM gate
     // convention applied to export provenance.
     "q308_manifest_cdc" -> ((s, dir) => {
-      def shardOf(id: org.apache.spark.sql.Column) = {
-        val h = md5(id.cast("string"))
-        ((ascii(substring(h, 1, 1)) * 31 + ascii(substring(h, 2, 1))) % 16)
-          .cast("int")
-      }
       val d = t(s, dir, "documents").select(col("doc_id"),
-        shardOf(col("doc_id")).as("shard"),
+        SeqPack.shardOf(col("doc_id"), 16).as("shard"),
         TextDedup.portableHash(col("text")).as("h"),
         TextDedup.portableHash(concat(col("text"), lit(" v2"))).as("h2"),
         (col("doc_id") % 11 === 3).as("ins"),
@@ -3085,12 +3022,30 @@ object LlmQueries {
     sb.toString
   }
 
+  /** q83's ground-truth clusters in DuckDB SQL, to follow a
+    * `WITH RECURSIVE s AS (...)` block CTE carrying (doc_id, toks):
+    * all-pairs Jaccard ≥ 0.95 edges and their recursive-CTE
+    * reachability; `mins(a, mn)` holds each linked doc's component
+    * label, the min reachable doc id. */
+  private val clusterClosureSql =
+    """pairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM s a JOIN s b ON a.doc_id < b.doc_id
+      |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
+      |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
+      |edges AS (
+      |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
+      |  UNION SELECT doc_b, doc_a FROM pairs),
+      |reach AS (
+      |  SELECT s0 AS a, d0 AS b FROM edges
+      |  UNION
+      |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0 WHERE e.d0 != r.a),
+      |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a)""".stripMargin
+
   private val shardManifestSql =
-    """WITH s AS (
+    s"""WITH s AS (
       |  SELECT doc_id,
-      |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-      |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16
-      |      AS INTEGER) AS shard,
+      |    ${SeqPack.shardOfSql(16)} AS shard,
       |    CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS h
       |  FROM documents)
       |SELECT shard, COUNT(*)::BIGINT AS n_docs,
@@ -3134,25 +3089,13 @@ object LlmQueries {
     // q70's content-key rule + q83's all-pairs recursive clusters,
     // folded into one per-source savings grid
     "q291_dedup_savings" ->
-      """WITH RECURSIVE s AS (
+      raw"""WITH RECURSIVE s AS (
         |  SELECT doc_id, source,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS tok,
         |    md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS ckey,
         |    list_distinct(string_split(text, ' ')) AS toks
         |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
-        |edges AS (
-        |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT s0 AS a, d0 AS b FROM edges
-        |  UNION
-        |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0 WHERE e.d0 != r.a),
-        |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a),
+        |$clusterClosureSql,
         |canon AS (
         |  SELECT d.doc_id FROM (SELECT doc_id FROM s) d
         |  LEFT JOIN mins m ON m.a = d.doc_id
@@ -3167,11 +3110,9 @@ object LlmQueries {
         |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
     // the q287 manifest per version; xor algebra replayed directly
     "q290_manifest_diff" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT doc_id,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16
-        |      AS INTEGER) AS shard,
+        |    ${SeqPack.shardOfSql(16)} AS shard,
         |    CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS h
         |  FROM documents),
         |per AS (
@@ -3581,22 +3522,10 @@ object LlmQueries {
     // Ground-truth clusters: all-pairs verified edges + recursive-CTE
     // reachability, component label = min reachable doc id.
     "q83_dedup_clusters" ->
-      """WITH RECURSIVE s AS (
+      s"""WITH RECURSIVE s AS (
         |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
         |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
-        |edges AS (
-        |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT s0 AS a, d0 AS b FROM edges
-        |  UNION
-        |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0 WHERE e.d0 != r.a),
-        |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a)
+        |$clusterClosureSql
         |SELECT d.doc_id,
         |  LEAST(d.doc_id, COALESCE(m.mn, d.doc_id)) AS cluster_id,
         |  CAST(LEAST(d.doc_id, COALESCE(m.mn, d.doc_id)) = d.doc_id AS INT) AS is_canonical
@@ -3605,22 +3534,10 @@ object LlmQueries {
     // Clusters from all-pairs ground truth (q83's recursive CTE) +
     // q76's quality expression, argmax per cluster with min-id tiebreak.
     "q120_quality_keeper" ->
-      """WITH RECURSIVE s AS (
+      raw"""WITH RECURSIVE s AS (
         |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
         |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
-        |edges AS (
-        |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT s0 AS a, d0 AS b FROM edges
-        |  UNION
-        |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0 WHERE e.d0 != r.a),
-        |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a),
+        |$clusterClosureSql,
         |clusters AS (
         |  SELECT d.doc_id, LEAST(d.doc_id, COALESCE(m.mn, d.doc_id)) AS cluster_id
         |  FROM (SELECT doc_id FROM s) d LEFT JOIN mins m ON m.a = d.doc_id),
@@ -3861,10 +3778,9 @@ object LlmQueries {
         |FROM documents d LEFT JOIN flagged f ON f.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin,
     "q59_sequence_pack" ->
-      """WITH s AS (
+      raw"""WITH s AS (
         |  SELECT doc_id,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 8 AS INTEGER) AS shard,
+        |    ${SeqPack.shardOfSql(8)} AS shard,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok
         |  FROM documents),
         |p AS (
@@ -3878,10 +3794,9 @@ object LlmQueries {
         |FROM p GROUP BY shard, bin ORDER BY shard, bin""".stripMargin,
     // same md5 shard + offset-bin construction as q59, rolled up
     "q269_packing_audit" ->
-      """WITH s AS (
+      raw"""WITH s AS (
         |  SELECT doc_id,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 8 AS INTEGER) AS shard,
+        |    ${SeqPack.shardOfSql(8)} AS shard,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok
         |  FROM documents),
         |p AS (
@@ -4096,22 +4011,10 @@ object LlmQueries {
     // clusters from all-pairs ground truth (q83's recursive CTE), then
     // the same md5-bucket split applied to cluster id vs doc id
     "q279_cluster_split" ->
-      """WITH RECURSIVE s AS (
+      s"""WITH RECURSIVE s AS (
         |  SELECT doc_id, n_chars, list_distinct(string_split(text, ' ')) AS toks
         |  FROM documents WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.95),
-        |edges AS (
-        |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT s0 AS a, d0 AS b FROM edges
-        |  UNION
-        |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0 WHERE e.d0 != r.a),
-        |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a),
+        |$clusterClosureSql,
         |cl AS (
         |  SELECT d.doc_id, d.n_chars,
         |    LEAST(d.doc_id, COALESCE(m.mn, d.doc_id)) AS cluster_id
@@ -4143,14 +4046,9 @@ object LlmQueries {
     // integer deci-score (q76's bands x10) crossed with the threshold
     // spine — the conditional-sum single pass replayed as a cross join
     "q280_quality_sweep" ->
-      """WITH sc AS (
+      raw"""WITH sc AS (
         |  SELECT
-        |    (CASE WHEN len(string_split_regex(text, '\s+')) BETWEEN 10 AND 1000 THEN 5 ELSE 0 END +
-        |     CASE WHEN CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |       t -> t IN ('the', 'a', 'and', 'of', 'to'))) AS DOUBLE)
-        |       / len(string_split_regex(lower(text), '\s+')) > 0.01 THEN 3 ELSE 0 END +
-        |     CASE WHEN CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
-        |       / length(text) < 0.2 THEN 2 ELSE 0 END) AS s10,
+        |    (${TextStats.qualityScore10Sql(stopwords)}) AS s10,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok
         |  FROM documents),
         |th AS (SELECT UNNEST(range(0, 11)) AS th)
@@ -4163,14 +4061,9 @@ object LlmQueries {
     // (the prefix sum is a property of the total order, not of the
     // exchange that computed it)
     "q281_budget_cut" ->
-      """WITH sc AS (
+      raw"""WITH sc AS (
         |  SELECT doc_id, source,
-        |    (CASE WHEN len(string_split_regex(text, '\s+')) BETWEEN 10 AND 1000 THEN 5 ELSE 0 END +
-        |     CASE WHEN CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |       t -> t IN ('the', 'a', 'and', 'of', 'to'))) AS DOUBLE)
-        |       / len(string_split_regex(lower(text), '\s+')) > 0.01 THEN 3 ELSE 0 END +
-        |     CASE WHEN CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
-        |       / length(text) < 0.2 THEN 2 ELSE 0 END) AS s10,
+        |    (${TextStats.qualityScore10Sql(stopwords)}) AS s10,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok
         |  FROM documents),
         |c AS (
@@ -4362,10 +4255,9 @@ object LlmQueries {
         |FROM persrc, tot ORDER BY source""".stripMargin,
 
     "q88_shard_export" ->
-      """WITH sharded AS (
+      s"""WITH sharded AS (
         |  SELECT doc_id, source, n_chars,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16 AS INTEGER) AS shard
+        |    ${SeqPack.shardOfSql(16)} AS shard
         |  FROM documents)
         |SELECT shard, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -4390,13 +4282,12 @@ object LlmQueries {
         |UNION ALL SELECT 4, 'exact_dedup', (SELECT COUNT(*) FROM s4)
         |ORDER BY stage_idx""".stripMargin,
     "q271_pipeline_card" ->
-      """WITH base AS (
+      raw"""WITH base AS (
         |  SELECT doc_id, source, text,
         |    doc_id % 7 = 0 AS is_eval,
         |    md5(lower(text)) AS k,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 8 AS INTEGER) AS shard
+        |    ${SeqPack.shardOfSql(8)} AS shard
         |  FROM documents),
         |toks AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |grams AS (
@@ -4932,11 +4823,9 @@ object LlmQueries {
     // the q287/q290 xor-manifest algebra with a 1% delta; totals from
     // the 16-row shard frame
     "q296_reexport_plan" ->
-      """WITH d AS (
+      raw"""WITH d AS (
         |  SELECT doc_id,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16
-        |      AS INTEGER) AS shard,
+        |    ${SeqPack.shardOfSql(16)} AS shard,
         |    CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS h,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok
         |  FROM documents),
@@ -5004,19 +4893,10 @@ object LlmQueries {
     // q287's shard key + the q281 score bands; integer micro-unit mean,
     // band and curriculum position as 16-row windows
     "q299_curriculum_order" ->
-      """WITH sc AS (
-        |  SELECT (ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |      + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16
+      raw"""WITH sc AS (
+        |  SELECT ${SeqPack.shardIdSql(16)}
         |    AS shard,
-        |    CAST(CASE WHEN len(string_split_regex(text, '\s+'))
-        |        BETWEEN 10 AND 1000 THEN 5 ELSE 0 END +
-        |      CASE WHEN CAST(len(list_filter(string_split_regex(lower(text),
-        |        '\s+'), t -> t IN ('the', 'a', 'and', 'of', 'to'))) AS DOUBLE)
-        |        / len(string_split_regex(lower(text), '\s+')) > 0.01
-        |        THEN 3 ELSE 0 END +
-        |      CASE WHEN CAST(length(text) - length(regexp_replace(text,
-        |        '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
-        |        / length(text) < 0.2 THEN 2 ELSE 0 END AS BIGINT) AS s10
+        |    CAST(${TextStats.qualityScore10Sql(stopwords)} AS BIGINT) AS s10
         |  FROM documents),
         |per AS (
         |  SELECT CAST(shard AS INTEGER) AS shard, COUNT(*)::BIGINT AS n_docs,
@@ -5110,25 +4990,11 @@ object LlmQueries {
     // q291's recursive closure reused; histogram over multi-doc
     // clusters, boilerplate flag on the tiny size frame
     "q304_cluster_sizes" ->
-      """WITH RECURSIVE s AS (
+      s"""WITH RECURSIVE s AS (
         |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
         |  FROM documents
         |  WHERE source IN ('src0', 'src1', 'src2', 'src3', 'src4')),
-        |pairs AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-        |    / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
-        |    >= 0.95),
-        |edges AS (
-        |  SELECT doc_a AS s0, doc_b AS d0 FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT s0 AS a, d0 AS b FROM edges
-        |  UNION
-        |  SELECT r.a, e.d0 FROM reach r JOIN edges e ON r.b = e.s0
-        |  WHERE e.d0 != r.a),
-        |mins AS (SELECT a, MIN(b) AS mn FROM reach GROUP BY a),
+        |$clusterClosureSql,
         |cl AS (
         |  SELECT s.doc_id, LEAST(s.doc_id, COALESCE(m.mn, s.doc_id)) AS cid
         |  FROM s LEFT JOIN mins m ON m.a = s.doc_id),
@@ -5207,18 +5073,10 @@ object LlmQueries {
     // q277's serpentine deal + q299's band/position + the exclusive
     // token prefix sum in curriculum order
     "q307_training_manifest" ->
-      """WITH ranked AS (
+      raw"""WITH ranked AS (
         |  SELECT doc_id,
         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tok,
-        |    (CASE WHEN len(string_split_regex(text, '\s+'))
-        |        BETWEEN 10 AND 1000 THEN 5 ELSE 0 END +
-        |     CASE WHEN CAST(len(list_filter(string_split_regex(lower(text),
-        |       '\s+'), t -> t IN ('the', 'a', 'and', 'of', 'to'))) AS DOUBLE)
-        |       / len(string_split_regex(lower(text), '\s+')) > 0.01
-        |       THEN 3 ELSE 0 END +
-        |     CASE WHEN CAST(length(text) - length(regexp_replace(text,
-        |       '[.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
-        |       / length(text) < 0.2 THEN 2 ELSE 0 END) AS s10,
+        |    (${TextStats.qualityScore10Sql(stopwords)}) AS s10,
         |    row_number() OVER (
         |      ORDER BY CAST(len(string_split_regex(text, '\s+')) AS BIGINT)
         |        DESC, doc_id) - 1 AS r
@@ -5256,11 +5114,9 @@ object LlmQueries {
     // both maintenance paths replayed: the O(|delta|) xor fold and the
     // full v2 recompute; match must be 1 everywhere (xor algebra)
     "q308_manifest_cdc" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT doc_id,
-        |    CAST((ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-        |        + ascii(substr(md5(CAST(doc_id AS VARCHAR)), 2, 1))) % 16
-        |      AS INTEGER) AS shard,
+        |    ${SeqPack.shardOfSql(16)} AS shard,
         |    CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS h,
         |    CAST(('0x' || substr(md5(text || ' v2'), 1, 15)) AS BIGINT) AS h2,
         |    doc_id % 11 = 3 AS ins,

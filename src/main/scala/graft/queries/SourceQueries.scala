@@ -15,6 +15,25 @@ object SourceQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
+  /** The forecasting/trend fixture: `events` grouped per day and
+    * event_type as (segment, x = days since 1970-01-01 as `xType`). */
+  private def eventDays(s: SparkSession, dir: String, xType: DataType) =
+    t(s, dir, "events")
+      .groupBy(col("event_type").as("segment"),
+        datediff(col("ts").cast(DateType),
+          lit("1970-01-01").cast(DateType)).cast(xType).as("x"))
+
+  /** [[eventDays]] with y = the day's exact decimal value sum. */
+  private def dailySeries(s: SparkSession, dir: String, xType: DataType): DataFrame =
+    eventDays(s, dir, xType).agg(dsum(col("value")).as("y"))
+
+  /** [[dailySeries]] in DuckDB SQL, the oracle side. */
+  private def dailySeriesSql(xType: String): String =
+    s"""SELECT event_type AS segment,
+       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS $xType) AS x,
+       |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
+       |  FROM events GROUP BY 1, 2""".stripMargin
+
   val queries: Map[String, Q] = Map(
     // Small-file compaction (the streaming-sink hygiene op): a freshly
     // fragmented 64-file copy of orders is rewritten to
@@ -623,12 +642,7 @@ object SourceQueries {
     "q110_forecast_cv" -> ((s, dir) => {
       import graft.jobs.SegmentForecast
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(DoubleType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      val obs = daily.select(col("segment"), col("x"), col("y"))
+      val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
       SegmentForecast.runCV(s, obs).toDF()
         .select(col("segment"), col("kind"), col("window"),
@@ -648,12 +662,7 @@ object SourceQueries {
     // integer/decimal sums → one double conversion → fixed-order IEEE
     // solve, replayed term-for-term by the oracle.
     "q274_changepoint_trend" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.ChangepointTrend.fit(daily, k = 25)
+      graft.operators.ChangepointTrend.fit(dailySeries(s, dir, LongType), k = 25)
     }),
 
     // F8++++ — JOINT two-changepoint trend (Prophet's multi-break
@@ -665,12 +674,7 @@ object SourceQueries {
     // SQL is GENERATED by the same cofactor expansion the engine's
     // det3/det4 use, so both engines run one IEEE chain (q276Oracle).
     "q276_changepoint2" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.ChangepointTrend.fit2(daily, k = 10)
+      graft.operators.ChangepointTrend.fit2(dailySeries(s, dir, LongType), k = 10)
     }),
 
     // F8+++++ — greedy-forward k-changepoint trend, the L0 analog of
@@ -684,12 +688,7 @@ object SourceQueries {
     // planted breaks + early stop on a line are spec-pinned
     // (ChangepointGreedySpec).
     "q309_changepoint_greedy" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.ChangepointTrend.fitGreedy(daily, k = 10)
+      graft.operators.ChangepointTrend.fitGreedy(dailySeries(s, dir, LongType), k = 10)
     }),
 
     // Robust trend — Theil–Sen median-of-pairwise-slopes over the same
@@ -700,12 +699,7 @@ object SourceQueries {
     // the oracle replays every comparison; O(n²) pairs per segment is
     // the right shape for bounded daily series (TheilSen scaladoc).
     "q315_theil_sen" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.TheilSen.fit(daily)
+      graft.operators.TheilSen.fit(dailySeries(s, dir, LongType))
     }),
 
     // Mann–Kendall trend gate — the non-parametric "is there a trend
@@ -716,12 +710,7 @@ object SourceQueries {
     // comparison (1.96 = 49/25 — no sqrt, no libm), so every engine
     // reaches the identical verdict.
     "q317_mann_kendall" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.MannKendall.test(daily)
+      graft.operators.MannKendall.test(dailySeries(s, dir, LongType))
     }),
 
     // Kendall tau-b — rank correlation between two daily metrics per
@@ -732,10 +721,7 @@ object SourceQueries {
     // division whose √ is IEEE-correctly-rounded — unlike exp/ln, sqrt
     // is exact-portable, so the published tau hash-matches.
     "q320_kendall_tau" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
+      val daily = eventDays(s, dir, LongType)
         .agg(dsum(col("value")).as("v"), count(lit(1)).as("c"))
       val a = daily.select(col("segment"), col("x").as("x1"),
         col("v").as("v1"), col("c").as("c1"))
@@ -770,11 +756,7 @@ object SourceQueries {
     // cross-multiplication — never a divide (q253/q189 discipline).
     "q318_mase_backtest" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
+      val daily = dailySeries(s, dir, LongType)
       val w = Window.partitionBy("segment").orderBy("x")
       val wSeg = Window.partitionBy("segment")
       val marked = daily
@@ -816,12 +798,7 @@ object SourceQueries {
     "q114_forecast_grid2" -> ((s, dir) => {
       import graft.jobs.SegmentForecast
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(DoubleType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      val obs = daily.select(col("segment"), col("x"), col("y"))
+      val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
       SegmentForecast.runCV(s, obs, grid = SegmentForecast.wideGrid).toDF()
         .select(col("segment"), col("kind"),
@@ -851,12 +828,7 @@ object SourceQueries {
     // published width = p90−p10 grows with horizon — the widening fan
     // Prophet draws — and DuckDB recomputes every draw, fit included.
     "q323_cp_intervals" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(LongType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      graft.operators.ChangepointTrend.intervalSummary(daily, k = 25,
+      graft.operators.ChangepointTrend.intervalSummary(dailySeries(s, dir, LongType), k = 25,
         horizon = 7, nPaths = 1000)
     }),
 
@@ -864,12 +836,7 @@ object SourceQueries {
       import graft.jobs.SegmentForecast
       import graft.operators.Stats
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("segment"),
-          datediff(col("ts").cast(DateType),
-            lit("1970-01-01").cast(DateType)).cast(DoubleType).as("x"))
-        .agg(dsum(col("value")).as("y"))
-      val obs = daily.select(col("segment"), col("x"), col("y"))
+      val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
       SegmentForecast.runCvPaths(s, obs, nPaths = 1000, horizon = 3).toDF()
         .select(col("segment"), col("h"),
@@ -906,10 +873,7 @@ object SourceQueries {
     def rep(j: Int): Seq[Seq[String]] =
       A.zipWithIndex.map { case (row, i) => row.updated(j, r(i)) }
     s"""WITH daily AS (
-       |  SELECT event_type AS segment,
-       |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-       |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-       |  FROM events GROUP BY 1, 2),
+       |  ${dailySeriesSql("BIGINT")}),
        |obs AS (
        |  SELECT segment, x - MIN(x) OVER (PARTITION BY segment) AS x0, y,
        |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,
@@ -981,11 +945,8 @@ object SourceQueries {
     // S, tie-corrected 18*Var, and the cross-multiplied verdict all in
     // exact integers
     "q317_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("BIGINT")}),
         |p AS (
         |  SELECT a.segment, CAST(SUM(SIGN(b.y - a.y)) AS BIGINT) AS s
         |  FROM daily a JOIN daily b ON a.segment = b.segment AND a.x < b.x
@@ -1041,11 +1002,8 @@ object SourceQueries {
     // exact decimal error sums; MASE one double division; the verdict
     // a decimal cross-multiplication
     "q318_mase_backtest" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("BIGINT")}),
         |m AS (
         |  SELECT segment, y,
         |    row_number() OVER w AS rn,
@@ -1068,11 +1026,8 @@ object SourceQueries {
     // every pairwise slope, both median selections, and the forecast
     // chain replayed term-for-term
     "q315_theil_sen" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("BIGINT")}),
         |pairs AS (
         |  SELECT a.segment, a.x AS x1, b.x AS x2,
         |    CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS slope
@@ -1102,10 +1057,7 @@ object SourceQueries {
     // the greedy pipeline's own generated text over the q274/q276
     // daily fixture — engine and oracle share every arithmetic chain
     "q309_changepoint_greedy" -> graft.operators.ChangepointTrend.greedySql(
-      """(SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2) daily""".stripMargin, k = 10),
+      s"(${dailySeriesSql("BIGINT")}) daily", k = 10),
     // expected byte totals recomputed from the source table
     "q183_binaryfile_source" ->
       """SELECT COUNT(*)::BIGINT AS n_files,
@@ -1384,11 +1336,8 @@ object SourceQueries {
     // residual index, changepoint occurrence/location/sign per path —
     // same IEEE chains, same sorted-list reductions as q121
     "q323_cp_intervals" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("BIGINT")}),
         |obs AS (
         |  SELECT segment, x - MIN(x) OVER (PARTITION BY segment) AS x0, y,
         |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,
@@ -1485,11 +1434,8 @@ object SourceQueries {
         |  ROUND(v90 - v10, 6) AS width
         |FROM pct ORDER BY segment, h""".stripMargin,
     "q274_changepoint_trend" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("BIGINT")}),
         |obs AS (
         |  SELECT segment, x - MIN(x) OVER (PARTITION BY segment) AS x0, y,
         |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,
@@ -1544,11 +1490,8 @@ object SourceQueries {
         |  ROUND(b0 + b1*(xmax0 + 3) + b2*GREATEST(0, (xmax0 + 3) - c), 4) AS f3
         |FROM ranked WHERE rk = 1 ORDER BY segment""".stripMargin,
     "q110_forecast_cv" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS DOUBLE) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("DOUBLE")}),
         |obs AS (
         |  SELECT segment, x, y,
         |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,
@@ -1634,11 +1577,8 @@ object SourceQueries {
     // 'seasonal' adds per-dow mean-residual offsets from decimal-exact
     // class sums. Every double expression mirrors the engine's op order.
     "q114_forecast_grid2" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS DOUBLE) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("DOUBLE")}),
         |obs AS (
         |  SELECT segment, x, y,
         |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,
@@ -1822,11 +1762,8 @@ object SourceQueries {
     // list_sort interpolation and prepend-0.0 left-fold mean mirror the
     // engine's arrayPercentile/arrayMean op order exactly.
     "q121_forecast_paths" ->
-      """WITH daily AS (
-        |  SELECT event_type AS segment,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS DOUBLE) AS x,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH daily AS (
+        |  ${dailySeriesSql("DOUBLE")}),
         |obs AS (
         |  SELECT segment, x, y,
         |    row_number() OVER (PARTITION BY segment ORDER BY x) AS rn,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
 import graft.util.Scratch
 
 /** Structured Streaming equivalents of the reference's batch-watermark
@@ -46,6 +46,18 @@ object StreamOps {
         }
     }
   @volatile private var unloadWarned = false
+
+  /** (doc_id, text): the staged document batches the doc streams read. */
+  private val docSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** A file stream over staged parquet batches, at most
+    * `maxFilesPerTrigger` files per micro-batch. */
+  private def fileStream(spark: SparkSession, dir: String, schema: StructType,
+      maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .parquet(dir)
 
   /** Runs `df` to the end of its source as one bounded AvailableNow
     * query, each micro-batch handed to `sink`, then unloads the
@@ -381,9 +393,6 @@ object StreamOps {
       indexDir: String, queryName: String, k: Int, bands: Int,
       shingleW: Int, portable: Boolean,
       maxFilesPerTrigger: Int = 1, pruneParts: Int = 0): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", org.apache.spark.sql.types.StringType)))
     // key is a string under the portable hash, a long under xxhash64;
     // with pruneParts > 0 the index carries the (band, pkey) partition
     // layout (TextDedup.writeSigIndex) and each micro-batch probe
@@ -397,9 +406,7 @@ object StreamOps {
         Seq(StructField("pkey", org.apache.spark.sql.types.IntegerType))
       else Nil))
     val out = Scratch.fresh(s"$queryName|$batchDocsDir")
-    val src = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(batchDocsDir)
+    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, _) =>
       // per-trigger batch joins carry one micro-batch of docs: size
       // their shuffles to the trigger volume, not the session default
@@ -437,12 +444,7 @@ object StreamOps {
   def decontaminateStream(spark: SparkSession, batchDocsDir: String,
       evalDocs: DataFrame, n: Int, flagRatio: Double, outDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", org.apache.spark.sql.types.StringType)))
-    val src = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(batchDocsDir)
+    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, _) =>
       withStatePartitions(spark, 8) {
         graft.llm.Decontaminate.report(batch, evalDocs, n, flagRatio)
@@ -473,12 +475,7 @@ object StreamOps {
       shardOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       outDir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", org.apache.spark.sql.types.StringType)))
-    val src = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(batchDocsDir)
+    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, _) =>
       withStatePartitions(spark, 8) {
         batch
@@ -522,14 +519,11 @@ object StreamOps {
   def stratifiedSampleStream(spark: SparkSession, batchDocsDir: String,
       rates: Map[String, Int], defaultRate: Int, outDir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("source", org.apache.spark.sql.types.StringType)))
+    val sampleSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("source", StringType)))
     import spark.implicits._
     val rateDf = broadcast(rates.toSeq.toDF("source", "rate"))
-    val src = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(batchDocsDir)
+    val src = fileStream(spark, batchDocsDir, sampleSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, _) =>
       batch
         .join(rateDf, Seq("source"), "left")
@@ -539,10 +533,7 @@ object StreamOps {
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .parquet(outDir)
     }
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("source", org.apache.spark.sql.types.StringType)))
-    spark.read.schema(outSchema).parquet(outDir)
+    spark.read.schema(sampleSchema).parquet(outDir)
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"),
         min("doc_id").as("min_kept"),
@@ -589,9 +580,7 @@ object StreamOps {
       .withColumn("from_change", lit(false))
       .write.mode("overwrite").parquet(vPath(0))
     @volatile var cur = 0L
-    val src = spark.readStream.schema(logSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(changelogDir)
+    val src = fileStream(spark, changelogDir, logSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, id) =>
       withStatePartitions(spark, 8) {
         val st = spark.read.parquet(vPath(cur))

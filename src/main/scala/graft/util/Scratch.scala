@@ -24,7 +24,8 @@ import org.apache.spark.sql.DataFrame
   *    dir, so no caller lists anything and no scratch dir outlives its
   *    JVM.
   *
-  * An instance owns only the dirs it handed out; specs use their own. */
+  * An instance owns only the dirs it handed out; each spec suite has
+  * its own, swept when the suite ends. */
 class Scratch {
   private final class Slot { var dir: String = _ }
   private val built = new ConcurrentHashMap[String, Slot]()
@@ -54,6 +55,9 @@ class Scratch {
       slot.dir
     }
   }
+
+  /** A new empty directory named after `name`, kept until [[sweep]]. */
+  def dir(name: String): String = create(name)
 
   /** A new empty directory for `key`; the one the previous call for
     * `key` returned is deleted now. */

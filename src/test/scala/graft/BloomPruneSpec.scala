@@ -30,7 +30,7 @@ class BloomPruneSpec extends SparkTestBase {
     val members = (1L to 200L).toDF("k")
     val probes = (1L to 2000L).toDF("k")
     val f = BloomPrune.build(members, "k", 4, 2048)
-    val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+    val dir = scratch.dir("bloom")
     f.write.mode("overwrite").parquet(dir)
     val a = BloomPrune.candidates(probes, "k", f, 4, 2048)
       .as[Long].collect().sorted.toSeq

@@ -8,7 +8,7 @@ class Catalog2Spec extends SparkTestBase {
   import spark.implicits._
 
   test("PartitionedTable: dynamic partition overwrite touches only incoming partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("pt").toString + "/t"
+    val dir = scratch.dir("pt") + "/t"
     val tbl = PartitionedTable(spark, dir, "yyyymm")
     tbl.append(Seq((202401, 1, "a"), (202401, 2, "b"), (202402, 3, "c"))
       .toDF("yyyymm", "id", "v"))

@@ -95,8 +95,8 @@ class CdcFoldPropertySpec extends SparkTestBase {
   test("streaming fold == batch operator across random 4-file chops") {
     (101 to 103).foreach { seed =>
       val (snap, ch) = genCase(seed)
-      val logDir = Files.createTempDirectory("cdc_prop_log").toString
-      val stateDir = Files.createTempDirectory("cdc_prop_state").toString
+      val logDir = scratch.dir("cdc_prop_log")
+      val stateDir = scratch.dir("cdc_prop_state")
       // hash-chop into 4 files: arrival order is file order, so the
       // same (k, seq) pair routinely splits across triggers
       ch.repartition(4).write.mode("overwrite").parquet(logDir)
@@ -109,7 +109,7 @@ class CdcFoldPropertySpec extends SparkTestBase {
 
   /** Write rows as ONE parquet file named `<name>.parquet` in dir. */
   private def writeFile(dir: String, name: String, df: DataFrame): Unit = {
-    val tmp = Files.createTempDirectory("cdc_prop_part").toString
+    val tmp = scratch.dir("cdc_prop_part")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
@@ -128,8 +128,8 @@ class CdcFoldPropertySpec extends SparkTestBase {
     // deleted (D has the higher seq either way).
     Seq(Seq(("00_d", dRow), ("01_u", uRow)),
         Seq(("00_u", uRow), ("01_d", dRow))).foreach { files =>
-      val logDir = Files.createTempDirectory("cdc_prop_tomb").toString
-      val stateDir = Files.createTempDirectory("cdc_prop_tstate").toString
+      val logDir = scratch.dir("cdc_prop_tomb")
+      val stateDir = scratch.dir("cdc_prop_tstate")
       files.foreach { case (n, df) => writeFile(logDir, n, df) }
       val out = StreamOps.cdcUpsertStream(spark, logDir, stateDir,
         logSchema, snap)

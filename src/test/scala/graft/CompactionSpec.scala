@@ -8,7 +8,7 @@ class CompactionSpec extends SparkTestBase {
   import spark.implicits._
 
   test("fragmented table compacts to the computed target, rows identical") {
-    val dir = java.nio.file.Files.createTempDirectory("frag").toString + "/tbl"
+    val dir = scratch.dir("frag") + "/tbl"
     val src = t(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     src.repartition(64).write.parquet(dir) // 64 tiny files
@@ -24,7 +24,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("already-compact table collapses to a single file") {
-    val dir = java.nio.file.Files.createTempDirectory("tiny").toString + "/tbl"
+    val dir = scratch.dir("tiny") + "/tbl"
     (1 to 100).map(i => (i, s"v$i")).toDF("k", "v")
       .repartition(8).write.parquet(dir)
     val (nb, na, rows) = Compaction.compact(spark, dir)

@@ -11,10 +11,10 @@ import graft.dag.CorpusLoader
 class CorpusCacheSpec extends SparkTestBase {
 
   /** Minimal but complete corpus: one dataset, one table stand-in, one
-    * view over it; metrics globals copied from the reference corpus at
-    * runtime (the same read-at-runtime contract q108/q109 use). */
+    * view over it, and minimal metrics globals — self-contained, so it
+    * runs without the reference corpus. */
   private def makeCorpus(): Path = {
-    val root = Files.createTempDirectory("corpus_cache")
+    val root = Path.of(scratch.dir("corpus_cache"))
     val ds = root.resolve("sql/demo")
     Files.createDirectories(ds.resolve("tables/base"))
     Files.createDirectories(ds.resolve("views/v1"))
@@ -30,13 +30,12 @@ class CorpusCacheSpec extends SparkTestBase {
         |""".stripMargin)
     Files.writeString(ds.resolve("views/v1/view.sql"),
       "SELECT id, v FROM {{ ref('demo.base') }} WHERE id IS NOT NULL")
-    val refMetrics = java.nio.file.Path.of(sys.env.getOrElse(
-      "SPARK_GRAFT_CORPUS_ROOT",
-      "/root/reference/jobs/webcompat-kb/data")).resolve("metrics")
+    // the Jinja globals: one metric and one rank, enough for the loader
+    // (the view uses neither)
     Files.createDirectories(root.resolve("metrics"))
-    Seq("metrics.toml", "ranks.toml").foreach { f =>
-      Files.copy(refMetrics.resolve(f), root.resolve("metrics").resolve(f))
-    }
+    Files.writeString(root.resolve("metrics/metrics.toml"),
+      "[all]\ntype = \"unconditional\"\n")
+    Files.writeString(root.resolve("metrics/ranks.toml"), "[global_rank]\n")
     root
   }
 

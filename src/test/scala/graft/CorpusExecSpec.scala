@@ -12,8 +12,6 @@ import org.apache.spark.sql.types._
   */
 class CorpusExecSpec extends SparkTestBase {
 
-  private val dataRoot = Path.of("/root/reference/jobs/webcompat-kb/data")
-  private def available = Files.isDirectory(dataRoot.resolve("sql"))
 
   test("SyntheticRows is deterministic, schema-typed, and honors REQUIRED") {
     val schema = StructType(Seq(
@@ -34,8 +32,8 @@ class CorpusExecSpec extends SparkTestBase {
   }
 
   test("full corpus executes over the fixture: 64 views, zero failures, all non-empty") {
-    assume(available, "reference corpus not present")
-    val result = CorpusLoader.deploy(spark, dataRoot, rowsPerTable = 64)
+    assume(corpusAvailable, "reference corpus not present")
+    val result = CorpusLoader.deploy(spark, corpusRoot, rowsPerTable = 64)
     assert(result.failures.isEmpty,
       s"deploy failures: ${result.failures.map(f => s"${f.dataset}.${f.name}: ${f.error.getOrElse("?")}").mkString("\n")}")
     val execs = CorpusLoader.executeAll(spark, result)
@@ -53,12 +51,12 @@ class CorpusExecSpec extends SparkTestBase {
   }
 
   test("fused deployAndExecute matches the staged deploy-then-executeAll sweep") {
-    assume(available, "reference corpus not present")
+    assume(corpusAvailable, "reference corpus not present")
     val staged = {
-      val result = CorpusLoader.deploy(spark, dataRoot, rowsPerTable = 40)
+      val result = CorpusLoader.deploy(spark, corpusRoot, rowsPerTable = 40)
       CorpusLoader.executeAll(spark, result)
     }
-    val (result, fused) = CorpusLoader.deployAndExecute(spark, dataRoot, rowsPerTable = 40)
+    val (result, fused) = CorpusLoader.deployAndExecute(spark, corpusRoot, rowsPerTable = 40)
     assert(result.failures.isEmpty)
     // same views, same order, same row counts — only the wall-clock differs
     assert(fused.map(e => (e.dataset, e.name, e.ok, e.rows)) ==
@@ -66,13 +64,13 @@ class CorpusExecSpec extends SparkTestBase {
   }
 
   test("warehouse-mode materialization (parquet persist) matches fixture-mode counts") {
-    assume(available, "reference corpus not present")
-    val result = CorpusLoader.deploy(spark, dataRoot, rowsPerTable = 40)
+    assume(corpusAvailable, "reference corpus not present")
+    val result = CorpusLoader.deploy(spark, corpusRoot, rowsPerTable = 40)
     val local = CorpusLoader.executeAll(spark, result)
       .map(e => (e.dataset, e.name) -> e.rows).toMap
-    val dir = Files.createTempDirectory("corpus_wh")
+    val dir = Path.of(scratch.dir("corpus_wh"))
     try {
-      val redeploy = CorpusLoader.deploy(spark, dataRoot, rowsPerTable = 40)
+      val redeploy = CorpusLoader.deploy(spark, corpusRoot, rowsPerTable = 40)
       val persisted = CorpusLoader.executeAll(spark, redeploy, persistDir = Some(dir))
       assert(persisted.forall(_.ok),
         s"persist failures: ${persisted.filterNot(_.ok).map(e => s"${e.dataset}.${e.name}: ${e.error.getOrElse("?")}").mkString("\n")}")

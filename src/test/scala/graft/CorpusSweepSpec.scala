@@ -13,12 +13,10 @@ import graft.dag.JinjaLite.VStr
   */
 class CorpusSweepSpec extends SparkTestBase {
 
-  private val dataRoot = Path.of("/root/reference/jobs/webcompat-kb/data")
-  private def available = Files.isDirectory(dataRoot.resolve("sql"))
 
   test("full corpus deploys: 80 tables, 16 routines, 64 views, zero failures") {
-    assume(available, "reference corpus not present")
-    val result = CorpusLoader.deploy(spark, dataRoot, storeAnalyzed = true)
+    assume(corpusAvailable, "reference corpus not present")
+    val result = CorpusLoader.deploy(spark, corpusRoot, storeAnalyzed = true)
     val byKind = result.outcomes.groupBy(_.kind).view.mapValues(_.size).toMap
     assert(byKind("table") == 80, s"tables: $byKind")
     assert(byKind("routine") == 16, s"routines: $byKind")
@@ -36,8 +34,8 @@ class CorpusSweepSpec extends SparkTestBase {
   }
 
   test("sweep summary matches the corpus's golden inventory") {
-    assume(available, "reference corpus not present")
-    val result = CorpusLoader.deploy(spark, dataRoot, storeAnalyzed = true)
+    assume(corpusAvailable, "reference corpus not present")
+    val result = CorpusLoader.deploy(spark, corpusRoot, storeAnalyzed = true)
     val rows = CorpusLoader.sweepSummary(spark, result)
       .orderBy("dataset", "kind").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -49,10 +47,10 @@ class CorpusSweepSpec extends SparkTestBase {
   }
 
   test("JinjaLite renders the real metric templates (loops, for-if, nested loops, ternary)") {
-    assume(available, "reference corpus not present")
-    val base = CorpusLoader.metricsContext(dataRoot)
+    assume(corpusAvailable, "reference corpus not present")
+    val base = CorpusLoader.metricsContext(corpusRoot)
     def render(rel: String, dataset: String, name: String): String = {
-      val template = Files.readString(dataRoot.resolve(rel))
+      val template = Files.readString(corpusRoot.resolve(rel))
       JinjaLite.render(template,
         CorpusLoader.templateContext(base,
           CorpusLoader.CorpusObject(dataset, name, "view", template, None)))
@@ -70,7 +68,7 @@ class CorpusSweepSpec extends SparkTestBase {
       "webcompat_knowledge_base", "webcompat_topline_metric_latest")
     assert(latest.contains("bug_count") && latest.contains("total_score"))
     // ternary with != / or / in-list (webcompat_topline_metric_daily/table.toml)
-    val daily = Files.readString(dataRoot.resolve(
+    val daily = Files.readString(corpusRoot.resolve(
       "sql/webcompat_knowledge_base/tables/webcompat_topline_metric_daily/table.toml"))
     val dailyRendered = JinjaLite.render(daily,
       CorpusLoader.templateContext(base,
@@ -87,8 +85,8 @@ class CorpusSweepSpec extends SparkTestBase {
   }
 
   test("template lint passes on the real corpus and flags violations") {
-    assume(available, "reference corpus not present")
-    val objects = CorpusLoader.scan(dataRoot.resolve("sql"))
+    assume(corpusAvailable, "reference corpus not present")
+    val objects = CorpusLoader.scan(corpusRoot.resolve("sql"))
     val errors = CorpusLint.lintTemplates("moz-webcompat", objects)
     assert(errors.isEmpty, s"lint errors: ${errors.mkString("\n")}")
     // hardcoded project id is flagged

@@ -11,7 +11,7 @@ class DapCollectSpec extends SparkTestBase {
 
   /** Write an executable fake-collect shell script and return its path. */
   private def fakeCollect(body: String): String = {
-    val f = java.nio.file.Files.createTempFile("fake_collect", ".sh")
+    val f = java.nio.file.Paths.get(scratch.dir("fake_collect"), "collect.sh")
     java.nio.file.Files.writeString(f, s"#!/bin/sh\n$body\n")
     f.toFile.setExecutable(true)
     f.toString
@@ -66,7 +66,7 @@ class DapCollectSpec extends SparkTestBase {
 
   test("retries re-run transient failures; attempt count is bounded") {
     // fails on the first run, succeeds when the retry marker file exists
-    val marker = java.nio.file.Files.createTempDirectory("dap_retry")
+    val marker = java.nio.file.Paths.get(scratch.dir("dap_retry"))
       .resolve("tried").toString
     val bin = fakeCollect(
       s"""if [ -f "$marker" ]; then

@@ -26,7 +26,7 @@ class EtlRunnerSpec extends SparkTestBase {
   }
 
   test("context write guard enforces the job's whitelist") {
-    val dir = java.nio.file.Files.createTempDirectory("etl").toString
+    val dir = scratch.dir("etl")
     val jobs = Seq(
       JobSpec("writer", Some(Set("allowed")), ctx => {
         val df = Seq((1, "x")).toDF("id", "v")
@@ -43,7 +43,7 @@ class EtlRunnerSpec extends SparkTestBase {
   }
 
   test("dry-run context logs would-be writes instead of executing") {
-    val dir = java.nio.file.Files.createTempDirectory("etl2").toString
+    val dir = scratch.dir("etl2")
     var logged = List.empty[String]
     val jobs = Seq(JobSpec("dry", None, ctx =>
       ctx.guard.writeTable(Seq((1, "x")).toDF("id", "v"),

@@ -52,14 +52,21 @@ class GraftSessionSpec extends AnyFunSuite {
   // Every session is a GraftSession, so GraftExtensions is the one way a
   // session gets graft's functions and rules. This file is skipped: it
   // has to spell the patterns it looks for.
+  private lazy val sources = Using.resource(Files.walk(Paths.get("src")))(_.iterator.asScala
+    .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "GraftSessionSpec.scala")
+    .toList)
+  private def mentioning(pattern: String): Seq[Path] =
+    sources.filter(p => Files.readString(p).contains(pattern))
+
   test("only GraftSession builds a session, and nothing registers functions or rules on one") {
-    val sources = Using.resource(Files.walk(Paths.get("src")))(_.iterator.asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString != "GraftSessionSpec.scala")
-      .toList)
-    def mentioning(pattern: String): Seq[Path] =
-      sources.filter(p => Files.readString(p).contains(pattern))
     assert(mentioning("SparkSession.builder") == Seq(Paths.get("src/main/scala/graft/GraftSession.scala")))
     assert(mentioning("registerFunction").isEmpty)
     assert(mentioning("extraOptimizations").isEmpty)
+  }
+
+  // graft.util.Scratch owns every temp dir, the program's and the
+  // specs' (each suite sweeps its own instance when it ends).
+  test("only Scratch creates temp directories") {
+    assert(mentioning("createTempDirectory") == Seq(Paths.get("src/main/scala/graft/util/Scratch.scala")))
   }
 }

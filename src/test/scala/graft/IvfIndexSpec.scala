@@ -7,7 +7,7 @@ class IvfIndexSpec extends SparkTestBase {
 
   private lazy val emb = graft.util.Tables.t(spark, sfDir, "embeddings")
   private lazy val idxDir = {
-    val p = java.nio.file.Files.createTempDirectory("ivfidx_spec").toString
+    val p = scratch.dir("ivfidx_spec")
     Ann.writeIvfIndex(emb, nCells = 8, kmeansIters = 1, p)
     p
   }

@@ -20,7 +20,7 @@ class MainPackSpec extends SparkTestBase {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("webcompat-kb and llm-prep write all 8 tables, each equal to its query") {
-    val out = java.nio.file.Files.createTempDirectory("graft_packs").toString
+    val out = scratch.dir("graft_packs")
     val report = EtlRunner.run(spark, Main.registry(sfDir, out), Seq("webcompat-kb", "llm-prep"))
     assert(report.failed.isEmpty, report.errors.values.map(EtlRunner.describe).mkString("\n"))
     assert(report.succeeded == Seq("webcompat-kb", "llm-prep"))
@@ -41,7 +41,7 @@ class MainPackSpec extends SparkTestBase {
   }
 
   test("a failing query fails its pack with its own root cause after its siblings finish") {
-    val out = java.nio.file.Files.createTempDirectory("graft_packfail").toString
+    val out = scratch.dir("graft_packfail")
     val boom: (SparkSession, String) => DataFrame = (_, _) =>
       throw new IllegalStateException("build failed", new java.io.IOException("disk gone"))
     val qs = Seq("q70_exact_dedup", "boom", "q89_prep_pipeline")

@@ -50,7 +50,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("WriteGuard: dry-run logs instead of writing; whitelist enforced") {
-    val dir = java.nio.file.Files.createTempDirectory("wg").toString
+    val dir = scratch.dir("wg")
     val df = Seq((1, "x")).toDF("id", "v")
     val dry = WriteGuard(write = false, log = _ => ())
     assert(!dry.writeTable(df, SchemaId("p", "d", "t"), s"$dir/t", SaveMode.Overwrite))
@@ -64,7 +64,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("MutableTable: update-from + delete-where rewrite semantics") {
-    val dir = java.nio.file.Files.createTempDirectory("mt").toString
+    val dir = scratch.dir("mt")
     Seq((1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)).toDF("id", "grp", "bal")
       .write.parquet(dir + "/t")
     val tbl = MutableTable(spark, dir + "/t")

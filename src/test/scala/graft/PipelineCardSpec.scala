@@ -46,7 +46,7 @@ class PipelineCardSpec extends SparkTestBase {
       StructField("shard", IntegerType)))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val path = java.nio.file.Files.createTempDirectory("graft_card_empty").toString
+    val path = scratch.dir("graft_card_empty")
     empty.write.mode("overwrite").partitionBy("shard").parquet(path)
     // inference on the part-file-less dir throws UNABLE_TO_INFER_SCHEMA;
     // the explicit schema turns it into the zero-row answer it should be

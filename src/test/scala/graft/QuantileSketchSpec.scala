@@ -43,7 +43,7 @@ class QuantileSketchSpec extends SparkTestBase {
 
   test("sketch survives a parquet round trip") {
     val e = t(spark, sfDir, "events").withColumn("day", to_date(col("ts")))
-    val dir = java.nio.file.Files.createTempDirectory("qsk").toString
+    val dir = scratch.dir("qsk")
     QuantileSketch.build(e, Seq("event_type", "day"), "value", 0.5)
       .write.mode("overwrite").parquet(dir)
     val a = QuantileSketch.mergeEstimate(spark.read.parquet(dir),

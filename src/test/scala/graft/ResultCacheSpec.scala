@@ -7,7 +7,7 @@ class ResultCacheSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshRoot =
-    java.nio.file.Files.createTempDirectory("graft_rc").toString
+    scratch.dir("graft_rc")
 
   test("second identical query is served from the cache") {
     val root = freshRoot

@@ -86,7 +86,7 @@ class ScratchSpec extends AnyFunSuite {
     val other = new Scratch
     val kept = other.fresh("other|k")
     val dirs = Seq(s.once("idx|k")(d => Files.createDirectories(Paths.get(d, "a", "b"))),
-      s.fresh("out|k"), s.fresh("out|k"), s.fresh("out|j"))
+      s.fresh("out|k"), s.fresh("out|k"), s.fresh("out|j"), s.dir("tmp"))
     s.sweep()
     dirs.foreach(d => assert(!Files.exists(Paths.get(d)), s"$d survived the sweep"))
     assert(exists(kept))

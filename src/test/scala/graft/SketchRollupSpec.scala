@@ -18,7 +18,7 @@ class SketchRollupSpec extends SparkTestBase {
   }
 
   test("sketches survive a parquet round trip as binary columns") {
-    val dir = java.nio.file.Files.createTempDirectory("sk_spec").toString
+    val dir = scratch.dir("sk_spec")
     val ids = spark.range(0, 2000).select(col("id"), (col("id") % 3).as("p"))
     ids.groupBy("p").agg(hll_sketch_agg(col("id")).as("sk"))
       .write.mode("overwrite").parquet(dir)

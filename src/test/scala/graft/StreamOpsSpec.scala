@@ -11,11 +11,11 @@ class StreamOpsSpec extends SparkTestBase {
     // three files = three triggers; the planted near-dups (1,2) arrive in
     // DIFFERENT triggers and must still pair via the grown index
     val base = "the quick brown fox jumps over the lazy dog again and again today"
-    val batchDir = java.nio.file.Files.createTempDirectory("sdedup_batch").toString
+    val batchDir = scratch.dir("sdedup_batch")
     // the file-stream source lists FLAT files — stage each doc as one
     // part file directly under batchDir (one file = one trigger)
     def stage(doc: (Long, String), name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("sdedup_one").toString
+      val tmp = scratch.dir("sdedup_one")
       Seq(doc).toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -28,7 +28,7 @@ class StreamOpsSpec extends SparkTestBase {
     stage((3L, "completely different words appear in this unrelated document body"),
       "f3.parquet")
     // index pre-seeded with an existing corpus doc that near-dups doc 2
-    val idxDir = java.nio.file.Files.createTempDirectory("sdedup_idx").toString
+    val idxDir = scratch.dir("sdedup_idx")
     graft.llm.TextDedup.bandedSignatures(
         Seq((10L, base + " indeed")).toDF("doc_id", "text"),
         k = 16, bands = 8, shingleW = 1)
@@ -132,9 +132,9 @@ class StreamOpsSpec extends SparkTestBase {
   test("checkpointed resume processes only unseen files — exactly once") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val src = java.nio.file.Files.createTempDirectory("ckpt_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_log").toString
-    val out = java.nio.file.Files.createTempDirectory("ckpt_out").toString
+    val src = scratch.dir("ckpt_src")
+    val ckpt = scratch.dir("ckpt_log")
+    val out = scratch.dir("ckpt_out")
     val schema = StructType(Seq(StructField("id", LongType)))
     Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.mode("append").parquet(src)
     StreamOps.checkpointedAppendRun(spark, src, schema, ckpt, out)
@@ -152,10 +152,10 @@ class StreamOpsSpec extends SparkTestBase {
   test("left-outer stream join flushes the LAST anchor's null row (sentinel)") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("slo_src").toString
+    val dir = scratch.dir("slo_src")
     def stage(name: String, mtime: Long,
         rows: Seq[(Long, java.time.LocalDateTime, Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("slo_one").toString
+      val tmp = scratch.dir("slo_one")
       rows.toDF("event_id", "ts", "user_id", "event_type").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -191,10 +191,10 @@ class StreamOpsSpec extends SparkTestBase {
   test("left-outer stream join matches pairs split ACROSS triggers") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("slo_x").toString
+    val dir = scratch.dir("slo_x")
     def stage(name: String, mtime: Long,
         rows: Seq[(Long, java.time.LocalDateTime, Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("slo_xone").toString
+      val tmp = scratch.dir("slo_xone")
       rows.toDF("event_id", "ts", "user_id", "event_type").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -235,12 +235,12 @@ class StreamOpsSpec extends SparkTestBase {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val docs = (0L until 120L).map(i => (i, s"src${i % 3}"))
-    val batchDir = java.nio.file.Files.createTempDirectory("ssamp_in").toString
+    val batchDir = scratch.dir("ssamp_in")
     docs.toDF("doc_id", "source").repartition(6)
       .write.mode("overwrite").parquet(batchDir)
     val rates = Map("src0" -> 80, "src1" -> 30)
     def run(chop: Int): Set[(String, Long, Long, Long)] = {
-      val out = java.nio.file.Files.createTempDirectory("ssamp_out").toString
+      val out = scratch.dir("ssamp_out")
       StreamOps.stratifiedSampleStream(spark, batchDir, rates,
           defaultRate = 50, outDir = out, maxFilesPerTrigger = chop)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),

@@ -14,11 +14,11 @@ class Wave6Spec extends SparkTestBase {
 
   private def run(snapRows: Seq[(Long, String)],
       batches: Seq[Seq[(Long, Long, String, String)]]): Map[Long, (String, Boolean)] = {
-    val logDir = java.nio.file.Files.createTempDirectory("w6log").toString
+    val logDir = scratch.dir("w6log")
     // one file per batch, written in order — with maxFilesPerTrigger=1
     // the stream consumes them as separate triggers in listing order
     batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = java.nio.file.Files.createTempDirectory("w6b").toString
+      val tmp = scratch.dir("w6b")
       rows.toDF("k", "seq", "op", "v").coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -26,7 +26,7 @@ class Wave6Spec extends SparkTestBase {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(logDir, f"b$i%03d.parquet"))
     }
-    val stateDir = java.nio.file.Files.createTempDirectory("w6state").toString
+    val stateDir = scratch.dir("w6state")
     graft.streaming.StreamOps.cdcUpsertStream(spark, logDir, stateDir,
         logSchema, snapRows.toDF("k", "v"))
       .select("k", "v", "from_change")

@@ -76,9 +76,9 @@ class Wave8Spec extends SparkTestBase {
   test("streaming MG guarantees hold under a different trigger chop") {
     val docs = graft.util.Tables.t(spark, sfDir, "events")
       .select("event_id", "user_id")
-    val srcDir = java.nio.file.Files.createTempDirectory("w8hh").toString
+    val srcDir = scratch.dir("w8hh")
     docs.repartition(6).write.mode("overwrite").parquet(srcDir)
-    val stateDir = java.nio.file.Files.createTempDirectory("w8hhs").toString
+    val stateDir = scratch.dir("w8hhs")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id",
         org.apache.spark.sql.types.LongType),

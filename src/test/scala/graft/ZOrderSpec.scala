@@ -48,7 +48,7 @@ class ZOrderSpec extends SparkTestBase {
       .select(col("o_orderkey"), col("o_custkey").as("x"),
         datediff(to_date(col("o_orderdate")),
           lit(java.sql.Date.valueOf("1970-01-01"))).cast("long").as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder_spec").toString
+    val dir = scratch.dir("zorder_spec")
     // the 100 TB layout in miniature: partition dirs by coarse z-bucket
     // (files within a partition would be z-sorted row groups)
     ZOrder.withZ(o)
