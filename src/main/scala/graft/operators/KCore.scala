@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * sequential version; distributed peeling converges in O(peel depth)
   * rounds.
   *
-  * Scale shape: per round one semi-join of the (cached, src-hash-
-  * partitioned) symmetric edge list against the survivor set and one
-  * degree aggregation — only the survivor vector (≤ |V|) and degree
-  * counts move; lazily persisted rounds materialize in the single
-  * final action, then every intermediate is released.
+  * Scale shape: the edge list is materialized once (a localCheckpoint,
+  * no partitioning of its own). Round 1 is one degree aggregation over
+  * it; every later round joins only the edges leaving the previous
+  * round's DYING nodes (a semi-join against the frontier, ≤ |V|) and
+  * subtracts their per-node count from the survivors' degrees — no
+  * alive-set distinct and no |E|-sized aliveness join per round.
   */
 object KCore {
 
@@ -24,34 +25,38 @@ object KCore {
     * SYMMETRIC edge list (src, dst) — returns (id, deg) with each
     * survivor's final-round degree.
     *
-    * Iteration cadence (r17): each round's |V|-sized degree frame is an
-    * EAGER localCheckpoint — the ConnectedComponents barrier pattern.
-    * The previous lazy persist chain deferred all rounds to the single
-    * final action, whose plan nested every round's InMemoryRelation:
-    * at fixture scale the cost was driver-side planning/scheduling of
-    * that one deep plan (q180's 8c/32c scaling ratio was 0.73 —
-    * serial), not data. The barriers keep every per-round plan shallow
-    * (two joins over a LogicalRDD) and both consumers of `alive` read
-    * materialized rows. Blocks are executor-resident and
-    * ContextCleaner-reclaimed; on a real cluster an executor loss
-    * mid-query recomputes nothing (localCheckpoint is not
-    * fault-tolerant) — acceptable for an intra-query barrier, same
-    * trade as CC documents. */
+    * Frontier delta: round i's degree of a survivor s is round i−1's
+    * degree minus its edges to the nodes that fell below k in round
+    * i−1. By symmetry those are the edges (d, s) with d dying, counted
+    * by `dst`. That equals the unrolled form's count of s's edges
+    * into the survivor set, with one exception: a survivor whose every
+    * neighbour died keeps degree 0 here, where the unrolled form has
+    * no row for it. k ≥ 1 filters both the same way, so k ≤ 0 is
+    * rejected.
+    *
+    * Iteration cadence (r17): each round's degree frame is an EAGER
+    * localCheckpoint — the ConnectedComponents barrier pattern — so
+    * every per-round plan stays shallow (one semi-join, one aggregate
+    * and one join over LogicalRDDs) instead of nesting every earlier
+    * round. Blocks are executor-resident and ContextCleaner-reclaimed;
+    * on a real cluster an executor loss mid-query recomputes nothing
+    * (localCheckpoint is not fault-tolerant) — acceptable for an
+    * intra-query barrier, same trade as CC documents. */
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val ed = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    var alive = ed.select(col("src").as("id")).distinct()
-    var deg: DataFrame = null
-    for (_ <- 1 to rounds) {
-      // one |E|-sized join per round (dst-side aliveness), then the
-      // node's own aliveness is applied to the |V|-sized degree table —
-      // not to the edge table — before the threshold filter
-      val degAll = ed
-        .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg"))
-      deg = degAll.join(alive, Seq("id"), "left_semi").localCheckpoint(true)
-      alive = deg.filter(col("deg") >= k).select("id")
+    require(k >= 1, s"k-core threshold must be at least 1, got $k")
+    require(rounds >= 1, s"k-core needs at least one round, got $rounds")
+    val ed = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    var deg = ed.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    for (_ <- 2 to rounds) {
+      val dying = deg.filter(col("deg") < k).select(col("id").as("src"))
+      val lost = ed.join(dying, Seq("src"), "left_semi")
+        .groupBy(col("dst").as("id"))
+        .agg(count(lit(1)).as("lost"))
+      deg = deg.filter(col("deg") >= k)
+        .join(lost, Seq("id"), "left")
+        .select(col("id"), (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
+        .localCheckpoint(true)
     }
     deg.filter(col("deg") >= k)
   }

@@ -169,11 +169,13 @@ object InfraQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"),
           (col("l_suppkey") + 10000000L).as("sup")).distinct()
-        // symmetrizing union + the operator's internal branches evaluate
-        // the orders⋈lineitem distinct 4x without a barrier (r16)
-        .localCheckpoint()
-      val edges = pair.select(col("c").as("src"), col("sup").as("dst"))
-        .union(pair.select(col("sup").as("src"), col("c").as("dst")))
+      // both directions from one explode: the orders⋈lineitem distinct
+      // is evaluated once, by the operator's edge barrier
+      val edges = pair
+        .select(explode(array(
+          struct(col("c").as("src"), col("sup").as("dst")),
+          struct(col("sup").as("src"), col("c").as("dst")))).as("e"))
+        .select("e.src", "e.dst")
       graft.operators.KCore.run(edges, k = 10, rounds = 3)
         .select(col("id").as("node_id"), col("deg"))
         .orderBy("node_id")

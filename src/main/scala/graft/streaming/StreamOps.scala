@@ -71,13 +71,17 @@ object StreamOps {
     unloadStateStores()
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n` — the knob that sizes a stateful streaming query's state
+  /** Run `f` with `spark.sql.shuffle.partitions` temporarily capped
+    * at `n` — the knob that sizes a stateful streaming query's state
     * partitions (fixed at query start from this conf). The bounded
     * AvailableNow runners here carry small per-trigger volumes, where
     * 32 state-store instances per stateful operator are pure overhead;
     * a production deployment sizes this explicitly per stream the same
-    * way. Results are partitioning-independent.
+    * way. The callers' 8 and 4 are ceilings: the count is
+    * min(n, the session's value) and is never raised, so a local[2]
+    * session keeps its 2 state stores (raising it to 8 cost 6 more
+    * tasks and output files per stateful operator). Results are
+    * partitioning-independent.
     *
     * State-store PROVIDER (r17 A/B, VERDICT ask #7): the RocksDB
     * provider was measured against the default in-memory HDFS-backed
@@ -94,7 +98,7 @@ object StreamOps {
   private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, math.min(n, old.toInt).toString)
     try f finally spark.conf.set(key, old)
   }
 
@@ -138,7 +142,9 @@ object StreamOps {
         batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
       }
     }
-    spark.read.parquet(outDir)
+    // the sink's schema is the aggregate's: reading with it skips the
+    // inference job and reads an empty dir as no rows
+    spark.read.schema(agg.schema).parquet(outDir)
       .select(to_date(col("window.start")).as("day"), col("event_type"), col("n"))
   }
 
@@ -176,7 +182,7 @@ object StreamOps {
         batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
       }
     }
-    spark.read.parquet(outDir)
+    spark.read.schema(agg.schema).parquet(outDir)
       .select(col("user_id"),
         graft.functions.BqShims.epochMicros(col("session_window.start"))
           .as("sess_start"),
@@ -300,7 +306,7 @@ object StreamOps {
         s"b_ts BETWEEN a_ts - INTERVAL $window AND a_ts"),
       "left_outer")
     val outDir = Scratch.fresh(s"$queryName|$stagedDir")
-    // 4 state partitions, not 8: a stream-stream join commits FOUR
+    // at most 4 state partitions, not 8: a stream-stream join commits FOUR
     // stores per partition per batch (keyToNumValues/keyWithIndexToValue
     // × both sides), so partition count multiplies fixed commit cost
     // 4×; at production rates this is sized to throughput, here to the

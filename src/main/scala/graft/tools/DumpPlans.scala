@@ -48,7 +48,7 @@ object DumpPlans {
       "q168_dup_spans" -> "gram survivors via LeftSemi; span merge on one per-doc window",
       "q170_zonemap_skip" -> "broadcast surviving-zone semi-join feeds the scan",
       "q174_pmi_collocations" -> "bigram shuffle + two vocab equi-joins; 1-row broadcasts only",
-      "q180_kcore" -> "per-round: ONE |E| join + |V|-sized aliveness semi-join",
+      "q180_kcore" -> "round 1: one degree agg; later rounds: dying-frontier semi-join + |V|-sized degree join; every round a barrier (final one shown)",
       "q184_containment_dedup" -> "prefix-filter candidates; per-pair array_intersect, no Σdf² self-join",
       "q186_cooccurrence_topk" -> "within-order pair explode; partial_topk before the exchange",
       "q193_linear_classifier" -> "zero-shuffle classifier: single projected scan, per-doc aggregate folds, no weight join",

@@ -4,6 +4,13 @@ import graft.streaming.StreamOps
 import graft.streaming.StreamOps.{SessionEvent, SessionOut}
 
 class StreamOpsSpec extends SparkTestBase {
+  private val eventsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampNTZType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+  }
 
   test("incrementalDedupStream: growing index catches pairs split across triggers") {
     import spark.implicits._
@@ -264,13 +271,8 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("windowedCountsAvailableNow reruns keep only the last output dir") {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampNTZType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
     val runs = (1 to 3).map { _ =>
-      val df = StreamOps.windowedCountsAvailableNow(spark, sfDir, schema,
+      val df = StreamOps.windowedCountsAvailableNow(spark, sfDir, eventsSchema,
         queryName = "stream_counts_rerun", globFilter = Some("events.parquet"))
       (df, java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head)).getParent)
     }
@@ -280,5 +282,18 @@ class StreamOpsSpec extends SparkTestBase {
       s"earlier output dirs leaked: ${dirs.init.filter(java.nio.file.Files.exists(_))}")
     assert(java.nio.file.Files.isDirectory(dirs.last))
     assert(runs.last._1.count() == 150)
+  }
+
+  test("stateful runners cap the state partitions at the session's count") {
+    val key = "spark.sql.shuffle.partitions"
+    val two = spark.newSession()
+    two.conf.set(key, "2")
+    val df = StreamOps.windowedCountsAvailableNow(two, sfDir, eventsSchema,
+      queryName = "stream_counts_cap", globFilter = Some("events.parquet"))
+    val outDir = java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head)).getParent
+    val parts = outDir.toFile.listFiles().map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.length <= 2, s"more part files than state partitions: ${parts.toSeq}")
+    assert(two.conf.get(key) == "2")
+    assert(df.count() == 150)
   }
 }
