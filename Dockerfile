@@ -18,6 +18,12 @@
 #     in SPARK_SUBMIT_OPTS does not win over that;
 #   - any other key (e.g. spark.sql.shuffle.partitions, which defaults
 #     to SPARK_GRAFT_CPUS, else 4) in spark-defaults.conf or as -D<key>=<value> in SPARK_SUBMIT_OPTS.
+# The image's Spark has no libhadoop, so Hadoop's local filesystem would
+# fork chmod/readlink for every file it writes. The jar's core-site.xml
+# registers graft.util's fork-free one for file: paths (and only those).
+# Mounting a conf dir with its own core-site.xml (HADOOP_CONF_DIR, or
+# $SPARK_CONF_DIR=/opt/spark/conf) shadows it: Hadoop's classes come
+# back, correct but slower. The job's startup line shows fs.file=<class>.
 FROM apache/spark:4.1.2-scala2.13-java17-ubuntu
 
 # https://github.com/mozilla-services/Dockerflow/blob/master/docs/building-container.md

@@ -49,6 +49,13 @@ case "$conf" in
   *"master=local[2] shuffle.partitions=3 "*graft.GraftExtensions*) ;;
   *) echo "smoke FAILED — submitted conf did not win: '$conf'" >&2; exit 1 ;;
 esac
+# file: paths go through graft's fork-free local filesystem; a jar built
+# without src/main/resources/core-site.xml, or a core-site.xml ahead of
+# it on the classpath, falls back to the stock class
+case "$conf" in
+  *" fs.file=graft.util.NioLocalFileSystem"*) ;;
+  *) echo "smoke FAILED — file: is not graft's local filesystem: '$conf'" >&2; exit 1 ;;
+esac
 find "$OUT" -name "_SUCCESS" | sort
 # webcompat-kb writes 1 table and llm-prep 7, the latter concurrently
 n="$(find "$OUT" -name "_SUCCESS" | wc -l)"

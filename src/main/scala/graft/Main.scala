@@ -1,9 +1,11 @@
 package graft
 
+import java.net.URI
 import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 
 import scala.util.{Failure, Try}
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.EtlRunner.{JobContext, JobSpec}
 import graft.catalog.SchemaId
@@ -43,8 +45,10 @@ import graft.catalog.SchemaId
   * shuffle partitions) wins. Without a submitted master (`java -cp`
   * launch) it runs at local[SPARK_GRAFT_CPUS]; shuffle partitions
   * default to SPARK_GRAFT_CPUS too (4 when unset). The effective
-  * master, shuffle partition count and session extensions are logged
-  * at start.
+  * master, shuffle partition count, session extensions and `file:`
+  * FileSystem class (graft's fork-free one unless a `core-site.xml`
+  * earlier on the classpath shadows graft's, see
+  * [[graft.util.NioRawLocalFileSystem]]) are logged at start.
   */
 object Main {
 
@@ -147,7 +151,8 @@ object Main {
     val spark = GraftSession.getOrCreate()
     System.err.println(s"[graft] master=${spark.sparkContext.master} " +
       s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
-      s"extensions=${spark.conf.get("spark.sql.extensions")}")
+      s"extensions=${spark.conf.get("spark.sql.extensions")} " +
+      s"fs.file=${FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration).getClass.getName}")
 
     val report = EtlRunner.run(spark, registry(dataDir, outDir), jobs,
       write = write, staging = staging, log = m => System.err.println(s"[graft] $m"))

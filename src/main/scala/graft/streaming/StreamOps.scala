@@ -369,7 +369,7 @@ object StreamOps {
     runAvailableNow(enriched, "append") { (batch, _) =>
       batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
     }
-    spark.read.parquet(outDir)
+    spark.read.schema(enriched.schema).parquet(outDir)
   }
 
   /** Streaming incremental dedup against a GROWING signature index:
@@ -579,17 +579,20 @@ object StreamOps {
     val payload = logSchema.fieldNames.toSeq
       .filterNot(Set("k", "seq", "op"))
     def vPath(i: Long) = s"$stateDir/v$i"
-    snapshot
+    val v0 = snapshot
       .withColumn("last_seq", lit(null).cast(LongType))
       .withColumn("last_op", lit(null).cast(org.apache.spark.sql.types.StringType))
       .withColumn("deleted", lit(false))
       .withColumn("from_change", lit(false))
-      .write.mode("overwrite").parquet(vPath(0))
+    v0.write.mode("overwrite").parquet(vPath(0))
+    // version `cur` and the schema it was written with, so no read of
+    // it infers one
     @volatile var cur = 0L
+    @volatile var curSchema = v0.schema
     val src = fileStream(spark, changelogDir, logSchema, maxFilesPerTrigger)
     runAvailableNow(src, "append") { (batch, id) =>
       withStatePartitions(spark, 8) {
-        val st = spark.read.parquet(vPath(cur))
+        val st = spark.read.schema(curSchema).parquet(vPath(cur))
         val w = Window.partitionBy("k").orderBy(desc("seq"), desc("op"))
         val win = batch.withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).drop("rn")
@@ -608,12 +611,13 @@ object StreamOps {
           when(newer, col("c.op")).otherwise(col("s.last_op")).as("last_op") :+
           when(newer, col("c.op") === "D").otherwise(col("s.deleted")).as("deleted") :+
           when(newer, lit(true)).otherwise(col("s.from_change")).as("from_change")
-        j.select(outCols: _*)
-          .write.mode("overwrite").parquet(vPath(id + 1))
+        val next = j.select(outCols: _*)
+        next.write.mode("overwrite").parquet(vPath(id + 1))
         cur = id + 1
+        curSchema = next.schema
       }
     }
-    spark.read.parquet(vPath(cur))
+    spark.read.schema(curSchema).parquet(vPath(cur))
       .filter(!col("deleted"))
       .select((col("k") +: payload.map(col)) :+ col("from_change"): _*)
   }

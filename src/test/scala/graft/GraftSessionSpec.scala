@@ -58,8 +58,11 @@ class GraftSessionSpec extends AnyFunSuite {
   private def mentioning(pattern: String): Seq[Path] =
     sources.filter(p => Files.readString(p).contains(pattern))
 
+  // LocalFsSpec also builds one, in a child JVM, to stand for perfbench's
+  // harness, which builds its own session without GraftSession.
   test("only GraftSession builds a session, and nothing registers functions or rules on one") {
-    assert(mentioning("SparkSession.builder") == Seq(Paths.get("src/main/scala/graft/GraftSession.scala")))
+    assert(mentioning("SparkSession.builder").toSet == Set(
+      Paths.get("src/main/scala/graft/GraftSession.scala"), Paths.get("src/test/scala/graft/LocalFsSpec.scala")))
     assert(mentioning("registerFunction").isEmpty)
     assert(mentioning("extraOptimizations").isEmpty)
   }

@@ -296,4 +296,15 @@ class StreamOpsSpec extends SparkTestBase {
     assert(two.conf.get(key) == "2")
     assert(df.count() == 150)
   }
+
+  test("streamStaticEnrichAvailableNow over a source with no file returns no rows") {
+    import spark.implicits._
+    val dim = Seq((0L, "zero"), (1L, "one")).toDF("n_nationkey", "n_name")
+    val df = StreamOps.streamStaticEnrichAvailableNow(spark, sfDir, eventsSchema,
+      keyExpr = org.apache.spark.sql.functions.pmod($"user_id", org.apache.spark.sql.functions.lit(2L)),
+      dim = dim, dimKey = "n_nationkey", queryName = "stream_enrich_empty",
+      globFilter = Some("no_such_table.parquet"))
+    assert(df.columns.toSeq == eventsSchema.fieldNames.toSeq ++ Seq("n_nationkey", "n_name"))
+    assert(df.count() == 0)
+  }
 }
