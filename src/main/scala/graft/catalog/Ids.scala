@@ -24,13 +24,6 @@ object DatasetId {
   }
 }
 
-sealed trait SchemaType
-object SchemaType {
-  case object Table extends SchemaType
-  case object View extends SchemaType
-  case object Routine extends SchemaType
-}
-
 final case class SchemaId(project: String, dataset: String, name: String) {
   override def toString: String = s"$project.$dataset.$name"
   /** Spark-side identifier (catalog-safe, no ':'). */

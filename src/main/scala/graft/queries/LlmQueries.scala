@@ -1147,7 +1147,7 @@ object LlmQueries {
           .repartition(4).write.mode("overwrite").parquet(bd)
       }
       graft.streaming.StreamOps.shardManifestStream(s, batchDir,
-          SeqPack.shardOf(_, 16), c => TextDedup.portableHash(c), Scratch.fresh(s"smani_out|$dir"))
+          SeqPack.shardOf(_, 16), c => TextDedup.portableHash(c))
         .orderBy("shard")
     }),
 
@@ -1247,8 +1247,7 @@ object LlmQueries {
           .repartition(4).write.mode("overwrite").parquet(bd)
       }
       graft.streaming.StreamOps.decontaminateStream(s, batchDir,
-          block.filter(col("doc_id") % 7 === 0), n = 3, flagRatio = 0.1,
-          outDir = Scratch.fresh(s"sdecon_out|$dir"))
+          block.filter(col("doc_id") % 7 === 0), n = 3, flagRatio = 0.1)
         .orderBy("doc_id")
     }),
 
@@ -2315,7 +2314,7 @@ object LlmQueries {
       }
       graft.streaming.StreamOps.stratifiedSampleStream(s, batchDir,
           Map("src0" -> 80, "src1" -> 50, "src2" -> 25, "src3" -> 10),
-          defaultRate = 40, outDir = Scratch.fresh(s"ssamp_out|$dir"))
+          defaultRate = 40)
         .orderBy("source")
     }),
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
 import graft.util.Scratch
 
@@ -13,10 +13,28 @@ import graft.util.Scratch
   * as a watermarked windowed aggregation that can also run as a
   * synchronous batch via processAllAvailable.
   *
-  * A runner that makes its own output dir takes it from
-  * `Scratch.fresh(s"$queryName|$srcDir")`: a rerun with the same name
-  * and source deletes the previous run's output, and the last one is
-  * swept at JVM exit.
+  * Every runner is one bounded AvailableNow query over [[fileStream]],
+  * started in [[runBounded]]; [[checkpointedAppendRun]] shares the
+  * reader and the start/await code but owns no cap. The runner's
+  * contract:
+  *  - Output dir: the runner owns it. It is
+  *    `Scratch.fresh("<queryName>|<source>")`, so a rerun with the same
+  *    name and source deletes the previous run's output and the last
+  *    one is swept at JVM exit. Only [[checkpointedAppendRun]] writes
+  *    to a dir its caller owns, and the versioned-state runners
+  *    ([[cdcUpsertStream]], [[heavyHittersStream]]) rotate versions in
+  *    the caller's `stateDir`.
+  *  - Partition cap: `spark.sql.shuffle.partitions` is capped at
+  *    min(ceiling, the session's value) from before `start()` until
+  *    the query ends, so it sizes the state stores and every frame a
+  *    trigger plans. The ceiling is 8, or 4 for the left-outer stream
+  *    join and the heavy-hitter stream.
+  *  - Read-back schema: the output is read back with the schema of
+  *    what each trigger writes, so no read infers a schema and a run
+  *    that wrote nothing reads as zero rows. [[runToDir]] derives it
+  *    by analysis of the trigger body over an empty frame, the
+  *    versioned state keeps the schema of the version it wrote, and
+  *    [[incrementalDedupStream]] states its 2-column pair schema.
   */
 object StreamOps {
 
@@ -51,24 +69,79 @@ object StreamOps {
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  /** A file stream over staged parquet batches, at most
-    * `maxFilesPerTrigger` files per micro-batch. */
+  /** The one streaming source: a parquet file stream over `dir`, at most
+    * `maxFilesPerTrigger` files per micro-batch (all available files
+    * when unset), listing only file names that match `glob` when set. */
   private def fileStream(spark: SparkSession, dir: String, schema: StructType,
-      maxFilesPerTrigger: Int): DataFrame =
+      maxFilesPerTrigger: Option[Int] = None, glob: Option[String] = None): DataFrame =
     spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .options((maxFilesPerTrigger.map(n => "maxFilesPerTrigger" -> n.toString) ++
+        glob.map("pathGlobFilter" -> _)).toMap)
       .parquet(dir)
 
-  /** Runs `df` to the end of its source as one bounded AvailableNow
-    * query, each micro-batch handed to `sink`, then unloads the
-    * finished query's state stores. The checkpoint is Spark's temporary
-    * one: these runners are single-shot by design (the restartable form
-    * is [[checkpointedAppendRun]]). */
-  private def runAvailableNow(df: DataFrame, mode: String)(
-      sink: (DataFrame, Long) => Unit): Unit = {
-    df.writeStream.outputMode(mode).foreachBatch(sink)
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+  /** Starts `w` as one bounded AvailableNow query, waits until it has
+    * consumed everything its source held at start, then unloads the
+    * finished query's state stores. */
+  private def awaitAvailableNow(w: DataStreamWriter[Row]): Unit = {
+    w.trigger(Trigger.AvailableNow()).start().awaitTermination()
     unloadStateStores()
+  }
+
+  /** Runs `df` to the end of its source, each micro-batch handed to
+    * `sink`, with the session's shuffle partitions capped at `ceiling`
+    * from before `start()` until the query ends. The query clones its
+    * session's conf at start, so the cap sizes the state stores and
+    * every frame a trigger plans, on `batch.sparkSession` and on the
+    * caller's session alike; a cap set inside `sink` would reach only
+    * the latter. The checkpoint is Spark's temporary one: these runs
+    * are single-shot by design (the restartable form is
+    * [[checkpointedAppendRun]]). */
+  private def runBounded(df: DataFrame, mode: String, ceiling: Int)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    withStatePartitions(df.sparkSession, ceiling) {
+      awaitAvailableNow(df.writeStream.outputMode(mode).foreachBatch(sink))
+    }
+
+  /** The runner every stream-shaped and per-document runner shares:
+    * [[runBounded]] with each trigger's `body(batch)` written to
+    * `Scratch.fresh(key)`, the dir this runner owns (keys are
+    * `"<queryName>|<source>"`, so a rerun deletes the previous run's
+    * output). Complete mode overwrites the dir on each trigger, append
+    * mode appends to it. The dir is read back with the schema of what
+    * was written, `body` of an empty frame of `df`'s schema (analysis
+    * only), so the read infers nothing and a run that wrote no file
+    * reads as zero rows. */
+  private def runToDir(df: DataFrame, key: String, mode: String, ceiling: Int,
+      body: DataFrame => DataFrame = identity): DataFrame = {
+    val spark = df.sparkSession
+    val outDir = Scratch.fresh(key)
+    val save = if (mode == "complete") SaveMode.Overwrite else SaveMode.Append
+    runBounded(df, mode, ceiling) { (batch, _) =>
+      body(batch).write.mode(save).parquet(outDir)
+    }
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), df.schema)
+    spark.read.schema(body(empty).schema).parquet(outDir)
+  }
+
+  /** A state table folded over a stream in whole parquet versions:
+    * `v0` is written to `$stateDir/v0`, and each trigger `id` reads
+    * version `cur` with the schema it was written with and writes
+    * `step(state, batch)` to `$stateDir/v${id + 1}`. Returns the last
+    * version. */
+  private def versionedFold(src: DataFrame, stateDir: String, v0: DataFrame,
+      ceiling: Int)(step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val spark = src.sparkSession
+    def vPath(i: Long) = s"$stateDir/v$i"
+    v0.write.mode("overwrite").parquet(vPath(0))
+    @volatile var cur = 0L
+    @volatile var curSchema = v0.schema
+    runBounded(src, "append", ceiling) { (batch, id) =>
+      val next = step(spark.read.schema(curSchema).parquet(vPath(cur)), batch)
+      next.write.mode("overwrite").parquet(vPath(id + 1))
+      cur = id + 1
+      curSchema = next.schema
+    }
+    spark.read.schema(curSchema).parquet(vPath(cur))
   }
 
   /** Run `f` with `spark.sql.shuffle.partitions` temporarily capped
@@ -127,24 +200,14 @@ object StreamOps {
   def windowedCountsAvailableNow(spark: SparkSession, srcDir: String,
       schema: StructType, windowDur: String = "1 day",
       queryName: String = "stream_counts", globFilter: Option[String] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val events = globFilter.fold(reader)(g => reader.option("pathGlobFilter", g))
-      .parquet(srcDir)
+    val events = fileStream(spark, srcDir, schema, glob = globFilter)
     val tsName = if (schema.fieldNames.contains("ts")) "ts" else "timestamp"
     val agg = events
       .withColumn("ts_ts", eventTime(schema(tsName).dataType, col(tsName)))
       .withWatermark("ts_ts", "1 hour")
       .groupBy(window(col("ts_ts"), windowDur), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val outDir = Scratch.fresh(s"$queryName|$srcDir")
-    withStatePartitions(spark, 8) {
-      runAvailableNow(agg, "complete") { (batch, _) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
-      }
-    }
-    // the sink's schema is the aggregate's: reading with it skips the
-    // inference job and reads an empty dir as no rows
-    spark.read.schema(agg.schema).parquet(outDir)
+    runToDir(agg, s"$queryName|$srcDir", "complete", 8)
       .select(to_date(col("window.start")).as("day"), col("event_type"), col("n"))
   }
 
@@ -167,22 +230,14 @@ object StreamOps {
       schema: StructType, gap: String = "6 hours",
       queryName: String = "stream_sessions",
       globFilter: Option[String] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val events = globFilter.fold(reader)(g => reader.option("pathGlobFilter", g))
-      .parquet(srcDir)
+    val events = fileStream(spark, srcDir, schema, glob = globFilter)
     val tsName = if (schema.fieldNames.contains("ts")) "ts" else "timestamp"
     val agg = events
       .withColumn("ts_ts", eventTime(schema(tsName).dataType, col(tsName)))
       .withWatermark("ts_ts", "0 seconds")
       .groupBy(col("user_id"), session_window(col("ts_ts"), gap))
       .agg(count(lit(1)).as("n"))
-    val outDir = Scratch.fresh(s"$queryName|$srcDir")
-    withStatePartitions(spark, 8) {
-      runAvailableNow(agg, "append") { (batch, _) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-    }
-    spark.read.schema(agg.schema).parquet(outDir)
+    runToDir(agg, s"$queryName|$srcDir", "append", 8)
       .select(col("user_id"),
         graft.functions.BqShims.epochMicros(col("session_window.start"))
           .as("sess_start"),
@@ -207,22 +262,13 @@ object StreamOps {
     */
   def dedupAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
       idCol: String, queryName: String, globFilter: Option[String] = None): DataFrame = {
-    def src = {
-      val reader = spark.readStream.schema(schema)
-      globFilter.fold(reader)(g => reader.option("pathGlobFilter", g)).parquet(srcDir)
-    }
+    def src = fileStream(spark, srcDir, schema, glob = globFilter)
     val doubled = src.union(src)
       .withColumn("ts_ts", eventTime(schema("ts").dataType, col("ts")))
       .withWatermark("ts_ts", "1 hour")
       .dropDuplicatesWithinWatermark(idCol)
       .drop("ts_ts")
-    val outDir = Scratch.fresh(s"$queryName|$srcDir")
-    withStatePartitions(spark, 8) {
-      runAvailableNow(doubled, "append") { (batch, _) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-    }
-    spark.read.schema(StructType(schema.fields)).parquet(outDir)
+    runToDir(doubled, s"$queryName|$srcDir", "append", 8)
   }
 
   /** Stream-stream self-join: anchor events (the `anchorFilter` side)
@@ -238,10 +284,7 @@ object StreamOps {
       schema: StructType, anchorFilter: org.apache.spark.sql.Column,
       window: String, queryName: String,
       globFilter: Option[String] = None): DataFrame = {
-    def src = {
-      val reader = spark.readStream.schema(schema)
-      globFilter.fold(reader)(g => reader.option("pathGlobFilter", g)).parquet(srcDir)
-    }
+    def src = fileStream(spark, srcDir, schema, glob = globFilter)
     val anchors = src.filter(anchorFilter)
       .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
         eventTime(schema("ts").dataType, col("ts")).as("a_ts"))
@@ -253,20 +296,8 @@ object StreamOps {
     val joined = anchors.join(others,
       expr(s"a_user = b_user AND a_id != b_id AND " +
         s"b_ts BETWEEN a_ts - INTERVAL $window AND a_ts"))
-    val outDir = Scratch.fresh(s"$queryName|$srcDir")
-    withStatePartitions(spark, 8) {
-      runAvailableNow(joined.select(col("a_id"), col("a_user").as("user_id"), col("b_id")),
-          "append") { (batch, _) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-    }
-    // explicit schema: if the join legitimately emits zero rows (stricter
-    // anchorFilter, small SF), foreachBatch never writes a file and a
-    // schema-less read would fail with 'Unable to infer schema'
-    val outSchema = StructType(Seq(
-      StructField("a_id", LongType), StructField("user_id", LongType),
-      StructField("b_id", LongType)))
-    spark.read.schema(outSchema).parquet(outDir)
+    runToDir(joined.select(col("a_id"), col("a_user").as("user_id"), col("b_id")),
+      s"$queryName|$srcDir", "append", 8)
   }
 
   /** Stream-stream LEFT OUTER time-bounded join: anchor events joined
@@ -291,8 +322,7 @@ object StreamOps {
   def streamLeftOuterJoinAvailableNow(spark: SparkSession, stagedDir: String,
       schema: StructType, anchorType: String, otherType: String,
       window: String, queryName: String): DataFrame = {
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagedDir)
+    def src = fileStream(spark, stagedDir, schema, Some(1))
     val anchors = src.filter(col("event_type") === anchorType)
       .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
         eventTime(schema("ts").dataType, col("ts")).as("a_ts"))
@@ -305,22 +335,13 @@ object StreamOps {
       expr("a_user = b_user AND " +
         s"b_ts BETWEEN a_ts - INTERVAL $window AND a_ts"),
       "left_outer")
-    val outDir = Scratch.fresh(s"$queryName|$stagedDir")
     // at most 4 state partitions, not 8: a stream-stream join commits FOUR
     // stores per partition per batch (keyToNumValues/keyWithIndexToValue
     // × both sides), so partition count multiplies fixed commit cost
     // 4×; at production rates this is sized to throughput, here to the
     // fixed-cost floor.
-    withStatePartitions(spark, 4) {
-      runAvailableNow(joined.select(col("a_id"), col("a_user"), col("b_id")),
-          "append") { (batch, _) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-    }
-    val outSchema = StructType(Seq(
-      StructField("a_id", LongType), StructField("a_user", LongType),
-      StructField("b_id", LongType)))
-    spark.read.schema(outSchema).parquet(outDir)
+    runToDir(joined.select(col("a_id"), col("a_user"), col("b_id")),
+        s"$queryName|$stagedDir", "append", 4)
       .filter(col("a_user") >= 0)
   }
 
@@ -330,20 +351,16 @@ object StreamOps {
     * unseen files — the offset log, not the sink, carries the progress.
     * (The temp-checkpoint runners above are single-shot by design; this
     * is the restartable form a production ingest uses, spec-asserted
-    * for no-duplicates across a stop/resume in StreamOpsSpec.) */
+    * for no-duplicates across a stop/resume in StreamOpsSpec.) The
+    * caller owns both the checkpoint and the output dir. */
   def checkpointedAppendRun(spark: SparkSession, srcDir: String,
-      schema: StructType, checkpointDir: String, outDir: String): Unit = {
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream
+      schema: StructType, checkpointDir: String, outDir: String): Unit =
+    awaitAvailableNow(fileStream(spark, srcDir, schema).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        batch.write.mode(SaveMode.Append).parquet(outDir)
+      })
 
   /** Stream-static enrichment: a streaming fact joined per micro-batch
     * against a (broadcast) static dimension — the standard "enrich on
@@ -359,17 +376,11 @@ object StreamOps {
       schema: StructType, keyExpr: org.apache.spark.sql.Column,
       dim: DataFrame, dimKey: String, queryName: String,
       globFilter: Option[String] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val events = globFilter.fold(reader)(g => reader.option("pathGlobFilter", g))
-      .parquet(srcDir)
-    val enriched = events.withColumn("_k", keyExpr)
+    val enriched = fileStream(spark, srcDir, schema, glob = globFilter)
+      .withColumn("_k", keyExpr)
       .join(broadcast(dim), col("_k") === dim(dimKey))
       .drop("_k")
-    val outDir = Scratch.fresh(s"$queryName|$srcDir")
-    runAvailableNow(enriched, "append") { (batch, _) =>
-      batch.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-    }
-    spark.read.schema(enriched.schema).parquet(outDir)
+    runToDir(enriched, s"$queryName|$srcDir", "append", 8)
   }
 
   /** Streaming incremental dedup against a GROWING signature index:
@@ -390,6 +401,11 @@ object StreamOps {
     * exactly-once file listing. Idempotent under re-delivery: pairs are
     * canonicalized + distinct at read-back, and re-appended signatures
     * only re-find the same pairs.
+    *
+    * Unlike the [[runToDir]] runners, each trigger writes two outputs
+    * (its pairs, then its signatures into the index the next trigger
+    * probes) and the probe runs an eager `localCheckpoint`, so this
+    * runner keeps its own sink and the explicit pair schema.
     *
     * @param indexDir parquet dir holding (id, band, key) — pre-seeded
     *                 with the existing corpus's signatures; grows as
@@ -412,24 +428,19 @@ object StreamOps {
         Seq(StructField("pkey", org.apache.spark.sql.types.IntegerType))
       else Nil))
     val out = Scratch.fresh(s"$queryName|$batchDocsDir")
-    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
-    runAvailableNow(src, "append") { (batch, _) =>
-      // per-trigger batch joins carry one micro-batch of docs: size
-      // their shuffles to the trigger volume, not the session default
-      withStatePartitions(spark, 8) {
-        val idx = spark.read.schema(sigSchema).parquet(indexDir)
-        graft.llm.TextDedup.incrementalCandidates(batch, idx,
-            k = k, bands = bands, shingleW = shingleW, portable = portable,
-            pruneParts = pruneParts)
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(out)
-        val sigs = graft.llm.TextDedup.bandedSignatures(batch,
-          k = k, bands = bands, shingleW = shingleW, portable = portable)
-        if (pruneParts > 0)
-          graft.llm.TextDedup.writeSigIndex(sigs, indexDir, pruneParts,
-            mode = "append")
-        else sigs.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(indexDir)
-      }
+    val src = fileStream(spark, batchDocsDir, docSchema, Some(maxFilesPerTrigger))
+    runBounded(src, "append", 8) { (batch, _) =>
+      val idx = spark.read.schema(sigSchema).parquet(indexDir)
+      graft.llm.TextDedup.incrementalCandidates(batch, idx,
+          k = k, bands = bands, shingleW = shingleW, portable = portable,
+          pruneParts = pruneParts)
+        .write.mode(SaveMode.Append).parquet(out)
+      val sigs = graft.llm.TextDedup.bandedSignatures(batch,
+        k = k, bands = bands, shingleW = shingleW, portable = portable)
+      if (pruneParts > 0)
+        graft.llm.TextDedup.writeSigIndex(sigs, indexDir, pruneParts,
+          mode = "append")
+      else sigs.write.mode(SaveMode.Append).parquet(indexDir)
     }
     val outSchema = StructType(Seq(
       StructField("doc_a", LongType), StructField("doc_b", LongType)))
@@ -448,24 +459,11 @@ object StreamOps {
     * once per trigger from the static frame (a production deployment
     * pins them with a persisted broadcast). */
   def decontaminateStream(spark: SparkSession, batchDocsDir: String,
-      evalDocs: DataFrame, n: Int, flagRatio: Double, outDir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame = {
-    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
-    runAvailableNow(src, "append") { (batch, _) =>
-      withStatePartitions(spark, 8) {
-        graft.llm.Decontaminate.report(batch, evalDocs, n, flagRatio)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(outDir)
-      }
-    }
-    val outSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("n_grams", LongType),
-      StructField("n_overlap", LongType),
-      StructField("overlap_ratio", org.apache.spark.sql.types.DoubleType),
-      StructField("contaminated", org.apache.spark.sql.types.IntegerType)))
-    spark.read.schema(outSchema).parquet(outDir)
-  }
+      evalDocs: DataFrame, n: Int, flagRatio: Double,
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    runToDir(fileStream(spark, batchDocsDir, docSchema, Some(maxFilesPerTrigger)),
+      s"stream_decon|$batchDocsDir", "append", 8,
+      graft.llm.Decontaminate.report(_, evalDocs, n, flagRatio))
 
   /** Streaming shard manifest — the q287 export-reproducibility
     * fingerprint built under continuous ingest: each micro-batch
@@ -480,37 +478,23 @@ object StreamOps {
   def shardManifestStream(spark: SparkSession, batchDocsDir: String,
       shardOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      outDir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
-    val src = fileStream(spark, batchDocsDir, docSchema, maxFilesPerTrigger)
-    runAvailableNow(src, "append") { (batch, _) =>
-      withStatePartitions(spark, 8) {
-        batch
-          .select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
+      maxFilesPerTrigger: Int = 1): DataFrame =
+    runToDir(fileStream(spark, batchDocsDir, docSchema, Some(maxFilesPerTrigger)),
+        s"stream_manifest|$batchDocsDir", "append", 8,
+        _.select(col("doc_id"), shardOf(col("doc_id")).as("shard"),
             hashOf(col("text")).as("h"))
           .groupBy("shard")
           .agg(count(lit(1)).as("n_docs"),
             expr("bit_xor(h)").as("fingerprint"),
             min("doc_id").as("min_doc_id"),
-            max("doc_id").as("max_doc_id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(outDir)
-      }
-    }
-    val outSchema = StructType(Seq(
-      StructField("shard", org.apache.spark.sql.types.IntegerType),
-      StructField("n_docs", LongType),
-      StructField("fingerprint", LongType),
-      StructField("min_doc_id", LongType),
-      StructField("max_doc_id", LongType)))
-    // fold the per-trigger partials: xor for fingerprints, sum/min/max
-    // for the rest — each is the aggregate's own merge function
-    spark.read.schema(outSchema).parquet(outDir)
+            max("doc_id").as("max_doc_id")))
+      // fold the per-trigger partials: xor for fingerprints, sum/min/max
+      // for the rest — each is the aggregate's own merge function
       .groupBy("shard")
       .agg(sum("n_docs").as("n_docs"),
         expr("bit_xor(fingerprint)").as("fingerprint"),
         min("min_doc_id").as("min_doc_id"),
         max("max_doc_id").as("max_doc_id"))
-  }
 
   /** Streaming stratified (per-source rate) sampling — the q85/q125
     * mixture-assembly convention under continuous ingest: each arriving
@@ -523,23 +507,18 @@ object StreamOps {
     * stream verbatim. Rates ride a broadcast join on the ≤|sources|-row
     * rate table; unmapped sources fall to `defaultRate`. */
   def stratifiedSampleStream(spark: SparkSession, batchDocsDir: String,
-      rates: Map[String, Int], defaultRate: Int, outDir: String,
+      rates: Map[String, Int], defaultRate: Int,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     val sampleSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType)))
     import spark.implicits._
     val rateDf = broadcast(rates.toSeq.toDF("source", "rate"))
-    val src = fileStream(spark, batchDocsDir, sampleSchema, maxFilesPerTrigger)
-    runAvailableNow(src, "append") { (batch, _) =>
-      batch
-        .join(rateDf, Seq("source"), "left")
-        .filter(pmod(graft.functions.BqShims.md5Bucket(col("doc_id")),
-          lit(100L)) < coalesce(col("rate"), lit(defaultRate)))
-        .select("doc_id", "source")
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(outDir)
-    }
-    spark.read.schema(sampleSchema).parquet(outDir)
+    runToDir(fileStream(spark, batchDocsDir, sampleSchema, Some(maxFilesPerTrigger)),
+        s"stream_sample|$batchDocsDir", "append", 8,
+        _.join(rateDf, Seq("source"), "left")
+          .filter(pmod(graft.functions.BqShims.md5Bucket(col("doc_id")),
+            lit(100L)) < coalesce(col("rate"), lit(defaultRate)))
+          .select("doc_id", "source"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"),
         min("doc_id").as("min_kept"),
@@ -578,46 +557,33 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     val payload = logSchema.fieldNames.toSeq
       .filterNot(Set("k", "seq", "op"))
-    def vPath(i: Long) = s"$stateDir/v$i"
     val v0 = snapshot
       .withColumn("last_seq", lit(null).cast(LongType))
       .withColumn("last_op", lit(null).cast(org.apache.spark.sql.types.StringType))
       .withColumn("deleted", lit(false))
       .withColumn("from_change", lit(false))
-    v0.write.mode("overwrite").parquet(vPath(0))
-    // version `cur` and the schema it was written with, so no read of
-    // it infers one
-    @volatile var cur = 0L
-    @volatile var curSchema = v0.schema
-    val src = fileStream(spark, changelogDir, logSchema, maxFilesPerTrigger)
-    runAvailableNow(src, "append") { (batch, id) =>
-      withStatePartitions(spark, 8) {
-        val st = spark.read.schema(curSchema).parquet(vPath(cur))
-        val w = Window.partitionBy("k").orderBy(desc("seq"), desc("op"))
-        val win = batch.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-        val j = st.alias("s").join(win.alias("c"),
-          col("s.k") === col("c.k"), "full_outer")
-        val newer = col("c.k").isNotNull && (col("s.k").isNull ||
-          col("s.last_seq").isNull ||
-          col("c.seq") > col("s.last_seq") ||
-          (col("c.seq") === col("s.last_seq") &&
-            col("c.op") > col("s.last_op")))
-        val outCols =
-          coalesce(col("s.k"), col("c.k")).as("k") +:
-          payload.map(p =>
-            when(newer, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)) :+
-          when(newer, col("c.seq")).otherwise(col("s.last_seq")).as("last_seq") :+
-          when(newer, col("c.op")).otherwise(col("s.last_op")).as("last_op") :+
-          when(newer, col("c.op") === "D").otherwise(col("s.deleted")).as("deleted") :+
-          when(newer, lit(true)).otherwise(col("s.from_change")).as("from_change")
-        val next = j.select(outCols: _*)
-        next.write.mode("overwrite").parquet(vPath(id + 1))
-        cur = id + 1
-        curSchema = next.schema
-      }
+    val src = fileStream(spark, changelogDir, logSchema, Some(maxFilesPerTrigger))
+    versionedFold(src, stateDir, v0, 8) { (st, batch) =>
+      val w = Window.partitionBy("k").orderBy(desc("seq"), desc("op"))
+      val win = batch.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn")
+      val j = st.alias("s").join(win.alias("c"),
+        col("s.k") === col("c.k"), "full_outer")
+      val newer = col("c.k").isNotNull && (col("s.k").isNull ||
+        col("s.last_seq").isNull ||
+        col("c.seq") > col("s.last_seq") ||
+        (col("c.seq") === col("s.last_seq") &&
+          col("c.op") > col("s.last_op")))
+      val outCols =
+        coalesce(col("s.k"), col("c.k")).as("k") +:
+        payload.map(p =>
+          when(newer, col(s"c.$p")).otherwise(col(s"s.$p")).as(p)) :+
+        when(newer, col("c.seq")).otherwise(col("s.last_seq")).as("last_seq") :+
+        when(newer, col("c.op")).otherwise(col("s.last_op")).as("last_op") :+
+        when(newer, col("c.op") === "D").otherwise(col("s.deleted")).as("deleted") :+
+        when(newer, lit(true)).otherwise(col("s.from_change")).as("from_change")
+      j.select(outCols: _*)
     }
-    spark.read.schema(curSchema).parquet(vPath(cur))
       .filter(!col("deleted"))
       .select((col("k") +: payload.map(col)) :+ col("from_change"): _*)
   }
@@ -643,37 +609,23 @@ object StreamOps {
       stateDir: String, maxFilesPerTrigger: Int = 1,
       globFilter: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val stateSchema = StructType(Seq(
-      StructField("key", org.apache.spark.sql.types.StringType),
-      StructField("cnt", LongType)))
-    def vPath(i: Long) = s"$stateDir/v$i"
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      stateSchema).write.mode("overwrite").parquet(vPath(0))
-    @volatile var cur = 0L
-    val rdr = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-    val src = globFilter.fold(rdr)(g => rdr.option("pathGlobFilter", g))
-      .parquet(srcDir)
-    runAvailableNow(src, "append") { (batch, id) =>
-      withStatePartitions(spark, 4) {
-        val bs = toKeys(batch)
-          .agg(graft.operators.MisraGries.summary(col("key"), k).as("mg"))
-          .select(explode(col("mg")).as(Seq("key", "cnt")))
-        val st = spark.read.schema(stateSchema).parquet(vPath(cur))
-        val uni = st.unionByName(bs)
-          .groupBy("key").agg(sum("cnt").as("cnt"))
-        val w = Window.orderBy(desc("cnt"), col("key"))
-        val ranked = uni.withColumn("rk", row_number().over(w))
-        val sub = ranked.filter(col("rk") === k + 1)
-          .agg(coalesce(max("cnt"), lit(0L)).as("sub"))
-        ranked.crossJoin(broadcast(sub))
-          .select(col("key"), (col("cnt") - col("sub")).as("cnt"))
-          .filter(col("cnt") > 0)
-          .write.mode("overwrite").parquet(vPath(id + 1))
-        cur = id + 1
-      }
+    val v0 = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("key", StringType), StructField("cnt", LongType))))
+    val src = fileStream(spark, srcDir, schema, Some(maxFilesPerTrigger), globFilter)
+    versionedFold(src, stateDir, v0, 4) { (st, batch) =>
+      val bs = toKeys(batch)
+        .agg(graft.operators.MisraGries.summary(col("key"), k).as("mg"))
+        .select(explode(col("mg")).as(Seq("key", "cnt")))
+      val uni = st.unionByName(bs)
+        .groupBy("key").agg(sum("cnt").as("cnt"))
+      val w = Window.orderBy(desc("cnt"), col("key"))
+      val ranked = uni.withColumn("rk", row_number().over(w))
+      val sub = ranked.filter(col("rk") === k + 1)
+        .agg(coalesce(max("cnt"), lit(0L)).as("sub"))
+      ranked.crossJoin(broadcast(sub))
+        .select(col("key"), (col("cnt") - col("sub")).as("cnt"))
+        .filter(col("cnt") > 0)
     }
-    spark.read.schema(stateSchema).parquet(vPath(cur))
   }
 
   final case class SessionEvent(user_id: Long, ts_micros: Long, event_type: String)

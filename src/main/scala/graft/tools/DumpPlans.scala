@@ -1,16 +1,47 @@
 package graft.tools
 
-/** Dev tool: dump `.explain("formatted")` of representative queries to
-  * PLANS.md — the physical-plan evidence (pushdown, pruning, broadcast,
-  * partial aggregation, no cartesian products) behind the scale claims
-  * in SURVEY/COVERAGE. Not part of the query surface.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Dev tool: dump `.explain("formatted")` of queries. Not part of the
+  * query surface.
+  *
+  * Usage: runMain graft.tools.DumpPlans
+  *          writes representative queries' plans to PLANS.md — the
+  *          physical-plan evidence (pushdown, pruning, broadcast,
+  *          partial aggregation, no cartesian products) behind the scale
+  *          claims in SURVEY/COVERAGE;
+  *        runMain graft.tools.DumpPlans <outDir> <suffix> <q1,q2,...>
+  *          writes each named query's plan to `<outDir>/<query>_<suffix>.txt`
+  *          — the before/after plan evidence of an optimization round.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
+    require(args.isEmpty || args.length == 3, "DumpPlans [<outDir> <suffix> <q1,q2,...>]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     // the session Verify/Bench use, so the plans (the corpus path's
     // spark.sql included) are theirs
     val spark = graft.GraftSession.getOrCreate("ERROR", cpus = 8)
+    args match {
+      case Array(outDir, suffix, names) => snapshots(spark, sfDir, outDir, suffix, names)
+      case _ => plansMd(spark, sfDir)
+    }
+    spark.stop()
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+
+  private def snapshots(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Path.of(outDir))
+    names.split(",").foreach { n =>
+      val txt = formatted(graft.SparkEntry.queries(n)(spark, sfDir))
+      java.nio.file.Files.writeString(java.nio.file.Path.of(outDir, s"${n}_$suffix.txt"), txt)
+      println(s"wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
+    }
+  }
+
+  private def plansMd(spark: SparkSession, sfDir: String): Unit = {
     val picks = Seq(
       "q01_pricing_summary" -> "scan pushdown + pruning + partial agg",
       "q07_join_inner" -> "shuffle join on keys",
@@ -100,10 +131,8 @@ object DumpPlans {
     sb.append("crosses inside the ANN recall gates -- bounded by\n")
     sb.append("construction, adjudicated in VERDICT r9).\n")
     picks.foreach { case (name, why) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      val trimmed = plan.linesIterator.take(80).mkString("\n")
+      val trimmed = formatted(graft.SparkEntry.queries(name)(spark, sfDir))
+        .linesIterator.take(80).mkString("\n")
       sb.append(s"\n## $name — $why\n\n```\n$trimmed\n```\n")
     }
     // Corpus-path proof (r12 ask #4): the reference's QUALIFY
@@ -123,9 +152,7 @@ object DumpPlans {
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY client_id ORDER BY submission_timestamp DESC, v) = 1""".stripMargin))
     sb.append(s"\n## corpus QUALIFY dedup (Dialect-translated, session-injected rule)" +
       s" — graphics_dashboard.sql:165-169 shape: topk_rows, no Window\n\n```\n" +
-      dedupe.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-        .linesIterator.take(60).mkString("\n") + "\n```\n")
+      formatted(dedupe).linesIterator.take(60).mkString("\n") + "\n```\n")
     val multi = spark.sql(graft.dag.Dialect.translate(
       """SELECT client_id, v,
         |  COUNT(*) OVER (PARTITION BY client_id ORDER BY submission_timestamp DESC, v) AS seen,
@@ -134,9 +161,7 @@ object DumpPlans {
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY client_id ORDER BY submission_timestamp DESC, v) <= 2""".stripMargin))
     sb.append(s"\n## multi-window-expression QUALIFY — rank rewritten to topk_rows," +
       s" other window exprs keep one Window below the aggregate\n\n```\n" +
-      multi.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-        .linesIterator.take(60).mkString("\n") + "\n```\n")
+      formatted(multi).linesIterator.take(60).mkString("\n") + "\n```\n")
     // Adversarial-skew evidence (r12 ask #5): one key holding ~50% of
     // events; the two documented mechanisms actually engaging — AQE
     // splitting the skewed sort-merge partitions, and SkewSalt's 8-way
@@ -149,6 +174,5 @@ object DumpPlans {
       s"```\n$salt\n```\n")
     java.nio.file.Files.writeString(java.nio.file.Path.of("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

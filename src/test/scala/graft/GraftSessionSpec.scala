@@ -72,4 +72,19 @@ class GraftSessionSpec extends AnyFunSuite {
   test("only Scratch creates temp directories") {
     assert(mentioning("createTempDirectory") == Seq(Paths.get("src/main/scala/graft/util/Scratch.scala")))
   }
+
+  // StreamOps is the one streaming path: one reader (`fileStream`), one
+  // query start, and one runner that caps the partitions of the whole
+  // run, so a cap cannot sit where a trigger's frames never see it.
+  test("only StreamOps streams, through one reader and one capped start") {
+    val streamOps = Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
+    Seq("readStream", "writeStream", "foreachBatch").foreach { p =>
+      assert(mentioning(p).filter(_.startsWith("src/main")) == Seq(streamOps), p)
+    }
+    val text = Files.readString(streamOps)
+    def count(p: String) = text.split(java.util.regex.Pattern.quote(p), -1).length - 1
+    assert(count("readStream") == 1)
+    assert(count(".start()") == 1)
+    assert(count("withStatePartitions(") == 1)
+  }
 }

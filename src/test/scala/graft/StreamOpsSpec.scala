@@ -247,9 +247,8 @@ class StreamOpsSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(batchDir)
     val rates = Map("src0" -> 80, "src1" -> 30)
     def run(chop: Int): Set[(String, Long, Long, Long)] = {
-      val out = scratch.dir("ssamp_out")
       StreamOps.stratifiedSampleStream(spark, batchDir, rates,
-          defaultRate = 50, outDir = out, maxFilesPerTrigger = chop)
+          defaultRate = 50, maxFilesPerTrigger = chop)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
     }
@@ -297,14 +296,83 @@ class StreamOpsSpec extends SparkTestBase {
     assert(df.count() == 150)
   }
 
-  test("streamStaticEnrichAvailableNow over a source with no file returns no rows") {
+  test("the per-trigger cap reaches the trigger's own frames") {
     import spark.implicits._
-    val dim = Seq((0L, "zero"), (1L, "one")).toDF("n_nationkey", "n_name")
-    val df = StreamOps.streamStaticEnrichAvailableNow(spark, sfDir, eventsSchema,
-      keyExpr = org.apache.spark.sql.functions.pmod($"user_id", org.apache.spark.sql.functions.lit(2L)),
-      dim = dim, dimKey = "n_nationkey", queryName = "stream_enrich_empty",
-      globFilter = Some("no_such_table.parquet"))
-    assert(df.columns.toSeq == eventsSchema.fieldNames.toSeq ++ Seq("n_nationkey", "n_name"))
-    assert(df.count() == 0)
+    import org.apache.spark.sql.functions._
+    val key = "spark.sql.shuffle.partitions"
+    val sixteen = spark.newSession()
+    sixteen.conf.set(key, "16")
+    sixteen.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    // two arrival files, one trigger each; every trigger holds all 64
+    // shards, so an uncapped groupBy("shard") fills all 16 partitions
+    val batchDir = scratch.dir("scap_in")
+    (0 until 2).foreach { i =>
+      scratch.stageFile(batchDir, s"b$i",
+        (i * 64L until (i + 1) * 64L).map(d => (d, s"doc $d")).toDF("doc_id", "text"),
+        System.currentTimeMillis() + i * 10000L)
+    }
+    val df = StreamOps.shardManifestStream(sixteen, batchDir,
+      c => pmod(c, lit(64L)).cast("int"), c => xxhash64(c), maxFilesPerTrigger = 1)
+    // part-<n>-<write job uuid>-c000...: one uuid per trigger's write
+    val perTrigger = df.inputFiles.toSeq
+      .map(f => new java.io.File(new java.net.URI(f)).getName)
+      .groupBy(_.split("-").slice(2, 7).mkString("-"))
+      .map(_._2.size)
+    assert(perTrigger.size == 2, s"expected one write per trigger: $perTrigger")
+    assert(perTrigger.forall(_ <= 8), s"part files per trigger: $perTrigger")
+    assert(sixteen.conf.get(key) == "16")
+    assert(df.count() == 64)
+  }
+
+  test("every runner over a source with no file returns no rows and its columns") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val none = Some("no_such_table.parquet")
+    val docs = scratch.dir("empty_docs")
+    val events = eventsSchema.fieldNames.toSeq
+    val logSchema = {
+      import org.apache.spark.sql.types._
+      StructType(Seq(StructField("k", LongType), StructField("seq", LongType),
+        StructField("op", StringType), StructField("v", StringType)))
+    }
+    val runners: Seq[(String, () => org.apache.spark.sql.DataFrame, Seq[String])] = Seq(
+      ("windowedCounts", () => StreamOps.windowedCountsAvailableNow(spark, sfDir, eventsSchema,
+        queryName = "empty_counts", globFilter = none), Seq("day", "event_type", "n")),
+      ("sessionWindows", () => StreamOps.sessionWindowsAvailableNow(spark, sfDir, eventsSchema,
+        queryName = "empty_sess", globFilter = none), Seq("user_id", "sess_start", "sess_end", "n")),
+      ("dedup", () => StreamOps.dedupAvailableNow(spark, sfDir, eventsSchema, "event_id",
+        queryName = "empty_dedup", globFilter = none), events),
+      ("selfJoin", () => StreamOps.streamSelfJoinAvailableNow(spark, sfDir, eventsSchema,
+        anchorFilter = $"event_id" % 97 === 0, window = "1 DAY", queryName = "empty_join",
+        globFilter = none), Seq("a_id", "user_id", "b_id")),
+      ("leftOuterJoin", () => StreamOps.streamLeftOuterJoinAvailableNow(spark,
+        scratch.dir("empty_staged"), eventsSchema, anchorType = "purchase", otherType = "click",
+        window = "1 DAY", queryName = "empty_louter"), Seq("a_id", "a_user", "b_id")),
+      ("staticEnrich", () => StreamOps.streamStaticEnrichAvailableNow(spark, sfDir, eventsSchema,
+        keyExpr = pmod($"user_id", lit(2L)),
+        dim = Seq((0L, "zero"), (1L, "one")).toDF("n_nationkey", "n_name"),
+        dimKey = "n_nationkey", queryName = "empty_enrich", globFilter = none),
+        events ++ Seq("n_nationkey", "n_name")),
+      ("incrementalDedup", () => StreamOps.incrementalDedupStream(spark, docs,
+        scratch.dir("empty_idx"), queryName = "empty_idedup", k = 16, bands = 8, shingleW = 1,
+        portable = false), Seq("doc_a", "doc_b")),
+      ("decontaminate", () => StreamOps.decontaminateStream(spark, docs,
+        Seq((1L, "the eval text")).toDF("doc_id", "text"), n = 2, flagRatio = 0.1),
+        Seq("doc_id", "n_grams", "n_overlap", "overlap_ratio", "contaminated")),
+      ("shardManifest", () => StreamOps.shardManifestStream(spark, docs,
+        c => pmod(c, lit(4L)).cast("int"), c => xxhash64(c)),
+        Seq("shard", "n_docs", "fingerprint", "min_doc_id", "max_doc_id")),
+      ("stratifiedSample", () => StreamOps.stratifiedSampleStream(spark, docs,
+        Map("src0" -> 50), defaultRate = 10), Seq("source", "n_kept", "min_kept", "sum_kept")),
+      ("cdcUpsert", () => StreamOps.cdcUpsertStream(spark, docs, scratch.dir("empty_cdc"),
+        logSchema, Seq.empty[(Long, String)].toDF("k", "v")), Seq("k", "v", "from_change")),
+      ("heavyHitters", () => StreamOps.heavyHittersStream(spark, sfDir, eventsSchema,
+        _.select($"event_type".as("key")), k = 4, stateDir = scratch.dir("empty_hh"),
+        globFilter = none), Seq("key", "cnt")))
+    runners.foreach { case (name, run, columns) =>
+      val df = run()
+      assert(df.columns.toSeq == columns, name)
+      assert(df.count() == 0, name)
+    }
   }
 }
