@@ -2,13 +2,10 @@ package graft.catalog
 
 import org.apache.spark.sql.types._
 
-/** Declarative schema definitions → Spark StructType, with the
-  * reference's append-only evolution contract.
+/** Declarative schema definitions → Spark StructType.
   *
   * Mirrors `SchemaField`/`SchemaRecordField`
-  * (/root/reference/jobs/webcompat-kb/webcompat_kb/bqhelpers.py:138-180)
-  * and `BigQuery.add_table_fields` (bqhelpers.py:469-515), which refuses
-  * deletions, type changes, and new REQUIRED fields.
+  * (the reference corpus's jobs/webcompat-kb/webcompat_kb/bqhelpers.py:138-180).
   */
 sealed trait FieldMode
 object FieldMode {
@@ -53,28 +50,3 @@ final case class TableSchemaDef(fields: Seq[FieldDef],
 /** Integer range partitioning (bqhelpers.py:246-252, 288-301) — maps to
   * partitioned parquet on the bucketed column. */
 final case class RangePartition(field: String, start: Long, end: Long, interval: Long)
-
-object SchemaEvolution {
-  /** Append-only evolution check (bqhelpers.py:469-515): the new schema
-    * may only ADD nullable/repeated fields. Returns the added fields, or
-    * an error describing the violation. */
-  def diff(current: StructType, desired: StructType): Either[String, Seq[StructField]] = {
-    val curByName = current.fields.map(f => f.name -> f).toMap
-    val missing = current.fields.map(_.name).filterNot(n => desired.fieldNames.contains(n))
-    if (missing.nonEmpty)
-      return Left(s"Field deletion not allowed: ${missing.mkString(", ")}")
-    val changed = desired.fields.filter(f =>
-      curByName.get(f.name).exists(c => c.dataType != f.dataType))
-    if (changed.nonEmpty)
-      return Left(s"Type change not allowed: ${changed.map(_.name).mkString(", ")}")
-    val relaxedToRequired = desired.fields.filter(f =>
-      curByName.get(f.name).exists(c => c.nullable && !f.nullable))
-    if (relaxedToRequired.nonEmpty)
-      return Left(s"Nullable→required not allowed: ${relaxedToRequired.map(_.name).mkString(", ")}")
-    val added = desired.fields.filterNot(f => curByName.contains(f.name))
-    val requiredAdds = added.filterNot(_.nullable)
-    if (requiredAdds.nonEmpty)
-      Left(s"New REQUIRED field not allowed: ${requiredAdds.map(_.name).mkString(", ")}")
-    else Right(added.toSeq)
-  }
-}

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import TomlLite.{Doc, Section, TInt, TStr}
+import TomlLite.{Doc, Section, TStr}
 
 /** Bridge from the reference's `table.toml` / `meta.toml` schema files
   * to [[TableSchemaDef]] (TOML layer of projectdata.py:455-562:

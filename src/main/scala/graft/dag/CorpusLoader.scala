@@ -2,7 +2,7 @@ package graft.dag
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import graft.catalog.{TomlLite, TomlSchema}
+import graft.catalog.TomlSchema
 import JinjaLite.{V, VFunc, VStr}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -265,9 +265,8 @@ object CorpusLoader {
     * and subqueries inside higher-order functions). Two classes:
     *
     *   - WEBCOMPAT_HOST / BUG_ID_FROM_BUGZILLA_URL use the subquery only
-    *     to name intermediate expressions → inlined here with IDENTICAL
-    *     semantics (these match graft.functions.Routines, asserted by
-    *     SqlRoutinesSpec).
+    *     to name intermediate expressions → inlined here with the
+    *     semantics of graft.functions.Routines.
     *   - The WEBCOMPAT_METRIC_SCORE_* family aggregates over warehouse
     *     tables per call. The engine's scalable translation is the
     *     decorrelated join (jobs/Webcompat.scala, oracle-checked q105);
@@ -684,7 +683,7 @@ object CorpusLoader {
         if (obj.kind == "view" && outcome.ok) {
           val t0 = System.nanoTime()
           val eo = try {
-            val n = materializeFixture(spark, fusedDf.get, obj.qualName, cap)
+            val n = materializeFixture(fusedDf.get, obj.qualName, cap)
             ExecOutcome(obj.dataset, obj.name, ok = true, n, None,
               (System.nanoTime() - t0) / 1000000)
           } catch {
@@ -738,11 +737,11 @@ object CorpusLoader {
     * a hard contract: limit(cap+1) bounds the materialized size even
     * for a runaway view, and the count check still rejects overflow. */
   private def materializeFixture(spark: SparkSession, q: String, capRows: Int): Long =
-    materializeFixture(spark, spark.table(q), q, capRows)
+    materializeFixture(spark.table(q), q, capRows)
 
   /** Fused-path variant: materialize an already-analyzed DataFrame
     * (no spark.table() re-analysis) and register the result as `q`. */
-  private def materializeFixture(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
+  private def materializeFixture(df: org.apache.spark.sql.DataFrame,
       q: String, capRows: Int): Long = {
     val matd = df.limit(capRows + 1).localCheckpoint(true)
     val n = matd.count()

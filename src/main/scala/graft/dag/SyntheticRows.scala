@@ -1,9 +1,8 @@
 package graft.dag
 
 import java.time.{Instant, LocalDate}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Deterministic synthetic rows for a corpus table schema — the data
   * layer of the corpus *execution* sweep (q109). The reference validates
@@ -104,7 +103,7 @@ object SyntheticRows {
     parts.mkString("{", ", ", "}")
   }
 
-  private def stringFor(table: String, name: String, h: Long, i: Int): String = {
+  private def stringFor(table: String, name: String, h: Long): String = {
     val n = name.toLowerCase
     if (n == "url" || n.endsWith("_url") || n == "top_level_url") url(h)
     else if (n == "user_story" || n == "user_story_raw") userStory(h)
@@ -174,7 +173,7 @@ object SyntheticRows {
     val keepDense = n.contains("bug") || n == "number" || n.contains("url") || n == "uuid"
     if (nullable && !keepDense && h % 7 == 0) return null
     dt match {
-      case StringType => stringFor(table, name, h, i)
+      case StringType => stringFor(table, name, h)
       case LongType => if (n == "number") i.toLong else longFor(name, h)
       case IntegerType => (longFor(name, h) % Int.MaxValue).toInt
       case DoubleType => (h % 10000) / 100.0
@@ -225,7 +224,4 @@ object SyntheticRows {
       Row.fromSeq(coherent)
     }
   }
-
-  def df(spark: SparkSession, table: String, schema: StructType, n: Int): DataFrame =
-    spark.createDataFrame(rows(table, schema, n).asJava, schema)
 }

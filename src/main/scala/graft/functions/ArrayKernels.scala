@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -233,14 +232,4 @@ object ArrayKernels {
   def qdotArr(a: Column, b: Column): Column =
     ColumnShim.column(QDotArr(
       ColumnShim.expression(a), ColumnShim.expression(b)))
-
-  /** Register as SQL-callable `dot_arr` / `dist2_arr` / `qdot_arr`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_arr", exprs => DotArr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dist2_arr", exprs => Dist2Arr(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "qdot_arr", exprs => QDotArr(exprs(0), exprs(1)), "scala_udf")
-  }
 }

@@ -11,18 +11,18 @@ import org.apache.spark.sql.types._
   *
   * Reference dialect usages these mirror (see /root/reference):
   *  - SAFE_DIVIDE            → [[safeDivide]]
-  *  - SAFE_CAST              → [[safeCastLong]] / `try_cast` via expr
-  *  - COUNTIF(p)             → [[countIf]]
+  *  - SAFE_CAST              → `try_cast`
+  *  - COUNTIF(p)             → `count_if`
   *  - DATE_TRUNC(d, WEEK(SUNDAY)) → [[weekSunday]]
   *    (jobs/graphics-dashboard/graphics_dashboard/sql/graphics_trends.sql:46)
-  *  - GENERATE_DATE_ARRAY    → [[dateArray]]
+  *  - GENERATE_DATE_ARRAY    → `sequence`
   *    (jobs/webcompat-kb/webcompat_kb/metrics/metrics.py:204)
-  *  - FARM_FINGERPRINT       → [[farmFingerprint]] (xxhash64: same role —
-  *    a stable 64-bit hash for deterministic ordering/sampling;
+  *  - FARM_FINGERPRINT       → `xxhash64` (same role — a stable 64-bit
+  *    hash for deterministic ordering/sampling;
   *    jobs/graphics-dashboard/graphics_dashboard/sql/graphics_trends.sql:48)
   *  - ARRAY_LAST / OFFSET / SAFE_OFFSET → [[arrayLast]]/[[offset]]/[[safeOffset]]
   *  - JSON_VALUE             → [[jsonValue]]
-  *  - CONTAINS_SUBSTR        → [[containsSubstr]]
+  *  - CONTAINS_SUBSTR        → `lower(h).contains(lower(needle))`
   *  - IFNULL                 → `coalesce`
   */
 object BqShims {
@@ -31,24 +31,10 @@ object BqShims {
   def safeDivide(a: Column, b: Column): Column =
     when(b === 0 || b.isNull, lit(null)).otherwise(a / b)
 
-  /** SAFE_CAST(x AS INT64): null on unparseable input. */
-  def safeCastLong(c: Column): Column = c.cast("string").try_cast("bigint")
-
-  /** COUNTIF(p) */
-  def countIf(p: Column): Column = count_if(p)
-
   /** DATE_TRUNC(d, WEEK(SUNDAY)): Sunday-start week floor.
     * Spark's date_trunc('week') is Monday-start; shift by day-of-week
     * (Sunday=1 in Spark's dayofweek). */
   def weekSunday(d: Column): Column = date_sub(d, dayofweek(d) - lit(1))
-
-  /** GENERATE_DATE_ARRAY(start, end, INTERVAL n DAY) → array<date>. */
-  def dateArray(start: Column, end: Column, stepDays: Int = 1): Column =
-    sequence(start, end, expr(s"interval $stepDays day"))
-
-  /** FARM_FINGERPRINT stand-in: stable 64-bit hash usable for
-    * deterministic ordering / bucketing at any scale. */
-  def farmFingerprint(cols: Column*): Column = xxhash64(cols: _*)
 
   /** UNIX_MICROS tolerant of both TIMESTAMP and TIMESTAMP_NTZ.
     * Parquet `timestamp[us], isAdjustedToUTC=false` reads as
@@ -102,10 +88,6 @@ object BqShims {
   def variantGet(v: Column, path: String, dataType: String): Column =
     try_variant_get(v, path, dataType)
 
-  /** CONTAINS_SUBSTR(haystack, needle) — case-insensitive in BigQuery. */
-  def containsSubstr(h: Column, needle: String): Column =
-    lower(h).contains(lit(needle.toLowerCase))
-
   /** NET.HOST(url) — registrable host of a URL (no port). */
   /** NET.HOST is best-effort on scheme-less input ("www.abc.xyz" →
     * "www.abc.xyz" per the BigQuery docs) — the corpus relies on this,
@@ -116,16 +98,4 @@ object BqShims {
 
   /** NULLIF(a, b) */
   def nullIf(a: Column, b: Column): Column = when(a === b, lit(null)).otherwise(a)
-
-  /** u64 wraparound correction (F5): DAP/VDAF counters are unsigned
-    * 64-bit; values above 2^63 are negative deltas wrapped around
-    * (reference: jobs/ads-incrementality-dap-collector/.../helpers.py:
-    * 196-203 `correct_wraparound`: if n > MAX/2 then n - 2^64). Input is
-    * the unsigned value as Decimal(20,0). */
-  def correctU64Wraparound(c: Column): Column = {
-    val half = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(63))
-    val full = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(64))
-    when(c > lit(half), (c - lit(full)).cast(DecimalType(21, 0)))
-      .otherwise(c.cast(DecimalType(21, 0)))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,22 +49,11 @@ object Routines {
     when(id === "", lit(null)).otherwise(id).try_cast("bigint")
   }
 
-  /** EXTRACT_ARRAY(json, '$.path') → array<string>, accepting either a
-    * JSON array or a bare scalar at the path, entries trimmed
-    * (routines/EXTRACT_ARRAY/routine.sql:1-14). */
-  def extractArray(json: Column, path: String): Column = {
-    val arr = from_json(get_json_object(json, path), ArrayType(StringType))
-    val scalar = get_json_object(json, path)
-    val chosen = when(arr.isNotNull, arr)
-      .when(scalar.isNotNull, array(scalar))
-      .otherwise(array().cast(ArrayType(StringType)))
-    transform(chosen, e => trim(e))
-  }
-
-  /** [[extractArray]] over an already-parsed variant (the string form
-    * parses the JSON twice — once per get_json_object — plus a
-    * from_json; here both the array and scalar probes are binary path
-    * reads of one parse). Same array-or-scalar-or-empty coercion. */
+  /** EXTRACT_ARRAY(json, '$.path') → array<string> over an
+    * already-parsed variant (see [[BqShims.jsonVariant]]), accepting
+    * either an array or a bare scalar at the path, entries trimmed
+    * (routines/EXTRACT_ARRAY/routine.sql:1-14). Both probes are binary
+    * path reads of one parse. */
   def extractArrayV(v: Column, path: String): Column = {
     val arr = try_variant_get(v, path, "array<string>")
     val scalar = try_variant_get(v, path, "string")
@@ -87,22 +76,6 @@ object Routines {
       .otherwise(lit(null).cast(StringType))
   }
 
-  /** WEBCOMPAT_METRIC_YYYYMM() — pinned constant
-    * (routines/WEBCOMPAT_METRIC_YYYYMM/routine.sql:1-3). */
-  def webcompatMetricYyyymm(): Column = lit(202603L)
-
-  /** CRUX_DATASET(): default-or-latest month. The reference probes an
-    * import-runs table when the default is null
-    * (routines/CRUX_DATASET/routine.sql:1-12). Table-probing constants
-    * become driver-side lookups resolved before plan build (SURVEY §4). */
-  def cruxDataset(importRuns: Option[DataFrame], default: Option[Long] = Some(202409L)): Long =
-    default.getOrElse {
-      importRuns
-        .flatMap(df => df.agg(max("yyyymm")).collect().headOption.flatMap(r => Option(r.get(0))))
-        .map(_.toString.toLong)
-        .getOrElse(sys.error("CRUX_DATASET: no default and no import_runs rows"))
-    }
-
   /** WEBCOMPAT_METRIC_SCORE_NO_SITE_RANK (F2 — correlated-subquery UDF,
     * routines/WEBCOMPAT_METRIC_SCORE_NO_SITE_RANK/routine.sql:1-12).
     *
@@ -113,27 +86,18 @@ object Routines {
     * literal-free expression via broadcast map lookups. We model each
     * weight family as a Scala Map baked into a chain of `when` branches —
     * fully codegen'd, zero joins, zero shuffles at any scale.
+    *
+    * It takes an ALREADY-PARSED variant user_story (see
+    * [[BqShims.jsonVariant]]): callers embed its five accesses inside a
+    * weight-dim cross join, so a JSON string would be re-parsed per
+    * access per weight row. With the variant materialized as its own
+    * column before the join, each access is a binary path read, with
+    * get_json_object's null-on-missing / null-on-garbage semantics
+    * (q105 oracle + FunctionsSpec gate).
     */
-  def scoreNoSiteRank(weights: Map[(String, String), java.math.BigDecimal])(
-      keywords: Column, userStory: Column): Column =
-    scoreNoSiteRankImpl(weights)(keywords, p => get_json_object(userStory, p))
-
-  /** [[scoreNoSiteRank]] over an ALREADY-PARSED variant user_story
-    * (see [[BqShims.jsonVariant]]): the string form re-parses the JSON
-    * on each of its five accesses — and worse, callers embed those
-    * accesses inside a weight-dim cross join, multiplying the parses
-    * by the weight-row count. With the variant materialized as its own
-    * column before the join, each access is a binary path read.
-    * Value-identical to the string path (same null-on-missing /
-    * null-on-garbage semantics; q105 oracle + FunctionsSpec gate). */
   def scoreNoSiteRankV(weights: Map[(String, String), java.math.BigDecimal])(
-      keywords: Column, userStoryVar: Column): Column =
-    scoreNoSiteRankImpl(weights)(keywords,
-      p => try_variant_get(userStoryVar, p, "string"))
-
-  private def scoreNoSiteRankImpl(
-      weights: Map[(String, String), java.math.BigDecimal])(
-      keywords: Column, jv: String => Column): Column = {
+      keywords: Column, userStoryVar: Column): Column = {
+    def jv(p: String): Column = try_variant_get(userStoryVar, p, "string")
     def lookupCol(lookupType: String, value: Column): Column = {
       val fam = weights.collect { case ((t, v), s) if t == lookupType => (v, s) }
       fam.foldLeft(lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 9))) {

@@ -1,8 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 
-/** Per-segment forecasting frame with grid search + holdout validation —
+/** Per-segment forecasting frame with grid search + crossvalidation —
   * the funnel-forecast shape (reference: jobs/kpi-forecasting/
   * kpi_forecasting/models/funnel_forecast.py:75-155 segment
   * partitioning; :365-412 per-segment grid search over parameters with
@@ -13,8 +13,9 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   * container has no Stan): constant-mean and linear-OLS candidates over
   * optionally windowed history. The *frame* is the ported semantics —
   * segments are independent (mapGroups), the grid is exhaustive, the
-  * selection metric is holdout MSE with deterministic tie-break (first
-  * in grid order wins), the winner refits on full history and predicts.
+  * selection metric is rolling-origin CV bias with deterministic
+  * tie-break (first in grid order wins), the winner refits on full
+  * history and predicts.
   *
   * Scale: one shuffle on segment; each group's work is bounded by its
   * own history (exactly the reference's applyInPandas boundary).
@@ -23,8 +24,6 @@ object SegmentForecast {
 
   final case class Obs(segment: String, x: Double, y: Double)
   final case class ModelSpec(kind: String, window: Int) // window 0 = all history
-  final case class SegmentFit(segment: String, kind: String, window: Int,
-      holdout_mse: Double, forecast: Seq[Double])
 
   val defaultGrid: Seq[ModelSpec] = Seq(
     ModelSpec("mean", 0), ModelSpec("mean", 8),
@@ -107,33 +106,12 @@ object SegmentForecast {
     }
   }
 
-  private def mse(model: Fitted, holdout: Seq[Obs]): Double =
-    holdout.map { o =>
-      val e = BigDecimal(o.y) - BigDecimal(model.predict(o.x))
-      e * e
-    }.sum.toDouble / holdout.size
-
-  /** Grid-search one segment: fit each spec on history minus the last
-    * `holdout` points, score on the holdout, refit the winner on all. */
-  def fitSegment(data: Seq[Obs], grid: Seq[ModelSpec], holdout: Int,
-      horizon: Int): SegmentFit = {
+  /** `spec` fit on all of `data`, predicted `horizon` steps past the
+    * last x. */
+  def forecast(spec: ModelSpec, data: Seq[Obs], horizon: Int): Seq[Double] = {
     val sorted = data.sortBy(_.x)
-    val (train, valid) = sorted.splitAt(math.max(sorted.size - holdout, 1))
-    val scored = grid.map(spec => spec -> mse(fit(spec, train), valid))
-    val (best, bestMse) = scored.minBy(_._2) // stable: first minimum wins
-    val full = fit(best, sorted)
-    val lastX = sorted.last.x
-    val forecast = (1 to horizon).map(i => full.predict(lastX + i))
-    SegmentFit(sorted.head.segment, best.kind, best.window, bestMse, forecast)
-  }
-
-  /** Distributed: independent grid search per segment via mapGroups. */
-  def run(spark: SparkSession, observed: Dataset[Obs],
-      grid: Seq[ModelSpec] = defaultGrid, holdout: Int = 4,
-      horizon: Int = 3): Dataset[SegmentFit] = {
-    implicit val enc = Encoders.product[SegmentFit]
-    observed.groupByKey(_.segment)(Encoders.STRING)
-      .mapGroups((_, rows) => fitSegment(rows.toSeq, grid, holdout, horizon))
+    val full = fit(spec, sorted)
+    (1 to horizon).map(i => full.predict(sorted.last.x + i))
   }
 
   // ---- rolling-origin crossvalidation selection (funnel_forecast.py) ----
@@ -187,28 +165,9 @@ object SegmentForecast {
     val sorted = data.sortBy(_.x)
     val scored = grid.map(spec => spec -> cvBias(spec, sorted, cv))
     val (best, bias) = scored.minBy { case (_, b) => math.abs(b) } // stable: grid order breaks ties
-    val full = fit(best, sorted)
-    val lastX = sorted.last.x
-    val fs = (1 to 3).map(i => full.predict(lastX + i))
+    val fs = forecast(best, sorted, 3)
     SegmentCvFit(sorted.head.segment, best.kind, best.window, bias,
       fs(0), fs(1), fs(2))
-  }
-
-  /** Deterministic predictive samples for the CV winner: each forecast
-    * step's sample set is the point forecast plus every full-history
-    * residual (a residual bootstrap without resampling — the
-    * predictive_samples surface of prophet_forecast.py:53-59 minus the
-    * RNG). The result feeds [[ForecastSummary.summarize]] for the
-    * mean/p10/p50/p90 quantile frame. */
-  def cvSamples(data: Seq[Obs], grid: Seq[ModelSpec],
-      cv: CvSettings): Seq[(Int, Seq[Double])] = {
-    val sorted = data.sortBy(_.x)
-    val scored = grid.map(spec => spec -> cvBias(spec, sorted, cv))
-    val (best, _) = scored.minBy { case (_, b) => math.abs(b) }
-    val full = fit(best, sorted)
-    val residuals = sorted.map(o => o.y - full.predict(o.x))
-    val lastX = sorted.last.x
-    (1 to 3).map(i => i -> residuals.map(r => full.predict(lastX + i) + r))
   }
 
   /** One (segment, horizon step) of the predictive sample matrix: the
@@ -233,10 +192,9 @@ object SegmentForecast {
     * history, the full-history residuals form the bootstrap pool, and
     * path i's step-h draw resamples pool index md5("segment|i|h") mod n
     * — a deterministic, engine-portable RNG, so DuckDB independently
-    * recomputes every draw (unlike [[cvSamples]], which enumerates the
-    * pool without resampling). Each (segment, h) row carries its nPaths
-    * samples as one array, ready for the q61/ForecastSummary row-axis
-    * mean/p10/p50/p90 reductions. */
+    * recomputes every draw. Each (segment, h) row carries its nPaths
+    * samples as one array, ready for q61's row-axis mean/p10/p50/p90
+    * reductions. */
   def cvBootstrapPaths(data: Seq[Obs], grid: Seq[ModelSpec], cv: CvSettings,
       nPaths: Int, horizon: Int): Seq[SegmentPathRow] = {
     val sorted = data.sortBy(_.x)
@@ -259,7 +217,7 @@ object SegmentForecast {
   /** Distributed path generation: one shuffle on segment; each group
     * emits horizon rows of nPaths samples — the executor-side matrix
     * never visits the driver. */
-  def runCvPaths(spark: SparkSession, observed: Dataset[Obs],
+  def runCvPaths(observed: Dataset[Obs],
       grid: Seq[ModelSpec] = defaultGrid,
       cv: CvSettings = CvSettings(initial = 6, period = 2, horizon = 2),
       nPaths: Int = 1000, horizon: Int = 3): Dataset[SegmentPathRow] = {
@@ -272,7 +230,7 @@ object SegmentForecast {
   /** Distributed CV grid search: one shuffle on segment, bounded
     * per-group work — the applyInPandas boundary of the reference,
     * expressed as mapGroups. */
-  def runCV(spark: SparkSession, observed: Dataset[Obs],
+  def runCV(observed: Dataset[Obs],
       grid: Seq[ModelSpec] = defaultGrid,
       cv: CvSettings = CvSettings(initial = 6, period = 2, horizon = 2))
       : Dataset[SegmentCvFit] = {

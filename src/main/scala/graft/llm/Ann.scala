@@ -327,18 +327,12 @@ object Ann {
     ivfRerank(assigned, probed, k)
   }
 
-  /** Signature bits that keep expected bucket occupancy near
-    * `targetBucket` as the corpus grows (log₂(n / target)); more bits =
-    * smaller buckets, with multi-probe recovering the recall. */
-  def autoBits(corpusCount: Long, targetBucket: Int = 1024): Int =
-    math.max(4, math.ceil(math.log(math.max(1.0, corpusCount.toDouble / targetBucket)) / math.log(2.0)).toInt)
-
   /** LSH-bucketed ANN: equi-join on the signature bucket, exact cosine
     * re-rank within buckets, top-k per query. With `multiProbe` the
     * query side also probes every Hamming-distance-1 bucket (nBits+1
     * probes), recovering most of the recall a near-boundary vector loses
     * to a single sign flip — which is what makes HIGHER nBits (smaller
-    * buckets, from [[autoBits]]) usable at scale: candidate volume per
+    * buckets) usable at scale: candidate volume per
     * query stays ~(nBits+1)·occupancy instead of one giant bucket. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, nBits: Int = 8,
       multiProbe: Boolean = true, nTables: Int = 1): DataFrame = {

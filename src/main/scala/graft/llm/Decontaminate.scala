@@ -32,16 +32,13 @@ import org.apache.spark.sql.types._
   */
 object Decontaminate {
 
-  /** Distinct word n-grams of a text column; docs shorter than n tokens
+  /** Distinct word n-grams of a text column as xxhash64 keys over the
+    * token slice, no gram STRING ever built; docs shorter than n tokens
     * contribute their whole text as a single gram (a short eval item is
-    * still a verbatim leak when it appears wholesale). */
-  def ngrams(text: Column, n: Int): Column =
-    array_distinct(TextDedup.shingles(text, n))
-
-  /** Hashed twin of [[ngrams]]: xxhash64 over the token slice, no gram
-    * STRING ever built. Join-with-space is injective over space-free
-    * tokens, so set membership/overlap counts over these keys equal the
-    * string-gram ones short of a 2⁻⁶⁴ collision. The broadcast eval
+    * still a verbatim leak when it appears wholesale). Join-with-space
+    * is injective over space-free tokens, so set membership/overlap
+    * counts over these keys equal the string-gram ones short of a 2⁻⁶⁴
+    * collision. The broadcast eval
     * set becomes 8 bytes/gram and the corpus side skips two string
     * allocations per token position (measured 3× on q84). */
   def ngramKeys(text: Column, n: Int): Column =

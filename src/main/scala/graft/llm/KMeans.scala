@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -85,7 +85,7 @@ object KMeans {
   /** Run `iters` fixed Lloyd iterations from the deterministic init
     * (codes of the k lowest vec_ids) and return the final assignment
     * (vec_id, cluster, d2 — all exact integers). */
-  def fit(spark: SparkSession, embeddings: DataFrame, k: Int, iters: Int,
+  def fit(embeddings: DataFrame, k: Int, iters: Int,
       grid: Double = 1000.0): DataFrame = {
     val codes = gridCodes(embeddings, grid)
     val init: IndexedSeq[IndexedSeq[Long]] = codes

@@ -2,7 +2,6 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** fastText-style hashed linear classifier INFERENCE (Joulin et al.
   * 2016, "Bag of Tricks for Efficient Text Classification"): tokens

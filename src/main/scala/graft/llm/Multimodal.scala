@@ -15,22 +15,17 @@ import org.apache.spark.sql.types._
   * uses a real multi-frame container as well (animated GIF via
   * javax.imageio sequence mode, [[syntheticGifMedia]]/
   * [[decodeVideoFrameStats]] — frame extraction + strided sampling
-  * from genuinely encoded container bytes). Only raw video codecs
-  * (H.264 etc.) stay out of reach in this container (no native codec
-  * libraries; see builder brief) — [[frameSample]] keeps the declared
-  * byte-slice STUB shape for that case.
+  * from genuinely encoded container bytes). Raw video codecs (H.264
+  * etc.) need native libraries and are out of scope.
   *
   * At scale: decode work is per-row CPU, so the operator's job is to
   * (a) keep batches columnar/iterator-based (mapPartitions — one
-  * decoder init per partition, not per row), (b) bound partition bytes
-  * (media rows are large — repartition by bytes before decoding), and
-  * (c) emit fixed-size features, never the raw payload, downstream.
+  * decoder init per partition, not per row) and (b) emit fixed-size
+  * features, never the raw payload, downstream.
   */
 object Multimodal {
 
   case class MediaRow(doc_id: Long, payload: Array[Byte], media_type: String)
-  case class MediaFeatures(doc_id: Long, media_type: String, byte_len: Int,
-      width: Int, height: Int, feature: Array[Float])
 
   /** Build a synthetic media table from documents: utf-8 payload bytes
     * standing in for encoded media. */
@@ -38,60 +33,6 @@ object Multimodal {
     documents.select(col("doc_id"),
       col("text").cast(BinaryType).as("payload"),
       concat(lit("image/fake-"), pmod(col("doc_id"), lit(3))).as("media_type"))
-
-  /** Repartition a media frame so each partition carries roughly
-    * `targetBytes` of payload — the pre-decode sizing step that keeps a
-    * decoder's working set bounded when media rows are megabytes each
-    * (partition count follows data volume, not spark.default.parallelism).
-    * One cheap aggregate plus one round-robin shuffle. */
-  def bytesBoundedRepartition(media: DataFrame, targetBytes: Long,
-      payloadCol: String = "payload"): DataFrame = {
-    val total = media.agg(sum(octet_length(col(payloadCol)))).collect()(0) match {
-      case row if row.isNullAt(0) => 0L
-      case row => row.getLong(0)
-    }
-    val parts = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    media.repartition(parts)
-  }
-
-  case class Frame(doc_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
-
-  /** STUB frame sampler: every `stride`-th fixed-size slice of the
-    * payload stands in for a decoded video frame. The plumbing is the
-    * real pattern — one row fans out to many via an iterator flatMap
-    * (never materializing a whole video's frames in memory), partitioned
-    * upstream by [[bytesBoundedRepartition]]. */
-  def frameSample(spark: SparkSession, media: DataFrame, frameBytes: Int,
-      stride: Int): Dataset[Frame] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        val n = r.payload.length / frameBytes
-        Iterator.range(0, n, stride).map { i =>
-          Frame(r.doc_id, i,
-            java.util.Arrays.copyOfRange(r.payload, i * frameBytes, (i + 1) * frameBytes))
-        }
-      }
-    }
-  }
-
-  /** STUB resize: clamps the fake decoded dimensions to a bounding box
-    * (aspect-preserving scale factor in fixed-point arithmetic so the
-    * result is engine-portable and deterministic). A real deployment
-    * swaps the body for the codec's resampler; the signature —
-    * features in, features out, no payload — is the production shape. */
-  def resize(features: Dataset[MediaFeatures], maxW: Int, maxH: Int): Dataset[MediaFeatures] = {
-    import features.sparkSession.implicits._
-    features.map { f =>
-      if (f.width <= maxW && f.height <= maxH) f
-      else {
-        // scale = min(maxW/w, maxH/h) in 1/1024 fixed point
-        val s = math.min(maxW.toLong * 1024 / f.width, maxH.toLong * 1024 / f.height)
-        f.copy(width = math.max(1, (f.width * s / 1024).toInt),
-          height = math.max(1, (f.height * s / 1024).toInt))
-      }
-    }
-  }
 
   // ---- real image codec boundary (javax.imageio) ----
 
@@ -423,32 +364,6 @@ object Multimodal {
         reader.dispose()
         iis.close()
         VideoStats(r.doc_id, n, sampled, sum)
-      }
-    }
-  }
-
-  /** STUB decoder: deterministic fake features from the payload bytes.
-    * A real deployment swaps `decodeOne` for an image/audio codec; the
-    * mapPartitions shape (decoder init once per partition, iterator in /
-    * iterator out, no materialization of the whole partition) is the
-    * production pattern. */
-  def decodeFeatures(spark: SparkSession, media: DataFrame, dim: Int = 8): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      // per-partition "codec init" happens here (stubbed)
-      rows.map { r =>
-        val bytes = r.payload
-        val len = bytes.length
-        // deterministic fake decode: dimensions + feature vector from bytes
-        val width = 16 + (math.abs(len * 31) % 1024)
-        val height = 16 + (math.abs(len * 17) % 1024)
-        val feature = Array.tabulate(dim) { i =>
-          var acc = 0L
-          var j = i
-          while (j < len) { acc = (acc * 31 + (bytes(j) & 0xff)) % 1000003L; j += dim }
-          (acc.toFloat / 1000003.0f) - 0.5f
-        }
-        MediaFeatures(r.doc_id, r.media_type, len, width, height, feature)
       }
     }
   }

@@ -63,14 +63,6 @@ object Pooling {
         (col("s").cast(DoubleType) /
           (col("n").cast(DoubleType) * lit(Q))).as("m"), col("n"))
 
-  /** Mean pooling, array form: (g, pooled ARRAY<DOUBLE>, dim). */
-  def meanPool(df: DataFrame, groupCol: Column,
-      vecCol: Column): DataFrame =
-    meanPoolCells(df, groupCol, vecCol)
-      .groupBy("g")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-        .getField("m").as("pooled"), count(lit(1)).as("dim"))
-
   /** Per-dimension max, exploded form: (g, pos, m). */
   def maxPoolCells(df: DataFrame, groupCol: Column,
       vecCol: Column): DataFrame =

@@ -3,38 +3,13 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Composable training-data preparation pipeline: an ordered list of named
-  * filter/transform stages folded over the corpus, plus audit funnels
-  * that report the surviving row count after every stage — the standard
+/** Training-data preparation funnel: the surviving row count after every
+  * stage of a filter cascade — the standard
   * "how much data did each filter cost me" report of an LLM data pipeline
   * (the same funnel shape C4/RefinedWeb/FineWeb publish for their
   * filtering cascades).
   */
 object PrepPipeline {
-
-  final case class Stage(name: String, apply: DataFrame => DataFrame)
-
-  /** Fold the stages and return the final surviving corpus. */
-  def run(input: DataFrame, stages: Seq[Stage]): DataFrame =
-    stages.foldLeft(input)((df, st) => st.apply(df))
-
-  /** Funnel report for ARBITRARY transform stages: (stage_idx, stage,
-    * n_rows) for the raw input and after each stage. One union-of-counts
-    * job, but NOTE Spark does not share scan subtrees across union
-    * branches: stage k's branch re-scans the source and re-applies
-    * stages 1..k, so this costs O(stages) scans and O(stages²) filter
-    * work. Correct for any stage; for predicate cascades use
-    * [[auditOnePass]], which is a genuine single pass. */
-  def audit(input: DataFrame, stages: Seq[Stage]): DataFrame = {
-    val staged = stages.scanLeft(("raw", input)) {
-      case ((_, df), st) => (st.name, st.apply(df))
-    }
-    staged.zipWithIndex.map { case ((name, df), i) =>
-      df.agg(count(lit(1)).as("n_rows"))
-        .select(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-          col("n_rows"))
-    }.reduce(_ unionByName _)
-  }
 
   /** Funnel report for a PREDICATE cascade (plus an optional final
     * dedup-by-key stage) in ONE aggregation over ONE scan: per-row

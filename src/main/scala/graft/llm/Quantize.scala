@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   *
   * Scale: one narrow projection per row, no shuffle; the quantized
   * table is the thing you'd persist next to (or instead of) the float
-  * embeddings, and [[reconstructionCheck]] is the write-time guard that
-  * the codes actually bound the error they promise.
+  * embeddings. Symmetric rounding bounds every dimension's
+  * reconstruction error |x − code·scale| by scale/2 (QuantizeSpec).
   */
 object Quantize {
 
@@ -57,22 +57,4 @@ object Quantize {
           sequence(lit(1), size(col("codes"))),
           (c, i) => c.cast(LongType) * i.cast(LongType)),
         lit(0L), (acc, v) => acc + v).as("weighted_sum"))
-
-  /** Write-time guard: max reconstruction error |x_i − code_i·scale|
-    * must stay ≤ scale/2 for every dimension of every vector (the bound
-    * symmetric rounding promises). Returns one row: (n_vectors,
-    * n_violations) — a nonzero second column fails the pipeline. */
-  def reconstructionCheck(embeddings: DataFrame): DataFrame = {
-    val joined = int8Codes(embeddings)
-      .join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
-    joined.select(col("vec_id"),
-        when(col("scale") === 0.0d, lit(0))
-          .otherwise(aggregate(
-            zip_with(col("embedding"), col("codes"), (x, c) =>
-              when(abs(x.cast(DoubleType) - c.cast(DoubleType) * col("scale"))
-                  <= col("scale") * 0.5d + lit(1e-12), 0).otherwise(1)),
-            lit(0), (acc, v) => acc + v)).as("bad"))
-      .agg(count(lit(1)).as("n_vectors"),
-        sum(col("bad").cast(LongType)).as("n_violations"))
-  }
 }

@@ -192,15 +192,6 @@ object TextDedup {
       .distinct()
   }
 
-  /** Exact Jaccard similarity between the shingle sets of two columns —
-    * the verification step applied to LSH candidates. */
-  def jaccard(sh1: Column, sh2: Column): Column = {
-    val s1 = array_distinct(sh1); val s2 = array_distinct(sh2)
-    val inter = size(array_intersect(s1, s2))
-    inter.cast(DoubleType) /
-      (size(s1) + size(s2) - inter).cast(DoubleType)
-  }
-
   /** Exact token-set Jaccard verification of (doc_a, doc_b) candidate
     * pairs against `docs`, at hashed-token cost: tokens become xxhash64
     * longs (distinct counts are preserved short of a 2⁻⁶⁴ collision, so

@@ -95,7 +95,7 @@ object TextStats {
     // non-empty marker maps.
     val sorted = markers.toSeq.sortBy(_._1)
     require(sorted.nonEmpty, "languageGuess needs at least one language")
-    val entries = sorted.zipWithIndex.map { case ((lang, words), i) =>
+    val entries = sorted.zipWithIndex.map { case ((_, words), i) =>
       struct(hits(words).as("h"), lit(-i).as("ni"))
     }
     val best = if (entries.size == 1) entries.head else greatest(entries: _*)

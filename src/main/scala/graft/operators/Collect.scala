@@ -23,19 +23,6 @@ object Collect {
       slice(sort_array(collect_list(struct(sortKey.as("k"), payload.as("v")))), 1, k),
       e => e.getField("v"))
 
-  /** Per-group top-k as ROWS (the unbounded-group alternative to
-    * [[orderedLimitedCollect]]): window row_number ≤ k keeps per-group
-    * memory at O(1) during the sort instead of collecting the whole
-    * group before slicing — the form to use when groups can be huge. */
-  def topKPerKeyWindow(df: org.apache.spark.sql.DataFrame, keys: Seq[String],
-      order: Seq[Column], k: Int): org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
-  }
-
   /** ARRAY_AGG(DISTINCT x IGNORE NULLS) with deterministic order
     * (site_reports_next_action/view.sql:4-6). */
   def sortedSet(c: Column): Column =

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction — the table-hygiene operator every long-lived
   * 100 TB lake needs: streaming ingestion and per-trigger sinks leave

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Per-bug historic state reconstruction (SURVEY §2.11 I2): walk the
   * change history backwards from the current state, un-applying each
@@ -69,7 +69,7 @@ object HistoricStates {
   }
 
   /** Distributed form: one reconstruction per bug via typed mapGroups. */
-  def historicStates(spark: SparkSession, histories: Dataset[BugHistory]): Dataset[BugStates] = {
+  def historicStates(histories: Dataset[BugHistory]): Dataset[BugStates] = {
     implicit val enc = Encoders.product[BugStates]
     histories.groupByKey(_.number)(Encoders.scalaLong)
       .mapGroups { (number, rows) =>

@@ -1,40 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Batch-watermark incremental utilities (SURVEY §2.11): the reference
-  * implements "streaming" as manual MAX(ts) watermarks + filtered
-  * re-runs; these helpers are that pattern as a library.
+/** Incremental-run utilities (SURVEY §2.11): the reference implements
+  * "streaming" as filtered re-runs guarded by these checks.
   *
   * Reference shapes:
-  *  - last-run watermark then fetch `changedafter`
-  *    (webcompat-kb etl/bugzilla.py:1181-1190)
-  *  - daily rollup bounded by a late-data lag guard
-  *    (etl/user_reports_aggregate.py:10-53: only (watermark, today−2])
-  *  - once-per-day snapshot skip (etl/metric.py:23-56)
   *  - missed-work reconciliation anti-join
   *    (broken-site-report-ml/main.py:206-226)
   *  - row-count-stability gate (etl/siterank.py:296-358)
   */
 object Incremental {
-
-  /** Current watermark of a target table: MAX(tsCol), None when empty. */
-  def watermark(target: DataFrame, tsCol: String): Option[java.sql.Timestamp] =
-    target.agg(max(col(tsCol))).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[java.sql.Timestamp]))
-
-  /** Rows newer than the watermark and older than the lag guard —
-    * the `(latest_stored, now - lagDays]` window. */
-  def incrementalWindow(src: DataFrame, tsCol: String,
-      wm: Option[java.sql.Timestamp], upperExclusive: Column): DataFrame = {
-    val lower = wm.map(w => col(tsCol) > lit(w)).getOrElse(lit(true))
-    src.filter(lower && col(tsCol) < upperExclusive)
-  }
-
-  /** Once-per-day snapshot skip: true when a snapshot for `day` exists. */
-  def snapshotExists(target: DataFrame, dayCol: String, day: java.sql.Date): Boolean =
-    !target.filter(col(dayCol) === lit(day)).isEmpty
 
   /** Missed-work reconciliation: source rows never processed (anti-join
     * on the processed-keys table). */

@@ -48,9 +48,8 @@ object QuantileSketch {
     * byCols..., n_rows, n_sketches, est_<name>... */
   def mergeEstimate(sketches: DataFrame, byCols: Seq[String], w: Double,
       ps: Seq[(String, Int, Int)]): DataFrame = {
-    SumSparseHistograms.register(sketches.sparkSession)
     val merged = sketches.groupBy(byCols.map(col): _*)
-      .agg(expr("hist_sum(sketch)").as("_m"),
+      .agg(expr("sum_sparse_histograms(sketch)").as("_m"),
         sum(col("n_rows")).as("n_rows"),
         count(lit(1)).as("n_sketches"))
     val keyCols = byCols.map(col) ++ Seq(col("n_rows"), col("n_sketches"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -56,13 +56,4 @@ object Scd2 {
       .select(col(key), col(attr), col("valid_from"), col("valid_to"),
         col("is_current"), col("version"))
   }
-
-  /** Point-in-time lookup against a built dimension: the version of
-    * each entity valid at instant `at` (half-open interval semantics:
-    * valid_from <= at < valid_to). A plain range predicate — with the
-    * dimension stored sorted by (key, valid_from), parquet min/max
-    * stats skip every closed episode file. */
-  def asOf(dim: DataFrame, at: Column): DataFrame =
-    dim.filter(col("valid_from") <= at &&
-      (col("valid_to").isNull || col("valid_to") > at))
 }

@@ -78,11 +78,3 @@ case class SumSparseHistograms(
     copy(child = newChild)
   override def prettyName: String = "hist_sum"
 }
-
-object SumSparseHistograms {
-  /** Register as a SQL-callable function; use via expr("hist_sum(col)"). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hist_sum", exprs => SumSparseHistograms(exprs.head).toAggregateExpression(),
-      "scala_udf")
-}

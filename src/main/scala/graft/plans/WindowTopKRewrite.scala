@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Ascending, Attribute, AttributeReference, Cast, DenseRank, EqualTo, Expression, GetStructField, GreaterThan, GreaterThanOrEqual, IntegerLiteral, LessThan, LessThanOrEqual, Literal, NullsFirst, PosExplode, Rank, RowNumber, SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
-import org.apache.spark.sql.catalyst.expressions.{CurrentRow, RowFrame, UnboundedPreceding}
+import org.apache.spark.sql.catalyst.expressions.{CurrentRow, UnboundedPreceding}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
@@ -59,7 +59,7 @@ object WindowTopKRewrite extends Rule[LogicalPlan] {
       tryRewrite(cond, w).getOrElse(f)
     // the analyzer's ExtractWindowExpressions leaves a pure column-
     // reordering Project over the Window node — rewrite through it
-    case f @ Filter(cond, p @ Project(projList, w: Window))
+    case f @ Filter(cond, Project(projList, w: Window))
         if projList.forall(_.isInstanceOf[Attribute]) =>
       tryRewrite(cond, w).map(r => Project(projList, r)).getOrElse(f)
   }

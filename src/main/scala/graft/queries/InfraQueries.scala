@@ -908,7 +908,7 @@ object InfraQueries {
     // duplicate change dedup, and a unified-diff REVERSE apply on the
     // user story (metric_changes.py:183-225 semantics). The oracle pins
     // the hand-derived golden states.
-    "q312_historic_states" -> ((s, dir) => {
+    "q312_historic_states" -> ((s, _) => {
       import graft.operators.HistoricStates._
       import s.implicits._
       val histories = Seq(
@@ -932,7 +932,7 @@ object InfraQueries {
             BugChange("2024-02-01T00:00:00Z",
               Seq(FieldChange("cf_user_story", "",
                 "@@ -1,2 +1,2 @@\n-platform:linux\n+platform:windows\n impact:high"))))))
-      historicStates(s, histories.toDS())
+      historicStates(histories.toDS())
         .flatMap(b => b.states.zipWithIndex.map { case (st, i) =>
           (b.number, i.toLong, st.status, st.product, st.component,
             st.keywords.mkString(","), st.url, st.userStory)

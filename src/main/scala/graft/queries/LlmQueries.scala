@@ -422,7 +422,6 @@ object LlmQueries {
     // integer dot products (floor(v·2^20) longs) → engine-identical
     // values.
     "q81_embedding_neardup" -> ((s, dir) => {
-      graft.functions.DotProductF32.register(s)
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), col("embedding"),
           Ann.norm2Exact(col("embedding")).as("n2"))
@@ -447,7 +446,7 @@ object LlmQueries {
         .withColumn("ndb",
           sqrt(col("nb").cast(DoubleType)) / lit(math.pow(2, 20)))
         .withColumn("cos_fast",
-          expr("dot_f32(ea, eb)") / (col("nda") * col("ndb")))
+          expr("dot_product_f32(ea, eb)") / (col("nda") * col("ndb")))
         .filter(col("cos_fast") >= lit(0.3) -
           lit(2.0 * math.pow(2, -20)) * size(col("ea")).cast(DoubleType) *
             (lit(1.0) / col("nda") + lit(1.0) / col("ndb")))
@@ -914,7 +913,7 @@ object LlmQueries {
     // checksums and integer inertia.
     "q123_kmeans" -> ((s, dir) => {
       graft.llm.KMeans.report(
-        graft.llm.KMeans.fit(s, t(s, dir, "embeddings"), k = 8, iters = 2))
+        graft.llm.KMeans.fit(t(s, dir, "embeddings"), k = 8, iters = 2))
     }),
 
     // Deterministic shard export: md5-derived shard id, write partitioned
@@ -1586,8 +1585,7 @@ object LlmQueries {
     // order-independent — see the operator Scaladoc). Published in
     // EXPLODED (doc, pos, m, n) scalar form: r11's ARRAY<DOUBLE>
     // publish crashed the driver's pandas comparator (numpy arrays
-    // are unhashable under sort_values — CORRECTNESS_r11 q185); the
-    // array form stays available as Pooling.meanPool.
+    // are unhashable under sort_values — CORRECTNESS_r11 q185).
     "q185_embed_pool" -> ((s, dir) => {
       graft.llm.Pooling.meanPoolCells(t(s, dir, "embeddings"),
           expr("vec_id div 4"), col("embedding"))

@@ -606,7 +606,6 @@ object SourceQueries {
     // exact decimal sums inside the group function keep it
     // order-independent and oracle-comparable.
     "q104_segment_models" -> ((s, dir) => {
-      import org.apache.spark.sql.Row
       val e = t(s, dir, "events")
         .select(col("event_type"), hour(col("ts")).as("x"), col("value").as("y"))
       val grouped = e.groupByKey(r => r.getString(0))(Encoders.STRING)
@@ -644,7 +643,7 @@ object SourceQueries {
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
       val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
-      SegmentForecast.runCV(s, obs).toDF()
+      SegmentForecast.runCV(obs).toDF()
         .select(col("segment"), col("kind"), col("window"),
           round(col("cv_bias"), 8).as("cv_bias"),
           round(col("f1"), 6).as("f1"), round(col("f2"), 6).as("f2"),
@@ -800,7 +799,7 @@ object SourceQueries {
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
       val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
-      SegmentForecast.runCV(s, obs, grid = SegmentForecast.wideGrid).toDF()
+      SegmentForecast.runCV(obs, grid = SegmentForecast.wideGrid).toDF()
         .select(col("segment"), col("kind"),
           round(col("cv_bias"), 8).as("cv_bias"),
           round(col("f1"), 6).as("f1"), round(col("f2"), 6).as("f2"),
@@ -815,8 +814,8 @@ object SourceQueries {
     // residuals form the bootstrap pool, and path i's step-h draw picks
     // pool index md5("segment|i|h") mod n — an engine-portable seeded
     // RNG, so DuckDB recomputes every draw. The 1000×3 matrix is then
-    // reduced through the same row-axis mean/p10/p50/p90 HOFs as q61 /
-    // ForecastSummary — fit → paths → summary, end-to-end oracle-checked.
+    // reduced through the same row-axis mean/p10/p50/p90 HOFs as q61 —
+    // fit → paths → summary, end-to-end oracle-checked.
     // F8 interval closure (r15 ask #2) — CHANGEPOINT-AWARE predictive
     // intervals: Prophet's interval semantics (prophet_forecast.py:
     // 52-59 — trend uncertainty grows past the last changepoint
@@ -838,7 +837,7 @@ object SourceQueries {
       implicit val obsEnc = Encoders.product[SegmentForecast.Obs]
       val obs = dailySeries(s, dir, DoubleType).select(col("segment"), col("x"), col("y"))
         .as[SegmentForecast.Obs]
-      SegmentForecast.runCvPaths(s, obs, nPaths = 1000, horizon = 3).toDF()
+      SegmentForecast.runCvPaths(obs, nPaths = 1000, horizon = 3).toDF()
         .select(col("segment"), col("h"),
           round(Stats.arrayMean(col("samples")), 6).as("mean"),
           round(Stats.arrayPercentile(col("samples"), 0.1), 6).as("p10"),

@@ -14,16 +14,14 @@ import graft.util.Scratch
   * synchronous batch via processAllAvailable.
   *
   * Every runner is one bounded AvailableNow query over [[fileStream]],
-  * started in [[runBounded]]; [[checkpointedAppendRun]] shares the
-  * reader and the start/await code but owns no cap. The runner's
-  * contract:
+  * started in [[runBounded]]. The runner's contract:
   *  - Output dir: the runner owns it. It is
   *    `Scratch.fresh("<queryName>|<source>")`, so a rerun with the same
   *    name and source deletes the previous run's output and the last
-  *    one is swept at JVM exit. Only [[checkpointedAppendRun]] writes
-  *    to a dir its caller owns, and the versioned-state runners
-  *    ([[cdcUpsertStream]], [[heavyHittersStream]]) rotate versions in
-  *    the caller's `stateDir`.
+  *    one is swept at JVM exit. Only the versioned-state runners
+  *    ([[cdcUpsertStream]], [[heavyHittersStream]]) write to a dir
+  *    their caller owns: they rotate versions in `stateDir`, which
+  *    holds only the newest one.
   *  - Partition cap: `spark.sql.shuffle.partitions` is capped at
   *    min(ceiling, the session's value) from before `start()` until
   *    the query ends, so it sizes the state stores and every frame a
@@ -94,8 +92,7 @@ object StreamOps {
     * every frame a trigger plans, on `batch.sparkSession` and on the
     * caller's session alike; a cap set inside `sink` would reach only
     * the latter. The checkpoint is Spark's temporary one: these runs
-    * are single-shot by design (the restartable form is
-    * [[checkpointedAppendRun]]). */
+    * are single-shot by design. */
   private def runBounded(df: DataFrame, mode: String, ceiling: Int)(
       sink: (DataFrame, Long) => Unit): Unit =
     withStatePartitions(df.sparkSession, ceiling) {
@@ -126,8 +123,9 @@ object StreamOps {
   /** A state table folded over a stream in whole parquet versions:
     * `v0` is written to `$stateDir/v0`, and each trigger `id` reads
     * version `cur` with the schema it was written with and writes
-    * `step(state, batch)` to `$stateDir/v${id + 1}`. Returns the last
-    * version. */
+    * `step(state, batch)` to `$stateDir/v${id + 1}`, then deletes
+    * version `cur`: only the newest version is ever read, so the dir
+    * holds one version between triggers. Returns the last version. */
   private def versionedFold(src: DataFrame, stateDir: String, v0: DataFrame,
       ceiling: Int)(step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val spark = src.sparkSession
@@ -138,6 +136,7 @@ object StreamOps {
     runBounded(src, "append", ceiling) { (batch, id) =>
       val next = step(spark.read.schema(curSchema).parquet(vPath(cur)), batch)
       next.write.mode("overwrite").parquet(vPath(id + 1))
+      Scratch.delete(vPath(cur))
       cur = id + 1
       curSchema = next.schema
     }
@@ -344,23 +343,6 @@ object StreamOps {
         s"$queryName|$stagedDir", "append", 4)
       .filter(col("a_user") >= 0)
   }
-
-  /** One AvailableNow pass of an append passthrough with an EXPLICIT
-    * checkpoint: the exactly-once resume primitive. Re-running with the
-    * same checkpoint after new source files arrive processes ONLY the
-    * unseen files — the offset log, not the sink, carries the progress.
-    * (The temp-checkpoint runners above are single-shot by design; this
-    * is the restartable form a production ingest uses, spec-asserted
-    * for no-duplicates across a stop/resume in StreamOpsSpec.) The
-    * caller owns both the checkpoint and the output dir. */
-  def checkpointedAppendRun(spark: SparkSession, srcDir: String,
-      schema: StructType, checkpointDir: String, outDir: String): Unit =
-    awaitAvailableNow(fileStream(spark, srcDir, schema).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(SaveMode.Append).parquet(outDir)
-      })
 
   /** Stream-static enrichment: a streaming fact joined per micro-batch
     * against a (broadcast) static dimension — the standard "enrich on

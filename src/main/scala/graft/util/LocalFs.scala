@@ -1,10 +1,11 @@
 package graft.util
 
-import java.io.File
+import java.io.{File, FileNotFoundException}
 import java.net.URI
-import java.nio.file.{FileSystems, Files, InvalidPathException}
-import java.nio.file.attribute.PosixFilePermission
+import java.nio.file.{FileSystems, Files, InvalidPathException, LinkOption, NoSuchFileException}
+import java.nio.file.attribute.{FileTime, PosixFilePermission, UserPrincipal}
 
+import scala.annotation.unused
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -21,8 +22,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `getFileLinkStatus`, which `FileContext` calls on both sides of each
   * rename. A parquet commit pays the first; Spark's streaming metadata,
   * offsets, commits and state-store deltas (all written through
-  * `FileContext`) pay both. Each fork+exec costs milliseconds from a
-  * large-heap JVM; the `java.nio.file` calls below cost microseconds.
+  * `FileContext`) pay both. Its file statuses fork `ls -ld` the first
+  * time anything asks for their permission, owner or group, which
+  * `FileSystem.listFiles` does for every file it lists. Each fork+exec
+  * costs milliseconds from a large-heap JVM; the `java.nio.file` calls
+  * below cost microseconds.
   *
   * Both are registered for the `file` scheme in `core-site.xml` (Hadoop's
   * default resource, read by every `Configuration`): `fs.file.impl` for
@@ -49,10 +53,42 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
     * takes Hadoop's path. */
   override def getFileLinkStatus(f: Path): FileStatus =
     if (isSymlink(f)) super.getFileLinkStatus(f) else getFileStatus(f)
+
+  /** Hadoop's status with every field read by one `lstat` in-process:
+    * the mode's nine bits plus the sticky bit (what Hadoop parses out of
+    * `ls -ld`), and the owner and group names. A symlink, which Hadoop
+    * describes by its target's size and type but its own mode and owner,
+    * and a store without the `unix` view still take Hadoop's path. */
+  override def getFileStatus(f: Path): FileStatus =
+    if (!Unix) super.getFileStatus(f)
+    else {
+      val file = pathToFile(f)
+      val attrs =
+        try Files.readAttributes(file.toPath, StatAttributes, LinkOption.NOFOLLOW_LINKS)
+        catch { case _: NoSuchFileException => throw new FileNotFoundException(s"File $f does not exist") }
+      if (attrs.get("isSymbolicLink") == true) super.getFileStatus(f)
+      else {
+        def millis(k: String) = attrs.get(k).asInstanceOf[FileTime].toMillis
+        def name(k: String) = attrs.get(k).asInstanceOf[UserPrincipal].getName
+        val mode = attrs.get("mode").asInstanceOf[Integer].intValue
+        new FileStatus(attrs.get("size").asInstanceOf[java.lang.Long], attrs.get("isDirectory") == true,
+          1, getDefaultBlockSize(f), millis("lastModifiedTime"), millis("lastAccessTime"),
+          new FsPermission((mode & 0x3ff).toShort), name("owner"), name("group"),
+          new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
+      }
+    }
+
+  /** Hadoop lists a directory through [[getFileStatus]] but builds a
+    * file's own status directly; both go through it here. */
+  override def listStatus(f: Path): Array[FileStatus] =
+    if (Unix && pathToFile(f).isFile) Array(getFileStatus(f)) else super.listStatus(f)
 }
 
 object NioRawLocalFileSystem {
   private val Unix = FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
+
+  private val StatAttributes =
+    "unix:mode,owner,group,size,lastModifiedTime,lastAccessTime,isDirectory,isSymbolicLink"
 
   // PosixFilePermission's declaration order is OWNER_READ (0400) down to
   // OTHERS_EXECUTE (0001)
@@ -77,8 +113,11 @@ object NioRawLocalFileSystem {
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
 /** [[NioRawLocalFileSystem]] for `FileContext`: Hadoop's `LocalFs`
-  * (a `ChecksumFs` over `RawLocalFs`) with the raw filesystem swapped. */
-class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
+  * (a `ChecksumFs` over `RawLocalFs`) with the raw filesystem swapped.
+  * `AbstractFileSystem.get` constructs it reflectively with the
+  * `(URI, Configuration)` signature; the raw filesystem fixes its own
+  * URI (`file:///`). */
+class NioLocalFs(@unused uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
 
 /** Hadoop's `RawLocalFs` (whose constructors are package-private) over
   * [[NioRawLocalFileSystem]]: same URI, default port, server defaults

@@ -40,12 +40,6 @@ class AnnRecallSpec extends SparkTestBase {
     assert(multi.select("qid", "rank").distinct().count() == n)
   }
 
-  test("autoBits scales bucket count with corpus size") {
-    assert(Ann.autoBits(1024L * 1024, targetBucket = 1024) == 10)
-    assert(Ann.autoBits(100, targetBucket = 1024) == 4) // floor
-    assert(Ann.autoBits(1L << 40, targetBucket = 1024) == 30)
-  }
-
   test("PQ-ADC recall vs brute force stays above the pinned floor") {
     val queries = emb.filter(col("vec_id") < 20)
     val truth = pairs(Ann.bruteForceTopK(emb, queries, k = 3))

@@ -86,13 +86,4 @@ class ArrayKernelsSpec extends SparkTestBase {
         4L * (1L << 19) * (1L << 18))
     } finally QDotArr.checked = false
   }
-
-  test("SQL registration exposes dot_arr/dist2_arr") {
-    ArrayKernels.register(spark)
-    import spark.implicits._
-    val df = Seq((Array(1.0f, 2.0f), Array(3.0, 4.0))).toDF("a", "b")
-    val row = df.select(expr("dot_arr(a, b)"), expr("dist2_arr(a, b)")).collect().head
-    assert(row.getDouble(0) == 11.0)
-    assert(row.getDouble(1) == 4.0 + 4.0)
-  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.BloomPrune
 
 class BloomPruneSpec extends SparkTestBase {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Bm25
 
 class Bm25IndexSpec extends SparkTestBase {

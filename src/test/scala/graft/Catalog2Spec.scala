@@ -1,27 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.catalog.{PartitionedTable, QueryValidation}
-import graft.functions.BqShims
+import graft.catalog.QueryValidation
 
 class Catalog2Spec extends SparkTestBase {
-  import spark.implicits._
-
-  test("PartitionedTable: dynamic partition overwrite touches only incoming partitions") {
-    val dir = scratch.dir("pt") + "/t"
-    val tbl = PartitionedTable(spark, dir, "yyyymm")
-    tbl.append(Seq((202401, 1, "a"), (202401, 2, "b"), (202402, 3, "c"))
-      .toDF("yyyymm", "id", "v"))
-    assert(tbl.partitions == Seq("202401", "202402"))
-    // re-import month 202401 with different content; 202402 untouched
-    tbl.overwritePartitions(Seq((202401, 9, "z")).toDF("yyyymm", "id", "v"))
-    val got = tbl.read.orderBy("id").collect()
-      .map(r => (r.getAs[Int]("yyyymm"), r.getAs[Int]("id"))).toSeq
-    assert(got == Seq((202402, 3), (202401, 9)))
-    // idempotent re-run: same result
-    tbl.overwritePartitions(Seq((202401, 9, "z")).toDF("yyyymm", "id", "v"))
-    assert(tbl.read.count() == 2)
-  }
 
   test("QueryValidation: analyzes without executing, catches bad refs") {
     spark.range(3).toDF("id").createOrReplaceTempView("qv_ok")
@@ -51,15 +32,5 @@ class Catalog2Spec extends SparkTestBase {
     assert(third.deployed == Seq("dd_base"), s"deployed: ${third.deployed}")
     assert(third.unchanged.toSet == Set("dd_mid", "dd_top"))
     assert(spark.table("dd_top").collect().head.getLong(0) == 4L) // 2 rows * 2
-  }
-
-  test("correctU64Wraparound: values above 2^63 become negative deltas") {
-    val big = new java.math.BigDecimal("18446744073709551615") // 2^64 - 1
-    val df = Seq("5", "18446744073709551615", "9223372036854775809")
-      .toDF("raw")
-      .select(col("raw").cast("decimal(20,0)").as("u"))
-    val got = df.select(BqShims.correctU64Wraparound(col("u")).as("v"))
-      .collect().map(_.getDecimal(0).longValueExact()).toSeq
-    assert(got == Seq(5L, -1L, -9223372036854775807L))
   }
 }

@@ -5,25 +5,9 @@ import org.apache.spark.sql.types._
 import graft.catalog._
 
 /** Catalog/schema unit tests mirroring the reference's pytest style
-  * (jobs/webcompat-kb/tests/test_bqhelpers.py — id parsing and schema
-  * diff). Pure functions, no SparkSession needed. */
+  * (jobs/webcompat-kb/tests/test_bqhelpers.py). Pure functions, no
+  * SparkSession needed. */
 class CatalogSpec extends AnyFunSuite {
-
-  test("DatasetId parses project:dataset and project.dataset") {
-    assert(DatasetId.fromString("proj:ds") == DatasetId("proj", "ds"))
-    assert(DatasetId.fromString("proj.ds") == DatasetId("proj", "ds"))
-    assert(DatasetId.fromString("ds", Some("p")) == DatasetId("p", "ds"))
-    intercept[RuntimeException](DatasetId.fromString("ds"))
-    intercept[RuntimeException](DatasetId.fromString("a.b.c.d"))
-  }
-
-  test("SchemaId parses all partial forms against defaults") {
-    assert(SchemaId.fromString("p:d.n") == SchemaId("p", "d", "n"))
-    assert(SchemaId.fromString("p.d.n") == SchemaId("p", "d", "n"))
-    assert(SchemaId.fromString("d.n", Some("p")) == SchemaId("p", "d", "n"))
-    assert(SchemaId.fromString("n", Some("p"), Some("d")) == SchemaId("p", "d", "n"))
-    intercept[RuntimeException](SchemaId.fromString("n"))
-  }
 
   test("StagingMapper rewrites datasets except prod-read exceptions") {
     val m = StagingMapper(staging = true, readFromProd = Set("keep_prod"))
@@ -43,27 +27,5 @@ class CatalogSpec extends AnyFunSuite {
       Seq(FieldDef("x", "INT64", FieldMode.Required)))
     assert(rec.sparkType == StructType(Seq(StructField("x", LongType, nullable = false))))
     assert(FieldDef("req", "STRING", FieldMode.Required).sparkField.nullable == false)
-  }
-
-  test("SchemaEvolution: append-only contract") {
-    val cur = StructType(Seq(
-      StructField("a", LongType, nullable = false),
-      StructField("b", StringType)))
-    // adding a nullable field is the only allowed change
-    val okAdd = StructType(cur.fields :+ StructField("c", DoubleType))
-    assert(SchemaEvolution.diff(cur, okAdd).toOption.get.map(_.name) == Seq("c"))
-    // no change → empty diff
-    assert(SchemaEvolution.diff(cur, cur).toOption.get.isEmpty)
-    // deletion refused
-    assert(SchemaEvolution.diff(cur, StructType(cur.fields.take(1))).isLeft)
-    // type change refused
-    val typeChange = StructType(Seq(cur.fields.head, StructField("b", LongType)))
-    assert(SchemaEvolution.diff(cur, typeChange).isLeft)
-    // new REQUIRED field refused
-    val reqAdd = StructType(cur.fields :+ StructField("c", DoubleType, nullable = false))
-    assert(SchemaEvolution.diff(cur, reqAdd).isLeft)
-    // nullable → required refused
-    val tighten = StructType(Seq(cur.fields.head, StructField("b", StringType, nullable = false)))
-    assert(SchemaEvolution.diff(cur, tighten).isLeft)
   }
 }

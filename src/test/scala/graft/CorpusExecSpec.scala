@@ -26,7 +26,7 @@ class CorpusExecSpec extends SparkTestBase {
     assert(a.map(_.getLong(0)).distinct.size == 20, "`number` must be a unique key")
     assert(a.forall(r => !r.isNullAt(0) && !r.isNullAt(4)), "REQUIRED fields never null")
     assert(a.exists(r => r.isNullAt(3)), "nullable fields do go null")
-    val df = SyntheticRows.df(spark, "t", schema, 20)
+    val df = spark.createDataFrame(java.util.Arrays.asList(a: _*), schema)
     assert(df.schema == schema)
     assert(df.count() == 20)
   }

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import graft.dag.{CorpusLint, CorpusLoader, JinjaLite, MetricDefs}
-import graft.dag.JinjaLite.VStr
+import java.nio.file.Files
+import graft.dag.{CorpusLint, CorpusLoader, JinjaLite}
 
 /** The corpus sweep: the reference's entire on-disk SQL tree
   * (data/sql — 13 datasets, 80 tables, 64 views, 16 routines) loaded,

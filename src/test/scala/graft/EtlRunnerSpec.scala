@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SaveMode
-import graft.EtlRunner.{JobSpec, RunReport}
+import graft.EtlRunner.JobSpec
 import graft.catalog.SchemaId
 
 class EtlRunnerSpec extends SparkTestBase {

@@ -55,7 +55,8 @@ class FunctionsSpec extends SparkTestBase {
 
   test("extractArray accepts scalar or array JSON (EXTRACT_ARRAY routine)") {
     def run(json: String): Seq[String] =
-      spark.range(1).select(Routines.extractArray(lit(json), "$.k").as("a"))
+      spark.range(1)
+        .select(Routines.extractArrayV(BqShims.jsonVariant(lit(json)), "$.k").as("a"))
         .collect().head.getSeq[String](0)
     assert(run("""{"k": ["a", " b "]}""") == Seq("a", "b"))
     assert(run("""{"k": "solo"}""") == Seq("solo"))
@@ -91,7 +92,8 @@ class FunctionsSpec extends SparkTestBase {
       (Seq("webcompat:sitepatch-applied"), """{"impact":"low","platform":"windows"}"""))
       .toDF("keywords", "user_story")
     val got = df.select(
-      Routines.scoreNoSiteRank(weights)(col("keywords"), col("user_story"))
+      Routines.scoreNoSiteRankV(weights)(col("keywords"),
+        BqShims.jsonVariant(col("user_story")))
         .cast("double").as("s")).collect().map(_.getDouble(0)).toSeq
     // severe(10) * (windows 2 + linux 3) * general 1 * all 2 * none 1 * release 1
     assert(got.head == 10 * 5 * 1 * 2 * 1 * 1)
@@ -110,36 +112,6 @@ class FunctionsSpec extends SparkTestBase {
     val got = df.select(Routines.siteRankModifier(col("g"), col("c"), col("l"), col("ov"))
       .cast("double").as("m")).collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(15.0, 10.0, 7.5, 15.0, 1.0))
-  }
-
-  test("cruxDataset: default wins; falls back to latest import run; errors empty") {
-    assert(Routines.cruxDataset(None) == 202409L)
-    val runs = Seq(202401L, 202406L, 202403L).toDF("yyyymm")
-    assert(Routines.cruxDataset(Some(runs), default = None) == 202406L)
-    assert(Routines.cruxDataset(Some(runs.filter(col("yyyymm") > 999999L)),
-      default = Some(202409L)) == 202409L)
-    intercept[RuntimeException](
-      Routines.cruxDataset(Some(runs.filter(col("yyyymm") > 999999L)), default = None))
-    val y = spark.range(1).select(Routines.webcompatMetricYyyymm()).collect().head.getLong(0)
-    assert(y == 202603L)
-  }
-
-  test("shims: dateArray / containsSubstr / safeCastLong / farmFingerprint") {
-    val arr = spark.range(1).select(BqShims.dateArray(
-      lit(java.sql.Date.valueOf("2024-01-01")),
-      lit(java.sql.Date.valueOf("2024-01-05")), 2).as("a"))
-      .collect().head.getSeq[java.sql.Date](0)
-    assert(arr.map(_.toString) == Seq("2024-01-01", "2024-01-03", "2024-01-05"))
-    val r = spark.range(1).select(
-      BqShims.containsSubstr(lit("Hello World"), "WORLD").as("c1"),
-      BqShims.containsSubstr(lit("Hello"), "nope").as("c2"),
-      BqShims.safeCastLong(lit("123")).as("ok"),
-      BqShims.safeCastLong(lit("12x")).as("bad"),
-      BqShims.farmFingerprint(lit("abc")).as("h1"),
-      BqShims.farmFingerprint(lit("abc")).as("h2")).collect().head
-    assert(r.getBoolean(0) && !r.getBoolean(1))
-    assert(r.getLong(2) == 123L && r.isNullAt(3))
-    assert(r.getLong(4) == r.getLong(5)) // stable hash
   }
 
   test("pg-array translate → JSON array (pg_dump_to_parquet.py:172-173)") {

@@ -64,6 +64,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(mentioning("SparkSession.builder").toSet == Set(
       Paths.get("src/main/scala/graft/GraftSession.scala"), Paths.get("src/test/scala/graft/LocalFsSpec.scala")))
     assert(mentioning("registerFunction").isEmpty)
+    assert(mentioning("createOrReplaceTempFunction").isEmpty)
     assert(mentioning("extraOptimizations").isEmpty)
   }
 

@@ -45,7 +45,7 @@ class HistoricStatesSpec extends SparkTestBase {
     val ds = Seq(
       BugHistory(1L, current, changes),
       BugHistory(2L, BugState("NEW", "Core", "Layout", Seq.empty, "", ""), Seq.empty)).toDS()
-    val out = HistoricStates.historicStates(spark, ds).collect()
+    val out = HistoricStates.historicStates(ds).collect()
       .map(b => b.number -> b.states).toMap
     assert(out(1L).length == 3)
     assert(out(2L) == Seq(BugState("NEW", "Core", "Layout", Seq.empty, "", "")))

@@ -9,7 +9,7 @@ class KMeansSpec extends SparkTestBase {
   private lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   test("fit partitions the corpus: every vector in exactly one cluster, ids in [0,k)") {
-    val fit = KMeans.fit(spark, emb, k = 4, iters = 2)
+    val fit = KMeans.fit(emb, k = 4, iters = 2)
     assert(fit.count() == emb.count())
     val clusters = fit.select("cluster").distinct().as[Int].collect().toSet
     assert(clusters.subsetOf((0 until 4).toSet))
@@ -18,9 +18,9 @@ class KMeansSpec extends SparkTestBase {
   }
 
   test("fit is deterministic and partitioning-invariant (bit-stable)") {
-    val a = KMeans.report(KMeans.fit(spark, emb, k = 4, iters = 2))
+    val a = KMeans.report(KMeans.fit(emb, k = 4, iters = 2))
       .collect().map(_.toString).toSeq
-    val b = KMeans.report(KMeans.fit(spark, emb.repartition(7), k = 4, iters = 2))
+    val b = KMeans.report(KMeans.fit(emb.repartition(7), k = 4, iters = 2))
       .collect().map(_.toString).toSeq
     assert(a == b)
   }
@@ -29,7 +29,7 @@ class KMeansSpec extends SparkTestBase {
     // with iters=0 the assignment runs against the raw init centroids:
     // vector j (j < k) must land in cluster j at distance 0 (ties break
     // to the lowest id, and no distance beats 0)
-    val fit0 = KMeans.fit(spark, emb, k = 4, iters = 0)
+    val fit0 = KMeans.fit(emb, k = 4, iters = 0)
       .filter(col("vec_id") < 4).orderBy("vec_id").collect()
     fit0.zipWithIndex.foreach { case (r, j) =>
       assert(r.getAs[Long]("d2") == 0L)
@@ -45,7 +45,7 @@ class KMeansSpec extends SparkTestBase {
       (0L, Array(1.0f, 0.0f)), (1L, Array(1.0f, 0.0f)),
       (2L, Array(0.9f, 0.1f)), (3L, Array(-1.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val rep = KMeans.report(KMeans.fit(spark, dup, k = 2, iters = 2))
+    val rep = KMeans.report(KMeans.fit(dup, k = 2, iters = 2))
       .orderBy("cluster").collect()
     // cluster 1 never gets a member; cluster 0 holds 0,1,2 and 3 may
     // form its own via the update pulling centroid 0 toward the mean —
@@ -56,7 +56,7 @@ class KMeansSpec extends SparkTestBase {
 
   test("more iterations do not increase integer inertia on the real corpus") {
     def inertia(iters: Int): Long =
-      KMeans.report(KMeans.fit(spark, emb, k = 4, iters = iters))
+      KMeans.report(KMeans.fit(emb, k = 4, iters = iters))
         .agg(sum("inertia")).as[Long].head()
     // Lloyd descent (exact means) survives the integer rounding here;
     // guards against an assignment/update wiring regression

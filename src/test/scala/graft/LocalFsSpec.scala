@@ -13,7 +13,8 @@ import scala.util.Try
 
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
@@ -41,6 +42,19 @@ class LocalFsSpec extends SparkTestBase {
   private def mode(p: Path): Int =
     Files.getAttribute(Paths.get(p.toUri), "unix:mode").asInstanceOf[Integer].intValue & 0xfff
   private def octal(s: String) = new FsPermission(Integer.parseInt(s, 8).toShort)
+
+  /** Every field of a status, or the class of what the call threw.
+    * Hadoop's statuses load permission, owner and group only through
+    * their getters, which its `toString` skips. */
+  private def outcome(status: => Any): Either[Class[_], String] = {
+    def show(st: FileStatus) = Seq(st.getPath, st.isDirectory, st.getLen, st.getReplication,
+      st.getBlockSize, st.getModificationTime, st.getAccessTime, st.getPermission, st.getOwner,
+      st.getGroup, st.isSymlink, if (st.isSymlink) st.getSymlink else "").mkString("; ")
+    Try(status match {
+      case all: Array[FileStatus] => all.map(show).sorted.mkString("\n")
+      case one: FileStatus => show(one)
+    }).toEither.left.map(_.getClass)
+  }
 
   test("file: resolves to graft's filesystems in a GraftSession") {
     val hc = spark.sparkContext.hadoopConfiguration
@@ -102,8 +116,6 @@ class LocalFsSpec extends SparkTestBase {
     Files.createDirectory(Paths.get(dir, "dir"))
     Files.createSymbolicLink(Paths.get(dir, "link"), Paths.get(dir, "file"))
     Files.createSymbolicLink(Paths.get(dir, "dangling"), Paths.get(dir, "nowhere"))
-    def outcome(status: => org.apache.hadoop.fs.FileStatus): Either[Class[_], String] =
-      Try(status.toString).toEither.left.map(_.getClass)
     // a qualified path (what FileContext's callers pass) never reads as
     // a symlink in Hadoop's either: its readlink names `file:/...`
     // relative to the working directory
@@ -116,6 +128,24 @@ class LocalFsSpec extends SparkTestBase {
     assert(graftFc.getFileLinkStatus(new Path(s"$dir/link")).isSymlink)
     intercept[FileNotFoundException](graftRaw.getFileLinkStatus(new Path(s"file:$dir/missing")))
     intercept[FileNotFoundException](graftFc.getFileLinkStatus(new Path(s"file:$dir/missing")))
+  }
+
+  test("getFileStatus and listStatus match Hadoop's on files, directories and symlinks") {
+    val dir = scratch.dir("localfs_status")
+    Files.write(Paths.get(dir, "file"), "abc".getBytes)
+    Files.createDirectory(Paths.get(dir, "dir"))
+    Files.createDirectory(Paths.get(dir, "sticky"))
+    Files.setAttribute(Paths.get(dir, "sticky"), "unix:mode", Integer.valueOf(Integer.parseInt("1777", 8)))
+    Files.createSymbolicLink(Paths.get(dir, "link"), Paths.get(dir, "file"))
+    Files.createSymbolicLink(Paths.get(dir, "dirlink"), Paths.get(dir, "dir"))
+    Files.createSymbolicLink(Paths.get(dir, "dangling"), Paths.get(dir, "nowhere"))
+    for (name <- Seq("", "file", "dir", "sticky", "link", "dirlink", "dangling", "missing");
+         path <- Seq(new Path(s"$dir/$name"), new Path(s"file:$dir/$name"))) {
+      assert(outcome(graftRaw.getFileStatus(path)) == outcome(stockRaw.getFileStatus(path)), path)
+      assert(outcome(graftRaw.listStatus(path)) == outcome(stockRaw.listStatus(path)), path)
+    }
+    assert(graftRaw.getFileStatus(new Path(s"file:$dir/sticky")).getPermission == octal("1777"))
+    intercept[FileNotFoundException](graftRaw.getFileStatus(new Path(s"file:$dir/missing")))
   }
 
   test("a parquet write, table reads and a q94 run start no chmod, readlink, ls or stat") {
@@ -132,6 +162,14 @@ class LocalFsSpec extends SparkTestBase {
       rs.startAsync()
       spark.range(1000).selectExpr("id", "id % 7 AS k").write.parquet(s"$dir/out.parquet")
       Seq("out", "out").foreach(graft.util.Tables.t(spark, dir, _).collect())
+      // a LocatedFileStatus copies its status's owner, group and permission
+      val fs = FileSystem.get(root, spark.sparkContext.hadoopConfiguration)
+      val listed = fs.listFiles(new Path(s"file:$dir"), true)
+      var files = 0
+      while (listed.hasNext) { listed.next(); files += 1 }
+      assert(files > 1)
+      val status = fs.getFileStatus(new Path(s"file:$dir/out.parquet"))
+      assert(status.getOwner.nonEmpty && status.getGroup.nonEmpty && status.getPermission != null)
       SparkEntry.queries("q94_stream_window")(spark, sfDir).collect()
       // Hadoop's own filesystem still forks, so the recording sees it
       val probe = Files.createFile(Paths.get(dir, "probe"))

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.llm.{Decontaminate, MixtureSample}
+import graft.llm.{Decontaminate, MixtureSample, TextDedup}
 
 class MixDecontamSpec extends SparkTestBase {
   import spark.implicits._
 
   test("ngrams: sliding window, short docs fall back to whole text") {
     val got = Seq(("a b c d", 1), ("a b", 2)).toDF("text", "k")
-      .select(col("k"), Decontaminate.ngrams(col("text"), 3).as("g"))
+      .select(col("k"), array_distinct(TextDedup.shingles(col("text"), 3)).as("g"))
       .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
     assert(got(1) == Seq("a b c", "b c d"))
     assert(got(2) == Seq("a b"))

@@ -8,7 +8,6 @@ import graft.llm.MlService.FakeModel
   * batched JSON POSTs from mapPartitions, retry-until-ready, API key),
   * the model deterministic (broken_site_report_ml/main.py:13-66). */
 class MlServiceSpec extends SparkTestBase {
-  import spark.implicits._
 
   private def reports(n: Int) =
     spark.range(0, n).select(col("id").as("uuid"),

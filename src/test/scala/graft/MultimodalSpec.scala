@@ -4,50 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.llm.Multimodal
 
 class MultimodalSpec extends SparkTestBase {
-  import spark.implicits._
-
-  private def media = Multimodal.syntheticMedia(
-    Seq((1L, "x" * 4096), (2L, "y" * 2048), (3L, "z" * 100))
-      .toDF("doc_id", "text"))
-
-  test("bytesBoundedRepartition sizes partitions by payload volume") {
-    val parts = Multimodal.bytesBoundedRepartition(media, targetBytes = 2048)
-      .rdd.getNumPartitions
-    // 6244 payload bytes / 2048 target -> ceil = 4
-    assert(parts == 4)
-    assert(Multimodal.bytesBoundedRepartition(media, targetBytes = 1L << 30)
-      .rdd.getNumPartitions == 1)
-  }
-
-  test("frameSample fans one row out to strided fixed-size frames") {
-    val frames = Multimodal.frameSample(spark, media, frameBytes = 1024, stride = 2)
-      .collect()
-    // doc 1: 4 frames -> idx 0,2; doc 2: 2 frames -> idx 0; doc 3: none
-    assert(frames.map(f => (f.doc_id, f.frame_idx)).toSet ==
-      Set((1L, 0), (1L, 2), (2L, 0)))
-    assert(frames.forall(_.frame_bytes.length == 1024))
-  }
-
-  test("resize preserves aspect and is a no-op inside the box") {
-    // Array fields use reference equality; compare value projections
-    def key(f: Multimodal.MediaFeatures) =
-      (f.doc_id, f.media_type, f.byte_len, f.width, f.height, f.feature.toSeq)
-    val feats = Multimodal.decodeFeatures(spark, media)
-    val small = Multimodal.resize(feats, 10000, 10000).collect()
-    assert(small.map(key).toSet == feats.collect().map(key).toSet)
-    val boxed = Multimodal.resize(feats, 64, 64).collect()
-    assert(boxed.forall(f => f.width <= 64 && f.height <= 64 && f.width >= 1))
-    // deterministic across runs
-    assert(Multimodal.resize(feats, 64, 64).collect().map(key).sortBy(_._1).toSeq ==
-      boxed.map(key).sortBy(_._1).toSeq)
-  }
-
-  test("decodeFeatures emits fixed-size features, never the payload") {
-    val feats = Multimodal.decodeFeatures(spark, media, dim = 8).collect()
-    assert(feats.length == 3)
-    assert(feats.forall(_.feature.length == 8))
-    assert(feats.map(_.byte_len).sorted.toSeq == Seq(100, 2048, 4096))
-  }
 
   test("PNG encode/decode round-trip recovers the closed-form pixels") {
     import spark.implicits._
@@ -113,7 +69,6 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("decodeImageStats is iterator-based: rows stream, payloads are not retained") {
-    import spark.implicits._
     // many docs in ONE partition: if the partition's payloads were
     // materialized, this would be ~200 images held at once; the iterator
     // contract means peak live payloads stay O(1). Proxy check: the

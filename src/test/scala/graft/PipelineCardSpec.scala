@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Scale-robustness guards for the q271 fused pipeline card (r13

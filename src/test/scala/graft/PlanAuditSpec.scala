@@ -214,7 +214,6 @@ class PlanAuditSpec extends SparkTestBase {
       conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      import spark.implicits._
       // 90% of fact rows share key 1 — one hot shuffle partition
       val fact = spark.range(0, 300000)
         .select(when(pmod(col("id"), lit(10)) < 9, 1L).otherwise(col("id")).as("k"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.llm.Pooling
@@ -36,15 +35,6 @@ class PoolingSpec extends SparkTestBase {
     val b = Pooling.meanPoolCells(vecs.coalesce(1), col("g"), col("vec"))
       .orderBy("g", "pos").collect().toSeq
     assert(a == b)
-  }
-
-  test("array form rebuilds dimension order") {
-    val out = Pooling.meanPool(vecs.filter(col("g") === 0L), col("g"),
-      col("vec")).collect()
-    assert(out.length == 1)
-    assert(out.head.getSeq[Double](out.head.fieldIndex("pooled")).toSeq ==
-      Seq(2.0, 1.0, 1.0))
-    assert(out.head.getAs[Long]("dim") == 3L)
   }
 
   test("max pooling takes per-dimension maxima") {

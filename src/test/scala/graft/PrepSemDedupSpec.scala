@@ -82,11 +82,10 @@ class PrepSemDedupSpec extends SparkTestBase {
       (3L, "short", "en", 5L),
       (4L, "el zorro rapido salta sobre el perro se duerme pronto hoy si", "es", 200L))
       .toDF("doc_id", "text", "lang", "n_chars")
-    val audit = PrepPipeline.audit(docs, Seq(
-      PrepPipeline.Stage("min_length", _.filter(col("n_chars") >= 100)),
-      PrepPipeline.Stage("lang_en", _.filter(col("lang") === "en")),
-      PrepPipeline.Stage("exact_dedup",
-        _.select(md5(lower(col("text"))).as("k")).distinct())))
+    val audit = PrepPipeline.auditOnePass(docs, Seq(
+        "min_length" -> (col("n_chars") >= 100),
+        "lang_en" -> (col("lang") === "en")),
+      dedupKey = Some("exact_dedup" -> md5(lower(col("text")))))
       .orderBy("stage_idx")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
     assert(audit.toSeq == Seq(
@@ -116,12 +115,5 @@ class PrepSemDedupSpec extends SparkTestBase {
         .agg(sum("n")).collect()(0).getLong(0)
       assert(perShard.map(_.getLong(1)).sum == raw)
     } finally packed.unpersist()
-  }
-
-  test("run returns the final surviving frame") {
-    val docs = Seq((1L, "en"), (2L, "es")).toDF("doc_id", "lang")
-    val out = PrepPipeline.run(docs, Seq(
-      PrepPipeline.Stage("lang_en", _.filter(col("lang") === "en"))))
-    assert(out.collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 }

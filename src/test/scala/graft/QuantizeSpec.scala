@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llm.Quantize
 
 class QuantizeSpec extends SparkTestBase {
@@ -20,9 +19,18 @@ class QuantizeSpec extends SparkTestBase {
   }
 
   test("reconstruction error is bounded by scale/2 for every dimension (real corpus)") {
-    val check = Quantize.reconstructionCheck(emb).collect().head
-    assert(check.getLong(0) == emb.count())
-    assert(check.getLong(1) == 0L, "reconstruction bound violated")
+    val vecs = emb.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getAs[scala.collection.Seq[Float]](1)).toMap
+    val codes = Quantize.int8Codes(emb).collect()
+    assert(codes.length == vecs.size)
+    val violations = codes.count { r =>
+      val scale = r.getAs[Double]("scale")
+      val x = vecs(r.getAs[Long]("vec_id"))
+      val c = r.getAs[scala.collection.Seq[Int]]("codes")
+      x.zip(c).exists { case (xi, ci) =>
+        math.abs(xi.toDouble - ci * scale) > scale * 0.5 + 1e-12 }
+    }
+    assert(violations == 0, "reconstruction bound violated")
   }
 
   test("all-zero vector maps to all-zero codes, no division blowup") {

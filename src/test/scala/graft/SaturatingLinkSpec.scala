@@ -50,10 +50,9 @@ class SaturatingLinkSpec extends AnyFunSuite {
       val ys = xs.map(x => BigDecimal(logistic(cap, a, b)(x))
         .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
       val obs = xs.zip(ys).map { case (x, y) => Obs("s", x, y) }
-      val fitted = SegmentForecast.fitSegment(obs,
-        grid = Seq(ModelSpec("sat", 0)), holdout = 4, horizon = 8)
+      val fitted = SegmentForecast.forecast(ModelSpec("sat", 0), obs, horizon = 8)
       val logit = logitFit(xs.zip(ys))
-      val errs = fitted.forecast.zipWithIndex.map { case (pe, i) =>
+      val errs = fitted.zipWithIndex.map { case (pe, i) =>
         val x = xs.last + i + 1
         val truth = logistic(cap, a, b)(x)
         (math.abs(pe - truth) / truth, math.abs(pe - logit(x)) / logit(x))
@@ -72,10 +71,9 @@ class SaturatingLinkSpec extends AnyFunSuite {
     val ys = xs.map(x => BigDecimal(logistic(cap, a, b)(x))
       .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
     val obs = xs.zip(ys).map { case (x, y) => Obs("s", x, y) }
-    val fitted = SegmentForecast.fitSegment(obs,
-      grid = Seq(ModelSpec("sat", 0)), holdout = 4, horizon = 8)
+    val fitted = SegmentForecast.forecast(ModelSpec("sat", 0), obs, horizon = 8)
     val logit = logitFit(xs.zip(ys))
-    val (engErr, logitErr) = fitted.forecast.zipWithIndex.map { case (pe, i) =>
+    val (engErr, logitErr) = fitted.zipWithIndex.map { case (pe, i) =>
       val x = xs.last + i + 1
       val truth = logistic(cap, a, b)(x)
       (math.abs(pe - truth) / truth, math.abs(logit(x) - truth) / truth)

@@ -31,17 +31,6 @@ class Scd2Spec extends SparkTestBase {
       (2L, "x", 15L, None, true, 1L)))
   }
 
-  test("asOf point-in-time lookup uses half-open intervals") {
-    val d = dim()
-    def at(t: Long) = Scd2.asOf(d, lit(t)).orderBy("user_id")
-      .select("user_id", "segment").as[(Long, String)].collect().toSeq
-    assert(at(10L) == Seq((1L, "a")))         // inclusive valid_from
-    assert(at(29L) == Seq((1L, "a"), (2L, "x")))
-    assert(at(30L) == Seq((1L, "b"), (2L, "x"))) // exclusive valid_to
-    assert(at(99L) == Seq((1L, "a"), (2L, "x")))
-    assert(at(5L) == Seq())
-  }
-
   test("the whole build is a single exchange (one shuffle by key)") {
     val ev = graft.util.Tables.t(spark, sfDir, "events")
       .select(col("user_id"), graft.functions.BqShims.epochMicros(col("ts")).as("tsm"),

@@ -1,7 +1,7 @@
 package graft
 
-import graft.jobs.{ForecastSummary, SegmentForecast}
-import graft.jobs.SegmentForecast.{ModelSpec, Obs}
+import graft.jobs.SegmentForecast
+import graft.jobs.SegmentForecast.Obs
 
 /** Mirrors the reference's funnel-forecast test intent
   * (kpi_forecasting/tests/test_funnel_forecast.py: segment partitioning
@@ -11,28 +11,10 @@ class SegmentForecastSpec extends SparkTestBase {
   private def trendSeg = (0 until 20).map(i => Obs("trend", i, 2.0 * i + 1))
   private def flatSeg = (0 until 20).map(i => Obs("flat", i, if (i % 2 == 0) 10.0 else 12.0))
 
-  test("grid search picks linear for a trend, mean for flat data") {
-    val t = SegmentForecast.fitSegment(trendSeg, SegmentForecast.defaultGrid, 4, 3)
-    assert(t.kind == "linear")
-    assert(t.holdout_mse < 1e-18)
-    // exact line: next points continue 2x+1
-    assert(t.forecast == Seq(2.0 * 20 + 1, 2.0 * 21 + 1, 2.0 * 22 + 1))
-    val f = SegmentForecast.fitSegment(flatSeg, SegmentForecast.defaultGrid, 4, 2)
-    assert(f.kind == "mean")
-  }
-
-  test("tie-break is deterministic: first grid entry among minima wins") {
-    val constant = (0 until 12).map(i => Obs("c", i, 5.0))
-    val fit = SegmentForecast.fitSegment(constant, SegmentForecast.defaultGrid, 4, 1)
-    // every model is exact on constant data → first grid entry (mean, all)
-    assert(fit.kind == "mean" && fit.window == 0)
-    assert(fit.forecast == Seq(5.0))
-  }
-
   test("segments are fit independently via mapGroups") {
     import spark.implicits._
     val ds = (trendSeg ++ flatSeg).toDS()
-    val out = SegmentForecast.run(spark, ds).collect().map(f => f.segment -> f.kind).toMap
+    val out = SegmentForecast.runCV(ds).collect().map(f => f.segment -> f.kind).toMap
     assert(out == Map("trend" -> "linear", "flat" -> "mean"))
   }
 
@@ -65,31 +47,6 @@ class SegmentForecastSpec extends SparkTestBase {
     val bias = SegmentForecast.cvBias(
       SegmentForecast.ModelSpec("mean", 0), trendSeg.sortBy(_.x), cv)
     assert(bias < 0, s"mean model must under-forecast a rising trend, got $bias")
-  }
-
-  test("CV winner's residual samples summarize to quantiles via ForecastSummary") {
-    import spark.implicits._
-    val cv = SegmentForecast.CvSettings(initial = 6, period = 2, horizon = 2)
-    // trend plus alternating ±1 noise: linear wins, residuals are ±1
-    val noisy = (0 until 20).map(i =>
-      Obs("n", i, 2.0 * i + 1 + (if (i % 2 == 0) 1.0 else -1.0)))
-    val samples = SegmentForecast.cvSamples(noisy, SegmentForecast.defaultGrid, cv)
-    assert(samples.size == 3 && samples.head._2.size == 20)
-    val df = samples.map { case (step, s) =>
-      (java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, step)), s)
-    }.toDF("ds", "samples")
-    val summary = ForecastSummary.summarize(
-      ForecastSummary.aggregateToPeriod(df, "day")).collect()
-    assert(summary.length == 3)
-    // residuals are ~±1 around the fitted line (OLS tilts slightly under
-    // the alternating noise) → the p10..p90 band brackets the mean and
-    // stays within the residual spread's order of magnitude
-    summary.foreach { r =>
-      val (mean, p10, p90) =
-        (r.getAs[Double]("mean"), r.getAs[Double]("p10"), r.getAs[Double]("p90"))
-      assert(p10 <= mean && mean <= p90, s"quantile band must bracket mean: $r")
-      assert(p90 - p10 <= 3.0, s"band too wide for +-1 residuals: $r")
-    }
   }
 
   test("seeded bootstrap paths: deterministic, matrix-shaped, pool-valued") {
@@ -145,14 +102,5 @@ class SegmentForecastSpec extends SparkTestBase {
     // forecast day 28 has dow 0: trend + the +5 offset; day 29 dow 1
     assert(math.abs(fit.f1 - (100.0 + 2.0 * 28 + 5.0)) < 1e-6, s"dow-0 offset: $fit")
     assert(math.abs(fit.f2 - (100.0 + 2.0 * 29 - 3.0)) < 1e-6, s"dow-1 offset: $fit")
-  }
-
-  test("windowed variant wins when history has a regime change") {
-    // old regime flat at 0, recent 8 points strong trend: windowed linear
-    // fits recent data better than full-history models
-    val regime = (0 until 12).map(i => Obs("r", i, 0.0)) ++
-      (12 until 20).map(i => Obs("r", i, 5.0 * (i - 12)))
-    val fit = SegmentForecast.fitSegment(regime, SegmentForecast.defaultGrid, 4, 1)
-    assert(fit.window == 8, s"expected windowed model, got $fit")
   }
 }

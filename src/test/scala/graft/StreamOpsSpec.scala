@@ -14,7 +14,6 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("incrementalDedupStream: growing index catches pairs split across triggers") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // three files = three triggers; the planted near-dups (1,2) arrive in
     // DIFFERENT triggers and must still pair via the grown index
     val base = "the quick brown fox jumps over the lazy dog again and again today"
@@ -136,24 +135,27 @@ class StreamOpsSpec extends SparkTestBase {
     assert(sessions == Seq(SessionOut(1L, 0 * m, 50 * m, 3)))
   }
 
-  test("checkpointed resume processes only unseen files — exactly once") {
+  test("the CDC upsert keeps only its newest state version") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val src = scratch.dir("ckpt_src")
-    val ckpt = scratch.dir("ckpt_log")
-    val out = scratch.dir("ckpt_out")
-    val schema = StructType(Seq(StructField("id", LongType)))
-    Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.mode("append").parquet(src)
-    StreamOps.checkpointedAppendRun(spark, src, schema, ckpt, out)
-    val firstRun = spark.read.schema(schema).parquet(out).count()
-    assert(firstRun == 3)
-    // resume with the SAME checkpoint after new files land: the offset
-    // log must skip everything already committed
-    Seq(4L, 5L).toDF("id").coalesce(1).write.mode("append").parquet(src)
-    StreamOps.checkpointedAppendRun(spark, src, schema, ckpt, out)
-    val ids = spark.read.schema(schema).parquet(out)
-      .as[Long].collect().sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L, 4L, 5L), s"duplicate or lost rows: $ids")
+    val logSchema = StructType(Seq(StructField("k", LongType),
+      StructField("seq", LongType), StructField("op", StringType),
+      StructField("v", StringType)))
+    val snap = Seq((1L, "a"), (2L, "b"), (4L, "d")).toDF("k", "v")
+    val log = Seq((1L, 1L, "U", "a1"), (3L, 1L, "I", "c"),
+      (2L, 2L, "D", null), (1L, 3L, "U", "a3"))
+      .toDF("k", "seq", "op", "v")
+    val logDir = scratch.dir("cdc_versions_log")
+    val stateDir = scratch.dir("cdc_versions_state")
+    log.repartition(4).write.mode("overwrite").parquet(logDir)
+    val files = new java.io.File(logDir).list().count(_.endsWith(".parquet"))
+    val out = StreamOps.cdcUpsertStream(spark, logDir, stateDir, logSchema, snap)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "from_change").as[(Long, String, Boolean)].collect().toSet
+    assert(canon(out) == canon(graft.operators.CdcApply(snap, log, "k", Seq("seq"))))
+    assert(canon(out) == Set((1L, "a3", true), (3L, "c", true), (4L, "d", false)))
+    assert(files > 1, s"the changelog must span several triggers, got $files file(s)")
+    assert(new java.io.File(stateDir).list().filter(_.startsWith("v")).toSeq == Seq(s"v$files"))
   }
 
   test("left-outer stream join flushes the LAST anchor's null row (sentinel)") {

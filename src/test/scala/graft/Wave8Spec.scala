@@ -45,7 +45,6 @@ class Wave8Spec extends SparkTestBase {
   }
 
   test("multi-touch: per-conversion credits sum within n of the unit") {
-    import spark.implicits._
     val e = graft.util.Tables.t(spark, sfDir, "events")
       .select(col("user_id").as("key"),
         graft.functions.BqShims.epochMicros(col("ts")).as("ts"),
