@@ -6,6 +6,7 @@ import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException
 import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.EtlRunner.{JobContext, JobSpec}
 import graft.catalog.SchemaId
@@ -48,7 +49,16 @@ import graft.catalog.SchemaId
   * master, shuffle partition count, session extensions and `file:`
   * FileSystem class (graft's fork-free one unless a `core-site.xml`
   * earlier on the classpath shadows graft's, see
-  * [[graft.util.NioRawLocalFileSystem]]) are logged at start.
+  * [[graft.util.NioRawLocalFileSystem]]) are logged at start, and the
+  * number of classes Spark's code generator compiled during the run
+  * (`[graft] codegen compiles=<n>`: the driver's, plus the tasks'
+  * under a local master, whose executor shares the driver's JVM) at
+  * the end.
+  *
+  * Child sessions share the executor's class loader: GraftSession
+  * turns Spark's per-session artifact isolation off, so a class one
+  * query's tasks compiled is reused by its siblings in the same
+  * SparkContext.
   */
 object Main {
 
@@ -75,7 +85,8 @@ object Main {
     * on a fixed pool of min(#queries, defaultParallelism) threads that
     * lives only for this run of the pack, so the pool grows with the
     * cluster's cores. Each task plans on its own child session
-    * (`newSession`): the context, cache and extensions are shared, but
+    * (`newSession`): the context, cache, extensions and executor class
+    * loader (so the generated classes) are shared, but
     * the temp views a query registers and the SQL conf it sets are its
     * own, so concurrent siblings cannot see or undo each other's (q108
     * and q109 deploy the same view names and set
@@ -148,6 +159,10 @@ object Main {
     require(dataDir.nonEmpty, "--data-dir is required")
     require(outDir.nonEmpty || !write, "--out is required unless --no-write")
 
+    // Spark's JVM-wide count of Janino compiles: the driver's, and the
+    // tasks' only under a local master (a cluster's executors count theirs)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiles0 = compiles
     val spark = GraftSession.getOrCreate()
     System.err.println(s"[graft] master=${spark.sparkContext.master} " +
       s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
@@ -159,6 +174,7 @@ object Main {
     report.succeeded.foreach(j => System.err.println(s"[graft] OK   $j"))
     report.errors.foreach { case (j, e) =>
       System.err.println(s"[graft] FAIL $j: ${EtlRunner.describe(e)}") }
+    System.err.println(s"[graft] codegen compiles=${compiles - compiles0}")
     spark.stop()
     if (report.failed.nonEmpty) sys.exit(1)
   }

@@ -17,10 +17,14 @@ class GraftSessionSpec extends AnyFunSuite {
     val base = new SparkConf(false)
       .set("spark.master", "local[1]")
       .set("spark.sql.shuffle.partitions", "7")
+      .set("spark.sql.artifact.isolation.enabled", "true")
+      .set("spark.sql.codegen.cache.maxEntries", "50")
       .set("spark.sql.extensions", "foo")
     val once = GraftSession.conf(base, cpus = 4)
     assert(once.get("spark.master") == "local[1]")
     assert(once.get("spark.sql.shuffle.partitions") == "7")
+    assert(once.get("spark.sql.artifact.isolation.enabled") == "true")
+    assert(once.get("spark.sql.codegen.cache.maxEntries") == "50")
     assert(once.get("spark.sql.extensions") == "foo,graft.GraftExtensions")
     assert(base.get("spark.sql.extensions") == "foo", "the base conf must not change")
     val twice = GraftSession.conf(once, cpus = 4)
@@ -31,22 +35,32 @@ class GraftSessionSpec extends AnyFunSuite {
     val c = GraftSession.conf(new SparkConf(false), cpus = 3)
     assert(c.get("spark.master") == "local[3]")
     assert(c.get("spark.sql.shuffle.partitions") == "3")
+    assert(c.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(c.get("spark.sql.codegen.cache.maxEntries") == "2000")
     assert(c.get("spark.sql.extensions") == "graft.GraftExtensions")
   }
 
   // The benchmark times its queries with perfbench/workloads.json's
   // query_conf; Verify and Main run with GraftSession's conf. They must
-  // not drift apart.
+  // not drift apart in either direction, but for the keys only
+  // GraftSession sets, each with its reason.
+  private val onlyGraftSession = Map(
+    "spark.master" -> "the harness sets local[cpus] itself",
+    "spark.sql.artifact.isolation.enabled" -> "query_conf changes only with the benchmark",
+    "spark.sql.codegen.cache.maxEntries" -> "query_conf changes only with the benchmark",
+  )
+
   test("perfbench's query_conf equals GraftSession's conf") {
     val queryConf = new ObjectMapper()
       .readTree(new java.io.File("perfbench/workloads.json")).get("query_conf")
     assert(queryConf != null && queryConf.size > 0)
     val cpus = 3
     val c = GraftSession.conf(new SparkConf(false), cpus)
-    queryConf.properties.asScala.foreach { e =>
-      val expected = e.getValue.asText.replace("$CPUS", cpus.toString)
-      assert(c.getOption(e.getKey).contains(expected), s"${e.getKey}")
-    }
+    val bench = queryConf.properties.asScala.map { e =>
+      e.getKey -> e.getValue.asText.replace("$CPUS", cpus.toString)
+    }.toMap
+    bench.foreach { case (k, v) => assert(c.getOption(k).contains(v), k) }
+    assert(c.getAll.toMap.keySet -- bench.keySet == onlyGraftSession.keySet)
   }
 
   // Every session is a GraftSession, so GraftExtensions is the one way a

@@ -101,12 +101,16 @@ class LocalFsSpec extends SparkTestBase {
     }
     // the sticky bit, and a directory's setgid bit, which `chmod 0755`
     // keeps and the nine bits alone would clear
-    both("sticky")((fs, _, p) => assert(fs.mkdirs(p, octal("1777"))))
+    both("sticky") { (fs, _, p) =>
+      assert(fs.mkdirs(p, octal("755")))
+      fs.setPermission(p, octal("1777"))
+    }
     both("setgid") { (fs, _, p) =>
       assert(fs.mkdirs(p, octal("755")))
       Files.setAttribute(Paths.get(p.toUri), "unix:mode", Integer.valueOf(Integer.parseInt("2755", 8)))
       fs.setPermission(p, octal("750"))
     }
+    assert(mode(new Path(s"file:$dir/graft/sticky")) == Integer.parseInt("1777", 8))
     assert(mode(new Path(s"file:$dir/graft/setgid")) == Integer.parseInt("2750", 8))
   }
 
