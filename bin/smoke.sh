@@ -46,8 +46,12 @@ rmdir "$JTMP" 2>/dev/null || true
 conf="$(grep -m1 '^\[graft\] master=' "$LOG" || true)"
 # Main reports the classes Spark's code generator compiled over the run
 codegen="$(grep -m1 -E '^\[graft\] codegen compiles=[0-9]+$' "$LOG" || true)"
+# and, before it stops, the RDDs still persisted beyond the named pins
+persisted="$(grep -m1 -E '^\[graft\] persisted rdds=[0-9]+$' "$LOG" || true)"
 rm -f "$LOG"
 [ -n "$codegen" ] || { echo "smoke FAILED — no '[graft] codegen compiles=<n>' line" >&2; exit 1; }
+[ "$persisted" = "[graft] persisted rdds=0" ] || {
+  echo "smoke FAILED — RDDs left persisted: '$persisted'" >&2; exit 1; }
 case "$conf" in
   *"master=local[2] shuffle.partitions=3 "*graft.GraftExtensions*) ;;
   *) echo "smoke FAILED — submitted conf did not win: '$conf'" >&2; exit 1 ;;

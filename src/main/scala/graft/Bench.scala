@@ -192,12 +192,13 @@ object Bench {
       // spec-gated in CorpusCacheSpec).
       if (name == "q109_corpus_exec")
         graft.dag.CorpusLoader.clearExecCache(spark)
-      val t0 = System.nanoTime()
-      try {
+      // the query's holds are released after the clock stops
+      try Some(graft.util.Hold.scope {
+        val t0 = System.nanoTime()
         queries(name)(spark, sfDir)
           .write.mode("overwrite").format("noop").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+        (System.nanoTime() - t0) / 1e9
+      }) catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
       }

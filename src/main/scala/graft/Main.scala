@@ -10,6 +10,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.EtlRunner.{JobContext, JobSpec}
 import graft.catalog.SchemaId
+import graft.util.Hold
 
 /** Deployable batch entrypoint — the container story (SURVEY §3.1).
   *
@@ -53,7 +54,10 @@ import graft.catalog.SchemaId
   * number of classes Spark's code generator compiled during the run
   * (`[graft] codegen compiles=<n>`: the driver's, plus the tasks'
   * under a local master, whose executor shares the driver's JVM) at
-  * the end.
+  * the end, followed by the number of RDDs still persisted on the
+  * context that no [[graft.util.Hold.pin]] holds
+  * (`[graft] persisted rdds=<n>`: 0 when every task's scope released
+  * its holds).
   *
   * Child sessions share the executor's class loader: GraftSession
   * turns Spark's per-session artifact isolation off, so a class one
@@ -81,7 +85,8 @@ object Main {
   def registry(dataDir: String, outDir: String): Seq[JobSpec] =
     jobPacks.map { case (job, qs) => pack(job, qs, dataDir, outDir) }
 
-  /** One job pack. Each query's build and guarded write run as one task
+  /** One job pack. Each query's build and guarded write run as one task,
+    * in one [[graft.util.Hold.scope]],
     * on a fixed pool of min(#queries, defaultParallelism) threads that
     * lives only for this run of the pack, so the pool grows with the
     * cluster's cores. Each task plans on its own child session
@@ -97,9 +102,11 @@ object Main {
       queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries): JobSpec =
     JobSpec(job, Some(qs.toSet), (ctx: JobContext) =>
       runAll(s"graft-pack-$job", ctx.spark.sparkContext.defaultParallelism, qs.map { q => () =>
-        val df = queries(q)(ctx.spark.newSession(), dataDir)
-        val target = ctx.staging.mapId(SchemaId("graft", job.replace('-', '_'), q))
-        ctx.guard.writeTable(df, target, s"$outDir/${target.sparkName}", SaveMode.Overwrite)
+        Hold.scope {
+          val df = queries(q)(ctx.spark.newSession(), dataDir)
+          val target = ctx.staging.mapId(SchemaId("graft", job.replace('-', '_'), q))
+          ctx.guard.writeTable(df, target, s"$outDir/${target.sparkName}", SaveMode.Overwrite)
+        }
         ()
       }))
 
@@ -175,6 +182,7 @@ object Main {
     report.errors.foreach { case (j, e) =>
       System.err.println(s"[graft] FAIL $j: ${EtlRunner.describe(e)}") }
     System.err.println(s"[graft] codegen compiles=${compiles - compiles0}")
+    System.err.println(s"[graft] persisted rdds=${Hold.loose(spark.sparkContext).size}")
     spark.stop()
     if (report.failed.nonEmpty) sys.exit(1)
   }

@@ -2,6 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** DML semantics on immutable storage (SURVEY §2.10 D1–D4): the
   * reference's INSERT...SELECT / UPDATE...FROM / DELETE WHERE
@@ -26,8 +27,7 @@ final case class MutableTable(spark: SparkSession, path: String) {
   def overwrite(rows: DataFrame): Unit = {
     // Materialize before overwriting the path being read (self-overwrite
     // on the same parquet dir is undefined otherwise).
-    val cached = rows.localCheckpoint(true)
-    cached.write.mode(SaveMode.Overwrite).parquet(path)
+    Hold.scope(Hold(rows).write.mode(SaveMode.Overwrite).parquet(path))
   }
 
   /** D2 UPDATE target SET col = src.col FROM src WHERE join — rewritten

@@ -6,6 +6,7 @@ import graft.catalog.TomlSchema
 import JinjaLite.{V, VFunc, VStr}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import graft.util.Hold
 
 /** Loader for the reference's on-disk SQL corpus — the analog of
   * `load_templates` + `TableSchemaCreator` (projectdata.py:455-562) and
@@ -618,11 +619,13 @@ object CorpusLoader {
     val outArr = new Array[DeployOutcome](order.size)
     val execBuf = mutable.ArrayBuffer[ExecOutcome]()
     val futures = mutable.Map[String, scala.concurrent.Future[Unit]]()
+    // the pool's materializations hold into the calling query's scope
+    val scope = Hold.current
     order.foreach { name =>
       val obj = byQual(name)
       // topo order guarantees every dep's future already exists
       val depsDone = scala.concurrent.Future.sequence(deps(name).flatMap(futures.get))
-      futures(name) = depsDone.map { _ => processOne(obj) }
+      futures(name) = depsDone.map { _ => Hold.within(scope)(processOne(obj)) }
     }
 
     def processOne(obj: CorpusObject): Unit = {
@@ -725,8 +728,8 @@ object CorpusLoader {
     * fixture-mode step shared by [[executeAll]] and the fused
     * [[deployAndExecute]].
     *
-    * `localCheckpoint(eager)` computes the view once and pins its rows
-    * in executor block storage (memory-and-disk), truncating the
+    * A hold computes the view once and keeps its rows in executor
+    * block storage until the query's scope closes, truncating the
     * lineage so every downstream view re-reads the materialized rows
     * instead of re-executing the DAG prefix — the same job the old
     * `limit.collect() + createDataFrame` round-trip did, but without
@@ -743,7 +746,7 @@ object CorpusLoader {
     * (no spark.table() re-analysis) and register the result as `q`. */
   private def materializeFixture(df: org.apache.spark.sql.DataFrame,
       q: String, capRows: Int): Long = {
-    val matd = df.limit(capRows + 1).localCheckpoint(true)
+    val matd = Hold(df.limit(capRows + 1))
     val n = matd.count()
     require(n <= capRows, s"result exceeded $capRows rows")
     matd.createOrReplaceTempView(q)

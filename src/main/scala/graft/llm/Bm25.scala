@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** BM25 keyword retrieval over the document corpus — the lexical half
   * of a retrieval stack (the ANN operators in Ann/Pq are the dense
@@ -149,7 +150,7 @@ object Bm25 {
     // not once per query (r16; the frame is one row per term-matching
     // doc). probeScores stays separate so the probe PLAN (isin postings
     // prune + stats broadcast) remains assertable (Bm25IndexSpec).
-    val byDoc = probeScores(index, queries).localCheckpoint()
+    val byDoc = Hold(probeScores(index, queries))
     def sCol(t: String) = scoreCol(queries, t)
     val perQuery = queries.map { case (qid, qTerms) =>
       byDoc

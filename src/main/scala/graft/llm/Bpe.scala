@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** BPE merge learning — the tokenizer-training step of an LLM data
   * pipeline: starting from characters, repeatedly merge the most
@@ -136,7 +137,7 @@ object Bpe {
       .select(col("n"),
         concat(lit(" "), array_join(split(col("word"), ""), " "), lit(" "))
           .as("seq"))
-    var cur = words.localCheckpoint()
+    var cur = Hold(words)
     val merges = scala.collection.mutable.ListBuffer[(Int, String, String, Long)]()
     var step = 1
     var rounds = 0
@@ -168,7 +169,7 @@ object Bpe {
             call_function("replace", col("seq"), lit(s" $l $r "), lit(s" $l$r ")))
         }
         batch.foreach { case (l, r, w) => merges += ((step, l, r, w)); step += 1 }
-        cur = applied.localCheckpoint()
+        cur = Hold(applied)
       }
     }
     (merges.toSeq, rounds)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** Prefix-filtered exact containment join (the AllPairs/PPJoin family,
   * Bayardo et al. 2007; Xiao et al. 2008): find ordered pairs (a, b)
@@ -50,12 +51,11 @@ object ContainmentJoin {
     // budget per recompute). The blocks spill to disk at corpus scale —
     // compute-once-reuse-thrice is the plan you'd want at 100 TB too.
     // sz rides along from size(sset): a column, not a second window.
-    val sets = docs.select(col(idCol).as("id"),
+    val sets = Hold(docs.select(col(idCol).as("id"),
       array_distinct(transform(
         TextDedup.shingles(col(textCol), shingleW),
         s => TextDedup.portableHash(s))).as("sset"))
-      .withColumn("sz", size(col("sset")).cast("long"))
-      .localCheckpoint(true)
+      .withColumn("sz", size(col("sset")).cast("long")))
     val sh = sets.select(col("id"), col("sz"), explode(col("sset")).as("sh"))
     val dfs = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     // every doc's shingles ranked by GLOBAL rarity (df, sh) — the same
@@ -63,9 +63,8 @@ object ContainmentJoin {
     // bound below valid. Materialized: probed by the prefix side AND
     // the full side of the candidate join.
     val byRarity = Window.partitionBy("id").orderBy(col("df"), col("sh"))
-    val ranked = sh.join(dfs, "sh")
-      .withColumn("rk", row_number().over(byRarity))
-      .localCheckpoint(true)
+    val ranked = Hold(sh.join(dfs, "sh")
+      .withColumn("rk", row_number().over(byRarity)))
     // prefix size ⌊(1-t)·sz⌋+1 = sz - ceil(t·sz) + 1 = sz - ⌈sz·num/den⌉ + 1
     val prefixes = ranked
       .filter(col("rk") <= col("sz") - expr(s"cast(ceil(sz * $num / $den) as bigint)") + 1)

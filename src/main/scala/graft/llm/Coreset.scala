@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** Farthest-point sampling (Gonzalez' greedy 2-approximation for
   * k-center) over an embedding column — the diversity-selection
@@ -26,8 +27,7 @@ import org.apache.spark.sql.types._
   * TakeOrderedAndProject, no global sort. The k collected rows are
   * bounded by construction (k·dim longs — the Ann.pin/KMeans-centroid
   * convention for driver-side constants). EAGER: runs k jobs at call
-  * time; the codes frame is cached for the rounds and unpersisted
-  * before returning.
+  * time over the held codes frame.
   */
 object Coreset {
 
@@ -41,9 +41,8 @@ object Coreset {
   def farthestPoints(spark: SparkSession, embeddings: DataFrame,
       k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val codes = KMeans.gridCodes(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one pass over the cached codes: fail loudly on an empty frame
+    val codes = Hold(KMeans.gridCodes(embeddings))
+    // one pass over the held codes: fail loudly on an empty frame
     // (the first-pick collect would otherwise throw an opaque
     // ArrayIndexOutOfBounds) and cap k at the vector count — past n
     // every remaining minD2 is 0 and the argmax would re-pick the
@@ -70,7 +69,6 @@ object Coreset {
         state = state.withColumn("m",
           least(col("m"), d2To(codesOf(next))))
     }
-    codes.unpersist()
     spark.createDataFrame(
       spark.sparkContext.parallelize(picks.toSeq.map {
         case (p, v, r) => Row(p, v, r)

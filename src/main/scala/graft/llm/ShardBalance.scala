@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** Token-balanced shard assignment for training-data export.
   *
@@ -67,15 +68,11 @@ object ShardBalance {
     // behind a window/join), the two instances can sample different
     // boundaries and assign the SAME row different pids, silently
     // corrupting ranks near every boundary (caught by q221's chained
-    // quintiles at sf0.1). localCheckpoint pins the partitioning once
-    // so both consumers read identical (row, pid) pairs by
-    // construction; blocks are distributed (each executor holds its
-    // range) and ContextCleaner-reclaimed, the repo's standard pattern
-    // (Closure/PageRank/ConnectedComponents).
-    val ranged = df
+    // quintiles at sf0.1). The hold pins the partitioning once so both
+    // consumers read identical (row, pid) pairs by construction.
+    val ranged = Hold(df
       .repartitionByRange(nRangeParts, order: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("pid", spark_partition_id()))
     val wPid = Window.partitionBy("pid").orderBy(order: _*)
     val tiny = Window.orderBy("pid")
     val offsets = ranged.groupBy("pid")

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** Training-data deduplication over a `documents(doc_id, text, ...)`
   * table: exact, MinHash-LSH, SimHash, and n-gram Jaccard.
@@ -169,11 +170,10 @@ object TextDedup {
     val rawSigs = bandedSignatures(newDocs, textCol, idCol, k, bands,
       shingleW, portable)
     // The pruned path consumes the batch signatures TWICE (touched-pkey
-    // collect + the join); localCheckpoint materializes them once —
-    // batch-sized by contract, executor-resident, freed by the context
-    // cleaner when the result DF is dropped. Without it the batch is
-    // re-signed per consumer (measured 2x on q117).
-    val newSigs = if (pruneParts > 0) rawSigs.localCheckpoint() else rawSigs
+    // collect + the join); the hold materializes them once —
+    // batch-sized by contract. Without it the batch is re-signed per
+    // consumer (measured 2x on q117).
+    val newSigs = if (pruneParts > 0) Hold(rawSigs) else rawSigs
     val index =
       if (pruneParts <= 0) indexSigs.select("id", "band", "key")
       else {
@@ -244,11 +244,10 @@ object TextDedup {
     // exchange subtree, so without a barrier the whole LSH→verify
     // pipeline re-executes per branch (measured: 4 full candidate+verify
     // passes at sf0.1). The verified pair set is candidate-bounded and
-    // tiny by construction — checkpoint it once, every branch reads the
-    // materialized rows. (r16; guide §2.4 — remove repeated work before
+    // tiny by construction — hold it once, every branch reads the
+    // held rows. (r16; guide §2.4 — remove repeated work before
     // tuning anything inside it.)
-    val edges = verified.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint()
+    val edges = Hold(verified.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     // Iterate ONLY the non-trivial subgraph: in a dedup corpus nearly
     // all docs are singletons (no verified edge), and their label is
     // their own id by definition — excluding them shrinks every CC

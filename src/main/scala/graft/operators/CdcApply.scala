@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** CDC changelog apply — the MERGE INTO / Delta-style upsert the
   * reference approximates with delete-then-insert idempotency and
@@ -75,13 +76,11 @@ object CdcApply {
     * came from the changelog (upsert) or passed through untouched. */
   def apply(snapshot: DataFrame, changelog: DataFrame, key: String,
       seqCols: Seq[String]): DataFrame = {
-    // Both branches read the per-key verdict, materialized once behind an
-    // eager localCheckpoint. Left lazy, the window-top-k rule rewrites the
-    // key-only branch and not the filtered one, so no exchange is shared
-    // and the changelog is distilled twice. Not cache(): that registers
-    // with the CacheManager every session in the JVM shares, and the
-    // entry would outlive the query.
-    val win = latest(changelog, key, seqCols).localCheckpoint(true)
+    // Both branches read the per-key verdict, held once. Left lazy, the
+    // window-top-k rule rewrites the key-only branch and not the
+    // filtered one, so no exchange is shared and the changelog is
+    // distilled twice.
+    val win = Hold(latest(changelog, key, seqCols))
     val payload = snapshot.columns.toSeq
     val untouched = snapshot
       .join(win.select(key), Seq(key), "left_anti")

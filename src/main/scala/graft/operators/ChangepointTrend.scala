@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** Prophet-style single-changepoint trend fit, fully relational.
   *
@@ -599,7 +600,7 @@ object ChangepointTrend {
     try {
       ctes.foreach { case (name, sql) =>
         val df = spark.sql(sql)
-        (if (eager(name)) df.localCheckpoint() else df)
+        (if (eager(name)) Hold(df) else df)
           .createOrReplaceTempView(name)
       }
       // analyzed eagerly by spark.sql, so the view drops below are safe

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** Transitive closure over an edge table (SURVEY §2.12): the reference
   * BFS-es bug depends_on/blocks links in Python sets with a recursion
@@ -12,23 +13,23 @@ import org.apache.spark.sql.functions._
   * Scale: each iteration is one equi-join + distinct (two shuffles) on
   * the frontier only — not the whole closure — so work per round is
   * proportional to newly discovered paths; maxIter bounds pathological
-  * graphs exactly like the reference's recurse_limit. localCheckpoint
+  * graphs exactly like the reference's recurse_limit. A hold
   * truncates the growing lineage so round N doesn't replay rounds 1..N-1.
   */
 object Closure {
 
-  /** Materialize + cut lineage: localCheckpoint truncates execution
-    * lineage, and rebuilding from the checkpointed RDD gives the plan
+  /** Materialize + cut lineage: a hold truncates execution
+    * lineage, and rebuilding from the held RDD gives the plan
     * fresh attribute ids (an analysis barrier) — without it, repeated
     * self-unions of the same attributes trip Catalyst constraint
     * propagation and re-plan the whole history each round. (r16 note:
-    * a bare localCheckpoint was tried — self-UNIONS of one LogicalRDD
+    * a bare checkpoint was tried — self-UNIONS of one LogicalRDD
     * fail Union.rewriteConstraints with "key not found: src#N",
     * reproduced by OperatorsSpec's chain fixpoint — unlike the
     * self-JOIN-only ConnectedComponents loop, where the roundtrip was
     * removable. The Row roundtrip stays.) */
   private def barrier(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
+    val cp = Hold(df)
     cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** Connected components via min-label propagation with pointer jumping —
   * the distributed form of union-find used for near-dup cluster
@@ -24,13 +25,13 @@ object ConnectedComponents {
 
   /** Cut lineage between rounds (same rationale as Closure.barrier:
     * repeated self-joins of one attribute set re-plan the whole
-    * iteration history otherwise). localCheckpoint alone suffices: the
-    * checkpointed plan is a LogicalRDD, which the analyzer re-instances
+    * iteration history otherwise). A hold alone suffices: the
+    * held plan is a LogicalRDD, which the analyzer re-instances
     * on self-join conflicts — the previous extra
     * `createDataFrame(cp.rdd, schema)` roundtrip deserialized every row
     * to external format and back once per round for the same effect
     * (r16: removed, measured pure overhead). */
-  private def barrier(df: DataFrame): DataFrame = df.localCheckpoint(true)
+  private def barrier(df: DataFrame): DataFrame = Hold(df)
 
   /** Component label (minimum reachable vertex id) for every vertex.
     *

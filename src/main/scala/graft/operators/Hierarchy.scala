@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Hold
+
 /** Hierarchy flattening by POINTER DOUBLING: every node's (root, depth)
   * in O(log depth) rounds instead of the O(depth) parent-at-a-time
   * walk — each round rewires a node's ancestor pointer to its
@@ -22,22 +24,16 @@ object Hierarchy {
     * roots are the nodes with parent == id; `rounds` must satisfy
     * 2^rounds ≥ max depth. */
   def flatten(nodes: DataFrame, rounds: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toRelease = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var state = nodes.select(col("id"), col("parent").as("anc"),
       when(col("parent") === col("id"), 0L).otherwise(1L).as("d"))
     for (_ <- 1 to rounds) {
-      val s = state.persist(lvl)
-      toRelease += s
+      val s = Hold(state)
       state = s.alias("x")
         .join(s.select(col("id").as("anc"), col("anc").as("anc2"),
           col("d").as("d2")).alias("y"), Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"))
     }
-    val out = state.select(col("id"), col("anc").as("root"),
-      col("d").as("depth")).localCheckpoint()
-    toRelease.foreach(_.unpersist(false))
-    out
+    Hold(state.select(col("id"), col("anc").as("root"), col("d").as("depth")))
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** Bounded-round k-core decomposition (iterative peeling): each round
   * removes nodes whose degree among SURVIVING nodes is < k; after
@@ -34,29 +35,23 @@ object KCore {
     * no row for it. k ≥ 1 filters both the same way, so k ≤ 0 is
     * rejected.
     *
-    * Iteration cadence (r17): each round's degree frame is an EAGER
-    * localCheckpoint — the ConnectedComponents barrier pattern — so
-    * every per-round plan stays shallow (one semi-join, one aggregate
-    * and one join over LogicalRDDs) instead of nesting every earlier
-    * round. Blocks are executor-resident and ContextCleaner-reclaimed;
-    * on a real cluster an executor loss mid-query recomputes nothing
-    * (localCheckpoint is not fault-tolerant) — acceptable for an
-    * intra-query barrier, same trade as CC documents. */
+    * Iteration cadence (r17): each round's degree frame is held — the
+    * ConnectedComponents barrier pattern — so every per-round plan
+    * stays shallow (one semi-join, one aggregate and one join over
+    * LogicalRDDs) instead of nesting every earlier round. */
   def run(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k-core threshold must be at least 1, got $k")
     require(rounds >= 1, s"k-core needs at least one round, got $rounds")
-    val ed = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    var deg = ed.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    val ed = Hold(edges.select(col("src"), col("dst")))
+    var deg = Hold(ed.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     for (_ <- 2 to rounds) {
       val dying = deg.filter(col("deg") < k).select(col("id").as("src"))
       val lost = ed.join(dying, Seq("src"), "left_semi")
         .groupBy(col("dst").as("id"))
         .agg(count(lit(1)).as("lost"))
-      deg = deg.filter(col("deg") >= k)
+      deg = Hold(deg.filter(col("deg") >= k)
         .join(lost, Seq("id"), "left")
-        .select(col("id"), (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-        .localCheckpoint(true)
+        .select(col("id"), (col("deg") - coalesce(col("lost"), lit(0L))).as("deg")))
     }
     deg.filter(col("deg") >= k)
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Hold
+
 /** Integer-exact fixed-iteration PageRank — the graph-centrality
   * companion to [[Closure]] (BFS reachability) and
   * [[ConnectedComponents]] (cluster labels): where those answer "what
@@ -27,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (the Pregel/GraphX contract): the edge table — the big
   * side at 100 TB — is joined on `src` every iteration, so it is
-  * hash-partitioned by src ONCE (cached with its out-degree already
+  * hash-partitioned by src ONCE (held with its out-degree already
   * attached) and never re-shuffled; only the rank vector (|V| rows,
   * 16 bytes each) moves per iteration: one shuffle to meet the edges,
   * one to re-aggregate by dst. Cost per iteration = 2 shuffles of
@@ -44,29 +46,21 @@ object PageRank {
 
   /** Run `iters` damped iterations over a directed edge list
     * (`src`, `dst`; duplicates must be pre-distinct'd). Returns
-    * (id, r) — the scaled integer rank per node, eagerly materialized:
-    * the loop caches are released before returning (no session-lifetime
-    * cache leak from a library call) and the localCheckpoint truncates
-    * the iterated lineage (bounded plans at any iteration count). */
-  def run(edges: DataFrame, iters: Int): DataFrame = {
-    val (ranks, ed, nodes) = iterate(edges, iters)
-    val out = ranks.localCheckpoint()
-    ed.unpersist(false)
-    nodes.unpersist(false)
-    out
-  }
+    * (id, r) — the scaled integer rank per node, held: the hold
+    * truncates the iterated lineage (bounded plans at any iteration
+    * count). */
+  def run(edges: DataFrame, iters: Int): DataFrame = Hold(iterate(edges, iters))
 
-  /** The lazy loop body (exposed for plan audits): returns the final
-    * rank plan plus the two cached loop tables, NOT yet released. */
-  private[graft] def iterate(edges: DataFrame, iters: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** The lazy loop body (exposed for plan audits): the final rank plan
+    * over the two held loop tables. */
+  private[graft] def iterate(edges: DataFrame, iters: Int): DataFrame = {
     // out-degree rides WITH the edge row so the per-iteration join
     // touches one stationary table; |E|-row shuffle happens once, here.
-    val ed = edges
+    val ed = Hold(edges
       .join(edges.groupBy("src").agg(count(lit(1)).as("d")), "src")
-      .repartition(col("src")).cache()
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().cache()
+      .repartition(col("src")))
+    val nodes = Hold(edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct())
     var ranks = nodes.select(col("id"), lit(Scale).as("r"))
     for (_ <- 1 to iters) {
       val in = ed.join(ranks, ed("src") === ranks("id"))
@@ -76,7 +70,7 @@ object PageRank {
         .select(col("id"),
           (lit(Teleport) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
     }
-    (ranks, ed, nodes)
+    ranks
   }
 
   /** The DuckDB replay of [[run]]: one CTE per iteration, generated

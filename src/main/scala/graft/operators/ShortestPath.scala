@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Hold
+
 /** Bounded-hop weighted shortest paths (Bellman–Ford rounds) — the
   * weighted companion to [[Closure]] (unweighted reachability) and
   * [[PageRank]] (centrality) on the same edge tables: k relax rounds
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions._
   * constants) replays every round bit-for-bit.
   *
   * Scale shape: identical to [[PageRank]] — the edge table is
-  * hash-partitioned by src once and cached; per round only the
+  * hash-partitioned by src once and held; per round only the
   * distance vector (|V| rows) shuffles: once to meet the edges, once
   * for the per-dst min. Rounds are fixed, so no convergence-test
   * collect in the loop.
@@ -39,20 +41,17 @@ object ShortestPath {
     * relaxes only edges out of last round's improved set, so the relax
     * join carries |frontier|-adjacent edges, not all |E| candidates —
     * on wide graphs the early rounds shrink from |E| to ~|sources|·deg.
-    * Each round's (dist ⟕ relaxed) is localCheckpoint'd: the reused
-    * intermediate is computed once and the iteration lineage stays one
-    * round deep (no 2^rounds plan blowup, bounded driver plans). */
+    * Each round's (dist ⟕ relaxed) is held: the reused intermediate
+    * (read by the next round's dist and frontier) is computed once and
+    * the iteration lineage stays one round deep (no 2^rounds plan
+    * blowup, bounded driver plans). */
   def run(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
-    val ed = edges.repartition(col("src")).cache()
+    val ed = Hold(edges.repartition(col("src")))
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val toRelease = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var dist = nodes
+    var dist = Hold(nodes
       .join(sources.select(col("id")).withColumn("s", lit(1)), Seq("id"), "left")
-      .select(col("id"), when(col("s").isNotNull, 0L).otherwise(Inf).as("dist"))
-      .persist(lvl)
-    toRelease += dist
+      .select(col("id"), when(col("s").isNotNull, 0L).otherwise(Inf).as("dist")))
     var frontier = dist.filter(col("dist") === 0L)
     for (_ <- 1 to rounds) {
       val relaxed = ed
@@ -60,24 +59,13 @@ object ShortestPath {
           ed("src") === col("id"))
         .select(ed("dst").as("id"), (col("fd") + col("w")).as("cand"))
         .groupBy("id").agg(min(col("cand")).as("best"))
-      // LAZY persist: the final action materializes each round's reused
-      // (dist ⟕ relaxed) exactly once (both its dist and frontier
-      // consumers hit the cache within that one job) — no per-round
-      // count() jobs, and — unlike localCheckpoint, whose RDD the cache
-      // manager cannot release — every intermediate is freed below.
-      val joined = dist.join(relaxed, Seq("id"), "left").persist(lvl)
-      toRelease += joined
+      val joined = Hold(dist.join(relaxed, Seq("id"), "left"))
       dist = joined.select(col("id"),
         least(col("dist"), coalesce(col("best"), lit(Inf))).as("dist"))
       frontier = joined.filter(col("best") < col("dist"))
         .select(col("id"), col("best").as("dist"))
     }
-    // ONE action materializes the whole loop, then every loop cache is
-    // released — no session-lifetime cache leak from a library call.
-    val out = dist.localCheckpoint()
-    toRelease.foreach(_.unpersist(false))
-    ed.unpersist(false)
-    out
+    Hold(dist)
   }
 
   /** DuckDB replay of [[run]]: one CTE per relax round from the same

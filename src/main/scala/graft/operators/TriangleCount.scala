@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{count => fcount}
 import org.apache.spark.sql.types._
+import graft.util.Hold
 
 /** Distributed triangle counting by DEGREE-ORIENTED wedge join — the
   * standard scalable formulation (Cohen's MapReduce triangles /
@@ -36,21 +37,13 @@ object TriangleCount {
     // branches, so without barriers the caller's edge-construction plan
     // re-executes per branch (measured: 72 parquet scans in q153's
     // un-barriered plan). Both frames are |E|-bounded — checkpoint once,
-    // every branch reads the materialized rows (r16; guide §2.4).
-    // localCheckpoint caveats (ADVICE r16, applies to every barrier in
-    // this repo): blocks are executor-local and NON-replicated — an
-    // executor loss mid-query fails the job instead of recomputing
-    // (acceptable for an intra-query barrier; a cluster deployment that
-    // cannot retry the query should use reliable checkpoint dirs) — and
-    // they are reclaimed by the ContextCleaner when the frame is GC'd,
-    // not unpersisted eagerly (unpersisting a checkpoint before its
-    // consumers run would LOSE the data: there is no lineage left).
-    val e = edges
+    // every branch reads the held rows (r16; guide §2.4; the barrier
+    // policy is Hold's).
+    val e = Hold(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = e.select(col("u").as("id"))
       .unionAll(e.select(col("v").as("id")))
       .groupBy("id").agg(fcount(lit(1)).as("d"))
@@ -60,11 +53,10 @@ object TriangleCount {
     val withOrd = e
       .join(ord.select(col("id").as("u"), col("ord").as("ou")), "u")
       .join(ord.select(col("id").as("v"), col("ord").as("ov")), "v")
-    val oriented = withOrd.select(
+    val oriented = Hold(withOrd.select(
       when(col("ou") < col("ov"), col("u")).otherwise(col("v")).as("s"),
       when(col("ou") < col("ov"), col("ov")).otherwise(col("ou")).as("to"),
-      when(col("ou") < col("ov"), col("v")).otherwise(col("u")).as("t"))
-      .localCheckpoint()
+      when(col("ou") < col("ov"), col("v")).otherwise(col("u")).as("t")))
     // wedges around the pivot s: two out-neighbors, kept ordered so each
     // unordered pair appears once
     val w1 = oriented.select(col("s"), col("t").as("a"), col("to").as("oa"))

@@ -9,6 +9,7 @@ import graft.catalog.MutableTable
 import graft.dag.{CorpusLoader, ViewDag, ViewDef}
 import graft.operators.{Closure, Incremental}
 import graft.streaming.StreamOps
+import graft.util.Hold
 
 /** Infrastructure block: view-DAG deployment (D6), DML rewrites (D2/D3),
   * incremental watermark rollup (A18/I1-I3), transitive closure (G1),
@@ -137,17 +138,16 @@ object InfraQueries {
     // with an Inf sentinel — the unrolled oracle replays every round
     // exactly. Same stationary-edge shape as q128.
     "q135_shortest_path" -> ((s, dir) => {
-      val pair = t(s, dir, "orders").select("o_orderkey", "o_custkey")
+      // the symmetrizing union + the operator's internal ed/nodes
+      // branches evaluate this orders⋈lineitem aggregate 4x without a
+      // barrier — hold the |pairs|-sized frame once (r16)
+      val pair = Hold(t(s, dir, "orders").select("o_orderkey", "o_custkey")
         .join(t(s, dir, "lineitem")
           .select("l_orderkey", "l_suppkey", "l_quantity"),
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("c"),
           (col("l_suppkey") + 10000000L).as("sup"))
-        .agg(min(col("l_quantity")).cast(LongType).as("w"))
-        // the symmetrizing union + the operator's internal ed/nodes
-        // branches evaluate this orders⋈lineitem aggregate 4x without a
-        // barrier — checkpoint the |pairs|-sized frame once (r16)
-        .localCheckpoint()
+        .agg(min(col("l_quantity")).cast(LongType).as("w")))
       val edges = pair.select(col("c").as("src"), col("sup").as("dst"), col("w"))
         .union(pair.select(col("sup").as("src"), col("c").as("dst"), col("w")))
       val sources = t(s, dir, "orders")
@@ -595,16 +595,15 @@ object InfraQueries {
     // whole fit bit-for-bit. Edges are distinct'd once and stay
     // partitioned by src across iterations; only the rank vector moves.
     "q128_pagerank" -> ((s, dir) => {
-      val cs = t(s, dir, "orders").select("o_orderkey", "o_custkey")
+      // symmetrizing union + PageRank's ed/degree/nodes branches
+      // evaluate the orders⋈lineitem distinct up to 8x without a
+      // barrier — hold the pair frame once (r16)
+      val cs = Hold(t(s, dir, "orders").select("o_orderkey", "o_custkey")
         .join(t(s, dir, "lineitem").select("l_orderkey", "l_suppkey"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"),
           (col("l_suppkey") + 10000000L).as("sup"))
-        .distinct()
-        // symmetrizing union + PageRank's ed/degree/nodes branches
-        // evaluate the orders⋈lineitem distinct up to 8x without a
-        // barrier — checkpoint the pair frame once (r16)
-        .localCheckpoint()
+        .distinct())
       val edges = cs.select(col("c").as("src"), col("sup").as("dst"))
         .union(cs.select(col("sup").as("src"), col("c").as("dst")))
       graft.operators.PageRank.run(edges, iters = 3)

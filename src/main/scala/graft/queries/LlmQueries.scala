@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.Scratch
+import graft.util.{Hold, Scratch}
 import graft.util.Tables._
 import graft.llm.{Ann, Decontaminate, MixtureSample, MlService, Multimodal, Pq, PrepPipeline, SemDedup, SeqPack, ShardBalance, TextDedup, TextStats, UniMax}
 
@@ -86,27 +86,6 @@ object LlmQueries {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Pipeline stages materialized once per (app, sf dir, key) via
-    * localCheckpoint — executor-resident, never driver-side; keyed by
-    * applicationId so a fresh session never sees another context's
-    * blocks. Two uses, both the [[exactTruth]] principle of keeping
-    * harness/input stages out of a timed operator body:
-    *  - synthetic media fixtures (q111/q112/q115): the ENCODE side is
-    *    gate harness — the oracle checks decoded stats against
-    *    closed-form functions — so the benched queries time the codec
-    *    DECODE path, not fixture generation;
-    *  - cluster assignments consumed by q120: a real pipeline persists
-    *    the clustering stage's output table and keeper selection reads
-    *    it; q83 times the clustering stage itself (it does NOT consume
-    *    the pin), q120 times keeper selection over the materialized
-    *    stage. */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def pinnedStage(s: SparkSession, key: String,
-      make: => DataFrame): DataFrame =
-    stageCache.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$key", _ => make.localCheckpoint())
-
   /** The 5-source block every near-dup query runs on. */
   private def dedupBlock(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
@@ -118,12 +97,14 @@ object LlmQueries {
     TextDedup.clusterAssignments(block, threshold = 0.95, k = 32, bands = 8,
       shingleW = 1)
 
-  /** [[clusterStage]] over [[dedupBlock]], pinned once per (app, sf
-    * dir) — the materialized cluster table q120/q279/q291/q304 read.
-    * The pin key names no parameters, so this is the one place that
-    * builds it. */
+  /** [[clusterStage]] over [[dedupBlock]], pinned once per (context,
+    * sf dir) — the materialized cluster table q120/q279/q291/q304 read:
+    * a real pipeline persists the clustering stage's output table and
+    * keeper selection reads it; q83 times the clustering stage itself
+    * (it does NOT consume the pin). The pin key names no parameters,
+    * so this is the one place that builds it. */
   private def clusters(s: SparkSession, dir: String): DataFrame =
-    pinnedStage(s, s"$dir|clusters", clusterStage(dedupBlock(s, dir)))
+    Hold.pin(s, s"clusters|$dir")(clusterStage(dedupBlock(s, dir)))
 
   private val stopwords = Seq("the", "a", "and", "of", "to")
   private val langMarkers = Map(
@@ -520,7 +501,7 @@ object LlmQueries {
     // decode boundary is a real lossless codec, not a byte slice.
     "q111_image_decode" -> ((s, dir) => {
       Multimodal.decodeImageStats(s,
-          pinnedStage(s, s"$dir|png",
+          Hold.pin(s, s"png|$dir")(
             Multimodal.syntheticPngMedia(s, t(s, dir, "documents"))))
         .toDF()
         .orderBy("doc_id")
@@ -537,7 +518,7 @@ object LlmQueries {
     // Per-row decode+hash, no shuffle; dedup is then a hash equi-join.
     "q200_image_phash_dedup" -> ((s, dir) =>
       Multimodal.imageAHash(s,
-          pinnedStage(s, s"$dir|pngpair",
+          Hold.pin(s, s"pngpair|$dir")(
             Multimodal.syntheticPngPairMedia(s, t(s, dir, "documents"),
               dupOffset = 1000000000L)))
         .toDF()
@@ -553,7 +534,7 @@ object LlmQueries {
     // remains stubbed).
     "q112_audio_decode" -> ((s, dir) => {
       Multimodal.decodeAudioStats(s,
-          pinnedStage(s, s"$dir|wav",
+          Hold.pin(s, s"wav|$dir")(
             Multimodal.syntheticWavMedia(s, t(s, dir, "documents"))))
         .toDF()
         .orderBy("doc_id")
@@ -570,7 +551,7 @@ object LlmQueries {
     // native libs in this container).
     "q115_video_frames" -> ((s, dir) => {
       Multimodal.decodeVideoFrameStats(s,
-          pinnedStage(s, s"$dir|gif",
+          Hold.pin(s, s"gif|$dir")(
             Multimodal.syntheticGifMedia(s, t(s, dir, "documents"))),
           stride = 2)
         .toDF()
@@ -749,7 +730,7 @@ object LlmQueries {
       val docs = t(s, dir, "documents")
       val base = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
         .select("doc_id", "text")
-      val idx0 = pinnedStage(s, s"bm25idx0|$dir",
+      val idx0 = Hold.pin(s, s"bm25idx0|$dir")(
         graft.llm.Bm25.buildIndex(base))
       val inserts = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select(lit("I").as("op"), col("doc_id"), col("text"))
@@ -762,11 +743,10 @@ object LlmQueries {
           lit(null).cast(StringType).as("text"))
       // the maintained index feeds BOTH the term-filtered postings scan
       // and the full-index stats aggregate inside topKFromIndex —
-      // checkpoint so the anti-join + re-tokenize delta apply runs once
+      // hold so the anti-join + re-tokenize delta apply runs once
       // (r16; postings are corpus-vocab bounded)
-      val idx1 = graft.llm.Bm25.applyChanges(idx0,
-        inserts.unionByName(updates).unionByName(deletes))
-        .localCheckpoint()
+      val idx1 = Hold(graft.llm.Bm25.applyChanges(idx0,
+        inserts.unionByName(updates).unionByName(deletes)))
       graft.llm.Bm25.topKFromIndex(idx1, bm25Queries, k = 10)
         .orderBy("query_id", "rank")
     }),
@@ -857,7 +837,7 @@ object LlmQueries {
     // order. Bit-identical to q124's full-scan scorer by construction,
     // so the same generated oracle gates both.
     "q140_bm25_indexed" -> ((s, dir) => {
-      val idx = pinnedStage(s, s"bm25idx|$dir",
+      val idx = Hold.pin(s, s"bm25idx|$dir")(
         graft.llm.Bm25.buildIndex(t(s, dir, "documents")))
       graft.llm.Bm25.topKFromIndex(idx, bm25Queries, k = 10)
         .orderBy("query_id", "rank")
@@ -1495,11 +1475,10 @@ object LlmQueries {
       // the funnel frame feeds two actions (the sharded export and the
       // card aggregate); without a barrier the decontamination join and
       // all three windows execute twice. Project down to the ten columns
-      // both consumers need (drops text) and checkpoint once (r16).
-      val flagged = flagged0.select(col("doc_id"), col("source"),
+      // both consumers need (drops text) and hold it once (r16).
+      val flagged = Hold(flagged0.select(col("doc_id"), col("source"),
           col("is_eval"), col("s1"), col("s2"), col("s3"), col("s4"),
-          col("n_tok"), col("shard"), col("bin"))
-        .localCheckpoint()
+          col("n_tok"), col("shard"), col("bin")))
       // export the sampled set sharded (side effect + read-back proof,
       // the q88 pattern: shared dir per sf, overwrite keeps it correct)
       val path = Scratch.once(s"card|$dir")(_ => ())
@@ -2001,11 +1980,11 @@ object LlmQueries {
           y => struct(x.as("s1"), y.as("s2")))))
       val singlesOf = transform(col("ss"),
         x => struct(x.as("s1"), lit(null).cast(StringType).as("s2")))
-      val counts = gsets
+      // ≤ |sources|² rows — bounded, two consumers
+      val counts = Hold(gsets
         .select(explode(concat(singlesOf, pairsOf)).as("p"))
         .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-        .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint() // ≤ |sources|² rows — bounded, two consumers
+        .agg(count(lit(1)).as("cnt")))
       val sizes = counts.filter(col("s2").isNull)
         .select(col("s1").as("source"), col("cnt").as("n"))
       val inter = counts.filter(col("s2").isNotNull)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.util.Scratch
 import graft.util.Tables._
+import graft.util.Hold
 
 /** Sources/sinks + remaining operator coverage (SURVEY §2.1 S3/S5-S7/
   * S13/S14/S16, §2.3 J6, §2.4 A16/A17, §2.9 F8): CSV/TSV-gz/JSON round
@@ -500,8 +501,7 @@ object SourceQueries {
     "q99_temp_table" -> ((s, dir) => {
       val name = "tmp_" + java.util.UUID.randomUUID().toString.replace("-", "")
       t(s, dir, "region").createOrReplaceTempView(name)
-      val out = s.table(name).groupBy().agg(count(lit(1)).as("n_regions"))
-        .localCheckpoint(true)
+      val out = Hold(s.table(name).groupBy().agg(count(lit(1)).as("n_regions")))
       s.catalog.dropTempView(name)
       require(!s.catalog.tableExists(name), "temp view must be dropped")
       out

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.util.Scratch
 import graft.util.Tables._
 import graft.operators.{HistogramAgg, JackknifeCI, Stats}
+import graft.util.Hold
 
 /** Statistical block (SURVEY §2.4 A9–A13, §2.9 F4): grouped and row-axis
   * quantiles, two-level partial/final aggregation, jackknife CI UDAF,
@@ -733,11 +734,10 @@ object StatQueries {
         .select("l_orderkey", "l_partkey").distinct()
       val wOrd = Window.partitionBy("l_orderkey").orderBy("l_partkey")
       // the capped basket table feeds four branches (pair self-join both
-      // sides, degree, n_parts) — checkpoint so the scan+window runs
+      // sides, degree, n_parts) — hold it so the scan+window runs
       // once, not per branch (r16; guide §2.4)
-      val li = li0.withColumn("bpos", row_number().over(wOrd))
-        .filter(col("bpos") <= maxBasket).drop("bpos")
-        .localCheckpoint()
+      val li = Hold(li0.withColumn("bpos", row_number().over(wOrd))
+        .filter(col("bpos") <= maxBasket).drop("bpos"))
       val nParts = li.select("l_partkey").distinct()
         .agg(count(lit(1)).as("n_parts"))
       val deg = li.groupBy(col("l_partkey").as("item"))
@@ -761,11 +761,10 @@ object StatQueries {
       val topk = scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3).select("a", "b")
       // the kNN edge set feeds five branches (CC's symmetrized union
-      // twice, verts' union twice, n_edges) — checkpoint the tiny
+      // twice, verts' union twice, n_edges) — hold the tiny
       // (≤ 3·|items|) frame so the pair/top-3 pipeline runs once (r16)
-      val ue = topk.select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v")).distinct()
-        .localCheckpoint()
+      val ue = Hold(topk.select(least(col("a"), col("b")).as("u"),
+        greatest(col("a"), col("b")).as("v")).distinct())
       val verts = ue.select(col("u").as("id"))
         .unionByName(ue.select(col("v").as("id"))).distinct()
       val cc = graft.operators.ConnectedComponents.connectedComponents(

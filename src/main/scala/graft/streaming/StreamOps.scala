@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
-import graft.util.Scratch
+import graft.util.{Hold, Scratch}
 
 /** Structured Streaming equivalents of the reference's batch-watermark
   * jobs (SURVEY §2.11: "optionally Trigger.AvailableNow streaming for
@@ -91,13 +91,17 @@ object StreamOps {
     * session's conf at start, so the cap sizes the state stores and
     * every frame a trigger plans, on `batch.sparkSession` and on the
     * caller's session alike; a cap set inside `sink` would reach only
-    * the latter. The checkpoint is Spark's temporary one: these runs
-    * are single-shot by design. */
-  private def runBounded(df: DataFrame, mode: String, ceiling: Int)(
-      sink: (DataFrame, Long) => Unit): Unit =
+    * the latter. Each trigger runs `sink` in its own [[Hold.scope]],
+    * so what a trigger holds is released when it has written its
+    * output. The checkpoint is Spark's temporary one: these runs are
+    * single-shot by design. */
+  private[graft] def runBounded(df: DataFrame, mode: String, ceiling: Int)(
+      sink: (DataFrame, Long) => Unit): Unit = {
+    val scoped: (DataFrame, Long) => Unit = (batch, id) => Hold.scope(sink(batch, id))
     withStatePartitions(df.sparkSession, ceiling) {
-      awaitAvailableNow(df.writeStream.outputMode(mode).foreachBatch(sink))
+      awaitAvailableNow(df.writeStream.outputMode(mode).foreachBatch(scoped))
     }
+  }
 
   /** The runner every stream-shaped and per-document runner shares:
     * [[runBounded]] with each trigger's `body(batch)` written to
@@ -386,7 +390,7 @@ object StreamOps {
     *
     * Unlike the [[runToDir]] runners, each trigger writes two outputs
     * (its pairs, then its signatures into the index the next trigger
-    * probes) and the probe runs an eager `localCheckpoint`, so this
+    * probes) and the probe holds the batch's signatures, so this
     * runner keeps its own sink and the explicit pair schema.
     *
     * @param indexDir parquet dir holding (id, band, key) — pre-seeded

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Hold
+
 /** Dev tool: dump `.explain("formatted")` of queries. Not part of the
   * query surface.
   *
@@ -13,6 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *        runMain graft.tools.DumpPlans <outDir> <suffix> <q1,q2,...>
   *          writes each named query's plan to `<outDir>/<query>_<suffix>.txt`
   *          — the before/after plan evidence of an optimization round.
+  * Each query is built and explained in its own [[Hold.scope]].
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -35,7 +38,7 @@ object DumpPlans {
       suffix: String, names: String): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Path.of(outDir))
     names.split(",").foreach { n =>
-      val txt = formatted(graft.SparkEntry.queries(n)(spark, sfDir))
+      val txt = Hold.scope(formatted(graft.SparkEntry.queries(n)(spark, sfDir)))
       java.nio.file.Files.writeString(java.nio.file.Path.of(outDir, s"${n}_$suffix.txt"), txt)
       println(s"wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }
@@ -64,7 +67,7 @@ object DumpPlans {
       "q121_forecast_paths" -> "fit -> 200 seeded bootstrap paths -> row-axis summary, sample matrix never leaves executors",
       "q122_semantic_dedup_auto" -> "occupancy-held sign cells, two-phase float/decimal cosine (linear pair volume)",
       "q127_scd2_build" -> "SCD2: all window passes ride ONE exchange by entity key",
-      "q128_pagerank" -> "edges+degree cached/stationary; only the rank vector moves per iteration",
+      "q128_pagerank" -> "edges+degree held/stationary; only the rank vector moves per iteration",
       "q129_cdc_apply" -> "changelog windowed once, snapshot anti-joined (broadcast), never sorted",
       "q131_gap_fill" -> "per-key spine explode + both window fills share the key exchange",
       "q132_fuzzy_join" -> "block-key equi-join (no cartesian), levenshtein only inside blocks",
@@ -131,7 +134,7 @@ object DumpPlans {
     sb.append("crosses inside the ANN recall gates -- bounded by\n")
     sb.append("construction, adjudicated in VERDICT r9).\n")
     picks.foreach { case (name, why) =>
-      val trimmed = formatted(graft.SparkEntry.queries(name)(spark, sfDir))
+      val trimmed = Hold.scope(formatted(graft.SparkEntry.queries(name)(spark, sfDir)))
         .linesIterator.take(80).mkString("\n")
       sb.append(s"\n## $name — $why\n\n```\n$trimmed\n```\n")
     }
@@ -167,7 +170,7 @@ object DumpPlans {
     // splitting the skewed sort-merge partitions, and SkewSalt's 8-way
     // fan-out. Timings live in PERF_NOTES ("skew sweep"); this dump
     // pins the PLAN shapes.
-    val (aqe, salt) = SkewProbe.planEvidence(spark, sfDir)
+    val (aqe, salt) = Hold.scope(SkewProbe.planEvidence(spark, sfDir))
     sb.append("\n## skew: plain shuffle join on the hot key — AQE skew split engaged\n\n" +
       s"```\n$aqe\n```\n")
     sb.append("\n## skew: SkewSalt 8-way salted join — dim exploded x8, equi-join on (key, salt)\n\n" +

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Hold
 
 /** Adversarial-skew probe (r12 ask #5): every bench table is uniform
   * TPC-H, so the 100 TB skew story ("AQE splits skewed joins, salting
@@ -47,12 +48,12 @@ object SkewProbe {
     df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** Key→count dim, MATERIALIZED (localCheckpoint): a real dimension is
+  /** Key→count dim, held: a real dimension is
     * a stored table, and AQE's OptimizeSkewedJoin only pattern-matches
     * SMJ over raw shuffle stages — an aggregate subplan on the dim side
     * would veto the split for the fact side too. */
   def dim(df: DataFrame): DataFrame =
-    df.groupBy("skey").agg(count(lit(1)).as("key_n")).localCheckpoint(true)
+    Hold(df.groupBy("skey").agg(count(lit(1)).as("key_n")))
 
   def plainJoin(df: DataFrame, d: DataFrame): DataFrame =
     df.join(d, "skey")
@@ -127,37 +128,40 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.getOrCreate("ERROR", cpus = 32)
-    // amplify deterministically ×32 (~3.2M rows at sf0.1): the raw
-    // events table is too small for skew to move any needle; the probe
-    // is about the 100 TB mechanisms, not the fixture's absolute size
-    val amp = sys.env.getOrElse("SPARK_GRAFT_SKEW_AMP", "32").toInt
-    val events = amplify(spark.read.parquet(s"$sfDir/events.parquet")
-      .select("event_id", "user_id", "ts", "event_type"), amp).cache()
-    println(s"rows=${events.count()}")
-    val hot = skewed(events).filter(col("skey") === 0).count()
-    println(s"hot-key share=${hot.toDouble / events.count()}")
-    def sink(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    val (uni, ske) = (uniform(events), skewed(events))
-    val (dimU, dimS) = (dim(uni), dim(ske))
-    for ((name, mk) <- Seq(
-        "dedup_top1" -> ((d: DataFrame, _: DataFrame) => dedupTop1(d)),
-        "topk3" -> ((d: DataFrame, _: DataFrame) => topK(d, 3)),
-        "plain_join_aqe" -> ((d: DataFrame, dm: DataFrame) => plainJoin(d, dm)),
-        "salted_join" -> ((d: DataFrame, dm: DataFrame) => saltedJoin(d, dm)))) {
-      val tu = time(sink(mk(uni, dimU)))
-      val ts = time(sink(mk(ske, dimS)))
-      println(f"$name%-16s uniform=$tu%6.2fs skewed=$ts%6.2fs ratio=${ts / tu}%4.2f")
-    }
-    // the join measurements above broadcast the dim (it is small); also
-    // measure the shuffle-join layout where skew actually matters
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    for ((name, mk) <- Seq(
-        "smj_join_aqe" -> ((d: DataFrame, dm: DataFrame) => plainJoin(d, dm)),
-        "smj_salted" -> ((d: DataFrame, dm: DataFrame) => saltedJoin(d, dm)))) {
-      val tu = time(sink(mk(uni, dimU)))
-      val ts = time(sink(mk(ske, dimS)))
-      println(f"$name%-16s uniform=$tu%6.2fs skewed=$ts%6.2fs ratio=${ts / tu}%4.2f")
+    // one scope over the probe: its holds are released before the stop
+    Hold.scope {
+      // amplify deterministically ×32 (~3.2M rows at sf0.1): the raw
+      // events table is too small for skew to move any needle; the probe
+      // is about the 100 TB mechanisms, not the fixture's absolute size
+      val amp = sys.env.getOrElse("SPARK_GRAFT_SKEW_AMP", "32").toInt
+      val events = Hold(amplify(spark.read.parquet(s"$sfDir/events.parquet")
+        .select("event_id", "user_id", "ts", "event_type"), amp))
+      println(s"rows=${events.count()}")
+      val hot = skewed(events).filter(col("skey") === 0).count()
+      println(s"hot-key share=${hot.toDouble / events.count()}")
+      def sink(df: DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
+      val (uni, ske) = (uniform(events), skewed(events))
+      val (dimU, dimS) = (dim(uni), dim(ske))
+      for ((name, mk) <- Seq(
+          "dedup_top1" -> ((d: DataFrame, _: DataFrame) => dedupTop1(d)),
+          "topk3" -> ((d: DataFrame, _: DataFrame) => topK(d, 3)),
+          "plain_join_aqe" -> ((d: DataFrame, dm: DataFrame) => plainJoin(d, dm)),
+          "salted_join" -> ((d: DataFrame, dm: DataFrame) => saltedJoin(d, dm)))) {
+        val tu = time(sink(mk(uni, dimU)))
+        val ts = time(sink(mk(ske, dimS)))
+        println(f"$name%-16s uniform=$tu%6.2fs skewed=$ts%6.2fs ratio=${ts / tu}%4.2f")
+      }
+      // the join measurements above broadcast the dim (it is small); also
+      // measure the shuffle-join layout where skew actually matters
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((name, mk) <- Seq(
+          "smj_join_aqe" -> ((d: DataFrame, dm: DataFrame) => plainJoin(d, dm)),
+          "smj_salted" -> ((d: DataFrame, dm: DataFrame) => saltedJoin(d, dm)))) {
+        val tu = time(sink(mk(uni, dimU)))
+        val ts = time(sink(mk(ske, dimS)))
+        println(f"$name%-16s uniform=$tu%6.2fs skewed=$ts%6.2fs ratio=${ts / tu}%4.2f")
+      }
     }
     spark.stop()
   }

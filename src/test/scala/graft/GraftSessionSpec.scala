@@ -88,6 +88,16 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(mentioning("createTempDirectory") == Seq(Paths.get("src/main/scala/graft/util/Scratch.scala")))
   }
 
+  // graft.util.Hold owns every materialized frame: in src/main nothing
+  // else checkpoints, caches, persists or unpersists (specs may).
+  test("only Hold materializes or releases a frame") {
+    val hold = Paths.get("src/main/scala/graft/util/Hold.scala")
+    Seq("localCheckpoint(", ".cache()", ".persist(", "unpersist(").foreach { p =>
+      assert(mentioning(p).filter(_.startsWith("src/main")).forall(_ == hold), p)
+    }
+    assert(Files.readString(hold).contains("localCheckpoint("))
+  }
+
   // StreamOps is the one streaming path: one reader (`fileStream`), one
   // query start, and one runner that caps the partitions of the whole
   // run, so a cap cannot sit where a trigger's frames never see it.

@@ -1,5 +1,7 @@
 package graft
 
+import graft.util.Hold
+
 /** Every SparkEntry query runs on sf0.001 and yields a sane result.
   * (Value-level correctness is the driver's DuckDB gate at sf0.01 —
   * mirrored locally by tools/check_driver.py.) */
@@ -13,12 +15,17 @@ class QueriesSmokeSpec extends SparkTestBase {
   // Queries that read the reference SQL corpus.
   private val needsCorpus = Set("q108_corpus_sweep", "q109_corpus_exec")
 
+  // Each query is built and counted in one Hold.scope, with no GC
+  // forced: when the scope closes, no RDD it persisted may remain beyond
+  // the named pins.
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows") {
       if (needsCorpus(name)) assume(corpusAvailable, "reference corpus not present")
-      val df = fn(spark, sfDir)
-      val n = df.count()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val n = Hold.scope(fn(spark, sfDir).count())
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+      val left = Hold.loose(spark.sparkContext) -- before
+      assert(left.isEmpty, s"$name left persisted RDDs: $left")
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.ShortestPath
+import graft.util.Hold
 
 class ShortestPathSpec extends SparkTestBase {
   import spark.implicits._
@@ -39,9 +40,10 @@ class ShortestPathSpec extends SparkTestBase {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L)).toDF("src", "dst", "w")
     val src = Seq(1L).toDF("id")
-    val dist = ShortestPath.run(edges, src, rounds = 2)
-    assert(dist.count() == 3)
+    Hold.scope {
+      assert(ShortestPath.run(edges, src, rounds = 2).count() == 3)
+    }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"leaked cached RDDs: $leaked")
+    assert(leaked.isEmpty, s"persisted RDDs left: $leaked")
   }
 }

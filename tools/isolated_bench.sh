@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Isolated per-query bench runs against the PACKAGED jar (java -cp, no
-# sbt): one fresh JVM per query, min-of-2 at sf0.1/local[32], noop eval —
+# sbt): one fresh JVM per query at sf0.1/local[nproc] (min-of-2 from 16
+# CPUs up, one run below), noop eval —
 # the r16 isolated-measurement methodology, decoupled from source edits
 # so "before" numbers can be taken while the tree moves on.
 # Usage: tools/isolated_bench.sh <outfile-prefix> q1 [q2 ...]
@@ -27,10 +28,9 @@ ADD_OPENS=(
 for q in "$@"; do
   out="${PREFIX}_${q}.json"
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   SPARK_GRAFT_BENCH_ONLY="$q" \
   SPARK_GRAFT_BENCH_OUT="$out" \
   java -Xmx16g -cp "$JAR:$SPARK_JARS" "${ADD_OPENS[@]}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     graft.Bench 2>/dev/null | tail -1
 done
